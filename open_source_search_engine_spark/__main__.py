@@ -93,9 +93,9 @@ def main(argv: list[str] | None = None) -> None:
 
     vc = sub.add_parser(
         "vacuum",
-        help="expire old snapshots of every index table (Iceberg "
-        "expire_snapshots): bounds disk growth; as-of reads older than "
-        "the retention fail afterwards",
+        help="expire old manifest versions and the segments only they "
+        "reach (Iceberg's snapshot expiry): bounds disk growth; as-of "
+        "reads older than the retention fail afterwards",
     )
     vc.add_argument("--index", required=True)
     vc.add_argument("--keep-last", type=int, default=2)
@@ -147,24 +147,24 @@ def main(argv: list[str] | None = None) -> None:
 
     vs = sub.add_parser(
         "versions",
-        help="print the per-table snapshot pins as JSON (capture BEFORE "
-        "a mutation; feed the file to `changes --from` later)",
+        help="print the index's manifest version (capture BEFORE a "
+        "mutation; pass it to `changes --from` later)",
     )
     vs.add_argument("--index", required=True)
 
     ch = sub.add_parser(
         "changes",
-        help="snapshot changelog (Iceberg incremental read): docs "
-        "added/removed between a captured pin set and HEAD (or --to)",
+        help="changelog (Iceberg incremental read): docs added/removed "
+        "between a captured manifest version and the head (or --to)",
     )
     ch.add_argument("--index", required=True)
     ch.add_argument(
-        "--from", dest="from_pins", required=True,
-        help="pins JSON from `versions` — a file path or inline JSON",
+        "--from", dest="version_from", type=int, required=True,
+        help="manifest version from `versions` (-1: before the first commit)",
     )
     ch.add_argument(
-        "--to", dest="to_pins", default=None,
-        help="optional end pins (default: HEAD)",
+        "--to", dest="version_to", type=int, default=None,
+        help="optional end manifest version (default: the head)",
     )
     ch.add_argument("--limit", type=int, default=0)
 
@@ -238,33 +238,14 @@ def main(argv: list[str] | None = None) -> None:
         return
 
     if args.cmd == "changes":
-        import os
-
         from .operators.build import Index
         from .operators.changelog import changelog_mode, index_changes
         from .operators.timetravel import index_versions
 
-        def _pins(arg: str | None) -> dict | None:
-            if arg is None:
-                return None
-            if os.path.exists(arg):
-                text = open(arg).read()
-            elif arg.lstrip().startswith("{"):
-                text = arg  # inline JSON
-            else:
-                raise SystemExit(f"pins file not found: {arg}")
-            pins = json.loads(text)
-            if not isinstance(pins, dict):
-                raise SystemExit(f"pins must be a JSON object, got: {text!r}")
-            return pins
-
         idx = Index(args.index)
-        vf = _pins(args.from_pins)
-        vt = _pins(args.to_pins)
-        if vt is None:  # an explicit empty {} pin set must NOT mean HEAD
-            vt = index_versions(idx)
-        mode = changelog_mode(idx, vf, vt)
-        out = index_changes(spark, idx, vf, vt)
+        vt = args.version_to if args.version_to is not None else index_versions(idx)
+        mode = changelog_mode(idx, args.version_from, vt)
+        out = index_changes(spark, idx, args.version_from, vt)
         if args.limit:
             out = out.limit(args.limit)
         rows = [json.loads(r) for r in out.toJSON().collect()]

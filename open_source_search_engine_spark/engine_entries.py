@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.build import Index, build_index
+from .sources.tables import INDEX_LAYOUT
 from .operators.topk import search_wand
 from .plans.exec import _stats_cached, search
 
@@ -66,12 +67,14 @@ def _corpus_fingerprint(sf_dir: str) -> dict:
     # "cfg" busts the on-disk cache when the build configuration changes
     # (r3: bigram pair termlists for the phrase fast path; field terms
     # for the lang-boost probe tid; num:n_chars lookup termlist for
-    # the index-backed sortby path)
+    # the index-backed sortby path); "layout" when the on-disk index
+    # layout does, so a tree in an older layout is rebuilt, not adopted
     return {
         "n": int(n),
         "sum_doc_id": int(s),
         "content_hash": str(h),
         "cfg": "bigrams-fields-num-anchors-r4",
+        "layout": INDEX_LAYOUT,
     }
 
 
@@ -786,7 +789,7 @@ def q_engine_compacted(spark, sf_dir):
 def q_engine_time_travel(spark, sf_dir):
     """Iceberg-style AS-OF read (operators/timetravel.py): the compacted
     index — which has delete + compact mutations on top of the shared
-    build — queried AT the pre-mutation snapshot pins.  Results must
+    build — queried AT the pre-mutation manifest version.  Results must
     equal the never-mutated full-corpus BM25 (the oracle): commits only
     add manifests and never delete segment files, so history stays
     readable (the audit/reproducibility read a training pipeline needs;
@@ -794,10 +797,10 @@ def q_engine_time_travel(spark, sf_dir):
     from .operators.timetravel import as_of, index_versions
 
     base = engine_index(spark, sf_dir)
-    pins = index_versions(base)
+    version = index_versions(base)
     comp = engine_index_compacted(spark, sf_dir)
     return _round_topk(
-        search_wand(spark, as_of(comp, pins), "table", k=20, enrich=False), 10
+        search_wand(spark, as_of(comp, version), "table", k=20, enrich=False), 10
     )
 
 
@@ -812,26 +815,23 @@ def q_engine_incremental(spark, sf_dir):
 def q_engine_changelog(spark, sf_dir):
     """Snapshot CDC (operators/changelog.py — the Iceberg incremental
     read, dual of engine_time_travel's AS-OF): live-set changes between
-    two pins, exercised on BOTH real mutation histories the fixtures
-    carry — the removed side diffs the tombstoned variant across its
-    delete commit (pre-pin = HEAD minus the deletes table), the added
-    side diffs the incremental variant across its second add batch
-    (docstats v[0] -> v[-1], the odd-doc_id half).  Both windows are
-    append-only, so both ride the segment-diff fast path; the oracle
-    replays the two mutation rules straight from the raw corpus."""
+    two manifest versions, exercised on BOTH real mutation histories the
+    fixtures carry — the removed side diffs the tombstoned variant across
+    its delete commit (from = the shared index's head, which the variant
+    copied), the added side diffs the incremental variant across its
+    second add batch (docstats v[0] -> v[-1], the odd-doc_id half).  Both
+    windows are append-only, so both ride the segment-diff fast path; the
+    oracle replays the two mutation rules straight from the raw corpus."""
     from .operators.changelog import index_changes
     from .operators.timetravel import index_versions
 
     tomb = engine_index_tombstoned(spark, sf_dir)
-    v_to = index_versions(tomb)
-    v_from = {k: v for k, v in v_to.items() if k != "deletes"}
-    removed = index_changes(spark, tomb, v_from, v_to)
+    v_from = index_versions(engine_index(spark, sf_dir))
+    removed = index_changes(spark, tomb, v_from)
 
     incr = engine_index_incremental(spark, sf_dir)
     hist = incr.docstats.history()
-    added = index_changes(
-        spark, incr, {"docstats": hist[0]}, {"docstats": hist[-1]}
-    )
+    added = index_changes(spark, incr, hist[0], hist[-1])
 
     return (
         removed.unionByName(added)

@@ -41,12 +41,6 @@ import numpy as np
 
 SIDECAR = "_bloom.json"
 
-# probe-side sidecar cache: segment dirs are immutable once committed, but
-# an index root can be deleted and rebuilt in place, so the file identity
-# (inode, mtime_ns) joins the key the same way SnapshotTable.snapshot_ident
-# guards the read cache.
-_SIDECAR_CACHE: dict[tuple, dict | None] = {}
-
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
     """splitmix64 finalizer over a uint64 array (wrapping arithmetic)."""
@@ -256,7 +250,7 @@ def write_sidecar(segment_dir: str, bloom: dict) -> str:
     """Atomic sidecar write INTO the (not-yet-committed) segment dir.
     The leading underscore keeps it invisible to Spark's parquet reader
     (Hadoop's hidden-file filter skips ``_``/``.``-prefixed files), and
-    expire_snapshots' rmtree removes it with the segment."""
+    vacuum's rmtree removes it with the segment."""
     path = os.path.join(segment_dir, SIDECAR)
     tmp = os.path.join(segment_dir, f".bloom.{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as f:
@@ -266,24 +260,21 @@ def write_sidecar(segment_dir: str, bloom: dict) -> str:
 
 
 def load_sidecar(segment_dir: str) -> dict | None:
-    """Cached sidecar read; None = segment has no bloom (pre-bloom
-    segment or non-postings table) and must always be scanned."""
+    """Memoized sidecar read; None = segment has no bloom (pre-bloom
+    segment or non-postings table) and must always be scanned.  A
+    sidecar is immutable with its uuid-named segment directory, so the
+    path keys the memo; only its presence is checked per call."""
+    from ..sources.tables import MEMO
+
     path = os.path.join(segment_dir, SIDECAR)
-    try:
-        st = os.stat(path)
-    except OSError:
+    if not os.path.exists(path):
         return None
-    key = (path, st.st_ino, st.st_mtime_ns)
-    if key not in _SIDECAR_CACHE:
-        # evict stale identities of the same path (deleted + rebuilt
-        # root); list() snapshot + pop — concurrent federated driver
-        # threads may insert mid-walk (review r4-s2)
-        for stale in list(_SIDECAR_CACHE):
-            if stale[0] == path:
-                _SIDECAR_CACHE.pop(stale, None)
+    key = ("bloom", path)
+    bloom = MEMO.get(key)
+    if bloom is None:
         try:
             with open(path) as f:
-                _SIDECAR_CACHE[key] = json.load(f)
+                bloom = MEMO.put(key, json.load(f))
         except (OSError, ValueError):
             return None
-    return _SIDECAR_CACHE[key]
+    return bloom

@@ -31,7 +31,6 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -43,7 +42,7 @@ from pyspark.sql import functions as F
 from ..functions import codec
 from ..functions.hashing import content_sha256, doc_id_col, term_hash_py
 from ..functions.tokenize import tokenize_to_postings
-from ..sources.tables import SnapshotTable
+from ..sources.tables import MEMO, Index, IndexView
 
 BLOCK_SCHEMA = (
     "term_id long, salt int, n_salts int, block_id int, n_docs int, sum_tf long, "
@@ -53,137 +52,27 @@ BLOCK_SCHEMA = (
 )
 
 
-@dataclass
-class Index:
-    root: str
-
-    def features(self) -> dict:
-        """Index-level format flags (e.g. {"bigrams": true}) — written at
-        build time, consulted by query planning (a query can't know
-        whether pair termlists exist without it)."""
-        import json
-
-        try:
-            with open(os.path.join(self.root, "_features.json")) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {}
-
-    def write_features(self, **kv) -> None:
-        import json
-
-        d = {**self.features(), **kv}
-        os.makedirs(self.root, exist_ok=True)
-        tmp = os.path.join(self.root, f".features.{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump(d, f)
-        os.replace(tmp, os.path.join(self.root, "_features.json"))
-
-    @property
-    def postings(self) -> SnapshotTable:
-        return SnapshotTable(self.root, "postings")
-
-    @property
-    def docstats(self) -> SnapshotTable:
-        return SnapshotTable(self.root, "docstats")
-
-    @property
-    def termdict(self) -> SnapshotTable:
-        return SnapshotTable(self.root, "termdict")
-
-    @property
-    def termstats_partial(self) -> SnapshotTable:
-        return SnapshotTable(self.root, "termstats_partial")
-
-    @property
-    def termstats(self) -> SnapshotTable:
-        return SnapshotTable(self.root, "termstats")
-
-    @property
-    def collstats(self) -> SnapshotTable:
-        return SnapshotTable(self.root, "collstats")
-
-    @property
-    def checkpoints(self) -> SnapshotTable:
-        return SnapshotTable(self.root, "checkpoints")
-
-    @property
-    def metrics(self) -> SnapshotTable:
-        return SnapshotTable(self.root, "metrics")
-
-    @property
-    def lineage(self) -> SnapshotTable:
-        return SnapshotTable(self.root, "lineage")
-
-
-# Per-snapshot cached docmeta projection (J5 enrich probe side) — the
-# title-rec cache analog (Msg20/Msg22 keep doc metadata resident instead of
-# re-reading it per query).  Without this every enriched query pays a fresh
-# parquet scan of docstats; with it the broadcast top-k probes in-memory
-# columnar partitions.  Spark's .cache() spills per-partition, so the same
-# code holds on a cluster where docstats exceeds executor memory.
-_DOCMETA_CACHE: dict[tuple[str, int], DataFrame] = {}
-
-
 def docmeta_cached(spark: SparkSession, index: Index) -> DataFrame:
-    """Cached ``(doc_id, repo, path, lang)`` projection of the latest
-    docstats snapshot.  Stale-version entries for the same index root are
-    unpersisted on insert (snapshot versions only move forward).  Keyed by
+    """Cached ``(doc_id, repo, path, lang)`` projection of the docstats
+    segments at the index's view — the title-rec cache analog (Msg20/
+    Msg22 keep doc metadata resident instead of re-reading it per
+    query).  Without it every enriched query pays a fresh parquet scan of
+    docstats; with it the broadcast top-k probes in-memory columnar
+    partitions.  Spark's .cache() spills per-partition, so the same code
+    holds on a cluster where docstats exceeds executor memory.  Keyed by
     the Spark application id too: a cached DataFrame belongs to one
-    SparkContext, and handing it to a later session (stop/start cycles,
-    e.g. multi-level benchmarks) would raise "stopped SparkContext"."""
-    snap = index.docstats.latest()
-    app = spark.sparkContext.applicationId
-    # snapshot-file identity joins the key (r4): an index root deleted and
-    # rebuilt in place restarts version numbering, and a bare version key
-    # would alias the old build's cached projection
-    ident = index.docstats.snapshot_ident(snap.version) if snap else ()
-    key = (f"{app}|{index.root}", snap.version if snap else -1, ident)
-    df = _DOCMETA_CACHE.get(key)
+    SparkContext."""
+    view = index.view()
+    key = ("docmeta", spark.sparkContext.applicationId, view.key("docstats"))
+    df = MEMO.get(key)
     if df is None:
-        # evict: dead-session entries (other app ids) + this root's
-        # same-version different-ident aliases (in-place rebuild); other
-        # live roots stay resident, and up to TWO versions of this root
-        # coexist — time-travel AS-OF enrich pins an immutable older
-        # snapshot alongside HEAD, and alternating head/pin reads must
-        # not unpersist each other's cached projection
-        for stale in [
-            k
-            for k in _DOCMETA_CACHE
-            if k != key
-            and (
-                not k[0].startswith(f"{app}|")
-                or (k[0] == key[0] and k[1] == key[1] and k[2] != key[2])
-            )
-        ]:
-            try:
-                _DOCMETA_CACHE.pop(stale).unpersist()
-            except Exception:
-                pass
-        # read the SAME version the key was computed from — a commit
-        # racing between latest() and read() would otherwise cache the
-        # newer snapshot's rows under the older version's key (and an
-        # AS-OF view pinned at that version would then serve them)
-        base = (
-            index.docstats.read(spark, version=snap.version)
-            if snap is not None
-            else None
-        )
+        base = view.docstats.read(spark)
         if base is None:
             raise RuntimeError(
                 f"docstats snapshot absent under {index.root!r} — build the "
                 "index (build_index / finalize_stats) before querying"
             )
-        df = base.select("doc_id", "repo", "path", "lang").cache()
-        _DOCMETA_CACHE[key] = df
-        same_root = sorted(
-            [k for k in _DOCMETA_CACHE if k[0] == key[0]], key=lambda k: k[1]
-        )
-        for k in same_root[:-2]:
-            try:
-                _DOCMETA_CACHE.pop(k).unpersist()
-            except Exception:
-                pass
+        df = MEMO.put(key, base.select("doc_id", "repo", "path", "lang").cache())
     return df
 
 
@@ -567,33 +456,14 @@ def build_index(
                 "fresh root"
             )
         if not any(ns == n_shards for _s, ns in done):
-            # no checkpoint landed — resumable iff every tagged commit in
-            # the postings history belongs to THIS sharding (the crash
-            # window before the FIRST checkpoint); the orphan cleanup
-            # below then removes the half-done commits before re-running
-            metas = [
-                (idx.postings.at(v).meta or {})
-                for v in idx.postings.history()
-            ]
-            # only build_shard commits carry a "shard" key; compaction
-            # also writes "n_shards" (its doc-partition width), and
-            # accepting it here would let a fresh build reuse shard ids
-            # the compacted segment already occupies (colliding salt
-            # moduli -> mis-routed WAND probes)
-            ours = [m for m in metas if "shard" in m and "n_shards" in m]
-            other = [
-                m for m in metas if "shard" not in m and "cleanup_shard" not in m
-            ]
-            if not (
-                ours
-                and not other
-                and all(m.get("n_shards") == n_shards for m in ours)
-            ):
-                raise ValueError(
-                    f"index root {index_root} has postings from a different "
-                    f"build configuration (no completed shards for n_shards="
-                    f"{n_shards}); start a fresh root"
-                )
+            # a shard's data and its checkpoint land in one commit, so
+            # postings without a matching checkpoint come from another
+            # build, an add or a compaction — never from this sharding
+            raise ValueError(
+                f"index root {index_root} has postings from a different "
+                f"build configuration (no completed shards for n_shards="
+                f"{n_shards}); start a fresh root"
+            )
         if idx.features().get("bigrams", False) != bigram_terms:
             raise ValueError(
                 f"index root {index_root} was built with bigram_terms="
@@ -701,7 +571,7 @@ def build_index(
             .repartitionByRange("term_id")
             .sortWithinPartitions("term_id", "salt", "block_id")
         )
-        # NOTE (r5 encode profile, tools/profile_encode.py): raising
+        # NOTE (r5 encode profile): raising
         # spark.sql.execution.arrow.maxRecordsPerBatch to 64k for this
         # materialization measured ~8% on the 8-core encode stage (the
         # stage is shuffle+Arrow-transfer bound; kernel compute is fully
@@ -724,30 +594,20 @@ def build_index(
         )
         blocks.unpersist()
         posts.unpersist()
-        # meta carries (shard, n_shards) so a crash BETWEEN these commits
-        # and the checkpoint leaves identifiable orphans: resume removes
-        # them before re-running the shard (see _drop_orphan_shard_commits)
-        tag = {"shard": shard, "n_shards": n_shards, "run_id": run_id}
-        snaps = {
-            "docstats": idx.docstats.commit(add=[ds_seg], meta=tag),
-            "termdict": idx.termdict.commit(add=[td_seg], meta=tag),
-            "postings": idx.postings.commit(add=[po_seg], meta=tag),
-            "termstats_partial": idx.termstats_partial.commit(
-                add=[tsp_seg], meta=tag
-            ),
-        }
-        _checkpoint(
-            spark, idx, run_id, shard, n_shards, time.time() - t0, snaps
+        staged = idx.view().stage(
+            {
+                "docstats": ([ds_seg], []),
+                "termdict": ([td_seg], []),
+                "postings": ([po_seg], []),
+                "termstats_partial": ([tsp_seg], []),
+            },
+            operation="build_shard",
+            meta={"shard": shard, "n_shards": n_shards, "run_id": run_id},
+            max_shard=n_shards - 1,
         )
+        _checkpoint(spark, staged, run_id, shard, n_shards, time.time() - t0)
 
     todo = [s for s in range(n_shards) if not (resume and (s, n_shards) in done)]
-    if resume and existing is not None and existing.segments:
-        # Crash-window repair: a shard whose table commits landed but whose
-        # checkpoint didn't would re-run and APPEND duplicate segments
-        # (doubled postings/df/cf).  Remove any live segments tagged with
-        # this (shard, n_shards) before re-running the shard.
-        for shard in todo:
-            _drop_orphan_shard_commits(idx, shard, n_shards)
     if fail_after_shard is not None or shard_parallelism <= 1 or len(todo) <= 1:
         for shard in todo:
             build_shard(shard)
@@ -764,9 +624,14 @@ def build_index(
 
 
 def finalize_stats(spark: SparkSession, idx: Index, run_id: str) -> None:
-    """Global termstats/collstats from per-shard partials (A2/A3/A5)."""
-    partials = idx.termstats_partial.read(spark)
-    tdict = idx.termdict.read(spark).select("term_id", "term").distinct()
+    """Global termstats/collstats from per-shard partials (A2/A3/A5),
+    committed with whatever ``idx`` has staged: a writer that passes its
+    staged view publishes its segments and the stats over them as one
+    manifest version, so no reader ever pairs new postings with old
+    stats."""
+    view = idx.view()
+    partials = view.termstats_partial.read(spark)
+    tdict = view.termdict.read(spark).select("term_id", "term").distinct()
     termstats = (
         partials.groupBy("term_id")
         .agg(
@@ -778,25 +643,18 @@ def finalize_stats(spark: SparkSession, idx: Index, run_id: str) -> None:
     )
     # small stat tables coalesce to few files: cold-query latency is
     # dominated by per-file open cost on this VM
-    ts_seg = idx.termstats.write_segment(termstats.coalesce(4), label="final")
-    # replace any previous final snapshot
-    prev = idx.termstats.latest()
-    idx.termstats.commit(
-        add=[ts_seg],
-        remove=(prev.segments if prev else []),
-        operation="replace",
-        meta={"run_id": run_id},
-    )
-    docstats = idx.docstats.read(spark)
-    coll = docstats.agg(
+    ts_seg = view.termstats.write_segment(termstats.coalesce(4), label="final")
+    coll = view.docstats.read(spark).agg(
         F.count("*").alias("n_docs"),
         F.avg("doclen").alias("avgdl"),
     )
-    cs_seg = idx.collstats.write_segment(coll.coalesce(1), label="final")
-    prev = idx.collstats.latest()
-    idx.collstats.commit(
-        add=[cs_seg], remove=(prev.segments if prev else []), operation="replace"
-    )
+    cs_seg = view.collstats.write_segment(coll.coalesce(1), label="final")
+    view.stage(
+        {
+            "termstats": ([ts_seg], view.segments("termstats")),
+            "collstats": ([cs_seg], view.segments("collstats")),
+        }
+    ).commit("replace", {"run_id": run_id})
 
 
 def _write_tiny_segment(table, pdf: pd.DataFrame, label: str) -> str:
@@ -817,45 +675,6 @@ def _write_tiny_segment(table, pdf: pd.DataFrame, label: str) -> str:
     return path
 
 
-def _drop_orphan_shard_commits(idx: Index, shard: int, n_shards: int) -> None:
-    """Remove live segments committed by an interrupted run of ``shard``
-    (commits tagged (shard, n_shards) whose checkpoint never landed) from
-    every per-shard table — the shard build becomes idempotent under
-    resume.  Driver-side JSON walks only; no Spark job."""
-    for tname in ("postings", "docstats", "termdict", "termstats_partial"):
-        t = getattr(idx, tname)
-        latest = t.latest()
-        if latest is None:
-            continue
-        live = set(latest.segments)
-        orphans: list[str] = []
-        prev: set[str] = set()
-        first = True
-        for v in t.history():
-            snap = t.at(v)
-            cur = set(snap.segments)
-            m = snap.meta or {}
-            if first and v != 0:
-                # expire_snapshots removed earlier manifests: cur - prev
-                # would attribute EVERY surviving segment (other shards'
-                # included) to this commit — only later diffs are
-                # trustworthy, so the earliest survivor is baseline only
-                prev = cur
-                first = False
-                continue
-            first = False
-            if m.get("shard") == shard and m.get("n_shards") == n_shards:
-                orphans.extend(cur - prev)
-            prev = cur
-        orphans = [s for s in orphans if s in live]
-        if orphans:
-            t.commit(
-                remove=orphans,
-                operation="orphan-cleanup",
-                meta={"cleanup_shard": shard},
-            )
-
-
 def _completed_shards(spark: SparkSession, idx: Index) -> set[tuple[int, int]]:
     df = idx.checkpoints.read(spark)
     if df is None:
@@ -866,13 +685,16 @@ def _completed_shards(spark: SparkSession, idx: Index) -> set[tuple[int, int]]:
 
 def _checkpoint(
     spark: SparkSession,
-    idx: Index,
+    staged: IndexView,
     run_id: str,
     shard: int,
     n_shards: int,
     secs: float,
-    snaps: dict | None = None,
-) -> None:
+) -> int:
+    """Commit a shard: its staged table segments plus its checkpoint,
+    metrics and lineage rows, as one manifest version."""
+    import shutil
+
     # rows_out carries n_shards so a resume with a different shard count
     # never wrongly skips (lineage of the partitioning itself).
     now = pd.Timestamp.utcnow().tz_localize(None)
@@ -886,8 +708,6 @@ def _checkpoint(
             "ts": [now],
         }
     )
-    seg = _write_tiny_segment(idx.checkpoints, ck, f"ck{shard}")
-    idx.checkpoints.commit(add=[seg], meta={"run_id": run_id})
     mt = pd.DataFrame(
         {
             "run_id": [run_id] * 2,
@@ -897,30 +717,36 @@ def _checkpoint(
             "ts": [now] * 2,
         }
     )
-    mseg = _write_tiny_segment(idx.metrics, mt, f"m{shard}")
-    idx.metrics.commit(add=[mseg])
-    # lineage: which snapshot of each output table this shard's commit
-    # produced, from which logical input (north rule: per-partition
-    # lineage; Repair.cpp's rebuild bookkeeping analog)
-    rows = []
-    for tname in ("postings", "docstats", "termdict", "termstats_partial"):
-        # the snapshot THIS shard's commit produced — under parallel
-        # shards, latest() may already be a sibling's later commit
-        snap = (snaps or {}).get(tname) or getattr(idx, tname).latest()
-        rows.append(
-            {
-                "run_id": run_id,
-                "output_table": tname,
-                "input_table": "documents",
-                "input_snapshot": f"shard={shard}/{n_shards}",
-                "transform": "build_shard",
-                "ts": now,
-            }
+    ck_seg = _write_tiny_segment(staged.checkpoints, ck, f"ck{shard}")
+    m_seg = _write_tiny_segment(staged.metrics, mt, f"m{shard}")
+    staged = staged.stage({"checkpoints": ([ck_seg], []), "metrics": ([m_seg], [])})
+    written: list[str] = []
+
+    def lineage(version: int) -> dict:
+        # lineage: which manifest version this shard's commit produced,
+        # from which logical input (north rule: per-partition lineage;
+        # Repair.cpp's rebuild bookkeeping analog).  The version is only
+        # known per commit attempt, so a lost race rewrites the rows.
+        for seg in written:
+            shutil.rmtree(seg, ignore_errors=True)
+        ln = pd.DataFrame(
+            [
+                {
+                    "run_id": run_id,
+                    "output_table": tname,
+                    "input_table": "documents",
+                    "input_snapshot": f"shard={shard}/{n_shards}",
+                    "transform": "build_shard",
+                    "ts": now,
+                    "output_snapshot": str(version),
+                }
+                for tname in ("postings", "docstats", "termdict", "termstats_partial")
+            ]
         )
-        rows[-1]["output_snapshot"] = str(snap.version if snap else -1)
-    ln = pd.DataFrame(rows)
-    lseg = _write_tiny_segment(idx.lineage, ln, f"l{shard}")
-    idx.lineage.commit(add=[lseg], meta={"run_id": run_id, "shard": shard})
+        written[:] = [_write_tiny_segment(staged.lineage, ln, f"l{shard}")]
+        return {"lineage": (written[:], [])}
+
+    return staged.commit(stage=lineage)
 
 
 def decode_blocks(blocks: DataFrame, with_positions: bool = False) -> DataFrame:

@@ -10,7 +10,7 @@ re-training feeds, eval-set freshness audits, and delete-compliance
 reports without ever re-scanning the corpus.
 
 Semantics (exact, mode-independent): with ``live(v)`` = docstats rows
-at pin v minus doc_ids tombstoned at pin v,
+at manifest version v minus doc_ids tombstoned at v,
 
     added   = live(to) - live(from)
     removed = live(from) - live(to)
@@ -22,7 +22,7 @@ commit IS a new doc).  Compaction between the pins changes no live doc
 and therefore yields an EMPTY changelog — physical rewrites are
 invisible, exactly Iceberg's contract.
 
-Plan shape at 100 TB — two modes, chosen per call from the snapshot
+Plan shape at 100 TB — two modes, chosen per call from the manifest
 log alone (no Spark job):
 
 - **incremental** (every segment live at ``from`` is still live at
@@ -46,8 +46,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import SnapshotTable
-
 # docstats columns carried on every changelog row (schemas.DOCSTATS)
 _META_COLS = (
     "doc_id",
@@ -60,18 +58,10 @@ _META_COLS = (
 )
 
 
-def _deletes(index) -> SnapshotTable:
-    from .merge import deletes_table
-
-    return deletes_table(index)
-
-
-def _pin_segments(table, pin: int | None) -> list[str]:
-    """Live segment paths at ``pin`` (absolute); [] when the table had
-    no commits at the pinned time (pin None)."""
-    if pin is None:
-        return []
-    return list(table.at(pin).segments)
+def _segments(index, version: int, table: str) -> list[str]:
+    """Live segment paths of ``table`` at ``version`` (-1: before the
+    first commit, when no table has any)."""
+    return [] if version < 0 else index.view(version).segments(table)
 
 
 def _read_segments(spark: SparkSession, paths: list[str]) -> DataFrame | None:
@@ -80,26 +70,19 @@ def _read_segments(spark: SparkSession, paths: list[str]) -> DataFrame | None:
     return spark.read.parquet(*sorted(paths))
 
 
-def _dead_ids(
-    spark: SparkSession, index, pin: int | None
-) -> DataFrame | None:
-    """Distinct tombstoned doc_ids at ``pin`` (None = no deletes yet)."""
-    if pin is None:
-        return None
-    df = _deletes(index).read(spark, version=pin)
-    if df is None:
-        return None
-    return df.select("doc_id").distinct()
+def _dead_ids(spark: SparkSession, index, version: int) -> DataFrame | None:
+    """Distinct tombstoned doc_ids at ``version`` (None = no deletes)."""
+    df = _read_segments(spark, _segments(index, version, "deletes"))
+    return None if df is None else df.select("doc_id").distinct()
 
 
-def changelog_mode(index, versions_from: dict, versions_to: dict) -> str:
+def changelog_mode(index, version_from: int, version_to: int) -> str:
     """'incremental' when the (from, to] window is append-only for both
     docstats and deletes (every from-segment still live at to), else
-    'diff'.  Resolved from the snapshot JSON alone — no Spark job."""
-    for table, key in ((index.docstats, "docstats"), (_deletes(index), "deletes")):
-        segs_from = set(_pin_segments(table, versions_from.get(key)))
-        segs_to = set(_pin_segments(table, versions_to.get(key)))
-        if not segs_from <= segs_to:
+    'diff'.  Resolved from the manifests alone — no Spark job."""
+    for table in ("docstats", "deletes"):
+        segs_from = set(_segments(index, version_from, table))
+        if not segs_from <= set(_segments(index, version_to, table)):
             return "diff"
     return "incremental"
 
@@ -119,39 +102,31 @@ def _with_change(df: DataFrame, change: str) -> DataFrame:
 def index_changes(
     spark: SparkSession,
     index,
-    versions_from: dict,
-    versions_to: dict | None = None,
+    version_from: int,
+    version_to: int | None = None,
 ) -> DataFrame:
     """(docstats metadata…, change) for every doc whose LIVE-set
-    membership differs between the two pins.
-
-    ``versions_from`` / ``versions_to`` are per-table version dicts as
-    produced by :func:`operators.timetravel.index_versions` (only the
-    ``docstats`` and ``deletes`` keys matter; an absent key means the
-    table had no commits at that time).  ``versions_to`` defaults to
-    HEAD.  Pass the LIVE index (not an as-of view) — pins are explicit.
-    """
+    membership differs between two manifest versions, as returned by
+    :func:`operators.timetravel.index_versions` (-1 = before the first
+    commit).  ``version_to`` defaults to the head."""
     from .timetravel import index_versions
 
-    if versions_to is None:
-        versions_to = index_versions(index)
-    pf, pt = versions_from.get("docstats"), versions_to.get("docstats")
-    ds_from = (
-        index.docstats.read(spark, version=pf) if pf is not None else None
-    )
-    ds_to = index.docstats.read(spark, version=pt) if pt is not None else None
-    dead_from = _dead_ids(spark, index, versions_from.get("deletes"))
-    dead_to = _dead_ids(spark, index, versions_to.get("deletes"))
+    if version_to is None:
+        version_to = index_versions(index)
+    ds_from = _read_segments(spark, _segments(index, version_from, "docstats"))
+    ds_to = _read_segments(spark, _segments(index, version_to, "docstats"))
+    dead_from = _dead_ids(spark, index, version_from)
+    dead_to = _dead_ids(spark, index, version_to)
 
     if ds_to is None and ds_from is None:
         return _empty(spark)
 
-    if changelog_mode(index, versions_from, versions_to) == "incremental":
+    if changelog_mode(index, version_from, version_to) == "incremental":
         # Iceberg incremental read: adds live ONLY in the window's new
         # docstats segments; removals ONLY in its new tombstone segments.
         new_ds = sorted(
-            set(_pin_segments(index.docstats, pt))
-            - set(_pin_segments(index.docstats, pf))
+            set(_segments(index, version_to, "docstats"))
+            - set(_segments(index, version_from, "docstats"))
         )
         added = _read_segments(spark, new_ds)
         if added is not None:
@@ -164,10 +139,9 @@ def index_changes(
                 added = added.join(
                     ds_from.select("doc_id"), "doc_id", "left_anti"
                 )
-        dt = _deletes(index)
         new_del = sorted(
-            set(_pin_segments(dt, versions_to.get("deletes")))
-            - set(_pin_segments(dt, versions_from.get("deletes")))
+            set(_segments(index, version_to, "deletes"))
+            - set(_segments(index, version_from, "deletes"))
         )
         removed = None
         new_dead = _read_segments(spark, new_del)
@@ -180,7 +154,7 @@ def index_changes(
             removed = ds_from.join(new_dead, "doc_id", "left_semi")
     else:
         # a rewrite (compaction) broke append-only lineage: honest
-        # live-set diff between the pins
+        # live-set diff between the two versions
         def live(ds, dead):
             if ds is None:
                 return None

@@ -391,16 +391,17 @@ def anchor_counts(spark: SparkSession, index, token: str) -> DataFrame:
     link-graph recompute: the build already inverted the graph into the
     index, which is the whole Linkdb point.  One row per target doc, so
     the result broadcasts into ranking joins the way inlink_counts does."""
-    from .merge import decode_to_postings, deletes_table
+    from .merge import decode_to_postings
 
     tid = int(term_hash_py(f"anchor:{token.lower()}"))
+    index = index.view()  # one manifest version for postings and deletes
     blocks = index.postings.read_pruned(spark, [tid])
     if blocks is None:
         raise RuntimeError(f"postings snapshot absent under {index.root!r}")
     rows = decode_to_postings(
         blocks.filter(F.col("term_id") == F.lit(tid)), with_positions=False
     ).select("doc_id", F.col("tf").cast("long").alias("n_anchor"))
-    ddf = deletes_table(index).read(spark)
+    ddf = index.deletes.read(spark)
     if ddf is not None:
         # no broadcast hint (plans/exec.py convention): a PageReindex-
         # scale delete batch must stay distributed; AQE broadcasts the
@@ -421,6 +422,7 @@ def search_anchor(
     shape as ``plans.sortby.search_sortby``)."""
     from .build import docmeta_cached
 
+    index = index.view()
     rows = anchor_counts(spark, index, token)
     order = [F.desc("n_anchor"), F.asc("doc_id")]
     topk = rows.orderBy(*order).limit(k)

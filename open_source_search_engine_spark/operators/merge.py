@@ -23,23 +23,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import SnapshotTable
+from ..sources.tables import MEMO
 from .build import Index, _write_tiny_segment, encode_blocks, finalize_stats
 
 # tombstone count above which compaction stops collecting the dead set to
 # the driver for a broadcast anti-join and instead anti-joins against the
 # deletes table directly (distributed).  Mirrors topk.MAX_DEAD_INLINE.
 DEAD_BROADCAST_CAP = 100_000
-
-
-def deletes_table(idx: Index) -> SnapshotTable:
-    # time-travel views (operators/timetravel.IndexAsOf) pin the deletes
-    # snapshot too — tombstones are part of what the index served at a
-    # point in time
-    override = getattr(idx, "_deletes_override", None)
-    if override is not None:
-        return override
-    return SnapshotTable(idx.root, "deletes")
 
 
 def delete_docs(spark: SparkSession, idx: Index, doc_ids: list[int]) -> None:
@@ -49,9 +39,9 @@ def delete_docs(spark: SparkSession, idx: Index, doc_ids: list[int]) -> None:
     if not doc_ids:
         return
     pdf = pd.DataFrame({"doc_id": np.asarray(doc_ids, dtype=np.int64)})
-    t = deletes_table(idx)
+    t = idx.deletes
     seg = _write_tiny_segment(t, pdf, "del")
-    t.commit(add=[seg], meta={"n": len(doc_ids)})
+    t.commit(add=[seg], operation="delete", meta={"n": len(doc_ids)})
 
 
 def delete_docs_df(spark: SparkSession, idx: Index, doc_ids: DataFrame) -> int:
@@ -63,24 +53,15 @@ def delete_docs_df(spark: SparkSession, idx: Index, doc_ids: DataFrame) -> int:
     no cache invalidation)."""
     import shutil
 
-    t = deletes_table(idx)
+    t = idx.deletes
     df = doc_ids.select(F.col("doc_id").cast("long")).distinct()
     seg = t.write_segment(df, "del")
     n = int(spark.read.parquet(seg).count())
     if n == 0:
         shutil.rmtree(seg, ignore_errors=True)
         return 0
-    t.commit(add=[seg], meta={"n": n})
+    t.commit(add=[seg], operation="delete", meta={"n": n})
     return n
-
-
-# per-snapshot tombstone cache: the WAND kernel needs the dead set as a
-# driver-side array (it must exclude dead docs BEFORE the bounded heap so
-# survivors are true local top-k), but collecting it per query was a Spark
-# job on the hot path — cache keyed by the deletes snapshot version.
-# Values are either the materialized array or an ("over", cap) marker
-# recording that the DISTINCT count is known to exceed ``cap``.
-_DEAD_CACHE: dict[tuple, object] = {}
 
 
 def deleted_doc_ids(
@@ -90,59 +71,48 @@ def deleted_doc_ids(
     cap: int | None = None,
 ) -> np.ndarray | None:
     """Sorted DISTINCT live tombstones (small between compactions by
-    design), cached per deletes-table snapshot.  The key carries the
-    snapshot file identity: an index root deleted and rebuilt in place
-    restarts version numbering, and a bare (root, version) key would
-    serve the old build's dead set (the same aliasing every other
-    version-keyed cache here guards against).  Dedup matters too:
-    delete_docs appends without checking prior segments, and a repeated
-    delete must not inflate the count toward MAX_DEAD_INLINE.
-    ``version`` pins a specific snapshot (compaction uses this so the
-    set it annihilates is exactly the set whose segments it clears).
+    design), memoized per deletes segment list.  The WAND kernel needs
+    the dead set as a driver-side array (it must exclude dead docs
+    BEFORE the bounded heap so survivors are true local top-k), and
+    collecting it per query was a Spark job on the hot path.  Dedup
+    matters: delete_docs appends without checking prior segments, and a
+    repeated delete must not inflate the count toward MAX_DEAD_INLINE.
+    ``version`` pins a manifest version (compaction uses this so the set
+    it annihilates is exactly the set whose segments it clears).
 
     ``cap``: when given, returns ``None`` if the DISTINCT tombstone
-    count exceeds it — and, critically, decides that WITHOUT ever
-    materializing more than ``cap + 1`` ids on the driver (distinct +
-    ``limit(cap+1)`` runs server-side).  The r4 verdict's last latent
-    driver-OOM was the old shape: collect the WHOLE deletes table, THEN
-    compare ``len()`` to the cap — at bulk-delete scale the driver died
-    inside the very collect the cap exists to prevent.  Callers that hit
-    ``None`` must take their distributed path (anti-join against the
-    deletes table)."""
-    t = deletes_table(idx)
-    snap = t.latest() if version is None else t.at(version)
-    ident = t.snapshot_ident(snap.version) if snap else ()
-    key = (idx.root, snap.version if snap else -1, ident)
-    hit = _DEAD_CACHE.get(key)
+    count exceeds it — and decides that WITHOUT ever materializing more
+    than ``cap + 1`` ids on the driver (distinct + ``limit(cap+1)`` runs
+    server-side): collecting the whole deletes table and THEN comparing
+    ``len()`` to the cap would kill the driver at bulk-delete scale
+    inside the very collect the cap exists to prevent.  Callers that
+    hit ``None`` must take their distributed path (anti-join against the
+    deletes table).  The memo holds either the array or an ("over", cap)
+    marker recording that the distinct count is known to exceed cap."""
+    view = idx.view(version)
+    key = ("dead", view.key("deletes"))
+    hit = MEMO.get(key)
     if hit is not None:
         if isinstance(hit, np.ndarray):
             if cap is not None and hit.size > cap:
                 return None
             return hit
-        # ("over", t): distinct count known to exceed t.  A tighter or
-        # equal cap is answered from the marker; a looser cap (or a full
-        # materialization request) must re-probe.
+        # a tighter or equal cap is answered from the marker; a looser
+        # cap (or a full materialization request) must re-probe
         if cap is not None and cap <= hit[1]:
             return None
-    # versions only move forward: evict this root's stale-version entries
-    # (list() snapshot + pop: concurrent federated driver threads may
-    # insert/evict during the walk — review r4-s2)
-    for k in list(_DEAD_CACHE):
-        if k[0] == idx.root and k != key:
-            _DEAD_CACHE.pop(k, None)
-    df = t.read(spark, version=snap.version if snap else None) if snap else None
+    df = view.deletes.read(spark)
     if df is None:
         out = np.empty(0, dtype=np.int64)
     elif cap is not None:
         rows = df.select("doc_id").distinct().limit(cap + 1).collect()
         if len(rows) > cap:
-            _DEAD_CACHE[key] = ("over", cap)
+            MEMO.put(key, ("over", cap))
             return None
         out = _sorted_dead(rows)
     else:
         out = _sorted_dead(df.collect())
-    _DEAD_CACHE[key] = out
-    return out
+    return MEMO.put(key, out)
 
 
 def _sorted_dead(rows) -> np.ndarray:
@@ -271,8 +241,9 @@ def compact_deltas(
 
     from pyspark import StorageLevel
 
-    snap = idx.postings.latest()
-    if snap is None or len(snap.segments) <= keep_largest + 1:
+    view = idx.view()
+    segments = view.segments("postings")
+    if len(segments) <= keep_largest + 1:
         return 0
 
     def seg_bytes(path: str) -> int:
@@ -285,16 +256,14 @@ def compact_deltas(
                     pass
         return total
 
-    by_size = sorted(snap.segments, key=seg_bytes, reverse=True)
+    by_size = sorted(segments, key=seg_bytes, reverse=True)
     merge_these = by_size[keep_largest:]
     blocks_df = spark.read.parquet(*merge_these)
-    # fresh shard ids from commit-history metadata (driver-side JSON
-    # walk) — scanning every live segment for max(shard) would make the
-    # 'O(merged deltas)' minor merge pay an O(index) parquet scan just to
-    # pick an id
-    from ..streaming.incremental import _next_shard_id
-
-    first_shard = _next_shard_id(idx)
+    # fresh shard ids above every id the index ever used (the manifest
+    # carries the highest) — scanning every live segment for max(shard)
+    # would make the 'O(merged deltas)' minor merge pay an O(index)
+    # parquet scan just to pick an id
+    first_shard = view.max_shard + 1
     n_sub = max(int(blocks_df.select("shard").distinct().count()), 1)
     posts = decode_to_postings(blocks_df).withColumn(
         "shard",
@@ -316,15 +285,11 @@ def compact_deltas(
     )
     merged.unpersist()
     posts.unpersist()
-    idx.postings.commit(
-        add=[seg],
-        remove=list(merge_these),
-        operation="minor-merge",
-        meta={
-            "run_id": run_id,
-            "merged_segments": len(merge_these),
-            "max_shard": int(first_shard) + n_sub - 1,
-        },
+    view.stage(
+        {"postings": ([seg], list(merge_these))},
+        max_shard=int(first_shard) + n_sub - 1,
+    ).commit(
+        "minor-merge", {"run_id": run_id, "merged_segments": len(merge_these)}
     )
     return len(merge_these)
 
@@ -350,37 +315,26 @@ def compact_postings(
     ids per batch, so this also renormalizes shard proliferation back to
     the index's steady-state width).
 
-    Docstats/termstats are rebuilt consistently; consumed tombstones are
-    cleared in the same logical operation (snapshot commits are per-table
-    but idempotent — a crash mid-way leaves a readable index either way).
+    Postings, docstats and stats are rebuilt and the consumed tombstones
+    cleared in ONE manifest commit — a crash before it leaves the old
+    index, after it the compacted one.
     """
     from pyspark import StorageLevel
 
-    # a half-committed delta batch (add_documents died before its
-    # postings commit) must be healed BEFORE compaction, or its orphan
-    # docstats/termstats_partial segments get baked into the rebuilt stats
-    from ..streaming.incremental import repair_orphan_deltas
-
-    repair_orphan_deltas(idx)
-    # capture the snapshots FIRST, read those exact versions: a commit
-    # landing between read() and latest() (concurrent add_documents /
-    # delete) would otherwise have its segment removed by the swap below
-    # without its contents being merged — silent data loss
-    prev_snap = idx.postings.latest()
-    if prev_snap is None:
+    # one view for the whole merge: the segments it rewrites and the
+    # tombstones it annihilates are exactly the ones the commit removes;
+    # a delete or add committed meanwhile is rebased over, not lost
+    view = idx.view()
+    prev_segs = view.segments("postings")
+    if not prev_segs:
         return
-    blocks_df = idx.postings.read(spark, version=prev_snap.version)
-    if blocks_df is None:
-        return
-    dt = deletes_table(idx)
-    del_snap = dt.latest()
+    blocks_df = view.postings.read(spark)
+    del_segs = view.segments("deletes")
     if n_shards is None:
         n_shards = max(int(blocks_df.select("shard").distinct().count()), 1)
     dead = (
-        deleted_doc_ids(
-            spark, idx, version=del_snap.version, cap=DEAD_BROADCAST_CAP
-        )
-        if del_snap is not None
+        deleted_doc_ids(spark, view, cap=DEAD_BROADCAST_CAP)
+        if del_segs
         else np.empty(0, dtype=np.int64)
     )
     if dead is None:
@@ -389,7 +343,7 @@ def compact_postings(
         # (sort-merge/shuffled hash under AQE; a broadcast of this side
         # would be exactly the OOM the cap guards against)
         dead_df = (
-            dt.read(spark, version=del_snap.version)
+            view.deletes.read(spark)
             .select(F.col("doc_id").cast("long"))
             .distinct()
         )
@@ -428,36 +382,29 @@ def compact_postings(
     tsp_seg = idx.termstats_partial.write_segment(ts_partial.coalesce(4), label="compacted")
     merged.unpersist()
     posts.unpersist()
-
-    idx.postings.commit(
-        add=[seg], remove=list(prev_snap.segments), operation="compact",
+    changes = {
+        "postings": ([seg], prev_segs),
+        "termstats_partial": ([tsp_seg], view.segments("termstats_partial")),
+    }
+    if dead_df is not None:
+        # docstats physically drops tombstoned docs, and the tombstone
+        # segments whose ids were annihilated are cleared
+        live = view.docstats.read(spark).join(dead_df, "doc_id", "left_anti")
+        ds_seg = idx.docstats.write_segment(live, label="compacted")
+        changes["docstats"] = ([ds_seg], view.segments("docstats"))
+        changes["deletes"] = ([], del_segs)
+    staged = view.stage(
+        changes,
+        operation="compact",
         meta={
             "run_id": run_id,
             "tombstones_dropped": n_dead,
             "n_shards": int(n_shards),
-            # a later add_documents allocates shard ids ABOVE this: the
-            # compacted segment occupies 0..n_shards-1, and a colliding
-            # delta shard id would break the per-(shard,term) salt-modulus
-            # invariant the WAND probe routing relies on
-            "max_shard": int(n_shards) - 1,
         },
+        # a later add_documents allocates shard ids ABOVE this: the
+        # compacted segment occupies 0..n_shards-1, and a colliding
+        # delta shard id would break the per-(shard,term) salt-modulus
+        # invariant the WAND probe routing relies on
+        max_shard=int(n_shards) - 1,
     )
-    prev_tsp = idx.termstats_partial.latest()
-    idx.termstats_partial.commit(
-        add=[tsp_seg], remove=list(prev_tsp.segments), operation="compact"
-    )
-    # docstats: physically drop tombstoned docs (snapshot captured
-    # before the read, same as postings above)
-    if dead_df is not None:
-        prev_ds = idx.docstats.latest()
-        ds = idx.docstats.read(spark, version=prev_ds.version)
-        live = ds.join(dead_df, "doc_id", "left_anti")
-        ds_seg = idx.docstats.write_segment(live, label="compacted")
-        idx.docstats.commit(add=[ds_seg], remove=list(prev_ds.segments), operation="compact")
-        # clear ONLY the tombstone segments whose ids were annihilated
-        # (del_snap, captured before `dead`): a delete committed while
-        # the compaction jobs ran keeps its segment — and its docs stay
-        # excluded merge-on-read instead of resurrecting
-        if del_snap is not None and del_snap.segments:
-            dt.commit(remove=list(del_snap.segments), operation="clear")
-    finalize_stats(spark, idx, run_id)
+    finalize_stats(spark, staged, run_id)

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import term_id_col
+from ..sources.tables import Manifest
 
 
 def termstats_from_occurrences(occ: DataFrame) -> DataFrame:
@@ -32,32 +33,23 @@ def collstats_from_docstats(docstats: DataFrame) -> DataFrame:
 
 def describe_index(spark, index) -> dict:
     """Operational snapshot of a stored index — the PageStats/Statsdb
-    'stats page' analog: per-table segment counts + snapshot versions
-    (driver-side JSON walks), plus postings shape from BLOCK METADATA
-    only (one pruned-column scan; no posting bytes are decoded).
+    'stats page' analog: per-table segment counts + the manifest version
+    that last changed each table (one driver-side manifest read), plus
+    postings shape from BLOCK METADATA only (one pruned-column scan; no
+    posting bytes are decoded).
 
     Returns a plain dict so CLIs/tests/serving dashboards can render it:
     {tables: {name: {segments, version, operation}},
      postings: {blocks, postings, bytes_encoded, n_shards, n_terms,
                 max_block_docs}, collstats: {n_docs, avgdl},
      features: {...}, tombstones: n}."""
+    index = index.view()
     out: dict = {"tables": {}, "features": index.features()}
     for name in (
         "postings", "docstats", "termdict", "termstats",
         "termstats_partial", "collstats", "deletes", "checkpoints",
     ):
-        try:
-            t = getattr(index, name)
-        except AttributeError:
-            # only 'deletes' legitimately lacks an Index attribute (it is
-            # derived); any other missing table is a real misconfiguration
-            # and must surface, not masquerade as deletes stats
-            if name != "deletes":
-                raise
-            from .merge import deletes_table
-
-            t = deletes_table(index)
-        snap = t.latest()
+        snap = index.snapshot(name)
         out["tables"][name] = {
             "segments": len(snap.segments) if snap else 0,
             "version": snap.version if snap else -1,
@@ -122,14 +114,12 @@ def describe_index(spark, index) -> dict:
                 "n_docs": int(r["n_docs"]),
                 "avgdl": round(float(r["avgdl"] or 0.0), 2),
             }
-    from .merge import deletes_table
-
     # distributed count, NOT deleted_doc_ids(): the stats page only needs
     # the number — collecting + sorting every tombstone id to the driver
-    # (and warming the WAND dead-cache as a side effect) is exactly the
+    # (and warming the WAND dead-set memo as a side effect) is exactly the
     # driver-side materialization a large un-compacted delete backlog
     # can't afford
-    ddf = deletes_table(index).read(spark)
+    ddf = index.deletes.read(spark)
     out["tombstones"] = (
         0 if ddf is None else int(ddf.select("doc_id").distinct().count())
     )
@@ -138,11 +128,11 @@ def describe_index(spark, index) -> dict:
 
 def fsck_index(spark, index, deep: bool = False) -> dict:
     """Consistency check of a stored index — the Repair.cpp
-    verify-before-rebuild analog for the snapshot-log layout.  Checks,
+    verify-before-rebuild analog for the manifest layout.  Checks,
     cheapest first:
 
-    - manifest integrity: every table's HEAD snapshot resolves and every
-      referenced segment directory exists on disk;
+    - manifest integrity: every segment directory the head manifest
+      references exists on disk;
     - cross-table invariants (driver-side, tiny reads): collstats.n_docs
       == docstats row count; termstats.n_blocks sum == postings block
       count; every posting term_id appears in the termstats dictionary;
@@ -157,50 +147,24 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
 
     issues: list[str] = []
     checked: dict = {}
-    tables = (
-        "postings", "docstats", "termdict", "termstats",
-        "termstats_partial", "collstats", "checkpoints",
-    )
+    index = index.view()
     broken: set[str] = set()
-    for name in tables:
-        t = getattr(index, name)
-        snap = t.latest()
-        if snap is None:
-            if name in ("postings", "docstats", "collstats", "termstats"):
-                issues.append(f"{name}: no snapshot (index incomplete?)")
-            continue
-        missing = [s for s in snap.segments if not os.path.isdir(s)]
+    # one pass over the head manifest: a missing segment dir in ANY
+    # table (deletes included — it crashes every query path's tombstone
+    # anti-join) is the verify-before-rebuild failure fsck exists for
+    tables = index.record["tables"]
+    for name in sorted(tables):
+        missing = [s for s in index.segments(name) if not os.path.isdir(s)]
         if missing:
             broken.add(name)
             issues.append(
-                f"{name}: v{snap.version} references {len(missing)} "
+                f"{name}: v{index.version} references {len(missing)} "
                 f"missing segment dir(s), e.g. {os.path.basename(missing[0])}"
             )
-    # the deletes table is root-addressed, not an Index attribute — but a
-    # broken deletes snapshot crashes EVERY query path's tombstone
-    # anti-join, the exact verify-before-rebuild failure fsck exists for
-    from .merge import deletes_table
-
-    dsnap = deletes_table(index).latest()
-    if dsnap is not None:
-        missing = [s for s in dsnap.segments if not os.path.isdir(s)]
-        if missing:
-            issues.append(
-                f"deletes: v{dsnap.version} references {len(missing)} "
-                f"missing segment dir(s), e.g. {os.path.basename(missing[0])}"
-            )
-    checked["tables"] = len(tables) + 1
-
-    # half-committed delta batches (add_documents died before its
-    # postings commit): their orphan segments double-count stats until
-    # repaired (streaming.incremental.repair_orphan_deltas)
-    from ..streaming.incremental import find_orphan_deltas
-
-    for name, segs in find_orphan_deltas(index).items():
-        issues.append(
-            f"{name}: {len(segs)} orphan segment(s) from a half-committed "
-            "add batch (run repair_orphan_deltas)"
-        )
+    for name in ("postings", "docstats", "collstats", "termstats"):
+        if name not in tables:
+            issues.append(f"{name}: no snapshot (index incomplete?)")
+    checked["tables"] = len(tables)
 
     # cross-table scans only over tables whose segments all exist — a
     # missing dir is already reported above and would otherwise abort the
@@ -238,8 +202,8 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
         # physical count) — after one, the mismatch is expected, not an
         # orphan signal, until the next finalize/compact
         minor_merged = any(
-            index.postings.at(v).operation == "minor-merge"
-            for v in index.postings.history()
+            rec["operation"] == "minor-merge"
+            for rec in Manifest(index.root).records(index.version)
         )
         if (
             ts_blocks is not None

@@ -1,220 +1,42 @@
-"""Snapshot time travel: query the index AS OF an earlier snapshot.
+"""Time travel: query the index AS OF an earlier manifest version.
 
-The snapshot layer (sources/tables.py) is Iceberg-shaped: every commit
-writes a new immutable manifest and never deletes prior segment files,
-so any historical version stays readable.  The reference's Rdb keeps
-only the live file set (RdbBase manifest, SURVEY §1.3) — time travel is
-the Iceberg-native extension this rebuild gets for free, and the audit
-tool a training-data pipeline needs ("what did the index serve LAST
-week?", reproducing a past training snapshot, diffing pre/post-delete).
+Every commit publishes a new immutable manifest (sources/tables.py) and
+never deletes segment files, so any surviving version stays readable.
+The reference's Rdb keeps only the live file set (RdbBase manifest,
+SURVEY §1.3) — time travel is the Iceberg-native extension this rebuild
+gets for free, and the audit tool a training-data pipeline needs ("what
+did the index serve LAST week?", reproducing a past training snapshot,
+diffing pre/post-delete).
 
-``as_of(index, versions)`` returns an object duck-typed to Index whose
-tables are pinned to the given snapshot versions; every query plan
-(WAND, exhaustive, boolean, serp) works unchanged because the query
-paths only touch ``root`` / ``features()`` / table ``.read()`` /
-``.latest()`` / ``.snapshot_ident()`` — and the version-keyed driver
-caches (stats, docmeta, serp results) key on the PINNED versions, so
-as-of reads and head reads never poison each other.
-
-Known cost (documented, not a defect): most driver caches keep ONE
-version per index root ("versions only move forward" eviction), with
-docmeta the two-version exception — so ALTERNATING head and as-of
-queries on the same root re-pays the stats/tombstone jobs on each
-switch.  Correctness is unaffected; audit workloads should batch their
-as-of queries together rather than interleave them with head traffic.
+A point in time is one number: ``index_versions(index)`` returns the
+head manifest version, and ``as_of(index, v)`` is the ``IndexView``
+pinned at ``v`` — the same object every query entry point opens at the
+head.  Every query plan (WAND, exhaustive, boolean, serp) works
+unchanged on it, and the memoized stats, tombstones, docmeta and read
+frames key on segment lists, so as-of and head reads share what they
+have in common and never poison each other.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..sources.tables import Snapshot, SnapshotTable
-
-_TABLES = (
-    "postings",
-    "docstats",
-    "termdict",
-    "termstats_partial",
-    "termstats",
-    "collstats",
-    "checkpoints",
-    "metrics",
-    "lineage",
-)
+from ..sources.tables import IndexView, Manifest
 
 
-class PinnedTable:
-    """A SnapshotTable view frozen at one version (None = follow HEAD)."""
-
-    def __init__(self, table: SnapshotTable, version: int | None):
-        self._table = table
-        self._version = version
-
-    def _resolve(self, version: int | None) -> int | None:
-        # an explicit version must not see past the pin (same rule as
-        # `at`); None means "this view's snapshot", i.e. the pin itself
-        if version is None:
-            return self._version
-        if self._version is not None and version > self._version:
-            raise ValueError(
-                f"snapshot v{version} is after this as-of view's pin "
-                f"(v{self._version})"
-            )
-        return version
-
-    def read(
-        self, spark: SparkSession, version: int | None = None
-    ) -> DataFrame | None:
-        return self._table.read(spark, version=self._resolve(version))
-
-    def read_pruned(
-        self, spark: SparkSession, term_ids, version: int | None = None
-    ) -> DataFrame | None:
-        # bloom pruning is version-safe: sidecars live inside immutable
-        # segment dirs, so the pinned snapshot's segment list resolves to
-        # the blooms that were written with those exact segments
-        return self._table.read_pruned(
-            spark, term_ids, version=self._resolve(version)
-        )
-
-    def latest(self) -> Snapshot | None:
-        if self._version is None:
-            return self._table.latest()
-        return self._table.at(self._version)
-
-    def history(self) -> list[int]:
-        # history as it stood AT the pin — the live table's later commits
-        # must not leak through the as-of view (consumers that walk
-        # history, e.g. delta-merge and fsck, would otherwise observe
-        # post-pin mutations)
-        hist = self._table.history()
-        if self._version is None:
-            return hist
-        return [v for v in hist if v <= self._version]
-
-    def at(self, version: int) -> Snapshot:
-        if self._version is not None and version > self._version:
-            raise ValueError(
-                f"snapshot v{version} is after this as-of view's pin "
-                f"(v{self._version})"
-            )
-        return self._table.at(version)
-
-    def __getattr__(self, name):
-        # snapshot_ident, dir, ... passthrough (read-only use; write-side
-        # methods would mutate the underlying table, which the as-of
-        # contract forbids — queries never call them)
-        return getattr(self._table, name)
+def index_versions(index) -> int:
+    """The index's current manifest version (-1 before the first
+    commit) — capture BEFORE a mutation to be able to query as-of it
+    later."""
+    v = index.view().version
+    return -1 if v is None else v
 
 
-class _EmptyTable:
-    """Stand-in for a table that did not exist at the pinned time —
-    behaves like a never-committed SnapshotTable (latest() None,
-    read() None), which every consumer already handles (a fresh index
-    has no deletes commits)."""
-
-    def __init__(self, table: SnapshotTable):
-        self._table = table
-
-    def read(
-        self, spark: SparkSession, version: int | None = None
-    ) -> DataFrame | None:
-        # accepts the same explicit-version signature as PinnedTable /
-        # SnapshotTable: there is nothing to see at ANY version of a
-        # table that did not exist at the pin
-        return None
-
-    def read_pruned(
-        self, spark: SparkSession, term_ids, version: int | None = None
-    ) -> DataFrame | None:
-        return None
-
-    def latest(self) -> Snapshot | None:
-        return None
-
-    def snapshot_ident(self, version: int) -> tuple:
-        return ()
-
-    def history(self) -> list[int]:
-        # never-committed means NO history — the live table's commits
-        # (which all post-date the pin) must not leak through
-        return []
-
-    def at(self, version: int) -> Snapshot:
-        raise ValueError(
-            f"table had no snapshots at this as-of view's pin; "
-            f"v{version} does not exist in the pinned timeline"
-        )
-
-    def __getattr__(self, name):
-        return getattr(self._table, name)
+def as_of(index, version: int) -> IndexView:
+    return index.view(version)
 
 
-class IndexAsOf:
-    """Duck-typed Index with per-table pinned snapshot versions."""
-
-    def __init__(self, index, versions: dict[str, int]):
-        self._index = index
-        self._versions = dict(versions)
-        self.root = index.root
-        # the deletes table is addressed by root (operators/merge.py
-        # deletes_table reads this override), so it pins here; an absent
-        # key means "no tombstones existed at the pinned time" — a table
-        # whose history started after the pin must NOT fall through to
-        # HEAD
-        live = SnapshotTable(index.root, "deletes")
-        if "deletes" in versions:
-            self._deletes_override = PinnedTable(live, versions["deletes"])
-        else:
-            self._deletes_override = _EmptyTable(live)
-
-    def features(self) -> dict:
-        return self._index.features()
-
-    def __getattr__(self, name):
-        if name in _TABLES:
-            if name in self._versions:
-                return PinnedTable(
-                    getattr(self._index, name), self._versions[name]
-                )
-            # absent pin == the table had NO history at the pinned time
-            # (index_versions records every table that existed): it must
-            # read as never-committed, not fall through to HEAD — e.g.
-            # stats finalized only after the pin would otherwise score
-            # as-of queries with future idf/avgdl
-            return _EmptyTable(getattr(self._index, name))
-        return getattr(self._index, name)
-
-
-def index_versions(index) -> dict[str, int]:
-    """Current snapshot version of every table — capture BEFORE a
-    mutation to be able to query as-of it later."""
-    from .merge import deletes_table
-
-    out: dict[str, int] = {}
-    for name in _TABLES:
-        snap = getattr(index, name).latest()
-        if snap is not None:
-            out[name] = snap.version
-    dsnap = deletes_table(index).latest()
-    if dsnap is not None:
-        out["deletes"] = dsnap.version
-    return out
-
-
-def as_of(index, versions: dict[str, int]) -> IndexAsOf:
-    return IndexAsOf(index, versions)
-
-
-def vacuum_index(index, keep_last: int = 1) -> dict[str, dict]:
-    """Expire old snapshots of EVERY index table (incl. tombstones) —
-    the maintenance dual of as_of: retention bounds how far back AS-OF
-    reads may go, and disk stops growing with mutation history.  Returns
-    per-table {expired_snapshots, removed_segments}."""
-    from .merge import deletes_table
-
-    out: dict[str, dict] = {}
-    for name in _TABLES:
-        out[name] = getattr(index, name).expire_snapshots(keep_last)
-    out["deletes"] = deletes_table(index).expire_snapshots(keep_last)
-    return out
+def vacuum_index(index, keep_last: int = 1) -> dict:
+    """Expire all but the newest ``keep_last`` manifest versions and the
+    segments only they reach — the maintenance dual of as_of: retention
+    bounds how far back AS-OF reads may go, and disk stops growing with
+    mutation history.  Returns {expired_versions, removed_segments}."""
+    return Manifest(index.root).expire(keep_last)

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions import codec
 from ..functions.bm25 import K1, B, py_idf
+from ..sources.tables import MEMO
 from .build import Index, docmeta_cached
 
 # total scanned-postings bound (Σ df over queried termlists) under which
@@ -470,11 +471,9 @@ def _empty_out() -> pa.Table:
     )
 
 
-# driver-side (root, docstats-version)-keyed doc metadata rows — the
-# Msg20 title-rec cache analog.  Entries are (repo, path, lang) tuples for
-# docs that appeared in some top-k; bounded, version-evicted like the
-# other driver caches (stale snapshot versions are unreachable).
-_DOCMETA_ROW_CACHE: dict[tuple[str, int], dict[int, tuple]] = {}
+# bound on one docstats segment list's doc metadata rows — the Msg20
+# title-rec cache analog holds (repo, path, lang) for docs that appeared
+# in some top-k
 _DOCMETA_ROW_MAX = 200_000
 
 
@@ -483,33 +482,26 @@ def _docmeta_rows(
 ) -> dict[int, tuple]:
     """{doc_id: (repo, path, lang)} for the given ids; misses are fetched
     in ONE pushed-filter scan of the cached docmeta projection."""
-    snap = index.docstats.latest()
-    # snapshot-file identity guards against in-place rebuilds
-    ident = index.docstats.snapshot_ident(snap.version) if snap else ()
-    key = (index.root, snap.version if snap else -1, ident)
-    cache = _DOCMETA_ROW_CACHE.get(key)
+    view = index.view()
+    key = ("rows", view.key("docstats"))
+    cache = MEMO.get(key)
     if cache is None:
-        # list() snapshot + pop-tolerant eviction: federated queries hit
-        # this from concurrent driver threads (review r4-s2)
-        for stale in list(_DOCMETA_ROW_CACHE):
-            if stale[0] == index.root:
-                _DOCMETA_ROW_CACHE.pop(stale, None)
-        cache = _DOCMETA_ROW_CACHE[key] = {}
-    missing = [int(d) for d in doc_ids if d not in cache]
+        cache = MEMO.put(key, {})
+    # answer from a local copy: a size-bound reset (or another driver
+    # thread's) must never make a requested id vanish from the result
+    # (a dropped top-k row)
+    out = {d: v for d in doc_ids if (v := cache.get(d)) is not None}
+    missing = [int(d) for d in doc_ids if d not in out]
     if missing:
         if len(cache) + len(missing) > _DOCMETA_ROW_MAX:
-            # size-bound reset: after clearing, EVERY requested id is a
-            # miss — refetch them all, or previously-cached ids would
-            # silently vanish from the returned meta (dropped top-k rows)
             cache.clear()
-            missing = [int(d) for d in doc_ids]
         for r in (
-            docmeta_cached(spark, index)
+            docmeta_cached(spark, view)
             .filter(F.col("doc_id").isin(missing))
             .collect()
         ):
-            cache[r["doc_id"]] = (r["repo"], r["path"], r["lang"])
-    return {d: cache[d] for d in doc_ids if d in cache}
+            out[r["doc_id"]] = cache[r["doc_id"]] = (r["repo"], r["path"], r["lang"])
+    return {d: out[d] for d in doc_ids if d in out}
 
 
 def _check_negated_phrases(plan) -> None:
@@ -616,6 +608,9 @@ def search_wand(
         # the kernel's heap threshold would index an empty heap; the
         # exhaustive plan answers k<=0 with an empty frame — match it
         return _empty_result(spark, enrich, with_prune_stats)
+    # one view for the whole query: stats, postings, tombstones and
+    # docmeta all come from the same manifest version
+    index = index.view()
     plan = parse_query(query) if isinstance(query, str) else query
     if synonyms:
         from ..functions.synonyms import expand_plan
@@ -908,6 +903,7 @@ def search_wand_batch(
     from ..plans.query import parse_query
     from .merge import deleted_doc_ids
 
+    index = index.view()
     plans = [parse_query(q) if isinstance(q, str) else q for q in queries]
     qlabels = [q if isinstance(q, str) else str(q) for q in queries]
     if not plans:

@@ -167,6 +167,7 @@ def search_boolean(
     leaves = sorted(_leaf_terms(node))
     from .exec import _stats_cached
 
+    index = index.view()  # one manifest version for stats, postings, deletes
     _n, _a, stats = _stats_cached(spark, index, leaves)
     ids = {t: stats[t][0] for t in leaves if t in stats}
     if not ids:
@@ -189,9 +190,7 @@ def search_boolean(
         .agg(F.collect_set("term_id").alias("ts"))
     )
     matched = per_doc.filter(_to_col(node, F.col("ts"), ids)).select("doc_id")
-    from ..operators.merge import deletes_table
-
-    ddf = deletes_table(index).read(spark)
+    ddf = index.deletes.read(spark)
     if ddf is not None:
         matched = matched.join(ddf.select("doc_id").distinct(), "doc_id", "left_anti")
     return matched.orderBy("doc_id")

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.build import Index, docmeta_cached
+from ..sources.tables import MEMO
 from .query import QueryPlan, parse_query
 
 from ..functions.bm25 import K1, B, py_idf
@@ -85,6 +86,9 @@ def search(
     terms get the full 1+w.  Runs only over candidates (reference
     semantics: proximity is scored for TopTree contenders, not the whole
     match set)."""
+    # one view for the whole query: stats, postings, tombstones and
+    # docmeta all come from the same manifest version
+    index = index.view()
     plan = parse_query(query) if isinstance(query, str) else query
     if synonyms:
         from ..functions.synonyms import expand_plan
@@ -362,9 +366,7 @@ def search(
     # Pure DataFrame anti-join against the deletes table — nothing collects
     # to the driver, so a large delete batch stays distributed (AQE picks
     # broadcast when the table is small, shuffle when it isn't).
-    from ..operators.merge import deletes_table
-
-    ddf = deletes_table(index).read(spark)
+    ddf = index.deletes.read(spark)
     if ddf is not None:
         scored = scored.join(
             ddf.select("doc_id").distinct(), "doc_id", "left_anti"
@@ -532,73 +534,27 @@ def _proximity_rerank(
     )
 
 
-# -- serp result cache (Msg17 analog): completed top-k result sets keyed
-# by (index root, postings version, deletes version, query surface).  A
-# mutation commits a new snapshot version, so stale entries can never be
-# served; entries hold k collected rows (tiny).  Stale-version entries for
-# the same index root are evicted on insert (a long-lived driver serving a
-# continuously updated index otherwise accumulates dead versions forever),
-# and a hard size bound backstops many-root sessions.
-_RESULT_CACHE: dict[tuple, tuple[list, object]] = {}
-_RESULT_CACHE_MAX = 512
-
-
-def _evict_versions(cache: dict, root: str, live_key: tuple) -> None:
-    """Drop entries keyed (root, version, ...) whose version tuple differs
-    from the live one — snapshot versions only move forward, so any other
-    version for the same root is unreachable.
-
-    Thread-safety (review r4-s2): federate_search scatters queries across
-    driver threads, so another thread may insert or evict concurrently.
-    ``list(cache)`` snapshots the keys at C level (atomic under the GIL,
-    unlike a bytecode-level comprehension over the live dict, which
-    raises RuntimeError if the dict resizes mid-iteration), and
-    ``pop(k, None)`` tolerates the same stale key being evicted twice."""
-    for k in list(cache):
-        if k[0] == root and k[: len(live_key)] != live_key:
-            cache.pop(k, None)
-
-
-def _result_cache_key(index: Index, tag: str, extra: tuple) -> tuple:
-    from ..operators.merge import deletes_table
-
-    psnap = index.postings.latest()
-    dt = deletes_table(index)
-    dsnap = dt.latest()
-    # snapshot-file identity joins the version (as in _DOCMETA_CACHE /
-    # _READ_CACHE): an index root deleted and rebuilt in place restarts
-    # version numbering, and a bare version key would replay the old
-    # build's cached rows
-    return (
-        index.root,
-        (
-            psnap.version if psnap else -1,
-            index.postings.snapshot_ident(psnap.version) if psnap else (),
-        ),
-        (
-            dsnap.version if dsnap else -1,
-            dt.snapshot_ident(dsnap.version) if dsnap else (),
-        ),
-        tag,
-        extra,
-    )
-
-
 def cached_result(
     spark: SparkSession, index: Index, tag: str, extra: tuple, compute
 ) -> DataFrame:
     """Return a DataFrame for (tag, extra), serving repeated queries from
-    the collected-row cache (the reference's serp cache, Msg17)."""
+    collected rows (the reference's serp cache, Msg17).  The key is the
+    segment lists a result is derived from, so any commit that changes
+    them makes a new key and a stale result is never served; entries
+    hold k collected rows (tiny)."""
     import pandas as pd
 
-    key = _result_cache_key(index, tag, extra)
-    hit = _RESULT_CACHE.get(key)
+    view = index.view()
+    key = (
+        "result",
+        view.key("postings", "deletes", "termstats", "collstats", "docstats"),
+        tag,
+        extra,
+    )
+    hit = MEMO.get(key)
     if hit is None:
         df = compute()
-        _evict_versions(_RESULT_CACHE, index.root, key[:3])
-        if len(_RESULT_CACHE) >= _RESULT_CACHE_MAX:  # FIFO backstop
-            _RESULT_CACHE.pop(next(iter(_RESULT_CACHE)))
-        hit = _RESULT_CACHE[key] = (df.collect(), df.schema)
+        hit = MEMO.put(key, (df.collect(), df.schema))
     rows, schema = hit
     # pandas input -> LocalTableScan: a cache hit's collect is job-free
     # (python-row input builds an ExistingRDD plan costing one dispatch)
@@ -610,54 +566,38 @@ def cached_result(
 _py_idf = py_idf
 
 
-# -- per-snapshot driver-side stat caches (Msg2's termlist-cache analog):
-# collection stats and per-term (term_id, df, cf) are tiny and immutable
-# per snapshot version; re-collecting them cost a Spark job per query.
-# _stats_cached batches the collstats row and all missing terms into ONE
-# Spark job (a unioned scan of the two tiny stat tables), so a cold query
-# pays one dispatch for stats, not two.
-_COLL_CACHE: dict[tuple[str, int], tuple[float, float]] = {}
-_TERM_CACHE: dict[tuple[str, int], dict[str, tuple[int, int, int]]] = {}
-
-
 def _stats_cached(
     spark: SparkSession, index: Index, terms: list[str]
 ) -> tuple[float, float, dict[str, tuple[int, int, int]]]:
     """(n_docs, avgdl, {term: (term_id, df, cf)}) — single job when cold.
 
+    The Msg2 termlist-cache analog: collection stats and per-term
+    (term_id, df, cf) are tiny and immutable per stats segment list, so
+    they are memoized on it; a cold query batches the collstats row and
+    all missing terms into ONE Spark job (a unioned scan of the two tiny
+    stat tables).
+
     Raises if the termstats/collstats snapshots are absent: querying an
     index before ``finalize_stats`` has run is a caller error, not an
     empty result (a missing snapshot would otherwise negative-cache every
     term and silently return nothing)."""
-    csnap = index.collstats.latest()
-    tsnap = index.termstats.latest()
-    if csnap is None or not csnap.segments or tsnap is None or not tsnap.segments:
+    view = index.view()
+    if not view.segments("collstats") or not view.segments("termstats"):
         raise RuntimeError(
             f"index at {index.root} has no finalized stats snapshot — "
             "run operators.build.finalize_stats (build_index and "
             "add_documents with refresh_stats=True do this) before querying"
         )
-    # snapshot-file identity guards against in-place rebuilds serving
-    # stale stats (same aliasing fix as the docmeta/read caches)
-    ckey = (
-        index.root,
-        csnap.version,
-        index.collstats.snapshot_ident(csnap.version),
-    )
-    tkey = (
-        index.root,
-        tsnap.version,
-        index.termstats.snapshot_ident(tsnap.version),
-    )
-    _evict_versions(_COLL_CACHE, index.root, ckey)
-    _evict_versions(_TERM_CACHE, index.root, tkey)
-    cache = _TERM_CACHE.setdefault(tkey, {})
+    key = ("stats", view.key("termstats", "collstats"))
+    entry = MEMO.get(key)
+    if entry is None:
+        entry = MEMO.put(key, {"coll": None, "terms": {}})
+    cache = entry["terms"]
     missing = [t for t in terms if t not in cache]
-    need_coll = ckey not in _COLL_CACHE
-    if missing or need_coll:
+    if missing or entry["coll"] is None:
         parts = []
         if missing:
-            ts = index.termstats.read(spark)
+            ts = view.termstats.read(spark)
             cf_col = F.col("cf") if "cf" in ts.columns else F.lit(0)
             parts.append(
                 ts.filter(F.col("term").isin(missing)).select(
@@ -668,8 +608,8 @@ def _stats_cached(
                     cf_col.cast("double").alias("v3"),
                 )
             )
-        if need_coll:
-            cs = index.collstats.read(spark)
+        if entry["coll"] is None:
+            cs = view.collstats.read(spark)
             parts.append(
                 cs.select(
                     F.lit("c").alias("kind"),
@@ -679,24 +619,20 @@ def _stats_cached(
                     F.col("avgdl").cast("double").alias("v3"),
                 )
             )
-        if parts:
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            for r in df.collect():
-                if r["kind"] == "c":
-                    # an empty-but-finalized index stores n_docs=0 with a
-                    # NULL avgdl (avg over no rows) — stats are (0, 0),
-                    # not a float(None) TypeError
-                    _COLL_CACHE[ckey] = (
-                        float(r["v2"] or 0.0),
-                        float(r["v3"] or 0.0),
-                    )
-                else:
-                    cache[r["term"]] = (int(r["v1"]), int(r["v2"]), int(r["v3"]))
+        df = parts[0]
+        for p in parts[1:]:
+            df = df.unionByName(p)
+        for r in df.collect():
+            if r["kind"] == "c":
+                # an empty-but-finalized index stores n_docs=0 with a
+                # NULL avgdl (avg over no rows) — stats are (0, 0), not
+                # a float(None) TypeError
+                entry["coll"] = (float(r["v2"] or 0.0), float(r["v3"] or 0.0))
+            else:
+                cache[r["term"]] = (int(r["v1"]), int(r["v2"]), int(r["v3"]))
         for t in missing:  # negative-cache absent terms
             cache.setdefault(t, (0, 0, 0))
-    n_docs, avgdl = _COLL_CACHE.get(ckey, (0.0, 0.0))
+    n_docs, avgdl = entry["coll"] or (0.0, 0.0)
     return n_docs, avgdl, {
         t: cache[t] for t in terms if cache.get(t, (0, 0, 0))[1] > 0
     }

@@ -170,6 +170,7 @@ def _conjunctive_hits(spark: SparkSession, idx: Index, terms: list[str]) -> int:
     # len(stats) < len(terms) dictionary-miss check or ["a","a"] would
     # read as a miss and report 0 hits
     terms = list(dict.fromkeys(terms))
+    idx = idx.view()  # one manifest version for stats, postings, deletes
     _n, _a, stats = _stats_cached(spark, idx, terms)
     if len(stats) < len(terms):
         return 0
@@ -189,9 +190,7 @@ def _conjunctive_hits(spark: SparkSession, idx: Index, terms: list[str]) -> int:
     # merge-on-read tombstones: the count line must agree with the SERP's
     # doc visibility between delete_docs and compaction (same anti-join
     # every search path and serp's facet count apply)
-    from ..operators.merge import deletes_table
-
-    ddf = deletes_table(idx).read(spark)
+    ddf = idx.deletes.read(spark)
     if ddf is not None:
         matched = matched.join(
             ddf.select("doc_id").distinct(), "doc_id", "left_anti"

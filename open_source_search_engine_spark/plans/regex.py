@@ -190,10 +190,11 @@ def regex_search(
     Results order by (n_matches desc, doc_id) — grep-style density
     ranking — with an optional limit.
     """
-    from ..operators.merge import decode_to_postings, deletes_table
+    from ..operators.merge import decode_to_postings
     from .exec import _stats_cached
 
     toks = required_literal_tokens(pattern)
+    index = index.view()  # one manifest version for stats, postings, deletes
     base = corpus
     if toks:
         _n_docs, _avgdl, stats = _stats_cached(spark, index, toks)
@@ -227,7 +228,7 @@ def regex_search(
         )
         .filter(F.col("n_matches") > 0)
     )
-    ddf = deletes_table(index).read(spark)
+    ddf = index.deletes.read(spark)
     if ddf is not None:
         dead = ddf.select(F.col("doc_id").alias(id_col)).distinct()
         out = out.join(dead, id_col, "left_anti")

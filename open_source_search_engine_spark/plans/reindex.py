@@ -60,7 +60,7 @@ def match_docs(
     too; tests/test_reindex.py::test_match_docs_equals_search_match_set
     pins the parity across the query shapes.
     """
-    from ..operators.merge import decode_to_postings, deletes_table
+    from ..operators.merge import decode_to_postings
     from .exec import _phrase_ok_docs, _stats_cached
 
     plan = parse_query(query) if isinstance(query, str) else query
@@ -96,6 +96,7 @@ def match_docs(
         | set(neg_terms)
         | {c for chain in phrase_chains.values() for c in chain}
     )
+    index = index.view()  # one manifest version for stats, postings, deletes
     _n_docs, _avgdl, df_by_term = _stats_cached(spark, index, all_terms)
 
     # slot liveness: an OR slot lives if any member is in the corpus; a
@@ -163,7 +164,7 @@ def match_docs(
         )
         matched = matched.join(neg_docs, "doc_id", "left_anti")
 
-    ddf = deletes_table(index).read(spark)
+    ddf = index.deletes.read(spark)
     if ddf is not None:
         matched = matched.join(
             ddf.select("doc_id").distinct(), "doc_id", "left_anti"
@@ -219,7 +220,7 @@ def reindex_by_query(
     feature flags inherit from the index's feature markers there).
     """
     from ..functions.hashing import doc_id_col
-    from ..operators.merge import delete_docs_df, deletes_table
+    from ..operators.merge import delete_docs_df
     from ..streaming.incremental import add_documents
 
     matched = match_docs(spark, index, query, match_mode)
@@ -254,7 +255,7 @@ def reindex_by_query(
         else doc_id_col(F.col("repo"), F.col("path"), F.col("commit"))
     )
     live = docstats.select("doc_id").join(to_delete, "doc_id", "left_anti")
-    ddf = deletes_table(index).read(spark)
+    ddf = index.deletes.read(spark)
     if ddf is not None:
         live = live.join(ddf.select("doc_id").distinct(), "doc_id", "left_anti")
     to_add = (

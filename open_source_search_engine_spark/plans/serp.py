@@ -62,6 +62,7 @@ def facets_for_query(
         else:
             groups.append([m.text for m in g.members])
     terms = sorted({t for gs in groups for t in gs})
+    index = index.view()  # one manifest version for stats, postings, deletes
     stats = _termstats_cached(spark, index, terms)
     live_groups: list[list[str]] = []
     for gs in groups:
@@ -94,9 +95,7 @@ def facets_for_query(
     )
     # merge-on-read tombstones: facet counts must match search results'
     # doc visibility between delete_docs and compaction (ADVICE_r01)
-    from ..operators.merge import deletes_table
-
-    ddf = deletes_table(index).read(spark)
+    ddf = index.deletes.read(spark)
     if ddf is not None:
         matched = matched.join(ddf.select("doc_id").distinct(), "doc_id", "left_anti")
     docs = index.docstats.read(spark).join(matched, "doc_id")

@@ -58,6 +58,7 @@ def search_sortby(
             f"build_index(..., numeric_fields=({field!r},))"
         )
     tid = int(term_hash_py(f"num:{field}"))
+    index = index.view()  # one manifest version for postings, deletes, docmeta
     blocks = index.postings.read_pruned(spark, [tid])
     if blocks is None:
         raise RuntimeError(f"postings snapshot absent under {index.root!r}")
@@ -65,12 +66,12 @@ def search_sortby(
     if min_value is not None:
         blocks = blocks.filter(F.col("max_tf") >= int(min_value))
 
-    from ..operators.merge import decode_to_postings, deletes_table
+    from ..operators.merge import decode_to_postings
 
     rows = decode_to_postings(blocks, with_positions=False).select(
         "doc_id", F.col("tf").alias("value")
     )
-    ddf = deletes_table(index).read(spark)
+    ddf = index.deletes.read(spark)
     if ddf is not None:
         rows = rows.join(
             F.broadcast(ddf.select("doc_id").distinct()), "doc_id", "left_anti"

@@ -2,9 +2,7 @@
 
 Local-mode testing stands in for a multi-executor cluster: partitioning,
 shuffle and skew decisions are made as if each core were an executor
-(SURVEY.md §4.2).  ``cores`` is parameterized so bench.py can run the
-identical job at two parallelism levels (local[8] vs local[32]) to
-evidence the north-rule scaling criterion.
+(SURVEY.md §4.2).
 """
 
 from __future__ import annotations
@@ -31,6 +29,14 @@ def _resolve_master(master: str | None, cores: int, env) -> str | None:
     return f"local[{cores}]"
 
 
+def _default_cores(env) -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the cores this process may run
+    on — more would oversubscribe the host."""
+    if "SPARK_GRAFT_CPUS" in env:
+        return int(env["SPARK_GRAFT_CPUS"])
+    return len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "open_source_search_engine_spark",
     cores: int | None = None,
@@ -51,7 +57,7 @@ def get_spark(
     shuffle sizing stays consistent.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = _default_cores(os.environ)
     if shuffle_partitions is None:
         shuffle_partitions = max(8, 2 * cores)
     master = _resolve_master(master, cores, os.environ)

@@ -8,16 +8,16 @@ adds give exactly-once-ish ingestion.
 
 Spark mapping:
 - ``add_documents``      one micro-batch: tokenize -> encode -> append an
-                         immutable delta segment + stats partials, atomic
-                         snapshot commit.  Queries see base ∪ delta the
-                         moment the commit lands (R1/R2).
+                         immutable delta segment + stats partials and the
+                         refreshed stats in one manifest commit.  Queries
+                         see base ∪ delta the moment it lands (R1/R2).
 - ``update_documents``   delete-then-re-add (R4): old doc_ids tombstoned
                          (doc_id = hash(repo,path,commit) so the new
                          version never collides), new version appended.
 - ``stream_documents``   Structured Streaming ``foreachBatch`` glue: each
                          micro-batch runs add_documents; the checkpoint
-                         dir + deterministic doc_ids + idempotent snapshot
-                         commits give R6 exactly-once-ish semantics.
+                         dir + deterministic doc_ids + run_id-tagged
+                         manifest commits give R6 exactly-once-ish semantics.
 - compaction (R3) lives in operators.merge.compact_postings.
 
 Each delta segment gets a fresh WAND shard id: a document's postings are
@@ -26,7 +26,6 @@ wholly contained in its batch, so per-shard DAAT stays complete per doc.
 
 from __future__ import annotations
 
-import time
 import uuid
 
 from pyspark import StorageLevel
@@ -41,31 +40,7 @@ from ..operators.build import (
     finalize_stats,
 )
 from ..functions.tokenize import tokenize_to_postings
-
-
-def _next_shard_id(idx: Index) -> int:
-    """Smallest shard id guaranteed above every id any live OR historical
-    segment ever used.  Derived from the whole commit history (driver-side
-    JSON walk, no Spark job): build commits carry (shard, n_shards),
-    delta/minor/compact commits carry max_shard.  Scanning only the
-    LATEST commit's meta under-estimated whenever the newest commit was
-    e.g. an orphan-cleanup — and a reused shard id breaks the
-    per-(shard,term) salt-modulus invariant of WAND probe routing."""
-    snap = idx.postings.latest()
-    if snap is None:
-        return 0
-    best = len(snap.segments)  # conservative floor
-    t = idx.postings
-    for v in t.history():
-        m = t.at(v).meta or {}
-        for cand in (
-            m.get("max_shard"),
-            m.get("shard"),
-            (m.get("n_shards") - 1) if isinstance(m.get("n_shards"), int) else None,
-        ):
-            if isinstance(cand, int) and cand > best:
-                best = cand
-    return best + 1
+from ..sources.tables import Manifest
 
 
 def add_documents(
@@ -81,20 +56,19 @@ def add_documents(
     refresh_stats: bool = True,
     run_id: str | None = None,
 ) -> None:
-    """Append one delta segment for ``docs`` (R1: searchable on commit).
+    """Append one delta segment for ``docs`` (R1: searchable on commit),
+    committed with its stats refresh as one manifest version.
 
     ``code_aware=None`` / ``bigram_terms=None`` / ``numeric_fields=None``
     inherit the index's feature markers (a delta tokenized differently —
     or without pair or num: termlists — in an index that has them would
     make lookups silently incomplete); an explicit mismatch raises."""
     run_id = run_id or uuid.uuid4().hex[:8]
-    # heal any half-committed previous batch BEFORE adding (see
-    # find_orphan_deltas) — cheap driver-side JSON tail walk
-    repair_orphan_deltas(idx)
+    view = idx.view()
     has_bigrams = idx.features().get("bigrams", False)
     has_numeric = list(idx.features().get("numeric_fields", []))
     has_code_aware = idx.features().get("code_aware", None)
-    fresh = idx.postings.latest() is None
+    fresh = view.postings.latest() is None
     if code_aware is None:
         # inherit the build's tokenizer: a delta tokenized differently
         # splits the same text into different terms, so lookups would
@@ -134,7 +108,8 @@ def add_documents(
                 f"index at {idx.root} has numeric_fields={has_numeric}; "
                 "deltas must match (num: termlist lookups would miss docs)"
             )
-    shard_id = _next_shard_id(idx)
+    # a fresh shard id above every id the index ever used
+    shard_id = view.max_shard + 1
     d = derive_ids(docs)
     posts = tokenize_to_postings(
         d,
@@ -183,86 +158,35 @@ def add_documents(
     )
     blocks.unpersist()
     posts.unpersist()
-    # postings commit LAST: its run_id marks the batch durably committed,
-    # so replay detection (committed_run_ids) never observes a half-added
-    # batch as done.  The commits before it carry a ``pending_run``
-    # marker: if the process dies between them and the postings commit,
-    # redoing the batch would APPEND a second docstats/termdict/
-    # termstats_partial segment and finalize_stats would double-count
-    # df/cf and n_docs/avgdl — repair_orphan_deltas (run at the top of
-    # every add) removes the half-committed segments first.
-    idx.docstats.commit(
-        add=[ds_seg], meta={"run_id": run_id, "pending_run": run_id}
-    )
-    idx.termdict.commit(add=[td_seg], meta={"pending_run": run_id})
-    idx.termstats_partial.commit(add=[tsp_seg], meta={"pending_run": run_id})
-    idx.postings.commit(
-        add=[po_seg], meta={"run_id": run_id, "max_shard": shard_id}
+    # one commit for the whole batch: its segments and (refresh_stats)
+    # the stats over them land together, so a reader sees the index
+    # before the batch or after it, and a batch that dies before the
+    # commit leaves nothing visible — re-running it is a clean add
+    staged = view.stage(
+        {
+            "docstats": ([ds_seg], []),
+            "termdict": ([td_seg], []),
+            "termstats_partial": ([tsp_seg], []),
+            "postings": ([po_seg], []),
+        },
+        operation="append",
+        meta={"run_id": run_id},
+        max_shard=shard_id,
     )
     if refresh_stats:
-        finalize_stats(spark, idx, run_id)
-
-
-def find_orphan_deltas(idx: Index) -> dict[str, list[str]]:
-    """Live docstats/termdict/termstats_partial segments committed by an
-    ``add_documents`` batch that died BEFORE its postings commit (the
-    batch's durable marker).  Left in place they corrupt the next
-    finalize_stats: the replayed batch appends a SECOND segment for the
-    same docs, double-counting df/cf and n_docs/avgdl.
-
-    Detection walks each table's history TAIL backwards (driver-side
-    JSON only), collecting ``pending_run``-marked commits whose run_id
-    never reached the postings log, and stops at the first completed or
-    unmarked commit.  The tail restriction matters: under the
-    single-writer protocol an incomplete batch is always the most recent
-    commit(s), and it keeps an expired postings history (snapshot
-    vacuum) from ever flagging an OLD completed batch as orphaned.
-    Returns {table_name: [segment, ...]}; empty when healthy."""
-    done = committed_run_ids(idx)
-    out: dict[str, list[str]] = {}
-    for name in ("docstats", "termdict", "termstats_partial"):
-        t = getattr(idx, name)
-        latest = t.latest()
-        if latest is None:
-            continue
-        live = set(latest.segments)
-        hist = t.history()
-        orphans: list[str] = []
-        for i in range(len(hist) - 1, -1, -1):
-            snap = t.at(hist[i])
-            rid = (snap.meta or {}).get("pending_run")
-            if not rid or rid in done:
-                break
-            prev = set(t.at(hist[i - 1]).segments) if i > 0 else set()
-            orphans.extend(
-                sorted(s for s in set(snap.segments) - prev if s in live)
-            )
-        if orphans:
-            out[name] = orphans
-    return out
-
-
-def repair_orphan_deltas(idx: Index) -> int:
-    """Remove the segments ``find_orphan_deltas`` flags (one commit per
-    affected table).  Idempotent; returns segments removed."""
-    found = find_orphan_deltas(idx)
-    n = 0
-    for name, segs in found.items():
-        getattr(idx, name).commit(remove=segs, operation="orphan-cleanup")
-        n += len(segs)
-    return n
+        finalize_stats(spark, staged, run_id)
+    else:
+        staged.commit()
 
 
 def committed_run_ids(idx: Index) -> set[str]:
-    """run_ids whose postings commit landed — the replay-detection ledger
-    (R6).  Driver-side JSON reads only; no Spark job."""
-    t = idx.postings
-    out: set[str] = set()
-    for v in t.history():
-        rid = t.at(v).meta.get("run_id")
-        if rid:
-            out.add(rid)
-    return out
+    """run_ids whose commit landed — the replay-detection ledger (R6).
+    Driver-side manifest reads only; no Spark job."""
+    return {
+        rec["meta"]["run_id"]
+        for rec in Manifest(idx.root).records(idx.version)
+        if rec.get("meta", {}).get("run_id")
+    }
 
 
 def update_documents(
@@ -290,10 +214,10 @@ def stream_documents(
     """Wire a streaming documents source into the index via foreachBatch.
 
     Structured Streaming's checkpoint gives at-least-once batch delivery;
-    the snapshot log upgrades that to exactly-once at the segment level:
+    the manifest log upgrades that to exactly-once at the segment level:
     each micro-batch commits under run_id ``stream-<batch_id>`` and a
-    replayed batch whose run_id already appears in the postings snapshot
-    history is skipped BEFORE writing anything — no duplicate delta
+    replayed batch whose run_id already appears in the manifest history
+    is skipped BEFORE writing anything — no duplicate delta
     segment, no double-counted df/cf — the Msg4-ACK analog R6.
     """
 

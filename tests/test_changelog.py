@@ -1,7 +1,7 @@
-"""Snapshot changelog (operators/changelog.py): CDC between index pins.
+"""Changelog (operators/changelog.py): CDC between manifest versions.
 
 Semantics under test: added/removed = live-set difference between two
-snapshot pins; the incremental (append-only) fast path and the diff
+manifest versions; the incremental (append-only) fast path and the diff
 fallback agree; compaction between pins yields an EMPTY changelog
 (physical rewrites are invisible — the Iceberg contract); tombstones
 beat re-adds; update = remove(old id) + add(new id)."""
@@ -147,7 +147,7 @@ def test_doc_added_and_deleted_inside_window_never_surfaces(spark, idx):
 
 
 def test_from_genesis_everything_is_added(spark, idx):
-    ch = index_changes(spark, idx, {})
+    ch = index_changes(spark, idx, -1)
     assert _rows(ch) == [("a.py", "added"), ("b.py", "added"), ("c.py", "added")]
 
 
@@ -162,7 +162,7 @@ def test_incremental_added_side_scans_only_new_segments(spark, idx):
     import re
 
     v0 = index_versions(idx)
-    old_segs = set(idx.docstats.at(v0["docstats"]).segments)
+    old_segs = set(idx.docstats.at(v0).segments)
     add_documents(spark, idx, spark.createDataFrame(DOC_NEW, SCHEMA), code_aware=False)
     new_segs = set(idx.docstats.latest().segments) - old_segs
     assert old_segs and new_segs
@@ -195,8 +195,9 @@ def test_incremental_added_side_scans_only_new_segments(spark, idx):
 
 
 def test_cli_versions_then_changes(spark, idx, tmp_path):
-    """S10 CLI surface: `versions` captures pins, a mutation happens,
-    `changes --from pins.json` reports it with mode + metadata."""
+    """S10 CLI surface: `versions` captures the manifest version, a
+    mutation happens, `changes --from <version>` reports it with mode +
+    metadata."""
     import io
     import json
     from contextlib import redirect_stdout
@@ -206,8 +207,8 @@ def test_cli_versions_then_changes(spark, idx, tmp_path):
     buf = io.StringIO()
     with redirect_stdout(buf):
         main(["--cores", "4", "versions", "--index", idx.root])
-    pins_file = tmp_path / "pins.json"
-    pins_file.write_text(buf.getvalue().strip().splitlines()[-1])
+    version = json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert isinstance(version, int)
 
     add_documents(spark, idx, spark.createDataFrame(DOC_NEW, SCHEMA), code_aware=False)
 
@@ -215,7 +216,7 @@ def test_cli_versions_then_changes(spark, idx, tmp_path):
     with redirect_stdout(buf):
         main(
             ["--cores", "4", "changes", "--index", idx.root,
-             "--from", str(pins_file)]
+             "--from", str(version)]
         )
     out = json.loads(buf.getvalue().strip().splitlines()[-1])
     assert out["mode"] == "incremental"

@@ -9,7 +9,6 @@ from open_source_search_engine_spark.operators.merge import (
     compact_postings,
     delete_docs,
     deleted_doc_ids,
-    deletes_table,
 )
 from open_source_search_engine_spark.operators.topk import search_wand
 from open_source_search_engine_spark.plans.exec import search
@@ -189,17 +188,17 @@ def test_build_index_append_guard(spark, inc_index, tmp_path):
 
 def test_serp_result_cache_invalidates_on_mutation(spark, inc_index):
     """Msg17-analog result cache: repeated query served from collected
-    rows; ANY index mutation (new snapshot version) invalidates."""
+    rows; ANY index mutation (new segment lists) invalidates."""
     import time as _t
 
-    from open_source_search_engine_spark.plans.exec import _RESULT_CACHE
+    from open_source_search_engine_spark.sources.tables import MEMO
 
-    _RESULT_CACHE.clear()
+    MEMO.clear()
     r1 = {
         (r["path"], round(r["score"], 9))
         for r in search(spark, inc_index, "alpha", k=10, use_cache=True).collect()
     }
-    assert len(_RESULT_CACHE) == 1
+    assert len(MEMO.keys("result")) == 1
     t0 = _t.time()
     r2 = {
         (r["path"], round(r["score"], 9))

@@ -88,9 +88,7 @@ def test_minor_merge_identity_and_segment_count(spark, delta_index):
     assert idx.termstats.latest().version == ts_v
     assert idx.docstats.latest().version == ds_v
     # deletes NOT consumed
-    from open_source_search_engine_spark.operators.merge import deletes_table
-
-    assert deletes_table(idx).read(spark).count() == 1
+    assert idx.deletes.read(spark).count() == 1
 
     assert _results(spark, idx) == before
     after_exh = sorted(

@@ -10,7 +10,6 @@ from open_source_search_engine_spark.operators.build import build_index
 from open_source_search_engine_spark.operators.merge import (
     compact_postings,
     delete_docs,
-    deletes_table,
 )
 from open_source_search_engine_spark.plans.exec import search
 from open_source_search_engine_spark.plans.reindex import (
@@ -98,17 +97,17 @@ def test_delete_by_query_removes_and_is_idempotent(spark, ridx):
     n = delete_by_query(spark, ridx, '"fast table"')
     assert n == 2  # a.py, c.py
     assert _search_paths(spark, ridx, "fast") == {"b.py"}
-    v1 = deletes_table(ridx).latest().version
+    v1 = ridx.deletes.latest().version
     # second run matches nothing (tombstoned docs excluded) and commits
     # nothing — no snapshot churn
     assert delete_by_query(spark, ridx, '"fast table"') == 0
-    assert deletes_table(ridx).latest().version == v1
+    assert ridx.deletes.latest().version == v1
 
 
 def test_delete_by_query_no_match_no_commit(spark, ridx):
-    before = deletes_table(ridx).latest()
+    before = ridx.deletes.latest()
     assert delete_by_query(spark, ridx, "nosuchtoken alpha") == 0
-    after = deletes_table(ridx).latest()
+    after = ridx.deletes.latest()
     assert (before is None) == (after is None)
     if before is not None:
         assert after.version == before.version
@@ -121,7 +120,7 @@ def test_delete_by_query_then_compaction(spark, ridx):
     compact_postings(spark, ridx, salt_target=1000, block_size=4)
     assert _search_paths(spark, ridx, "alpha") == {"b.py", "e.rs"}
     # tombstones physically annihilated
-    ddf = deletes_table(ridx).read(spark)
+    ddf = ridx.deletes.read(spark)
     assert ddf is None or ddf.count() == 0
 
 

@@ -9,7 +9,7 @@
    top-k results).
 3. ``fsck_index`` / ``describe_index`` report an empty collstats segment
    instead of dying on it.
-4. The snapshot read memo keeps HEAD and AS-OF pinned versions resident
+4. The read memo keeps the head's and an AS-OF view's frames resident
    together (time-travel alternation no longer thrashes the cache).
 5. The streaming sessionizer absorbs late cross-batch events without
    rewinding ``session_end`` (bounds stay [min, max], batch-twin parity).
@@ -100,20 +100,21 @@ def test_match_any_phrase_only_query(spark, any_index):
 
 def test_docmeta_rows_survives_cache_reset(spark, micro_index, monkeypatch):
     from open_source_search_engine_spark.operators import topk
+    from open_source_search_engine_spark.sources.tables import MEMO
 
     ids = [
         r["doc_id"]
         for r in micro_index.docstats.read(spark).select("doc_id").collect()
     ]
     monkeypatch.setattr(topk, "_DOCMETA_ROW_MAX", 1)
-    topk._DOCMETA_ROW_CACHE.clear()
+    MEMO.clear()
     # prime the cache with one id, then request it together with fresh
     # ids: the size bound forces a reset, after which EVERY requested id
     # must still come back
     topk._docmeta_rows(spark, micro_index, ids[:1])
     got = topk._docmeta_rows(spark, micro_index, ids)
     assert set(got) == set(ids)
-    topk._DOCMETA_ROW_CACHE.clear()
+    MEMO.clear()
 
 
 def test_fsck_reports_empty_collstats(spark, tmp_path):
@@ -139,9 +140,11 @@ def test_fsck_reports_empty_collstats(spark, tmp_path):
 
 
 def test_read_memo_keeps_head_and_pinned_versions(spark, tmp_path):
-    from open_source_search_engine_spark.sources.tables import SnapshotTable
+    from open_source_search_engine_spark.operators.build import Index
+    from open_source_search_engine_spark.operators.timetravel import as_of
 
-    t = SnapshotTable(str(tmp_path / "tbl"), "demo")
+    idx = Index(str(tmp_path / "tbl"))
+    t = idx.table("demo")
     s0 = t.write_segment(
         spark.createDataFrame([(1,)], "x long"), label="v0"
     )
@@ -152,9 +155,9 @@ def test_read_memo_keeps_head_and_pinned_versions(spark, tmp_path):
     )
     t.commit(add=[s1], operation="test")
     head1 = t.read(spark)
-    pinned1 = t.read(spark, version=v0)
+    pinned1 = as_of(idx, v0).table("demo").read(spark)
     head2 = t.read(spark)
-    pinned2 = t.read(spark, version=v0)
+    pinned2 = as_of(idx, v0).table("demo").read(spark)
     # alternating head / AS-OF reads reuse BOTH memo entries — neither
     # evicts the other (time-travel entries alternate exactly like this)
     assert head2 is head1

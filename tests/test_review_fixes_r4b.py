@@ -1,11 +1,9 @@
 """Round-4 post-review fixes, batch 2.
 
-1. Crash-replay soundness for incremental adds: a batch that dies
-   between its docstats/termdict/termstats_partial commits and the
-   postings commit (the durable marker) used to leave orphan segments
-   that the replay then DUPLICATED, double-counting df/cf and
-   n_docs/avgdl.  ``find_orphan_deltas`` detects them, ``fsck_index``
-   reports them, and ``add_documents``/``compact_postings`` self-heal.
+1. Crash-replay soundness for incremental adds: a batch that dies after
+   writing its segments and before its one manifest commit leaves
+   nothing visible, and re-running it gives the stats of a clean add
+   (no orphan segments, no double-counted df/cf or n_docs/avgdl).
 2. NULL text no longer kills the minhash/simhash kernels; NULL
    embeddings no longer kill pairwise_cosine_above.
 3. A tokenizer batch whose every doc is token-free (punctuation-only
@@ -17,11 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.operators.build import build_index
-from open_source_search_engine_spark.streaming.incremental import (
-    add_documents,
-    find_orphan_deltas,
-    repair_orphan_deltas,
-)
+from open_source_search_engine_spark.streaming import incremental
+from open_source_search_engine_spark.streaming.incremental import add_documents
 
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
@@ -44,68 +39,56 @@ def idx(spark, tmp_path):
     )
 
 
-def _fake_half_commit(spark, idx, rid="deadcafe"):
-    """Simulate add_documents dying between its docstats commit and the
-    postings commit: a pending-marked docstats segment whose run_id never
-    reaches the postings log."""
-    dup = idx.docstats.read(spark).limit(2)
-    seg = idx.docstats.write_segment(dup, label="halfbatch")
-    idx.docstats.commit(add=[seg], meta={"run_id": rid, "pending_run": rid})
-    return rid
+NEW = [("r/2", "e.py", "c5", "python", "zeta eta theta")]
 
 
-def test_orphans_detected_reported_and_repaired(spark, idx):
-    from open_source_search_engine_spark.operators.stats import fsck_index
-
-    assert find_orphan_deltas(idx) == {}
-    n_before = idx.docstats.read(spark).count()
-    _fake_half_commit(spark, idx)
-    assert idx.docstats.read(spark).count() == n_before + 2  # corrupt
-    found = find_orphan_deltas(idx)
-    assert list(found) == ["docstats"] and len(found["docstats"]) == 1
-    report = fsck_index(spark, idx)
-    assert not report["ok"]
-    assert any("orphan" in i for i in report["issues"])
-    assert repair_orphan_deltas(idx) == 1
-    assert idx.docstats.read(spark).count() == n_before
-    assert find_orphan_deltas(idx) == {}
-    assert fsck_index(spark, idx)["ok"]
-    # idempotent
-    assert repair_orphan_deltas(idx) == 0
-
-
-def test_completed_batches_never_flagged(spark, idx):
-    """A batch whose postings commit landed carries the same pending_run
-    marker — it must NOT be treated as orphaned."""
-    add_documents(
-        spark,
-        idx,
-        spark.createDataFrame(
-            [("r/2", "e.py", "c5", "python", "zeta eta theta")], SCHEMA
-        ),
-        code_aware=False,
+def _stats(spark, idx):
+    ts = sorted(
+        (r["term"], r["df"], r["cf"], r["n_blocks"])
+        for r in idx.termstats.read(spark).collect()
     )
-    assert find_orphan_deltas(idx) == {}
+    cs = idx.collstats.read(spark).collect()[0]
+    return ts, (int(cs["n_docs"]), float(cs["avgdl"]))
 
 
-def test_add_documents_self_heals(spark, idx):
+def test_add_batch_crash_before_commit_leaves_nothing_visible(
+    spark, idx, tmp_path, monkeypatch
+):
+    from open_source_search_engine_spark.operators.stats import fsck_index
     from open_source_search_engine_spark.plans.exec import search
 
-    n_before = idx.docstats.read(spark).count()
-    _fake_half_commit(spark, idx)
-    add_documents(
+    before = _stats(spark, idx)
+    versions = idx.view().version
+
+    def crash(*a, **kw):
+        raise RuntimeError("injected: crash before the batch commit")
+
+    # finalize_stats is the batch's last step before its one commit: by
+    # then every segment of the batch has been written
+    monkeypatch.setattr(incremental, "finalize_stats", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        add_documents(
+            spark, idx, spark.createDataFrame(NEW, SCHEMA), code_aware=False
+        )
+    monkeypatch.undo()
+    assert idx.view().version == versions
+    assert _stats(spark, idx) == before
+    assert search(spark, idx, "theta", k=5, enrich=False).count() == 0
+
+    # re-running the batch equals a clean add on an untouched copy
+    add_documents(spark, idx, spark.createDataFrame(NEW, SCHEMA), code_aware=False)
+    clean = build_index(
         spark,
-        idx,
-        spark.createDataFrame(
-            [("r/2", "e.py", "c5", "python", "zeta eta theta")], SCHEMA
-        ),
+        spark.createDataFrame(DOCS, SCHEMA),
+        str(tmp_path / "clean"),
+        n_shards=1,
         code_aware=False,
     )
-    # orphan gone, new doc in: no duplicate docstats rows, stats sane
-    assert idx.docstats.read(spark).count() == n_before + 1
-    cs = idx.collstats.read(spark).collect()[0]
-    assert int(cs["n_docs"]) == n_before + 1
+    add_documents(spark, clean, spark.createDataFrame(NEW, SCHEMA), code_aware=False)
+    assert _stats(spark, idx) == _stats(spark, clean)
+    assert idx.docstats.read(spark).count() == len(DOCS) + 1
     assert search(spark, idx, "theta", k=5, enrich=False).count() == 1
+    assert fsck_index(spark, idx)["ok"]
 
 
 def test_null_text_dedup_kernels(spark):

@@ -8,8 +8,8 @@
 2. ``_corpus_fingerprint`` hashes (doc_id || text): a regenerated
    fixture that reassigns the same texts among the same ids must
    rebuild.
-3. ``IndexAsOf``: a table with NO pinned version (no history at the pin
-   time) reads as never-committed instead of falling through to HEAD.
+3. ``as_of``: a table with no history at the pinned version reads as
+   never-committed instead of falling through to the head.
 4. URL-filters clause splitting picks the LEFTMOST operator (longest on
    ties) so a value containing an operator string is not mis-split.
 5. ``search_boolean`` raises an informative error on a missing postings
@@ -110,7 +110,8 @@ def test_as_of_missing_pin_reads_as_absent(spark, tmp_path):
     )
 
     pins = index_versions(idx)
-    assert "termstats" not in pins and "collstats" not in pins
+    assert as_of(idx, pins).termstats.latest() is None
+    assert as_of(idx, pins).collstats.latest() is None
     # finalize stats AFTER the pin
     add_documents(
         spark, idx, spark.createDataFrame(DOCS[2:], SCHEMA), code_aware=False

@@ -1,5 +1,5 @@
 """Round-4 post-review fixes, batch 6 (session master, multimodal
-guards, bench-tool fixture protocol).
+guards).
 
 1. ``get_spark`` no longer forces ``local[cores]`` under spark-submit:
    when the driver JVM already exists (py4j gateway env), the
@@ -10,18 +10,10 @@ guards, bench-tool fixture protocol).
    NULL payload yields NULL features (no bytes(None) crash), a
    zero-frame video samples no frames, and ``batch_feature_dim`` is
    honored.
-3. Bench tools gate fixture-corpus reuse on a completion marker
-   (``tools/_bench_common.ensure_corpus``) so a killed first synth or a
-   resized corpus can't silently skew recorded docs/sec.
 """
-
-import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 
 def test_resolve_master_respects_submit_gateway():
@@ -84,16 +76,3 @@ def test_sample_frames_zero_frame_video(spark, media):
     ids = {r["media_id"] for r in rows}
     assert 3 not in ids  # zero-frame video samples nothing
     assert sorted(r["frame_idx"] for r in rows if r["media_id"] == 4) == [0, 2, 4]
-
-
-def test_ensure_corpus_marker_gates_reuse(spark, tmp_path):
-    from _bench_common import ensure_corpus
-
-    path = str(tmp_path / "src")
-    df1 = ensure_corpus(spark, 50, path)
-    assert df1.count() == 50
-    # simulate a killed first synth: dir exists, marker missing
-    os.remove(os.path.join(path, "_SYNTH_OK"))
-    df2 = ensure_corpus(spark, 50, path)  # regenerates
-    assert df2.count() == 50
-    assert os.path.exists(os.path.join(path, "_SYNTH_OK"))

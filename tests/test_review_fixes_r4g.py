@@ -146,23 +146,23 @@ def test_fetch_real_stub_still_raises(spark):
 
 
 def test_pinned_table_history_and_at_do_not_leak_post_pin(spark, tmp_path):
-    from open_source_search_engine_spark.operators.timetravel import (
-        PinnedTable,
-        _EmptyTable,
-    )
-    from open_source_search_engine_spark.sources.tables import SnapshotTable
+    from open_source_search_engine_spark.operators.build import Index
+    from open_source_search_engine_spark.operators.timetravel import as_of
 
-    t = SnapshotTable(str(tmp_path), "tt")
-    for _ in range(3):  # versions 0,1,2
-        t.commit(add=[], operation="append")
-    pinned = PinnedTable(t, 1)
-    assert pinned.history() == [0, 1]
-    assert pinned.at(0).version == 0
+    idx = Index(str(tmp_path))
+    idx.table("other").commit(add=[], operation="append")  # version 0
+    t = idx.table("tt")
+    for i in range(3):  # versions 1,2,3
+        t.commit(add=[str(tmp_path / f"tt/seg{i}")], operation="append")
+    pinned = as_of(idx, 2).table("tt")
+    assert t.history() == [1, 2, 3]
+    assert pinned.history() == [1, 2]
+    assert pinned.at(1).version == 1
     with pytest.raises(ValueError, match="after this as-of view's pin"):
-        pinned.at(2)
-    empty = _EmptyTable(t)
+        pinned.at(3)
+    empty = as_of(idx, 0).table("tt")
     assert empty.history() == []
-    with pytest.raises(ValueError, match="no snapshots"):
+    with pytest.raises(ValueError, match="no snapshot"):
         empty.at(0)
 
 

@@ -13,7 +13,6 @@ from open_source_search_engine_spark.operators.merge import (
     compact_deltas,
     delete_docs,
     deleted_doc_ids,
-    deletes_table,
 )
 from open_source_search_engine_spark.operators.stats import fsck_index
 from open_source_search_engine_spark.plans.exec import search
@@ -63,7 +62,7 @@ def test_dead_ids_deduped_and_pinnable(spark, tmp_path):
     idx = _build(spark, str(tmp_path / "idx"))
     x = _id_of(spark, idx, "a.py")
     delete_docs(spark, idx, [x])
-    v1 = deletes_table(idx).latest().version
+    v1 = idx.deletes.latest().version
     for _ in range(3):  # re-deleting must not inflate the count
         delete_docs(spark, idx, [x])
     assert len(deleted_doc_ids(spark, idx)) == 1
@@ -76,9 +75,9 @@ def test_dead_ids_deduped_and_pinnable(spark, tmp_path):
 
 def test_empty_delete_list_commits_nothing(spark, tmp_path):
     idx = _build(spark, str(tmp_path / "idx"))
-    before = deletes_table(idx).latest()
+    before = idx.deletes.latest()
     delete_docs(spark, idx, [])
-    after = deletes_table(idx).latest()
+    after = idx.deletes.latest()
     assert (before is None) == (after is None)
     if before is not None:
         assert after.version == before.version

@@ -8,10 +8,10 @@ import pytest
 from open_source_search_engine_spark.operators import topk as T
 from open_source_search_engine_spark.operators.build import Index
 from open_source_search_engine_spark.operators.merge import (
-    _DEAD_CACHE,
     delete_docs,
     deleted_doc_ids,
 )
+from open_source_search_engine_spark.sources.tables import MEMO
 from open_source_search_engine_spark.operators.topk import search_wand
 from open_source_search_engine_spark.plans.exec import search
 
@@ -65,28 +65,34 @@ def test_query_before_finalize_raises(spark, tmp_path):
         search(spark, idx, "anything", k=5)
 
 
-def test_resume_after_lost_checkpoint_is_idempotent(spark, tmp_path):
-    # crash window: shard table commits landed, checkpoint didn't ->
-    # resume must NOT append duplicate segments (doubled postings/df/cf)
-    import pyarrow.parquet as pq
-
+def test_resume_after_lost_checkpoint_is_idempotent(spark, tmp_path, monkeypatch):
+    # crash window: shard 1's segments written, its one commit (data +
+    # checkpoint) never landed -> resume must NOT append duplicate
+    # segments (doubled postings/df/cf)
+    from open_source_search_engine_spark.operators import build as build_mod
     from open_source_search_engine_spark.operators.build import build_index
     from open_source_search_engine_spark.sources.corpus import synth_documents
 
     docs = synth_documents(spark, 80, partitions=2)
     kw = dict(n_shards=2, block_size=16, salt_target=200, shard_parallelism=1)
-    root = str(tmp_path / "resumeidx")
-    idx = build_index(spark, docs, root, **kw)
+    ref = build_index(spark, docs, str(tmp_path / "refidx"), **kw)
     ref_stats = sorted(
         (r["term"], r["df"], r["cf"])
-        for r in idx.termstats.read(spark).collect()
+        for r in ref.termstats.read(spark).collect()
     )
-    ref_hits = _scores(search(spark, idx, "def return", k=500, enrich=False))
-    # simulate the crash: drop shard 1's checkpoint row only
-    ck = idx.checkpoints
-    for seg in ck.latest().segments:
-        if 1 in pq.read_table(seg).column("partition_id").to_pylist():
-            ck.commit(remove=[seg], operation="test-drop")
+    ref_hits = _scores(search(spark, ref, "def return", k=500, enrich=False))
+    real_ck = build_mod._checkpoint
+
+    def crash_on_shard_1(spark_, staged, run_id, shard, *a):
+        if shard == 1:
+            raise RuntimeError("injected: crash before shard 1 commits")
+        return real_ck(spark_, staged, run_id, shard, *a)
+
+    root = str(tmp_path / "resumeidx")
+    monkeypatch.setattr(build_mod, "_checkpoint", crash_on_shard_1)
+    with pytest.raises(RuntimeError, match="injected"):
+        build_index(spark, docs, root, **kw)
+    monkeypatch.undo()
     idx2 = build_index(spark, docs, root, **kw)  # resume
     got_stats = sorted(
         (r["term"], r["df"], r["cf"])
@@ -97,14 +103,20 @@ def test_resume_after_lost_checkpoint_is_idempotent(spark, tmp_path):
 
 
 def test_dead_cache_evicts_stale_versions(spark, micro_index, tmp_path):
+    # the dead-set memo keys on the deletes segment list: a new delete is
+    # a new key (the stale set is never served), and the kind's bound
+    # evicts the oldest entries
     root = str(tmp_path / "evictidx")
     shutil.copytree(micro_index.root, root)
     idx = Index(root)
     delete_docs(spark, idx, [1])
-    deleted_doc_ids(spark, idx)
-    v1_keys = [k for k in _DEAD_CACHE if k[0] == root]
-    assert len(v1_keys) == 1
+    assert deleted_doc_ids(spark, idx).tolist() == [1]
+    k1 = ("dead", idx.view().key("deletes"))
+    assert MEMO.get(k1) is not None
     delete_docs(spark, idx, [2])
-    deleted_doc_ids(spark, idx)
-    keys = [k for k in _DEAD_CACHE if k[0] == root]
-    assert len(keys) == 1 and keys[0] != v1_keys[0]
+    assert deleted_doc_ids(spark, idx).tolist() == [1, 2]
+    k2 = ("dead", idx.view().key("deletes"))
+    assert k2 != k1 and MEMO.get(k2) is not None
+    for i in range(MEMO.LIMITS["dead"]):
+        MEMO.put(("dead", ("filler", i)), None)
+    assert MEMO.get(k1) is None and MEMO.get(k2) is None

@@ -16,10 +16,10 @@ from open_source_search_engine_spark.operators import merge as M
 from open_source_search_engine_spark.operators import topk as T
 from open_source_search_engine_spark.operators.build import Index
 from open_source_search_engine_spark.operators.merge import (
-    _DEAD_CACHE,
     delete_docs,
     deleted_doc_ids,
 )
+from open_source_search_engine_spark.sources.tables import MEMO
 from open_source_search_engine_spark.operators.topk import search_wand
 from open_source_search_engine_spark.plans.exec import search
 
@@ -35,7 +35,7 @@ def capidx(spark, micro_index, tmp_path):
     idx = Index(root)
     delete_docs(spark, idx, [111, 222, 333, 444, 555])  # absent from corpus
     yield idx
-    _DEAD_CACHE.clear()
+    MEMO.clear()
 
 
 def test_over_cap_probe_never_collects_full_table(spark, capidx, monkeypatch):
@@ -51,7 +51,7 @@ def test_over_cap_probe_never_collects_full_table(spark, capidx, monkeypatch):
         collected.append(len(rows))
         return rows
 
-    _DEAD_CACHE.clear()
+    MEMO.clear()
     monkeypatch.setattr(cls, "collect", spy)
     out = deleted_doc_ids(spark, capidx, cap=2)
     assert out is None
@@ -60,7 +60,7 @@ def test_over_cap_probe_never_collects_full_table(spark, capidx, monkeypatch):
 
 
 def test_over_cap_marker_cache_semantics(spark, capidx):
-    _DEAD_CACHE.clear()
+    MEMO.clear()
     assert deleted_doc_ids(spark, capidx, cap=2) is None
     # tighter/equal cap answered from the ("over", 2) marker
     assert deleted_doc_ids(spark, capidx, cap=1) is None
@@ -76,7 +76,7 @@ def test_over_cap_marker_cache_semantics(spark, capidx):
 
 
 def test_wand_over_cap_falls_back_correctly(spark, capidx, monkeypatch):
-    _DEAD_CACHE.clear()
+    MEMO.clear()
     monkeypatch.setattr(T, "MAX_DEAD_INLINE", 2)
     got = search_wand(spark, capidx, "binary search", k=10)
     want = search(spark, capidx, "binary search", k=10)
@@ -89,7 +89,7 @@ def test_wand_over_cap_falls_back_correctly(spark, capidx, monkeypatch):
 def test_batch_over_cap_falls_back_correctly(spark, capidx, monkeypatch):
     from open_source_search_engine_spark.operators.topk import search_wand_batch
 
-    _DEAD_CACHE.clear()
+    MEMO.clear()
     monkeypatch.setattr(T, "MAX_DEAD_INLINE", 2)
     out = search_wand_batch(spark, capidx, ["binary search", "hash"], k=5)
     by_q = {}
@@ -117,7 +117,7 @@ def test_compaction_over_cap_uses_distributed_antijoin(
     ]
     assert len(victims) == 3
     delete_docs(spark, idx, victims)
-    _DEAD_CACHE.clear()
+    MEMO.clear()
     monkeypatch.setattr(M, "DEAD_BROADCAST_CAP", 2)
 
     # spy: compaction must see the over-cap probe return None (i.e. take
@@ -142,7 +142,7 @@ def test_compaction_over_cap_uses_distributed_antijoin(
     got = _scores(search(spark, idx, "search", k=10))
     assert got and not (set(got) & set(victims))
     # deletes table cleared after annihilation
-    dsnap = M.deletes_table(idx).latest()
+    dsnap = idx.deletes.latest()
     assert dsnap is None or not dsnap.segments
 
 

@@ -1,5 +1,5 @@
-"""Snapshot time travel (operators/timetravel.py): query the index
-AS OF a pre-mutation snapshot; mutations never rewrite history because
+"""Time travel (operators/timetravel.py): query the index AS OF a
+pre-mutation manifest version; mutations never rewrite history because
 commits only add manifests and never delete segment files."""
 
 import pytest
@@ -62,11 +62,11 @@ def test_as_of_post_delete_pre_compact_applies_tombstones(spark, tt_setup):
 
 def test_as_of_missing_deletes_key_means_no_tombstones(spark, tt_setup):
     idx, v0, v1, before, victims = tt_setup
-    # v0 was captured before any delete — its dict has no 'deletes' key;
-    # the pinned view must NOT fall through to the live (cleared or
-    # populated) deletes table
-    assert "deletes" not in v0
-    assert "deletes" in v1
+    # v0 was captured before any delete: the view at v0 has no deletes
+    # table and must NOT fall through to the live (cleared or populated)
+    # one; v1 has the tombstone
+    assert as_of(idx, v0).deletes.latest() is None
+    assert as_of(idx, v1).deletes.latest().segments
 
 
 def test_exhaustive_plan_as_of(spark, tt_setup):
@@ -92,9 +92,10 @@ def test_vacuum_bounds_history_and_keeps_head(spark, micro_docs, tmp_path_factor
     compact_postings(spark, idx)
     hist_before = idx.postings.history()
     assert len(hist_before) > 1
+    n_versions = index_versions(idx) + 1
     stats = vacuum_index(idx, keep_last=1)
-    assert stats["postings"]["expired_snapshots"] == len(hist_before) - 1
-    assert stats["postings"]["removed_segments"] >= 1
+    assert stats["expired_versions"] == n_versions - 1
+    assert stats["removed_segments"] >= 1
     # head query unaffected
     now = search_wand(spark, idx, "binary", k=10, enrich=False).collect()
     assert set(victims).isdisjoint({r["doc_id"] for r in now})
@@ -106,30 +107,23 @@ def test_vacuum_bounds_history_and_keeps_head(spark, micro_docs, tmp_path_factor
 
 
 def test_pinned_table_rejects_reads_past_the_pin(spark, tt_setup):
-    # regression: deleted_doc_ids passes an explicit version into
-    # PinnedTable.read; the pin must accept versions <= itself and
-    # refuse to see past itself (same rule as PinnedTable.at)
+    # regression: deleted_doc_ids passes an explicit version into the
+    # pinned table's read; the view must accept versions <= its pin and
+    # refuse to see past it (same rule as .at)
     idx, v0, v1, before, victims = tt_setup
-    from open_source_search_engine_spark.operators.merge import deletes_table
-
-    pinned = as_of(idx, v1)
-    t = deletes_table(pinned)
+    t = as_of(idx, v1).deletes
     snap = t.latest()
-    assert snap is not None and snap.version == v1["deletes"]
+    assert snap is not None and snap.version == v1
     assert t.read(spark, version=snap.version) is not None
     with pytest.raises(ValueError, match="after this as-of view's pin"):
         t.read(spark, version=snap.version + 1)
 
 
 def test_empty_table_accepts_explicit_version(spark, tt_setup):
-    # review r4-s2: _EmptyTable must keep signature parity with
-    # PinnedTable — a pre-tombstone pin resolves deletes to _EmptyTable,
-    # and callers (deleted_doc_ids, changelog) pass version= explicitly
-    from open_source_search_engine_spark.operators.merge import deletes_table
-
+    # a pre-tombstone view has no deletes table; callers (deleted_doc_ids,
+    # changelog) pass version= explicitly and must read nothing
     idx, v0, v1, before, victims = tt_setup
-    assert "deletes" not in v0  # pin predates the first delete commit
-    t = deletes_table(as_of(idx, v0))
+    t = as_of(idx, v0).deletes
     assert t.latest() is None
     assert t.read(spark) is None
     assert t.read(spark, version=0) is None
