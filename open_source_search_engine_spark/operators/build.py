@@ -253,13 +253,13 @@ def encode_blocks(
     single task (north-rule explicit skew handling).  The stats join rides
     the same hash key as the repartition.
 
-    ``sharded=True``: input additionally carries a ``shard`` column (the
-    doc-partition id, pmod(doc_id, n_shards)) and blocks come out
-    shard-pure with the shard in the output schema — the multi-shard
-    compaction path encodes every doc-partition's sorted run in the SAME
-    single shuffle (RdbBase keeps per-host file sets; one merge rewrites
-    them all).  Salting then uses shard-local df, matching what a per-shard
-    build would have produced.
+    ``sharded=True`` (the mode ``_write_postings`` uses for every
+    write): input additionally carries a ``shard`` column (the
+    doc-partition id) and blocks come out shard-pure with the shard in
+    the output schema — a compaction encodes every doc-partition's
+    sorted run in the SAME single shuffle (RdbBase keeps per-host file
+    sets; one merge rewrites them all).  Salting then uses shard-local
+    df, matching what a per-shard build would have produced.
     """
     n_row = 7 if sharded else 6  # leading fixed-width row arrays per batch
     shard_key = ["shard"] if sharded else []
@@ -393,6 +393,172 @@ def numeric_postings(d: DataFrame, numeric_fields) -> DataFrame | None:
     return out
 
 
+# the tokenizer features every segment of an index must share:
+# parameter -> (_features.json key, value when unrecorded, normalizer,
+# what a mixed index would silently get wrong)
+_FEATURES = {
+    "code_aware": ("code_aware", True, bool,
+                   "the same text would split into different terms"),
+    "bigram_terms": ("bigrams", False, bool,
+                     "phrase pair-termlist lookups would miss docs"),
+    "numeric_fields": ("numeric_fields", [], sorted,
+                       "num: termlist lookups would miss docs"),
+}
+
+
+def _resolve_features(view: IndexView, **given) -> dict:
+    """The tokenizer features a batch is written with, checked against
+    the index's feature markers: ``None`` inherits the marker, a root
+    with no postings records the given values, and any other mismatch
+    raises ValueError naming the feature."""
+    stored = view.features()
+    fresh = not view.segments("postings")
+    out = {}
+    for name, value in given.items():
+        key, default, norm, why = _FEATURES[name]
+        have = stored.get(key, default)
+        value = have if value is None else norm(value)
+        if value != have and not fresh:
+            raise ValueError(
+                f"index at {view.root} has {key}={have!r}; a batch with "
+                f"{name}={value!r} cannot join it ({why})"
+            )
+        out[name] = value
+    if fresh:
+        view.write_features(**{_FEATURES[n][0]: v for n, v in out.items()})
+    return out
+
+
+def _write_postings(
+    idx: Index,
+    posts: DataFrame,
+    label: str,
+    salt_target: int,
+    block_size: int,
+    terms: DataFrame | None = None,
+) -> tuple[str, str | None]:
+    """Posting rows that carry their WAND ``shard`` -> one uncommitted
+    postings segment: encoded shard-pure, range-sorted on term_id, with
+    its bloom sidecar.  With ``terms`` (distinct ``term_id, term``) the
+    segment's termstats_partial rows are written too, each carrying its
+    term string.  Returns ``(postings_segment, partial_segment | None)``."""
+    # persist encoded blocks: repartitionByRange's boundary-sampling
+    # pass would otherwise run the whole encode twice
+    blocks = encode_blocks(
+        posts, salt_target=salt_target, block_size=block_size, sharded=True
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # range-partition + sort by term_id so query-time term lookups prune
+    # to a handful of row groups (RdbMap sparse-index seek analog, S2).
+    # The shard column marks the doc-partition each block belongs to —
+    # WAND runs one task per shard over doc-disjoint lists (Msg39).
+    # NOTE (r5 encode profile): raising
+    # spark.sql.execution.arrow.maxRecordsPerBatch to 64k for this
+    # materialization measured ~8% on the 8-core encode stage (the
+    # stage is shuffle+Arrow-transfer bound; kernel compute is fully
+    # overlapped).  It is NOT applied: the conf is session-global,
+    # and a concurrent block-READING kernel in another driver thread
+    # (compaction decode, federated maintenance) would receive 64k
+    # batches of KB-sized block rows — hundreds of MB per Arrow
+    # transfer.  A per-plan batch-size knob would make this safe;
+    # Spark has none today.
+    po_seg = idx.postings.write_segment(
+        blocks.repartitionByRange("term_id").sortWithinPartitions(
+            "term_id", "salt", "block_id"
+        ),
+        label=label,
+        bloom_col="term_id",
+    )
+    tsp_seg = None
+    if terms is not None:
+        partial = (
+            blocks.groupBy("term_id")
+            .agg(
+                F.sum("n_docs").alias("df"),
+                F.sum("sum_tf").alias("cf"),
+                F.count("*").alias("n_blocks"),
+            )
+            .join(terms, "term_id")
+        )
+        tsp_seg = idx.termstats_partial.write_segment(
+            partial.coalesce(4), label=label
+        )
+    blocks.unpersist()
+    return po_seg, tsp_seg
+
+
+def _write_batch(
+    spark: SparkSession,
+    view: IndexView,
+    docs: DataFrame,
+    shard: int,
+    label: str,
+    features: dict,
+    field_terms: bool,
+    salt_target: int,
+    block_size: int,
+    extra_postings: DataFrame | None = None,
+    **stage,
+) -> IndexView:
+    """One batch of documents (with ``derive_ids`` columns) -> its
+    docstats, postings and termstats_partial segments in WAND shard
+    ``shard``, staged on ``view`` with ``stage`` (operation, meta,
+    max_shard) and left for the caller to commit.  The one write path
+    of a build shard and an add: Gigablast routes bulk and injected
+    documents through the same hash/emit -> Msg4 -> RdbDump steps."""
+    # the kernel emits posting primitives directly (term hashed
+    # in-kernel; positions pre-encoded; term string non-null only on
+    # first occurrence per partition), so no array column ever crosses
+    # Arrow.  Persist = the RdbTree memtable analog, one batch's worth,
+    # spills to disk.
+    posts = tokenize_to_postings(
+        docs,
+        code_aware=features["code_aware"],
+        field_terms=field_terms,
+        bigram_terms=features["bigram_terms"],
+    )
+    if features["numeric_fields"]:
+        posts = posts.unionByName(
+            numeric_postings(docs, features["numeric_fields"])
+        )
+    if extra_postings is not None:
+        posts = posts.unionByName(
+            extra_postings.select("term_id", "doc_id", "doclen", "tf", "pos_enc", "term")
+        )
+    posts = posts.persist(StorageLevel.MEMORY_AND_DISK)
+    # groupBy-max, not distinct: numeric lookup postings carry doclen 0
+    # alongside the doc's real doclen, and distinct would emit both rows
+    # (duplicating the doc in docstats)
+    doclens = posts.groupBy("doc_id").agg(F.max("doclen").alias("doclen"))
+    # LEFT join: a doc producing zero postings (empty content with
+    # field_terms=False) must still exist in docstats — dropping it
+    # would skew n_docs/avgdl vs the true corpus and lose its
+    # content_sha256 row (the north-rule per-row invariant)
+    docstats = (
+        docs.select("doc_id", "repo", "path", "commit", "lang", "content_sha256")
+        .join(doclens, "doc_id", "left")
+        .withColumn("doclen", F.coalesce(F.col("doclen"), F.lit(0)).cast("int"))
+    )
+    ds_seg = view.docstats.write_segment(docstats, label=label)
+    terms = posts.filter(F.col("term").isNotNull()).select("term_id", "term").distinct()
+    po_seg, tsp_seg = _write_postings(
+        view,
+        posts.withColumn("shard", F.lit(shard)),
+        label,
+        salt_target,
+        block_size,
+        terms=terms,
+    )
+    posts.unpersist()
+    return view.stage(
+        {
+            "docstats": ([ds_seg], []),
+            "postings": ([po_seg], []),
+            "termstats_partial": ([tsp_seg], []),
+        },
+        **stage,
+    )
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -411,7 +577,14 @@ def build_index(
     extra_postings: DataFrame | None = None,
     extra_label: str = "",
 ) -> Index:
-    """Full resumable build.
+    """Full resumable build: ``n_shards`` doc-hash shards, each written
+    by the batch writer every add shares (``_write_batch``) and
+    committed with its checkpoint, then one ``finalize_stats``.
+
+    A resume (postings already in the root) must match the root's
+    sharding, its tokenizer features (``code_aware``, ``bigram_terms``,
+    ``numeric_fields``) and its ``extra_postings`` source; a mismatch
+    raises ValueError before anything is written.
 
     ``extra_postings`` injects externally-derived posting rows (schema
     ``term_id long, doc_id long, doclen int, tf int, pos_enc binary,
@@ -439,6 +612,8 @@ def build_index(
             "(an empty label makes that guard vacuous)"
         )
     done = _completed_shards(spark, idx)
+    view = idx.view()
+    fresh = not view.segments("postings")
 
     # Guard against appending a second full build into a non-empty root:
     # re-used shard ids would mix blocks with different per-(shard,term)
@@ -446,8 +621,7 @@ def build_index(
     # paths into an existing root are (a) resume of THIS sharding (some
     # checkpoints with matching n_shards exist) and (b) incremental
     # add_documents, which allocates fresh shard ids.
-    existing = idx.postings.latest()
-    if existing is not None and existing.segments:
+    if not fresh:
         if not resume:
             raise ValueError(
                 f"index root {index_root} already has postings; "
@@ -464,36 +638,21 @@ def build_index(
                 f"build configuration (no completed shards for n_shards="
                 f"{n_shards}); start a fresh root"
             )
-        if idx.features().get("bigrams", False) != bigram_terms:
-            raise ValueError(
-                f"index root {index_root} was built with bigram_terms="
-                f"{idx.features().get('bigrams', False)}; a resume must "
-                "use the same setting (mixed segments would make phrase "
-                "pair-termlist lookups incomplete)"
-            )
-        if list(idx.features().get("numeric_fields", [])) != sorted(numeric_fields):
-            raise ValueError(
-                f"index root {index_root} was built with numeric_fields="
-                f"{idx.features().get('numeric_fields', [])}; a resume must "
-                "use the same setting (mixed segments would make num: "
-                "termlists incomplete)"
-            )
-        if idx.features().get("extra_postings", "") != (
-            extra_label if extra_postings is not None else ""
-        ):
-            raise ValueError(
-                f"index root {index_root} was built with extra_postings="
-                f"{idx.features().get('extra_postings', '')!r}; a resume "
-                "must supply the same posting source (mixed segments would "
-                "make the injected termlists incomplete)"
-            )
-    else:
-        idx.write_features(
-            bigrams=bigram_terms,
-            numeric_fields=sorted(numeric_fields),
-            code_aware=code_aware,
-            n_shards=n_shards,
-            extra_postings=extra_label if extra_postings is not None else "",
+    features = _resolve_features(
+        view,
+        code_aware=code_aware,
+        bigram_terms=bigram_terms,
+        numeric_fields=numeric_fields,
+    )
+    extra = extra_label if extra_postings is not None else ""
+    if fresh:
+        idx.write_features(n_shards=n_shards, extra_postings=extra)
+    elif idx.features().get("extra_postings", "") != extra:
+        raise ValueError(
+            f"index root {index_root} was built with extra_postings="
+            f"{idx.features().get('extra_postings', '')!r}; a resume "
+            "must supply the same posting source (mixed segments would "
+            "make the injected termlists incomplete)"
         )
 
     # a small source parquet may expose fewer splits than cores, capping
@@ -509,98 +668,23 @@ def build_index(
     def build_shard(shard: int) -> None:
         t0 = time.time()
         # shard filter BEFORE the tokenizer kernel — each shard job
-        # tokenizes only its 1/n_shards of the corpus.  The kernel emits
-        # posting primitives directly (term hashed in-kernel; positions
-        # pre-encoded; term string non-null only on first occurrence per
-        # partition), so no array column ever crosses Arrow.  Persist =
-        # the RdbTree memtable analog, one shard's worth, spills to disk.
-        d = ids.filter(F.col("shard") == shard)
-        posts = tokenize_to_postings(
-            d,
-            code_aware=code_aware,
-            field_terms=field_terms,
-            bigram_terms=bigram_terms,
-        )
-        if numeric_fields:
-            num = numeric_postings(d, numeric_fields)
-            if num is not None:
-                posts = posts.unionByName(num)
+        # tokenizes only its 1/n_shards of the corpus
+        extra_rows = None
         if extra_postings is not None:
-            posts = posts.unionByName(
-                extra_postings.filter(
-                    F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
-                    == F.lit(shard)
-                ).select("term_id", "doc_id", "doclen", "tf", "pos_enc", "term")
+            extra_rows = extra_postings.filter(
+                F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int") == F.lit(shard)
             )
-        posts = posts.persist(StorageLevel.MEMORY_AND_DISK)
-        dict_df = (
-            posts.filter(F.col("term").isNotNull())
-            .select("term_id", "term")
-            .distinct()
-        )
-        td_seg = idx.termdict.write_segment(dict_df.coalesce(4), label=f"shard{shard}")
-        # groupBy-max, not distinct: numeric lookup postings carry doclen 0
-        # alongside the doc's real doclen, and distinct would emit both rows
-        # (duplicating the doc in docstats)
-        doclens = posts.groupBy("doc_id").agg(F.max("doclen").alias("doclen"))
-        # LEFT join: a doc producing zero postings (empty content with
-        # field_terms=False) must still exist in docstats — dropping it
-        # would skew n_docs/avgdl vs the true corpus and lose its
-        # content_sha256 row (the north-rule per-row invariant)
-        docstats = (
-            d.select(
-                "doc_id", "repo", "path", "commit", "lang", "content_sha256"
-            )
-            .join(doclens, "doc_id", "left")
-            .withColumn("doclen", F.coalesce(F.col("doclen"), F.lit(0)).cast("int"))
-        )
-        ds_seg = idx.docstats.write_segment(docstats, label=f"shard{shard}")
-        # persist encoded blocks: repartitionByRange's boundary-sampling
-        # pass would otherwise run the whole encode twice
-        blocks = encode_blocks(
-            posts.select("term_id", "doc_id", "doclen", "tf", "pos_enc"),
-            salt_target=salt_target,
-            block_size=block_size,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # range-partition + sort by term_id so query-time term lookups prune
-        # to a handful of row groups (RdbMap sparse-index seek analog, S2).
-        # The shard column marks the doc-partition each block belongs to —
-        # WAND runs one task per shard over doc-disjoint lists (Msg39).
-        blocks_sorted = (
-            blocks.withColumn("shard", F.lit(shard))
-            .repartitionByRange("term_id")
-            .sortWithinPartitions("term_id", "salt", "block_id")
-        )
-        # NOTE (r5 encode profile): raising
-        # spark.sql.execution.arrow.maxRecordsPerBatch to 64k for this
-        # materialization measured ~8% on the 8-core encode stage (the
-        # stage is shuffle+Arrow-transfer bound; kernel compute is fully
-        # overlapped).  It is NOT applied: the conf is session-global,
-        # and a concurrent block-READING kernel in another driver thread
-        # (compaction decode, federated maintenance) would receive 64k
-        # batches of KB-sized block rows — hundreds of MB per Arrow
-        # transfer.  A per-plan batch-size knob would make this safe;
-        # Spark has none today.
-        po_seg = idx.postings.write_segment(
-            blocks_sorted, label=f"shard{shard}", bloom_col="term_id"
-        )
-        ts_partial = blocks.groupBy("term_id").agg(
-            F.sum("n_docs").alias("df"),
-            F.sum("sum_tf").alias("cf"),
-            F.count("*").alias("n_blocks"),
-        )
-        tsp_seg = idx.termstats_partial.write_segment(
-            ts_partial.coalesce(4), label=f"shard{shard}"
-        )
-        blocks.unpersist()
-        posts.unpersist()
-        staged = idx.view().stage(
-            {
-                "docstats": ([ds_seg], []),
-                "termdict": ([td_seg], []),
-                "postings": ([po_seg], []),
-                "termstats_partial": ([tsp_seg], []),
-            },
+        staged = _write_batch(
+            spark,
+            idx.view(),
+            ids.filter(F.col("shard") == shard),
+            shard,
+            f"shard{shard}",
+            features,
+            field_terms,
+            salt_target,
+            block_size,
+            extra_postings=extra_rows,
             operation="build_shard",
             meta={"shard": shard, "n_shards": n_shards, "run_id": run_id},
             max_shard=n_shards - 1,
@@ -624,22 +708,23 @@ def build_index(
 
 
 def finalize_stats(spark: SparkSession, idx: Index, run_id: str) -> None:
-    """Global termstats/collstats from per-shard partials (A2/A3/A5),
-    committed with whatever ``idx`` has staged: a writer that passes its
+    """Global termstats/collstats (A2/A3/A5): the ``termstats_partial``
+    rows every batch writes, each carrying its term string, summed per
+    ``(term_id, term)``, and ``(n_docs, avgdl)`` over docstats.
+    Committed with whatever ``idx`` has staged: a writer that passes its
     staged view publishes its segments and the stats over them as one
     manifest version, so no reader ever pairs new postings with old
     stats."""
     view = idx.view()
-    partials = view.termstats_partial.read(spark)
-    tdict = view.termdict.read(spark).select("term_id", "term").distinct()
     termstats = (
-        partials.groupBy("term_id")
+        view.termstats_partial.read(spark)
+        .groupBy("term_id", "term")
         .agg(
             F.sum("df").alias("df"),
             F.sum("cf").alias("cf"),
             F.sum("n_blocks").alias("n_blocks"),
         )
-        .join(tdict, "term_id")
+        .select("term_id", "df", "cf", "n_blocks", "term")
     )
     # small stat tables coalesce to few files: cold-query latency is
     # dominated by per-file open cost on this VM
@@ -740,7 +825,7 @@ def _checkpoint(
                     "ts": now,
                     "output_snapshot": str(version),
                 }
-                for tname in ("postings", "docstats", "termdict", "termstats_partial")
+                for tname in ("postings", "docstats", "termstats_partial")
             ]
         )
         written[:] = [_write_tiny_segment(staged.lineage, ln, f"l{shard}")]

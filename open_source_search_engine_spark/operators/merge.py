@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import MEMO
-from .build import Index, _write_tiny_segment, encode_blocks, finalize_stats
+from .build import Index, _write_postings, _write_tiny_segment, finalize_stats
 
 # tombstone count above which compaction stops collecting the dead set to
 # the driver for a broadcast anti-join and instead anti-joins against the
@@ -265,25 +265,15 @@ def compact_deltas(
     # parquet scan just to pick an id
     first_shard = view.max_shard + 1
     n_sub = max(int(blocks_df.select("shard").distinct().count()), 1)
+    # persist: the encode reads its input twice (heavy-term df, then
+    # the salted shuffle), and the decode should run once
     posts = decode_to_postings(blocks_df).withColumn(
         "shard",
         (F.lit(int(first_shard)) + F.pmod(F.col("doc_id"), F.lit(n_sub))).cast(
             "int"
         ),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # persist: repartitionByRange's boundary-sampling pass would
-    # otherwise run the whole merge-encode twice (same hazard build.py
-    # and compact_postings guard against)
-    merged = encode_blocks(
-        posts, salt_target=salt_target, block_size=block_size, sharded=True
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    merged_sorted = merged.repartitionByRange("term_id").sortWithinPartitions(
-        "term_id", "salt", "block_id"
-    )
-    seg = idx.postings.write_segment(
-        merged_sorted, label="minor", bloom_col="term_id"
-    )
-    merged.unpersist()
+    seg, _ = _write_postings(idx, posts, "minor", salt_target, block_size)
     posts.unpersist()
     view.stage(
         {"postings": ([seg], list(merge_these))},
@@ -365,22 +355,11 @@ def compact_postings(
     posts = posts.withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    merged = encode_blocks(
-        posts, salt_target=salt_target, block_size=block_size, sharded=True
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    merged_sorted = merged.repartitionByRange("term_id").sortWithinPartitions(
-        "term_id", "salt", "block_id"
+    # each surviving term keeps the string its replaced partials carry
+    terms = view.termstats_partial.read(spark).select("term_id", "term").distinct()
+    seg, tsp_seg = _write_postings(
+        idx, posts, "compacted", salt_target, block_size, terms=terms
     )
-    seg = idx.postings.write_segment(
-        merged_sorted, label="compacted", bloom_col="term_id"
-    )
-    ts_partial = merged.groupBy("term_id").agg(
-        F.sum("n_docs").alias("df"),
-        F.sum("sum_tf").alias("cf"),
-        F.count("*").alias("n_blocks"),
-    )
-    tsp_seg = idx.termstats_partial.write_segment(ts_partial.coalesce(4), label="compacted")
-    merged.unpersist()
     posts.unpersist()
     changes = {
         "postings": ([seg], prev_segs),

@@ -46,8 +46,8 @@ def describe_index(spark, index) -> dict:
     index = index.view()
     out: dict = {"tables": {}, "features": index.features()}
     for name in (
-        "postings", "docstats", "termdict", "termstats",
-        "termstats_partial", "collstats", "deletes", "checkpoints",
+        "postings", "docstats", "termstats", "termstats_partial",
+        "collstats", "deletes", "checkpoints",
     ):
         snap = index.snapshot(name)
         out["tables"][name] = {

@@ -107,12 +107,16 @@ POSTINGS_BLOCKS = StructType(
 # ---------------------------------------------------------------------------
 # Collection statistics (drive BM25; reference: Posdb::getTermFreq estimate
 # + Rdb::getNumTotalRecs — we compute them exactly as DataFrame aggregates,
-# SURVEY §2.4 A2/A3).  termdict maps term_id -> string (strings leave the
-# tokenizer only through this small table).
+# SURVEY §2.4 A2/A3).  Every written batch adds termstats_partial rows,
+# each carrying its term string (strings leave the tokenizer only through
+# these rows); termstats sums them per (term_id, term).
 # ---------------------------------------------------------------------------
-TERMDICT = StructType(
+TERMSTATS_PARTIAL = StructType(
     [
         StructField("term_id", LongType(), False),
+        StructField("df", LongType(), False),
+        StructField("cf", LongType(), False),
+        StructField("n_blocks", LongType(), False),
         StructField("term", StringType(), False),
     ]
 )

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 # on-disk layout tag: caches of built indexes key on it, so a tree in an
 # older layout is rebuilt instead of adopted
-INDEX_LAYOUT = "manifest-v1"
+INDEX_LAYOUT = "manifest-v2"
 MANIFEST_DIR = "_index"
 
 _EMPTY = {"tables": {}, "operation": None, "meta": {}, "max_shard": -1}
@@ -405,6 +405,9 @@ class Index:
 
     postings = property(lambda self: self.table("postings"))
     docstats = property(lambda self: self.table("docstats"))
+    # no writer fills termdict (partials carry the term strings); kept
+    # only because the benchmark's table_layers still reads it — drop
+    # with ROADMAP item 5
     termdict = property(lambda self: self.table("termdict"))
     termstats_partial = property(lambda self: self.table("termstats_partial"))
     termstats = property(lambda self: self.table("termstats"))

@@ -7,10 +7,11 @@ docs are updated via delete-then-re-add diffs, and Msg4's ACKed idempotent
 adds give exactly-once-ish ingestion.
 
 Spark mapping:
-- ``add_documents``      one micro-batch: tokenize -> encode -> append an
-                         immutable delta segment + stats partials and the
-                         refreshed stats in one manifest commit.  Queries
-                         see base ∪ delta the moment it lands (R1/R2).
+- ``add_documents``      one micro-batch through the build's batch writer:
+                         tokenize -> encode -> an immutable delta segment
+                         + docstats + stats partials, and the refreshed
+                         stats, in one manifest commit.  Queries see
+                         base ∪ delta the moment it lands (R1/R2).
 - ``update_documents``   delete-then-re-add (R4): old doc_ids tombstoned
                          (doc_id = hash(repo,path,commit) so the new
                          version never collides), new version appended.
@@ -28,18 +29,16 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.build import (
     Index,
+    _resolve_features,
+    _write_batch,
     derive_ids,
-    encode_blocks,
     finalize_stats,
 )
-from ..functions.tokenize import tokenize_to_postings
 from ..sources.tables import Manifest
 
 
@@ -57,118 +56,40 @@ def add_documents(
     run_id: str | None = None,
 ) -> None:
     """Append one delta segment for ``docs`` (R1: searchable on commit),
-    committed with its stats refresh as one manifest version.
+    written by the batch writer every build shard shares
+    (``operators.build._write_batch``) under a fresh WAND shard id, and
+    committed with its stats refresh (``finalize_stats``) as one
+    manifest version.
 
     ``code_aware=None`` / ``bigram_terms=None`` / ``numeric_fields=None``
     inherit the index's feature markers (a delta tokenized differently —
     or without pair or num: termlists — in an index that has them would
-    make lookups silently incomplete); an explicit mismatch raises."""
+    make lookups silently incomplete); an explicit mismatch raises, and
+    into a root with no postings the given values are recorded."""
     run_id = run_id or uuid.uuid4().hex[:8]
     view = idx.view()
-    has_bigrams = idx.features().get("bigrams", False)
-    has_numeric = list(idx.features().get("numeric_fields", []))
-    has_code_aware = idx.features().get("code_aware", None)
-    fresh = view.postings.latest() is None
-    if code_aware is None:
-        # inherit the build's tokenizer: a delta tokenized differently
-        # splits the same text into different terms, so lookups would
-        # silently miss delta docs
-        code_aware = has_code_aware if has_code_aware is not None else True
-    elif has_code_aware is None:
-        if fresh:
-            # delta-created index: record the tokenizer so later deltas
-            # inherit instead of defaulting
-            idx.write_features(code_aware=code_aware)
-    elif has_code_aware is not None and code_aware != has_code_aware:
-        if fresh:
-            idx.write_features(code_aware=code_aware)
-        else:
-            raise ValueError(
-                f"index at {idx.root} has code_aware={has_code_aware}; "
-                "deltas must match (tokenization would diverge between "
-                "base and delta segments)"
-            )
-    if bigram_terms is None:
-        bigram_terms = has_bigrams
-    elif bigram_terms != has_bigrams:
-        if fresh:
-            idx.write_features(bigrams=bigram_terms)
-        else:
-            raise ValueError(
-                f"index at {idx.root} has bigrams={has_bigrams}; deltas "
-                "must match (phrase pair-termlist lookups would miss docs)"
-            )
-    if numeric_fields is None:
-        numeric_fields = tuple(has_numeric)
-    elif sorted(numeric_fields) != has_numeric:
-        if fresh:
-            idx.write_features(numeric_fields=sorted(numeric_fields))
-        else:
-            raise ValueError(
-                f"index at {idx.root} has numeric_fields={has_numeric}; "
-                "deltas must match (num: termlist lookups would miss docs)"
-            )
+    features = _resolve_features(
+        view,
+        code_aware=code_aware,
+        bigram_terms=bigram_terms,
+        numeric_fields=numeric_fields,
+    )
     # a fresh shard id above every id the index ever used
     shard_id = view.max_shard + 1
-    d = derive_ids(docs)
-    posts = tokenize_to_postings(
-        d,
-        code_aware=code_aware,
-        field_terms=field_terms,
-        bigram_terms=bigram_terms,
-    )
-    if numeric_fields:
-        from ..operators.build import numeric_postings
-
-        num = numeric_postings(d, numeric_fields)
-        if num is not None:
-            posts = posts.unionByName(num)
-    posts = posts.persist(StorageLevel.MEMORY_AND_DISK)
-    dict_df = (
-        posts.filter(F.col("term").isNotNull()).select("term_id", "term").distinct()
-    )
-    td_seg = idx.termdict.write_segment(dict_df.coalesce(4), label=f"delta{shard_id}")
-    # groupBy-max, not distinct: numeric lookup postings carry doclen 0
-    # alongside the doc's real doclen
-    doclens = posts.groupBy("doc_id").agg(F.max("doclen").alias("doclen"))
-    docstats = d.select(
-        "doc_id", "repo", "path", "commit", "lang", "content_sha256"
-    ).join(doclens, "doc_id")
-    ds_seg = idx.docstats.write_segment(docstats, label=f"delta{shard_id}")
-    blocks = encode_blocks(
-        posts.select("term_id", "doc_id", "doclen", "tf", "pos_enc"),
-        salt_target=salt_target,
-        block_size=block_size,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    blocks_sorted = (
-        blocks.withColumn("shard", F.lit(shard_id))
-        .repartitionByRange("term_id")
-        .sortWithinPartitions("term_id", "salt", "block_id")
-    )
-    po_seg = idx.postings.write_segment(
-        blocks_sorted, label=f"delta{shard_id}", bloom_col="term_id"
-    )
-    ts_partial = blocks.groupBy("term_id").agg(
-        F.sum("n_docs").alias("df"),
-        F.sum("sum_tf").alias("cf"),
-        F.count("*").alias("n_blocks"),
-    )
-    tsp_seg = idx.termstats_partial.write_segment(
-        ts_partial.coalesce(4), label=f"delta{shard_id}"
-    )
-    blocks.unpersist()
-    posts.unpersist()
     # one commit for the whole batch: its segments and (refresh_stats)
     # the stats over them land together, so a reader sees the index
     # before the batch or after it, and a batch that dies before the
     # commit leaves nothing visible — re-running it is a clean add
-    staged = view.stage(
-        {
-            "docstats": ([ds_seg], []),
-            "termdict": ([td_seg], []),
-            "termstats_partial": ([tsp_seg], []),
-            "postings": ([po_seg], []),
-        },
+    staged = _write_batch(
+        spark,
+        view,
+        derive_ids(docs),
+        shard_id,
+        f"delta{shard_id}",
+        features,
+        field_terms,
+        salt_target,
+        block_size,
         operation="append",
         meta={"run_id": run_id},
         max_shard=shard_id,

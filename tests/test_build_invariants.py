@@ -75,6 +75,23 @@ def test_checkpoint_resume_identical(spark, tiny_docs, tmp_path):
     assert ck.filter(F.col("status") == "done").count() == 3
 
 
+def test_resume_rejects_other_code_aware(spark, tiny_docs, tmp_path):
+    """A resume tokenizing differently from the shards already committed
+    raises before it writes anything."""
+    from open_source_search_engine_spark.sources.tables import Manifest
+
+    root = str(tmp_path / "ca")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index(
+            spark, tiny_docs, root, n_shards=2, code_aware=True,
+            fail_after_shard=0,
+        )
+    head = Manifest(root).head()
+    with pytest.raises(ValueError, match="code_aware"):
+        build_index(spark, tiny_docs, root, n_shards=2, code_aware=False)
+    assert Manifest(root).head() == head
+
+
 def test_shard_count_equivalence(spark, tiny_docs, tmp_path):
     """merge(union of shard segments) == build(full): 1-shard and 3-shard
     builds resolve to the same logical postings (S1/U4)."""

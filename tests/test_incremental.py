@@ -74,7 +74,7 @@ def test_update_delete_readd(spark, inc_index):
     assert _paths(spark, inc_index, "updatedtoken") == {"a.py"}
 
 
-def test_compaction_annihilates_tombstones(spark, inc_index):
+def test_compaction_annihilates_tombstones(spark, inc_index, tmp_path):
     old_id = (
         inc_index.docstats.read(spark)
         .filter(F.col("path") == "b.py")
@@ -83,14 +83,62 @@ def test_compaction_annihilates_tombstones(spark, inc_index):
     delete_docs(spark, inc_index, [old_id])
     before = _paths(spark, inc_index, "alpha")
     assert before == {"a.py"}
-    n_segs_before = len(inc_index.postings.latest().segments)
+    add_documents(
+        spark, inc_index, spark.createDataFrame(DOC_NEW, SCHEMA), code_aware=False
+    )
     compact_postings(spark, inc_index, block_size=4)
     # one merged segment, tombstones physically gone, results unchanged
     assert len(inc_index.postings.latest().segments) == 1
     assert len(deleted_doc_ids(spark, inc_index)) == 0
-    assert _paths(spark, inc_index, "alpha") == {"a.py"}
-    assert _paths(spark, inc_index, "alpha", search_wand) == {"a.py"}
+    assert _paths(spark, inc_index, "alpha") == {"a.py", "d.py"}
+    assert _paths(spark, inc_index, "alpha", search_wand) == {"a.py", "d.py"}
     assert inc_index.docstats.read(spark).filter(F.col("doc_id") == old_id).count() == 0
+    # compaction carries each surviving term's string over: termstats
+    # equal a fresh build of the surviving docs, and no posting term_id
+    # is missing from them
+    from open_source_search_engine_spark.operators.stats import fsck_index
+
+    survivors = [d for d in DOCS_V1 if d[1] != "b.py"] + DOC_NEW
+    fresh = build_index(
+        spark, spark.createDataFrame(survivors, SCHEMA),
+        str(tmp_path / "fresh"), n_shards=1, code_aware=False, block_size=4,
+    )
+
+    def stats(idx):
+        return sorted(
+            tuple(r) for r in idx.termstats.read(spark).select("term", "df", "cf").collect()
+        )
+
+    assert stats(inc_index) == stats(fresh)
+    report = fsck_index(spark, inc_index)
+    assert not [i for i in report["issues"] if "absent from termstats" in i], report
+
+
+def test_add_keeps_token_free_doc_in_docstats(spark, tmp_path):
+    """A doc whose content yields no tokens keeps a ``doclen 0`` docstats
+    row when it arrives by add_documents, exactly as in a one-shot
+    build: n_docs and avgdl count it either way."""
+    a = [("r/a", "a.py", "c1", "python", "alpha beta gamma")]
+    b = [("r/a", "b.py", "c2", "python", "!!! ... ---")]
+    added = build_index(
+        spark, spark.createDataFrame(a, SCHEMA), str(tmp_path / "added"),
+        n_shards=1, code_aware=False, field_terms=False, block_size=4,
+    )
+    add_documents(
+        spark, added, spark.createDataFrame(b, SCHEMA), field_terms=False,
+        block_size=4,
+    )
+    whole = build_index(
+        spark, spark.createDataFrame(a + b, SCHEMA), str(tmp_path / "whole"),
+        n_shards=1, code_aware=False, field_terms=False, block_size=4,
+    )
+    for idx in (added, whole):
+        coll = idx.collstats.read(spark).collect()[0]
+        assert (coll["n_docs"], coll["avgdl"]) == (2, 1.5)
+        doclens = {
+            r["path"]: r["doclen"] for r in idx.docstats.read(spark).collect()
+        }
+        assert doclens == {"a.py": 3, "b.py": 0}
 
 
 def test_compaction_identity_no_deletes(spark, inc_index):

@@ -183,7 +183,9 @@ def test_as_of_is_one_version_number(spark, tmp_path):
 def test_cached_index_rebuilds_old_layout_tree(spark, tmp_path):
     """A cached engine tree written in the per-table snapshot layout
     carries a fingerprint without the layout tag: it must be rebuilt,
-    not adopted (it would fail with 'no finalized stats')."""
+    not adopted (it would fail with 'no finalized stats').  So must a
+    ``manifest-v1`` tree, whose termstats partials carry no term
+    strings."""
     import json
 
     import pandas as pd
@@ -215,6 +217,13 @@ def test_cached_index_rebuilds_old_layout_tree(spark, tmp_path):
     assert len(calls) == 1
     assert not (root / "postings" / "_snapshots").exists()
     assert _versions(idx.root)
+    assert _answer(spark, idx, "alpha")
+
+    assert INDEX_LAYOUT != "manifest-v1"
+    (root / "_corpus_meta.json").write_text(json.dumps({**fp, "layout": "manifest-v1"}))
+    idx = _cached_index(str(root), "_corpus_meta.json", fp, build)
+    assert len(calls) == 2
+    assert json.loads((root / "_corpus_meta.json").read_text()) == fp
     assert _answer(spark, idx, "alpha")
 
 

@@ -24,8 +24,8 @@ def test_stored_tables_match_declared_schemas(spark, micro_index):
     assert sorted(_shape(idx.collstats.read(spark).schema)) == sorted(
         _shape(schemas.COLLSTATS)
     )
-    assert sorted(_shape(idx.termdict.read(spark).schema)) == sorted(
-        _shape(schemas.TERMDICT)
+    assert sorted(_shape(idx.termstats_partial.read(spark).schema)) == sorted(
+        _shape(schemas.TERMSTATS_PARTIAL)
     )
     assert sorted(_shape(idx.checkpoints.read(spark).schema)) == sorted(
         _shape(schemas.CHECKPOINTS)
@@ -41,11 +41,11 @@ def test_stored_tables_match_declared_schemas(spark, micro_index):
 def test_lineage_rows_per_shard(spark, micro_index):
     ln = micro_index.lineage.read(spark)
     rows = ln.collect()
-    # one build shard x 4 output tables
+    # one build shard x 3 output tables
+    assert len(rows) == 3
     assert {r["output_table"] for r in rows} == {
         "postings",
         "docstats",
-        "termdict",
         "termstats_partial",
     }
     assert all(r["transform"] == "build_shard" for r in rows)
