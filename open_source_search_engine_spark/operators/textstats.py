@@ -108,8 +108,10 @@ def langid_multi_tokens(toks: Column, min_hits: int = 1) -> Column:
     replaced the first-cut per-gram length/replace counting, which
     rescanned the full text 70x; a per-language CASE chain before that
     inlined every score into every branch (~630 regexp subtrees, an
-    8.9 MiB task binary).  Callers that already tokenize (training_mix)
-    share the scan's extraction."""
+    8.9 MiB task binary).  ``langid_multi`` extracts the tokens from raw
+    text itself, so a caller that also tokenizes the row (training_mix,
+    whose ``lang_tokens`` [a-z]+ split differs from TOKEN_RE) scans the
+    text twice."""
     langs = sorted(LANG_PROFILES)
     scores = F.array(*[lang_score_tokens(toks, lg) for lg in langs])
     names = F.array(*[F.lit(lg) for lg in langs])

@@ -13,7 +13,7 @@ physical shape declaratively:
   HAVING n_slots == n_required                   = conjunctive AND
   orderBy(score desc, doc_id).limit(k)           = TopTree + Msg3a merge
                                                    (TakeOrderedAndProject)
-  broadcast join top-k vs docstats               = Msg20 title-rec enrich
+  driver-side docmeta rows for the top-k         = Msg20 title-rec enrich
 
 Scoring is BM25 (k1=1.2, b=0.75), idf = ln(1 + (N - df + .5)/(df + .5)),
 float64, tie-break (score desc, doc_id asc) — SURVEY §2.8 X17, §7.5.
@@ -24,11 +24,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.bm25 import K1, B, py_idf
 from ..operators.build import Index, docmeta_cached
+from ..operators.topk import _empty_result, _enrich
 from ..sources.tables import MEMO
 from .query import QueryPlan, parse_query
-
-from ..functions.bm25 import K1, B, py_idf
 
 
 def impact_col(tf: Column, doclen: Column, avgdl: Column) -> Column:
@@ -216,7 +216,7 @@ def search(
             seq,
             # member weight scales idf (synonym weights, X5): slot-max of
             # weighted contribs == the kernel's weighted slot scoring
-            float(w) * float(_py_idf(df_by_term[t][1], n_docs)),
+            float(w) * float(py_idf(df_by_term[t][1], n_docs)),
         )
         for (t, s, pid, seq, w) in present_members
     ]
@@ -418,30 +418,8 @@ def search(
             | ((F.col("score") == F.lit(a_s)) & (F.col("doc_id") > F.lit(a_d)))
         )
     topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if not enrich:
-        return topk
-    # J5 enrich via the driver-side title-rec cache (same Msg20 shape as
-    # the WAND path): the k merged rows are already on the driver after
-    # the one aggregation action; probing the per-snapshot docmeta LRU
-    # costs zero Spark jobs warm, and the pandas-built local result plans
-    # as LocalTableScan (job-free collect).
-    import pandas as pd
-
-    from ..operators.topk import _docmeta_rows
-
-    rows = topk.collect()
-    meta = _docmeta_rows(spark, index, [r["doc_id"] for r in rows])
-    out_rows = [
-        (r["doc_id"], r["score"], *meta[r["doc_id"]])
-        for r in rows
-        if r["doc_id"] in meta  # inner-join semantics preserved
-    ]
-    return spark.createDataFrame(
-        pd.DataFrame(
-            out_rows, columns=["doc_id", "score", "repo", "path", "lang"]
-        ),
-        "doc_id long, score double, repo string, path string, lang string",
-    )
+    # J5 enrich: the WAND paths' driver-side docmeta enrich
+    return _enrich(spark, index, topk) if enrich else topk
 
 
 def _proximity_rerank(
@@ -562,10 +540,6 @@ def cached_result(
     return spark.createDataFrame(pdf, schema)
 
 
-# single copy in functions/bm25.py; alias kept for existing importers
-_py_idf = py_idf
-
-
 def _stats_cached(
     spark: SparkSession, index: Index, terms: list[str]
 ) -> tuple[float, float, dict[str, tuple[int, int, int]]]:
@@ -638,13 +612,6 @@ def _stats_cached(
     }
 
 
-def _termstats_cached(
-    spark: SparkSession, index: Index, terms: list[str]
-) -> dict[str, tuple[int, int, int]]:
-    _n, _a, stats = _stats_cached(spark, index, terms)
-    return stats
-
-
 def _phrase_ok_docs(
     blocks: DataFrame,
     member_meta: dict[int, list[tuple[int, int]]],
@@ -712,9 +679,3 @@ def _phrase_ok_docs(
             )
 
     return grouped.mapInPandas(kernel, "doc_id long, phrase_id int")
-def _empty_result(spark: SparkSession, enrich: bool) -> DataFrame:
-    if enrich:
-        return spark.createDataFrame(
-            [], "doc_id long, score double, repo string, path string, lang string"
-        )
-    return spark.createDataFrame([], "doc_id long, score double")

@@ -113,8 +113,10 @@ def search_collections_batch(
 ) -> DataFrame:
     """N queries × C collections, C Spark jobs total — the resident-
     server shape across namespaces.  Each collection answers the WHOLE
-    batch in its one-job plan (``search_wand_batch``: one pruned union
-    scan, per-shard kernel re-run per query), then a per-query window
+    batch in its one-job plan (``search_wand_batch``, which shares
+    ``search_wand``'s planner: one pruned union scan, the kernel re-run
+    per query in each shard's task, a per-query top-k window, and with
+    ``enrich`` the driver-side docmeta rows).  A per-query window then
     merges the bounded C×k lists into global top-k per query.
 
     Output: (query, collection, doc_id, score[, enrich cols]), top-k

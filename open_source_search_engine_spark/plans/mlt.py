@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.bm25 import py_idf
 from ..functions.tokenize import _tokenize_one
 from ..operators.build import Index
 from .query import Group, QueryPlan, Term
@@ -43,7 +44,7 @@ def doc_top_terms(
     reproducible in a SQL oracle.  Terms absent from the index dictionary
     retrieve nothing and are skipped.
     """
-    from .exec import _py_idf, _stats_cached
+    from .exec import _stats_cached
 
     if code_aware is None:
         code_aware = bool(index.features().get("code_aware", True))
@@ -55,7 +56,7 @@ def doc_top_terms(
         tf[t] = tf.get(t, 0) + 1
     n_docs, _avgdl, df_by_term = _stats_cached(spark, index, sorted(tf))
     scored = [
-        (tf[t] * _py_idf(df_by_term[t][1], n_docs), t)
+        (tf[t] * py_idf(df_by_term[t][1], n_docs), t)
         for t in tf
         if t in df_by_term
     ]
@@ -107,7 +108,7 @@ def more_like_this(
 
     terms = doc_top_terms(spark, index, text, m_terms, code_aware=code_aware)
     if not terms:
-        from .exec import _empty_result
+        from ..operators.topk import _empty_result
 
         return _empty_result(spark, enrich)
     plan = QueryPlan(

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.build import Index
-from .exec import _termstats_cached
+from .exec import _stats_cached
 from .query import parse_query
 
 # snippet best-window candidates are bounded: one per distinct positive
@@ -63,7 +63,7 @@ def facets_for_query(
             groups.append([m.text for m in g.members])
     terms = sorted({t for gs in groups for t in gs})
     index = index.view()  # one manifest version for stats, postings, deletes
-    stats = _termstats_cached(spark, index, terms)
+    stats = _stats_cached(spark, index, terms)[2]
     live_groups: list[list[str]] = []
     for gs in groups:
         present = [t for t in gs if t in stats]
@@ -193,7 +193,10 @@ def snippets(
     task 7): each distinct positive query term anchors one candidate
     window at its first occurrence; candidates score by how many
     DISTINCT query terms the window contains; argmax wins, ties to the
-    earliest window start.  The whole selection is one array_max over
+    earliest window start.  Candidate windows are anchored ONLY at each
+    term's first occurrence, so a passage where several terms co-occur
+    away from every term's first hit is never a candidate (Summary.cpp
+    scores every sentence).  The whole selection is one array_max over
     (score, -start, window) structs — pure codegen, no UDF, bounded by
     the first ``_MAX_SNIPPET_TERMS`` terms."""
     plan = parse_query(query) if isinstance(query, str) else query

@@ -184,3 +184,49 @@ def test_batch_accepts_phrases_on_bigram_index(spark, idx_pair):
         ]
         assert sorted(got.get(q, []), key=lambda x: (-x[1], x[0])) == want, q
     assert '"no such phrase here"' not in got
+
+
+# one query per shape the shared WAND planner serves: a quoted phrase,
+# a negated adjacent pair, a field term, an OR-group and an absent term
+BATCH_SHAPES = [
+    '"id0xa34b id1xdcef"',
+    'return -"id0xa34b id1xdcef"',
+    "return lang:go",
+    "func OR def",
+    "zzznotinthecorpus",
+]
+
+
+@pytest.mark.parametrize("lang_boost", [None, ("go", 1.5)])
+@pytest.mark.parametrize("enrich", [False, True])
+def test_batch_equals_per_query_on_bigram_index(spark, idx_pair, enrich, lang_boost):
+    """search_wand_batch and per-query search_wand go through one planner
+    and one enrich: same rows, scores and (enriched) doc metadata, in the
+    same order, for every query shape — including a batch-wide lang
+    boost."""
+    from open_source_search_engine_spark.operators.topk import (
+        search_wand,
+        search_wand_batch,
+    )
+
+    _plain, bi = idx_pair
+    meta = ["repo", "path", "lang"] if enrich else []
+
+    def key(r):
+        return (r["doc_id"], round(r["score"], 9), *(r[c] for c in meta))
+
+    got = {}
+    for r in search_wand_batch(
+        spark, bi, BATCH_SHAPES, k=10, enrich=enrich, lang_boost=lang_boost
+    ).collect():
+        got.setdefault(r["query"], []).append(key(r))
+    for q in BATCH_SHAPES:
+        want = [
+            key(r)
+            for r in search_wand(
+                spark, bi, q, k=10, enrich=enrich, lang_boost=lang_boost
+            ).collect()
+        ]
+        assert got.get(q, []) == want, q
+    assert "zzznotinthecorpus" not in got
+    assert all(got.get(q) for q in BATCH_SHAPES[:4])  # non-vacuous

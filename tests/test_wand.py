@@ -119,6 +119,28 @@ def test_batch_enrich(spark, wand_index):
     assert {r["query"] for r in rows} == {"def", "binarysearchtree"}
 
 
+def test_warm_enriched_batch_job_budget(spark, wand_index):
+    """Enrich rides the driver-side docmeta rows, so a warm enriched
+    batch dispatches no more Spark jobs than the same batch without
+    enrich (a broadcast join to docstats cost extra jobs per call)."""
+    from open_source_search_engine_spark.operators.topk import search_wand_batch
+
+    qs = ["def", "def return", "fn OR func", "binarysearchtree"]
+    st = spark.sparkContext.statusTracker()
+
+    def warm_jobs(enrich):
+        for _ in range(2):  # warm: stats, docmeta rows, codegen
+            search_wand_batch(spark, wand_index, qs, k=5, enrich=enrich).collect()
+        before = set(st.getJobIdsForGroup(None))
+        rows = search_wand_batch(spark, wand_index, qs, k=5, enrich=enrich).collect()
+        assert rows
+        return len(set(st.getJobIdsForGroup(None)) - before)
+
+    plain = warm_jobs(False)
+    enriched = warm_jobs(True)
+    assert enriched <= plain, f"enriched batch ran {enriched} jobs, plain {plain}"
+
+
 def test_batch_phrase_fallback_on_bigramless(spark, wand_index):
     """wand_index has no pair termlists, so a batch containing a phrase
     DEGRADES to the per-query exhaustive union (r4: no more raise) —
