@@ -2,10 +2,11 @@
 
 Reference: termId = hash64Lower_utf8(word) (hash.h/hash.cpp g_hashtab);
 docId = 38-bit probable docId from url hash.  Internal consistency is the
-contract, not hash-for-hash equality, so the rebuild uses Spark's native
-``xxhash64`` (JVM-side, codegen'd) and keeps every hash derivation in one
-place.  Fielded terms compose prefix + token the way hash64h(prefixHash,
-wordHash) does: ``xxhash64("lang:py")`` (SURVEY §2.2 F4).
+contract, not hash-for-hash equality, so the rebuild keeps every hash
+derivation in one place: term ids are a blake2b hash of the term string
+(the tokenizer kernel and the query driver both call ``term_hash_py``),
+doc ids Spark's native ``xxhash64`` (JVM-side, codegen'd).  Fielded terms
+hash their whole string, prefix included: ``lang:py`` (SURVEY §2.2 F4).
 """
 
 from __future__ import annotations
@@ -44,17 +45,6 @@ def term_hash_udf(term: Column) -> Column:
     # would stringify inline hints against a locally-imported pandas
     _h.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(_h, LongType())(term)
-
-
-def term_id_col(term: Column) -> Column:
-    """JVM-side term id for column pipelines that never meet the stored
-    index (ad-hoc oracle queries etc.)."""
-    return F.xxhash64(term)
-
-
-def field_term(prefix: str, token: Column) -> Column:
-    """Fielded term string, e.g. lang:python, repo:org1/proj42."""
-    return F.concat(F.lit(prefix + ":"), token)
 
 
 def doc_id_col(repo: Column, path: Column, commit: Column) -> Column:

@@ -6,7 +6,7 @@ Spark-first shape: expansion is a driver-side rewrite of the QueryPlan —
 each positive single-term group grows weighted sibling members, and the
 existing OR-group slot machinery (plans/exec.py slot-max, topk.py kernel
 slots) executes it unchanged.  The table itself is tiny (checked-in dict
-by default, or any (term, synonym, weight) DataFrame/file) — the analog
+by default, or any {term: [(synonym, weight)]} dict) — the analog
 of the reference's memory-mapped synonyms file.
 
 Weights follow the reference's convention: the original term scores at
@@ -73,12 +73,3 @@ def expand_plan(
         out_groups.append(Group(members))
     return QueryPlan(groups=out_groups, negatives=plan.negatives, raw=plan.raw)
 
-
-def load_synonyms_df(df) -> dict[str, list[tuple[str, float]]]:
-    """(term, synonym, weight) DataFrame -> driver-side expansion table
-    (the table is query-vocabulary-sized; a broadcast dict is the right
-    shape — the reference memory-maps it on every host the same way)."""
-    out: dict[str, list[tuple[str, float]]] = {}
-    for r in df.collect():
-        out.setdefault(r["term"], []).append((r["synonym"], float(r["weight"])))
-    return out

@@ -1,23 +1,18 @@
 """Code-aware tokenizer (SURVEY.md §2.8 X2; reference: Words.cpp (set) —
 UTF-8 word/punct tokenization — rebuilt for a source-code corpus).
 
-Spark-first shape: one vectorized ``pandas_udf`` returning the token array;
-positions are recovered with ``posexplode`` (built-in) rather than inside
-Python.  camelCase / snake_case / dotted identifiers are split so that
-``getUserName`` indexes as [getusername, get, user, name] the way the
-reference indexes both phrase and word forms (Phrases.cpp analog X3 is the
-separate bigram path in ``bigrams_expr``).
+Spark-first shape: one ``mapInArrow`` kernel (``tokenize_to_postings``)
+tokenizes, hashes and aggregates to posting rows, so only primitives and
+pre-encoded positions cross the Arrow boundary.  camelCase / snake_case /
+dotted identifiers are split so that ``getUserName`` indexes as
+[getusername, get, user, name] the way the reference indexes both phrase
+and word forms; adjacent-pair bigram terms (Phrases.cpp analog X3) come
+from the same kernel under ``bigram_terms``.
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.column import Column
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 # identifier-ish runs: letters/digits/underscore
 _WORD_RE = re.compile(r"[A-Za-z0-9_]+")
@@ -49,118 +44,6 @@ def _tokenize_one(text: str, code_aware: bool) -> list[str]:
             if len(parts) > 1 or (parts and parts[0] != low):
                 out.extend(parts)
     return out
-
-
-@pandas_udf(ArrayType(StringType()))
-def tokenize_code(content: pd.Series) -> pd.Series:
-    """Arrow-vectorized code tokenizer: word tokens + identifier sub-tokens."""
-    return content.map(lambda t: _tokenize_one(t or "", True))
-
-
-@pandas_udf(ArrayType(StringType()))
-def tokenize_simple(content: pd.Series) -> pd.Series:
-    """Plain lowercase word tokenizer (no identifier splitting)."""
-    return content.map(lambda t: _tokenize_one(t or "", False))
-
-
-def tokens_col(colname: str) -> Column:
-    """JVM-side simple tokenizer: identical semantics to DuckDB's
-    ``regexp_extract_all(lower(x), '[a-z0-9_]+')`` — used on the oracle-checked
-    path so the whole pipeline stays inside whole-stage codegen (no Python).
-    """
-    return F.regexp_extract_all(F.lower(F.col(colname)), F.lit(SIMPLE_TOKEN_RE), F.lit(0))
-
-
-def tokenize_to_occurrences(
-    docs, code_aware: bool = True, field_terms: bool = True
-):
-    """documents(+doc_id) -> occurrence rows via ONE mapInArrow pass:
-    (term_id, doc_id, doclen, pos, term) where ``term`` (the string) is
-    non-null only on its first occurrence per partition — the term
-    dictionary falls out as ``filter(term is not null).distinct()`` while
-    the hot columns stay fixed-width primitives end to end.
-
-    term_id = blake2b64(token) computed in-kernel with a per-partition
-    memo (zipf head hits the memo almost always); the query driver hashes
-    its few terms the same way (functions.hashing.term_hash_py).
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    from .hashing import term_hash_py
-
-    def kernel(batches):
-        memo: dict[str, int] = {}
-
-        def hash_term(tok: str, firsts: list, out: list) -> None:
-            h = memo.get(tok)
-            if h is None:
-                h = term_hash_py(tok)
-                memo[tok] = h
-                firsts.append((len(out), tok))
-            out.append(h)
-
-        for batch in batches:
-            cols = {n: batch.column(i) for i, n in enumerate(batch.schema.names)}
-            contents = cols["content"].to_pylist()
-            doc_ids = cols["doc_id"].to_numpy(zero_copy_only=False)
-            langs = cols["lang"].to_pylist() if field_terms else None
-            repos = cols["repo"].to_pylist() if field_terms else None
-            paths = cols["path"].to_pylist() if field_terms else None
-            hashes: list[int] = []
-            firsts: list[tuple[int, str]] = []
-            out_doc: list[np.ndarray] = []
-            out_pos: list[np.ndarray] = []
-            out_dl: list[np.ndarray] = []
-            for i, content in enumerate(contents):
-                toks = _tokenize_one(content or "", code_aware)
-                doclen = len(toks)
-                start = len(hashes)
-                for t in toks:
-                    hash_term(t, firsts, hashes)
-                if field_terms:
-                    ft = {f"lang:{(langs[i] or '').lower()}", f"repo:{(repos[i] or '').lower()}"}
-                    for ptok in _WORD_RE.findall((paths[i] or "").lower()):
-                        ft.add(f"path:{ptok}")
-                    for t in sorted(ft):
-                        hash_term(t, firsts, hashes)
-                total = len(hashes) - start
-                out_doc.append(np.full(total, doc_ids[i], dtype=np.int64))
-                dl = np.full(total, doclen, dtype=np.int32)
-                out_dl.append(dl)
-                p = np.zeros(total, dtype=np.int32)
-                p[:doclen] = np.arange(doclen, dtype=np.int32)
-                out_pos.append(p)
-            n = len(hashes)
-            term_strs = pa.nulls(n, type=pa.string())
-            if firsts:
-                idxs = np.array([f[0] for f in firsts], dtype=np.int64)
-                vals = [f[1] for f in firsts]
-                # build sparse string column: null except first occurrences
-                arr = np.empty(n, dtype=object)
-                arr[idxs] = vals
-                term_strs = pa.array(arr, type=pa.string(), from_pandas=True)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.asarray(hashes, dtype=np.int64)),
-                    pa.array(
-                        np.concatenate(out_doc) if out_doc else np.empty(0, np.int64)
-                    ),
-                    pa.array(
-                        np.concatenate(out_dl) if out_dl else np.empty(0, np.int32)
-                    ),
-                    pa.array(
-                        np.concatenate(out_pos) if out_pos else np.empty(0, np.int32)
-                    ),
-                    term_strs,
-                ],
-                names=["term_id", "doc_id", "doclen", "pos", "term"],
-            )
-
-    cols = ["content", "doc_id"] + (["lang", "repo", "path"] if field_terms else [])
-    return docs.select(*cols).mapInArrow(
-        kernel, "term_id long, doc_id long, doclen int, pos int, term string"
-    )
 
 
 def tokenize_to_postings(
@@ -312,12 +195,3 @@ def tokenize_to_postings(
         "term_id long, doc_id long, doclen int, tf int, pos_enc binary, term string",
     )
 
-
-def bigrams_col(tokens: Column) -> Column:
-    """Adjacent-pair bigram terms (Phrases.cpp analog, X3): built-ins only —
-    zip the token array with itself shifted by one."""
-    return F.zip_with(
-        F.slice(tokens, 1, F.greatest(F.size(tokens) - 1, F.lit(0))),
-        F.slice(tokens, 2, F.greatest(F.size(tokens) - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )

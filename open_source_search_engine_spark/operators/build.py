@@ -7,7 +7,8 @@ Shape:
               -> shard-local df per term -> salted repartition            # skew
               -> applyInPandas encode (sorted, delta+varint blocks)       # X10/T5
               -> repartitionByRange(term_id) sorted segment write         # S4
-    + docstats / termstats partials / collstats / checkpoints / metrics.
+    + docstats / one termstats run per batch / collstats / checkpoints /
+      metrics.
 
 Scale design (100 TB story):
 - The corpus is processed in ``n_shards`` doc-hash shards, each an
@@ -42,7 +43,7 @@ from pyspark.sql import functions as F
 from ..functions import codec
 from ..functions.hashing import content_sha256, doc_id_col, term_hash_py
 from ..functions.tokenize import tokenize_to_postings
-from ..sources.tables import MEMO, Index, IndexView
+from ..sources.tables import MEMO, PARQUET_CODEC, Index, IndexView
 
 BLOCK_SCHEMA = (
     "term_id long, salt int, n_salts int, block_id int, n_docs int, sum_tf long, "
@@ -440,8 +441,9 @@ def _write_postings(
     """Posting rows that carry their WAND ``shard`` -> one uncommitted
     postings segment: encoded shard-pure, range-sorted on term_id, with
     its bloom sidecar.  With ``terms`` (distinct ``term_id, term``) the
-    segment's termstats_partial rows are written too, each carrying its
-    term string.  Returns ``(postings_segment, partial_segment | None)``."""
+    segment's termstats run is written too: one ``(term_id, df, cf,
+    n_blocks, term)`` row per term, summed by readers with every other
+    run.  Returns ``(postings_segment, termstats_run | None)``."""
     # persist encoded blocks: repartitionByRange's boundary-sampling
     # pass would otherwise run the whole encode twice
     blocks = encode_blocks(
@@ -468,9 +470,9 @@ def _write_postings(
         label=label,
         bloom_col="term_id",
     )
-    tsp_seg = None
+    ts_seg = None
     if terms is not None:
-        partial = (
+        run = (
             blocks.groupBy("term_id")
             .agg(
                 F.sum("n_docs").alias("df"),
@@ -479,11 +481,10 @@ def _write_postings(
             )
             .join(terms, "term_id")
         )
-        tsp_seg = idx.termstats_partial.write_segment(
-            partial.coalesce(4), label=label
-        )
+        # one file per run: a cold stats lookup opens every run's files
+        ts_seg = idx.termstats.write_segment(run.coalesce(1), label=label)
     blocks.unpersist()
-    return po_seg, tsp_seg
+    return po_seg, ts_seg
 
 
 def _write_batch(
@@ -500,9 +501,10 @@ def _write_batch(
     **stage,
 ) -> IndexView:
     """One batch of documents (with ``derive_ids`` columns) -> its
-    docstats, postings and termstats_partial segments in WAND shard
-    ``shard``, staged on ``view`` with ``stage`` (operation, meta,
-    max_shard) and left for the caller to commit.  The one write path
+    docstats and postings segments in WAND shard ``shard`` and its
+    termstats run, staged on ``view`` with ``stage`` (operation, meta,
+    max_shard) and left for the caller to commit, so the batch's term
+    stats always land with its postings.  The one write path
     of a build shard and an add: Gigablast routes bulk and injected
     documents through the same hash/emit -> Msg4 -> RdbDump steps."""
     # the kernel emits posting primitives directly (term hashed
@@ -540,7 +542,7 @@ def _write_batch(
     )
     ds_seg = view.docstats.write_segment(docstats, label=label)
     terms = posts.filter(F.col("term").isNotNull()).select("term_id", "term").distinct()
-    po_seg, tsp_seg = _write_postings(
+    po_seg, ts_seg = _write_postings(
         view,
         posts.withColumn("shard", F.lit(shard)),
         label,
@@ -553,7 +555,7 @@ def _write_batch(
         {
             "docstats": ([ds_seg], []),
             "postings": ([po_seg], []),
-            "termstats_partial": ([tsp_seg], []),
+            "termstats": ([ts_seg], []),
         },
         **stage,
     )
@@ -579,7 +581,8 @@ def build_index(
 ) -> Index:
     """Full resumable build: ``n_shards`` doc-hash shards, each written
     by the batch writer every add shares (``_write_batch``) and
-    committed with its checkpoint, then one ``finalize_stats``.
+    committed with its checkpoint (its termstats run included), then
+    one ``finalize_stats`` for the collection stats.
 
     A resume (postings already in the root) must match the root's
     sharding, its tokenizer features (``code_aware``, ``bigram_terms``,
@@ -708,37 +711,20 @@ def build_index(
 
 
 def finalize_stats(spark: SparkSession, idx: Index, run_id: str) -> None:
-    """Global termstats/collstats (A2/A3/A5): the ``termstats_partial``
-    rows every batch writes, each carrying its term string, summed per
-    ``(term_id, term)``, and ``(n_docs, avgdl)`` over docstats.
-    Committed with whatever ``idx`` has staged: a writer that passes its
-    staged view publishes its segments and the stats over them as one
-    manifest version, so no reader ever pairs new postings with old
-    stats."""
+    """Collection stats (A3): ``(n_docs, avgdl)`` over docstats.  Term
+    stats need no pass here: every batch commits its own termstats run
+    and readers sum the runs.  Committed with whatever ``idx`` has
+    staged: a writer that passes its staged view publishes its segments
+    and the stats over them as one manifest version, so no reader ever
+    pairs new postings with old stats."""
     view = idx.view()
-    termstats = (
-        view.termstats_partial.read(spark)
-        .groupBy("term_id", "term")
-        .agg(
-            F.sum("df").alias("df"),
-            F.sum("cf").alias("cf"),
-            F.sum("n_blocks").alias("n_blocks"),
-        )
-        .select("term_id", "df", "cf", "n_blocks", "term")
-    )
-    # small stat tables coalesce to few files: cold-query latency is
-    # dominated by per-file open cost on this VM
-    ts_seg = view.termstats.write_segment(termstats.coalesce(4), label="final")
     coll = view.docstats.read(spark).agg(
         F.count("*").alias("n_docs"),
         F.avg("doclen").alias("avgdl"),
     )
     cs_seg = view.collstats.write_segment(coll.coalesce(1), label="final")
     view.stage(
-        {
-            "termstats": ([ts_seg], view.segments("termstats")),
-            "collstats": ([cs_seg], view.segments("collstats")),
-        }
+        {"collstats": ([cs_seg], view.segments("collstats"))}
     ).commit("replace", {"run_id": run_id})
 
 
@@ -753,6 +739,7 @@ def _write_tiny_segment(table, pdf: pd.DataFrame, label: str) -> str:
     pq.write_table(
         pa.Table.from_pandas(pdf),
         os.path.join(path, "part-0.parquet"),
+        compression=PARQUET_CODEC,
         # Spark cannot read TIMESTAMP(NANOS) parquet
         coerce_timestamps="us",
         allow_truncated_timestamps=True,
@@ -825,7 +812,7 @@ def _checkpoint(
                     "ts": now,
                     "output_snapshot": str(version),
                 }
-                for tname in ("postings", "docstats", "termstats_partial")
+                for tname in ("postings", "docstats", "termstats")
             ]
         )
         written[:] = [_write_tiny_segment(staged.lineage, ln, f"l{shard}")]

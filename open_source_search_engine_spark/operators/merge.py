@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import MEMO
+from ..sources.tables import MEMO, segment_bytes
 from .build import Index, _write_postings, _write_tiny_segment, finalize_stats
 
 # tombstone count above which compaction stops collecting the dead set to
@@ -237,8 +237,6 @@ def compact_deltas(
 
     Returns the number of segments merged (0 = no-op).
     """
-    import os
-
     from pyspark import StorageLevel
 
     view = idx.view()
@@ -246,17 +244,7 @@ def compact_deltas(
     if len(segments) <= keep_largest + 1:
         return 0
 
-    def seg_bytes(path: str) -> int:
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        return total
-
-    by_size = sorted(segments, key=seg_bytes, reverse=True)
+    by_size = sorted(segments, key=segment_bytes, reverse=True)
     merge_these = by_size[keep_largest:]
     blocks_df = spark.read.parquet(*merge_these)
     # fresh shard ids above every id the index ever used (the manifest
@@ -305,9 +293,10 @@ def compact_postings(
     ids per batch, so this also renormalizes shard proliferation back to
     the index's steady-state width).
 
-    Postings, docstats and stats are rebuilt and the consumed tombstones
-    cleared in ONE manifest commit — a crash before it leaves the old
-    index, after it the compacted one.
+    Postings, docstats and stats are rebuilt (the termstats runs fold
+    into one) and the consumed tombstones cleared in ONE manifest
+    commit — a crash before it leaves the old index, after it the
+    compacted one.
     """
     from pyspark import StorageLevel
 
@@ -355,15 +344,16 @@ def compact_postings(
     posts = posts.withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # each surviving term keeps the string its replaced partials carry
-    terms = view.termstats_partial.read(spark).select("term_id", "term").distinct()
-    seg, tsp_seg = _write_postings(
+    # fold: one termstats run from the compacted blocks replaces every
+    # run, each surviving term keeping the string the runs carry
+    terms = view.termstats.read(spark).select("term_id", "term")
+    seg, ts_seg = _write_postings(
         idx, posts, "compacted", salt_target, block_size, terms=terms
     )
     posts.unpersist()
     changes = {
         "postings": ([seg], prev_segs),
-        "termstats_partial": ([tsp_seg], view.segments("termstats_partial")),
+        "termstats": ([ts_seg], view.segments("termstats")),
     }
     if dead_df is not None:
         # docstats physically drops tombstoned docs, and the tombstone

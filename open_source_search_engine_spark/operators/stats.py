@@ -1,57 +1,43 @@
-"""Collection statistics as DataFrame aggregates (SURVEY.md §2.4 A1-A3).
+"""Index statistics pages: ``describe_index`` and ``fsck_index``
+(SURVEY.md §2.4 A1-A3).
 
 Reference: Posdb::getTermFreq *estimates* df from RdbMap page counts and
-Rdb::getNumTotalRecs counts docs; densityRank approximates length
-normalization.  The rebuild computes all of it exactly with native
-partial->final hash aggregation (the Msg3a merge topology, A5, for free).
+Rdb::getNumTotalRecs counts docs.  The rebuild stores them exactly:
+every written batch commits a termstats run (summed on read) and
+``operators.build.finalize_stats`` writes collstats.  These pages report
+on and cross-check what is stored.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import term_id_col
-from ..sources.tables import Manifest
-
-
-def termstats_from_occurrences(occ: DataFrame) -> DataFrame:
-    """df/cf per term from occurrence rows (term, doc_id, ...).  A2."""
-    return occ.groupBy("term").agg(
-        F.countDistinct("doc_id").alias("df"),
-        F.count("*").alias("cf"),
-    ).withColumn("term_id", term_id_col(F.col("term")))
-
-
-def collstats_from_docstats(docstats: DataFrame) -> DataFrame:
-    """N docs + average doc length.  A3."""
-    return docstats.agg(
-        F.count("*").alias("n_docs"),
-        F.avg("doclen").alias("avgdl"),
-    )
+from ..sources.tables import Manifest, segment_bytes
 
 
 def describe_index(spark, index) -> dict:
     """Operational snapshot of a stored index — the PageStats/Statsdb
-    'stats page' analog: per-table segment counts + the manifest version
-    that last changed each table (one driver-side manifest read), plus
-    postings shape from BLOCK METADATA only (one pruned-column scan; no
-    posting bytes are decoded).
+    'stats page' analog: per-table segment counts, on-disk bytes of the
+    live segments and the manifest version that last changed each table
+    (one driver-side manifest read and directory walk), plus postings
+    shape from BLOCK METADATA only (one pruned-column scan; no posting
+    bytes are decoded).
 
     Returns a plain dict so CLIs/tests/serving dashboards can render it:
-    {tables: {name: {segments, version, operation}},
+    {tables: {name: {segments, bytes, version, operation}},
      postings: {blocks, postings, bytes_encoded, n_shards, n_terms,
                 max_block_docs}, collstats: {n_docs, avgdl},
      features: {...}, tombstones: n}."""
     index = index.view()
     out: dict = {"tables": {}, "features": index.features()}
     for name in (
-        "postings", "docstats", "termstats", "termstats_partial",
-        "collstats", "deletes", "checkpoints",
+        "postings", "docstats", "termstats", "collstats", "deletes",
+        "checkpoints", "metrics", "lineage",
     ):
         snap = index.snapshot(name)
         out["tables"][name] = {
             "segments": len(snap.segments) if snap else 0,
+            "bytes": sum(map(segment_bytes, snap.segments)) if snap else 0,
             "version": snap.version if snap else -1,
             "operation": snap.operation if snap else None,
         }
@@ -134,8 +120,9 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
     - manifest integrity: every segment directory the head manifest
       references exists on disk;
     - cross-table invariants (driver-side, tiny reads): collstats.n_docs
-      == docstats row count; termstats.n_blocks sum == postings block
-      count; every posting term_id appears in the termstats dictionary;
+      == docstats row count; termstats.n_blocks sum (over every run) ==
+      postings block count; every posting term_id appears in some
+      termstats run;
     - ``deep=True`` additionally decodes every posting block and
       re-verifies the sorted-run invariant (doc_ids strictly increasing
       within a block) — O(index), the full RdbMap scan.

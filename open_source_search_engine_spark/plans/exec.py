@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 from ..functions.bm25 import K1, B, py_idf
 from ..operators.build import Index, docmeta_cached
 from ..operators.topk import _empty_result, _enrich
-from ..sources.tables import MEMO
+from ..schemas import COLLSTATS, TERMSTATS
+from ..sources.tables import MEMO, read_segments
 from .query import QueryPlan, parse_query
 
 
@@ -549,18 +550,22 @@ def _stats_cached(
     (term_id, df, cf) are tiny and immutable per stats segment list, so
     they are memoized on it; a cold query batches the collstats row and
     all missing terms into ONE Spark job (a unioned scan of the two tiny
-    stat tables).
+    stat tables, read with their declared schemas so no footer read
+    precedes it).  The termstats runs are scanned raw, filtered to the
+    missing terms, and summed here on the driver, so the job has no
+    shuffle stage.
 
     Raises if the termstats/collstats snapshots are absent: querying an
-    index before ``finalize_stats`` has run is a caller error, not an
-    empty result (a missing snapshot would otherwise negative-cache every
-    term and silently return nothing)."""
+    index before its first batch commits collection stats is a caller
+    error, not an empty result (a missing snapshot would otherwise
+    negative-cache every term and silently return nothing)."""
     view = index.view()
     if not view.segments("collstats") or not view.segments("termstats"):
         raise RuntimeError(
             f"index at {index.root} has no finalized stats snapshot — "
-            "run operators.build.finalize_stats (build_index and "
-            "add_documents with refresh_stats=True do this) before querying"
+            "run operators.build.finalize_stats for the collection stats "
+            "(build_index and add_documents with refresh_stats=True do "
+            "this) before querying"
         )
     key = ("stats", view.key("termstats", "collstats"))
     entry = MEMO.get(key)
@@ -571,19 +576,18 @@ def _stats_cached(
     if missing or entry["coll"] is None:
         parts = []
         if missing:
-            ts = view.termstats.read(spark)
-            cf_col = F.col("cf") if "cf" in ts.columns else F.lit(0)
+            ts = read_segments(spark, view.segments("termstats"), TERMSTATS)
             parts.append(
                 ts.filter(F.col("term").isin(missing)).select(
                     F.lit("t").alias("kind"),
                     "term",
                     F.col("term_id").cast("long").alias("v1"),
                     F.col("df").cast("double").alias("v2"),
-                    cf_col.cast("double").alias("v3"),
+                    F.col("cf").cast("double").alias("v3"),
                 )
             )
         if entry["coll"] is None:
-            cs = view.collstats.read(spark)
+            cs = read_segments(spark, view.segments("collstats"), COLLSTATS)
             parts.append(
                 cs.select(
                     F.lit("c").alias("kind"),
@@ -596,6 +600,7 @@ def _stats_cached(
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
+        found: dict[str, tuple[int, int, int]] = {}
         for r in df.collect():
             if r["kind"] == "c":
                 # an empty-but-finalized index stores n_docs=0 with a
@@ -603,7 +608,12 @@ def _stats_cached(
                 # a float(None) TypeError
                 entry["coll"] = (float(r["v2"] or 0.0), float(r["v3"] or 0.0))
             else:
-                cache[r["term"]] = (int(r["v1"]), int(r["v2"]), int(r["v3"]))
+                # one row per run holding the term: df and cf add up
+                _tid, df0, cf0 = found.get(r["term"], (0, 0, 0))
+                found[r["term"]] = (
+                    int(r["v1"]), df0 + int(r["v2"]), cf0 + int(r["v3"])
+                )
+        cache.update(found)
         for t in missing:  # negative-cache absent terms
             cache.setdefault(t, (0, 0, 0))
     n_docs, avgdl = entry["coll"] or (0.0, 0.0)

@@ -107,20 +107,12 @@ POSTINGS_BLOCKS = StructType(
 # ---------------------------------------------------------------------------
 # Collection statistics (drive BM25; reference: Posdb::getTermFreq estimate
 # + Rdb::getNumTotalRecs — we compute them exactly as DataFrame aggregates,
-# SURVEY §2.4 A2/A3).  Every written batch adds termstats_partial rows,
-# each carrying its term string (strings leave the tokenizer only through
-# these rows); termstats sums them per (term_id, term).
+# SURVEY §2.4 A2/A3).  termstats is a list of additive runs: every
+# written batch commits one run of (term_id, df, cf, n_blocks, term) rows
+# for the terms it holds (strings leave the tokenizer only through these
+# rows), a read sums the runs per (term_id, term), and compact_postings
+# folds them into one run.  collstats is one (n_docs, avgdl) row.
 # ---------------------------------------------------------------------------
-TERMSTATS_PARTIAL = StructType(
-    [
-        StructField("term_id", LongType(), False),
-        StructField("df", LongType(), False),
-        StructField("cf", LongType(), False),
-        StructField("n_blocks", LongType(), False),
-        StructField("term", StringType(), False),
-    ]
-)
-
 TERMSTATS = StructType(
     [
         StructField("term_id", LongType(), False),

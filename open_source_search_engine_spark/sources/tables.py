@@ -12,6 +12,10 @@ Layout:
     <root>/_index/v<k>.json                    manifest k: every table's
                                                live segments
 
+Every segment is parquet written with one codec (``PARQUET_CODEC``).
+termstats holds one additive run per written batch, and its reads sum
+the runs per term.
+
 Commit protocol: a writer stages its segments, then publishes manifest
 k+1 in one step.  It writes a temp file and hard-links it to
 ``v<k+1>.json``; the link fails if that version exists.  The loser of a
@@ -39,11 +43,15 @@ from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # on-disk layout tag: caches of built indexes key on it, so a tree in an
 # older layout is rebuilt instead of adopted
-INDEX_LAYOUT = "manifest-v2"
+INDEX_LAYOUT = "manifest-v3"
 MANIFEST_DIR = "_index"
+# the one codec every parquet segment is written with (Spark and pyarrow
+# writers alike), at the codec's default level
+PARQUET_CODEC = "zstd"
 
 _EMPTY = {"tables": {}, "operation": None, "meta": {}, "max_shard": -1}
 
@@ -101,14 +109,17 @@ class Memo:
 MEMO = Memo()
 
 
-def read_segments(spark: SparkSession, segments) -> DataFrame:
+def read_segments(spark: SparkSession, segments, schema=None) -> DataFrame:
     """``spark.read.parquet`` over a segment list, memoized: analyzing a
     read re-lists the directories and re-reads footers, a driver-side job
-    every warm query would otherwise pay per table touch."""
-    key = ("frame", spark.sparkContext.applicationId, tuple(segments))
+    every warm query would otherwise pay per table touch.  A declared
+    ``schema`` skips the footer read, so even a cold read analyzes
+    without a job."""
+    key = ("frame", spark.sparkContext.applicationId, tuple(segments), schema)
     df = MEMO.get(key)
     if df is None:
-        df = MEMO.put(key, spark.read.parquet(*segments))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = MEMO.put(key, reader.parquet(*segments))
     return df
 
 
@@ -275,7 +286,9 @@ class SnapshotTable:
     ) -> str:
         """Write ``df`` as a new, not yet committed segment directory."""
         path = self.new_segment_path(label)
-        df.write.mode("errorifexists").parquet(path)
+        df.write.mode("errorifexists").option("compression", PARQUET_CODEC).parquet(
+            path
+        )
         if bloom_col is not None:
             # membership sidecar for read_pruned (functions/bloom.py —
             # the RdbMap file-pruning analog).  Ids are read back from
@@ -326,9 +339,22 @@ class SnapshotTable:
         return Manifest(self.root).history(self.name, upto)
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
-        """DataFrame over the live segments at the view (or ``version``)."""
+        """DataFrame over the live segments at the view (or ``version``).
+        termstats segments are additive runs, one per written batch: with
+        more than one, the read sums df, cf and n_blocks per (term_id,
+        term), the way Gigablast merges its sorted runs when it reads
+        them."""
         segs = self.view(version).segments(self.name)
-        return read_segments(spark, segs) if segs else None
+        if not segs:
+            return None
+        df = read_segments(spark, segs)
+        if self.name == "termstats" and len(segs) > 1:
+            df = (
+                df.groupBy("term_id", "term")
+                .agg(*[F.sum(c).alias(c) for c in ("df", "cf", "n_blocks")])
+                .select(*df.columns)
+            )
+        return df
 
     def pruned_segments(
         self, term_ids, version: int | None = None
@@ -354,6 +380,18 @@ class SnapshotTable:
         # cheapest scan with the table's schema: one segment, whose
         # pushed filter then matches no row
         return read_segments(spark, _prune(segs, term_ids) or segs[:1])
+
+
+def segment_bytes(path: str) -> int:
+    """On-disk bytes of one segment directory (data files and sidecars)."""
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            try:
+                total += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    return total
 
 
 def _prune(segments: list[str], term_ids) -> list[str]:
@@ -405,9 +443,9 @@ class Index:
 
     postings = property(lambda self: self.table("postings"))
     docstats = property(lambda self: self.table("docstats"))
-    # no writer fills termdict (partials carry the term strings); kept
-    # only because the benchmark's table_layers still reads it — drop
-    # with ROADMAP item 5
+    # no writer fills termdict or termstats_partial (termstats runs
+    # carry the term strings); kept only because the benchmark's
+    # table_layers still reads them — drop with ROADMAP item 5
     termdict = property(lambda self: self.table("termdict"))
     termstats_partial = property(lambda self: self.table("termstats_partial"))
     termstats = property(lambda self: self.table("termstats"))

@@ -9,9 +9,10 @@ adds give exactly-once-ish ingestion.
 Spark mapping:
 - ``add_documents``      one micro-batch through the build's batch writer:
                          tokenize -> encode -> an immutable delta segment
-                         + docstats + stats partials, and the refreshed
-                         stats, in one manifest commit.  Queries see
-                         base ∪ delta the moment it lands (R1/R2).
+                         + docstats + its termstats run, and the
+                         refreshed collstats, in one manifest commit.
+                         Queries see base ∪ delta the moment it lands
+                         (R1/R2).
 - ``update_documents``   delete-then-re-add (R4): old doc_ids tombstoned
                          (doc_id = hash(repo,path,commit) so the new
                          version never collides), new version appended.
@@ -58,8 +59,10 @@ def add_documents(
     """Append one delta segment for ``docs`` (R1: searchable on commit),
     written by the batch writer every build shard shares
     (``operators.build._write_batch``) under a fresh WAND shard id, and
-    committed with its stats refresh (``finalize_stats``) as one
-    manifest version.
+    committed with its termstats run and its collection-stats refresh
+    (``finalize_stats``) as one manifest version.  ``refresh_stats=False``
+    skips only the collstats refresh: the batch's termstats run always
+    commits with the batch.
 
     ``code_aware=None`` / ``bigram_terms=None`` / ``numeric_fields=None``
     inherit the index's feature markers (a delta tokenized differently —
@@ -76,10 +79,11 @@ def add_documents(
     )
     # a fresh shard id above every id the index ever used
     shard_id = view.max_shard + 1
-    # one commit for the whole batch: its segments and (refresh_stats)
-    # the stats over them land together, so a reader sees the index
-    # before the batch or after it, and a batch that dies before the
-    # commit leaves nothing visible — re-running it is a clean add
+    # one commit for the whole batch: its segments, its termstats run
+    # and (refresh_stats) the collstats over them land together, so a
+    # reader sees the index before the batch or after it, and a batch
+    # that dies before the commit leaves nothing visible — re-running it
+    # is a clean add
     staged = _write_batch(
         spark,
         view,

@@ -10,6 +10,7 @@ BM25 oracle."""
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.operators.build import Index, build_index
 from open_source_search_engine_spark.operators.merge import compact_deltas, delete_docs
@@ -185,7 +186,8 @@ def test_cached_index_rebuilds_old_layout_tree(spark, tmp_path):
     carries a fingerprint without the layout tag: it must be rebuilt,
     not adopted (it would fail with 'no finalized stats').  So must a
     ``manifest-v1`` tree, whose termstats partials carry no term
-    strings."""
+    strings, and a ``manifest-v2`` tree, whose term stats are stored
+    twice (partials and their fold)."""
     import json
 
     import pandas as pd
@@ -225,6 +227,78 @@ def test_cached_index_rebuilds_old_layout_tree(spark, tmp_path):
     assert len(calls) == 2
     assert json.loads((root / "_corpus_meta.json").read_text()) == fp
     assert _answer(spark, idx, "alpha")
+
+    # manifest-v2 (partials plus their fold) is an older layout too
+    assert INDEX_LAYOUT != "manifest-v2"
+    (root / "_corpus_meta.json").write_text(json.dumps({**fp, "layout": "manifest-v2"}))
+    idx = _cached_index(str(root), "_corpus_meta.json", fp, build)
+    assert len(calls) == 3
+    assert json.loads((root / "_corpus_meta.json").read_text()) == fp
+    assert _answer(spark, idx, "alpha")
+
+
+def test_build_writes_one_termstats_run_per_shard_in_zstd(spark, tmp_path):
+    """Term stats live in one table of additive runs, one per written
+    batch (no termstats_partial), and every parquet file under the root
+    (Spark-written segments and the driver-written checkpoint, metrics
+    and lineage rows alike) is zstd-compressed."""
+    import pyarrow.parquet as pq
+
+    from open_source_search_engine_spark.sources.tables import Manifest
+
+    root = str(tmp_path / "idx")
+    idx = _build(spark, root, n_shards=2)
+    assert not os.path.exists(os.path.join(root, "termstats_partial"))
+    head = Manifest(root).load(Manifest(root).head())
+    assert "termstats_partial" not in head["tables"]
+    assert len(head["tables"]["termstats"]) == 2
+    files = [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert {os.path.basename(os.path.dirname(os.path.dirname(f))) for f in files} >= {
+        "postings", "docstats", "termstats", "collstats", "checkpoints",
+        "metrics", "lineage",
+    }
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        codecs = {
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        }
+        assert codecs <= {"ZSTD"}, (f, codecs)
+    # the runs sum to the corpus df: "alpha" is in 3 of the 5 docs
+    ts = idx.termstats.read(spark).filter("term = 'alpha'").collect()
+    assert [(r["df"], r["cf"]) for r in ts] == [(3, 4)]
+
+
+def test_cold_stats_lookup_over_runs_is_one_job(spark, tmp_path):
+    """After two adds the index holds 4 termstats runs.  A cold stats
+    lookup scans them raw and sums on the driver: one Spark job, and
+    the same (term_id, df, cf) as the summed termstats read."""
+    from open_source_search_engine_spark.plans.exec import _stats_cached
+
+    idx = _build(spark, str(tmp_path / "idx"), n_shards=2)
+    add_documents(spark, idx, spark.createDataFrame(ADD1, SCHEMA))
+    add_documents(spark, idx, spark.createDataFrame(ADD2, SCHEMA))
+    assert len(idx.view().segments("termstats")) == 4
+    terms = ["alpha", "beta", "omega", "lambda", "nosuchterm"]
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    _n, _a, got = _stats_cached(spark, idx, terms)
+    jobs = set(st.getJobIdsForGroup(None)) - before
+    assert len(jobs) == 1, f"cold stats lookup ran {len(jobs)} jobs"
+    summed = {
+        r["term"]: (r["term_id"], r["df"], r["cf"])
+        for r in idx.termstats.read(spark).filter(
+            F.col("term").isin(terms)
+        ).collect()
+    }
+    assert got == summed
+    assert got["alpha"][1:] == (5, 7)  # 3 built docs + one per add
 
 
 def test_default_cores_are_the_host_usable_cores():

@@ -103,14 +103,13 @@ def test_as_of_missing_pin_reads_as_absent(spark, tmp_path):
         idx,
         spark.createDataFrame(DOCS[:2], SCHEMA),
         code_aware=False,
-        refresh_stats=False,  # NO stats snapshot yet
+        refresh_stats=False,  # NO collstats snapshot yet
     )
     from open_source_search_engine_spark.operators.timetravel import (
         index_versions,
     )
 
     pins = index_versions(idx)
-    assert as_of(idx, pins).termstats.latest() is None
     assert as_of(idx, pins).collstats.latest() is None
     # finalize stats AFTER the pin
     add_documents(

@@ -2,6 +2,8 @@
 formats must match what the build actually writes (names + types; the
 stored parquet is nullable-relaxed, so nullability is not compared)."""
 
+import os
+
 from open_source_search_engine_spark import schemas
 
 
@@ -24,9 +26,6 @@ def test_stored_tables_match_declared_schemas(spark, micro_index):
     assert sorted(_shape(idx.collstats.read(spark).schema)) == sorted(
         _shape(schemas.COLLSTATS)
     )
-    assert sorted(_shape(idx.termstats_partial.read(spark).schema)) == sorted(
-        _shape(schemas.TERMSTATS_PARTIAL)
-    )
     assert sorted(_shape(idx.checkpoints.read(spark).schema)) == sorted(
         _shape(schemas.CHECKPOINTS)
     )
@@ -46,7 +45,7 @@ def test_lineage_rows_per_shard(spark, micro_index):
     assert {r["output_table"] for r in rows} == {
         "postings",
         "docstats",
-        "termstats_partial",
+        "termstats",
     }
     assert all(r["transform"] == "build_shard" for r in rows)
     assert all(r["input_snapshot"].startswith("shard=") for r in rows)
@@ -59,6 +58,19 @@ def test_describe_index(spark, micro_index):
 
     d = describe_index(spark, micro_index)
     assert d["tables"]["postings"]["segments"] >= 1
+    # on-disk bytes of each table's live segments, from a directory walk
+    view = micro_index.view()
+    for name, t in d["tables"].items():
+        want = sum(
+            os.path.getsize(os.path.join(r, f))
+            for seg in view.segments(name)
+            for r, _, fs in os.walk(seg)
+            for f in fs
+        )
+        assert t["bytes"] == want, name
+    assert d["tables"]["postings"]["bytes"] > 0
+    assert d["tables"]["termstats"]["bytes"] > 0
+    assert d["tables"]["deletes"]["bytes"] == 0
     p = d["postings"]
     assert p["n_shards"] == 1 and p["n_terms"] > 0 and p["blocks"] > 0
     assert p["postings"] >= p["blocks"]
