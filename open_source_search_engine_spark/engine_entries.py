@@ -317,7 +317,6 @@ def engine_index_incremental(spark: SparkSession, sf_dir: str) -> Index:
             bigram_terms=True,  # second batch inherits the feature marker
             salt_target=50,
             block_size=64,
-            refresh_stats=False,
         )
         add_documents(
             spark,

@@ -539,14 +539,14 @@ GROUP BY term ORDER BY term
 
 
 def q_collstats(spark, sf_dir):
-    """A3 from the STORED collstats snapshot: N + avgdl."""
+    """A3 from the STORED collection totals in the index manifest: N +
+    avgdl."""
     from .engine_entries import engine_index
 
-    idx = engine_index(spark, sf_dir)
-    return idx.collstats.read(spark).select(
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.round(F.col("avgdl"), 4).alias("avgdl"),
-    )
+    n_docs, avgdl = engine_index(spark, sf_dir).view().coll_stats()
+    return spark.createDataFrame(
+        [(n_docs, avgdl)], "n_docs long, avgdl double"
+    ).select("n_docs", F.round(F.col("avgdl"), 4).alias("avgdl"))
 
 
 SQL_COLLSTATS = f"""

@@ -7,8 +7,8 @@ Shape:
               -> shard-local df per term -> salted repartition            # skew
               -> applyInPandas encode (sorted, delta+varint blocks)       # X10/T5
               -> repartitionByRange(term_id) sorted segment write         # S4
-    + docstats / one termstats run per batch / collstats / checkpoints /
-      metrics.
+    + docstats / one termstats run per batch / checkpoints / metrics, and
+      the batch's (n_docs, sum_doclen) added to the manifest's totals.
 
 Scale design (100 TB story):
 - The corpus is processed in ``n_shards`` doc-hash shards, each an
@@ -37,7 +37,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import codec
@@ -71,7 +71,7 @@ def docmeta_cached(spark: SparkSession, index: Index) -> DataFrame:
         if base is None:
             raise RuntimeError(
                 f"docstats snapshot absent under {index.root!r} — build the "
-                "index (build_index / finalize_stats) before querying"
+                "index (build_index / add_documents) before querying"
             )
         df = MEMO.put(key, base.select("doc_id", "repo", "path", "lang").cache())
     return df
@@ -487,6 +487,23 @@ def _write_postings(
     return po_seg, ts_seg
 
 
+def _write_docstats(
+    view: IndexView, docstats: DataFrame, label: str
+) -> tuple[str, tuple[int, int]]:
+    """Write one uncommitted docstats segment -> ``(segment, (n_docs,
+    sum_doclen))``.  The totals are observed on the write's own job
+    (``Dataset.observe``), so they cost no extra Spark job."""
+    obs = Observation()
+    seg = view.docstats.write_segment(
+        docstats.observe(
+            obs, F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")
+        ),
+        label=label,
+    )
+    got = obs.get
+    return seg, (int(got["n"]), int(got["s"] or 0))
+
+
 def _write_batch(
     spark: SparkSession,
     view: IndexView,
@@ -503,8 +520,9 @@ def _write_batch(
     """One batch of documents (with ``derive_ids`` columns) -> its
     docstats and postings segments in WAND shard ``shard`` and its
     termstats run, staged on ``view`` with ``stage`` (operation, meta,
-    max_shard) and left for the caller to commit, so the batch's term
-    stats always land with its postings.  The one write path
+    max_shard) and the batch's ``(n_docs, sum_doclen)`` delta, and left
+    for the caller to commit, so the batch's term and collection stats
+    always land with its postings.  The one write path
     of a build shard and an add: Gigablast routes bulk and injected
     documents through the same hash/emit -> Msg4 -> RdbDump steps."""
     # the kernel emits posting primitives directly (term hashed
@@ -540,7 +558,7 @@ def _write_batch(
         .join(doclens, "doc_id", "left")
         .withColumn("doclen", F.coalesce(F.col("doclen"), F.lit(0)).cast("int"))
     )
-    ds_seg = view.docstats.write_segment(docstats, label=label)
+    ds_seg, coll = _write_docstats(view, docstats, label)
     terms = posts.filter(F.col("term").isNotNull()).select("term_id", "term").distinct()
     po_seg, ts_seg = _write_postings(
         view,
@@ -557,6 +575,7 @@ def _write_batch(
             "postings": ([po_seg], []),
             "termstats": ([ts_seg], []),
         },
+        coll=coll,
         **stage,
     )
 
@@ -581,8 +600,8 @@ def build_index(
 ) -> Index:
     """Full resumable build: ``n_shards`` doc-hash shards, each written
     by the batch writer every add shares (``_write_batch``) and
-    committed with its checkpoint (its termstats run included), then
-    one ``finalize_stats`` for the collection stats.
+    committed with its checkpoint, its termstats run and its delta to
+    the collection totals.
 
     A resume (postings already in the root) must match the root's
     sharding, its tokenizer features (``code_aware``, ``bigram_terms``,
@@ -705,27 +724,29 @@ def build_index(
 
         with ThreadPoolExecutor(max_workers=shard_parallelism) as ex:
             list(ex.map(build_shard, todo))
-
-    finalize_stats(spark, idx, run_id)
     return idx
 
 
 def finalize_stats(spark: SparkSession, idx: Index, run_id: str) -> None:
-    """Collection stats (A3): ``(n_docs, avgdl)`` over docstats.  Term
-    stats need no pass here: every batch commits its own termstats run
-    and readers sum the runs.  Committed with whatever ``idx`` has
-    staged: a writer that passes its staged view publishes its segments
-    and the stats over them as one manifest version, so no reader ever
-    pairs new postings with old stats."""
+    """Recount the collection totals (A3) from docstats: one aggregate,
+    and a commit of the difference to the manifest's ``(n_docs,
+    sum_doclen)`` only when it is non-zero.  No write path needs it —
+    every batch commits its own delta — so it is the repair for the
+    mismatch ``operators.stats.fsck_index`` reports (a docstats segment
+    committed outside the batch writer, or a tree without totals)."""
     view = idx.view()
-    coll = view.docstats.read(spark).agg(
-        F.count("*").alias("n_docs"),
-        F.avg("doclen").alias("avgdl"),
-    )
-    cs_seg = view.collstats.write_segment(coll.coalesce(1), label="final")
-    view.stage(
-        {"collstats": ([cs_seg], view.segments("collstats"))}
-    ).commit("replace", {"run_id": run_id})
+    ds = view.docstats.read(spark)
+    recount = (0, 0)
+    if ds is not None:
+        row = ds.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")
+        ).collect()[0]
+        recount = (int(row["n"]), int(row["s"] or 0))
+    if view.coll != recount:
+        n, s = view.coll or (0, 0)
+        view.stage({}, coll=(recount[0] - n, recount[1] - s)).commit(
+            "recount", {"run_id": run_id}
+        )
 
 
 def _write_tiny_segment(table, pdf: pd.DataFrame, label: str) -> str:
@@ -820,44 +841,3 @@ def _checkpoint(
 
     return staged.commit(stage=lineage)
 
-
-def decode_blocks(blocks: DataFrame, with_positions: bool = False) -> DataFrame:
-    """Stored blocks -> (term_id, doc_id, tf, doclen[, positions]) rows via
-    an Arrow-batched mapInPandas decode (the Msg5 'list -> records' read)."""
-    cols = ["term_id", "n_docs", "doc_ids_enc", "tfs_enc", "doclens_enc"]
-    if with_positions:
-        cols.append("positions_enc")
-    schema = "term_id long, doc_id long, tf int, doclen int"
-    if with_positions:
-        schema += ", positions array<int>"
-
-    def decode(batches):
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                doc_ids, tfs, pos, bounds = codec.decode_postings_block(
-                    row.doc_ids_enc,
-                    row.tfs_enc,
-                    row.positions_enc if with_positions else b"",
-                    int(row.n_docs),
-                )
-                doclens = codec.decode_varint(row.doclens_enc, int(row.n_docs))
-                d = {
-                    "term_id": np.full(len(doc_ids), row.term_id, dtype=np.int64),
-                    "doc_id": doc_ids,
-                    "tf": tfs.astype(np.int32),
-                    "doclen": doclens.astype(np.int32),
-                }
-                if with_positions:
-                    ends = np.empty(len(doc_ids), dtype=np.int64)
-                    if len(doc_ids):
-                        ends[:-1] = bounds[1:]
-                        ends[-1] = len(pos)
-                    d["positions"] = [
-                        pos[s:e].astype(np.int32) for s, e in zip(bounds, ends)
-                    ]
-                outs.append(pd.DataFrame(d))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return blocks.select(*cols).mapInPandas(decode, schema)

@@ -23,8 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import MEMO, segment_bytes
-from .build import Index, _write_postings, _write_tiny_segment, finalize_stats
+from ..sources.tables import MEMO, Manifest, segment_bytes
+from .build import Index, _write_docstats, _write_postings, _write_tiny_segment
 
 # tombstone count above which compaction stops collecting the dead set to
 # the driver for a broadcast anti-join and instead anti-joins against the
@@ -227,8 +227,9 @@ def compact_deltas(
 
     Semantics: pure merge.  Tombstones are NOT consumed (they stay in
     the deletes table and both query paths keep honoring them);
-    docstats / termstats / collstats are untouched (no postings are
-    added or dropped, so df/cf/N/avgdl are unchanged by construction).
+    docstats, termstats and the collection totals are untouched (no
+    postings are added or dropped, so df/cf/N/avgdl are unchanged by
+    construction).
     The merged segment takes FRESH shard ids (max existing + 1 ...)
     disjoint from every kept segment's, preserving the per-(shard,term)
     salt-modulus invariant the WAND probe routing relies on; docs from
@@ -247,12 +248,12 @@ def compact_deltas(
     by_size = sorted(segments, key=segment_bytes, reverse=True)
     merge_these = by_size[keep_largest:]
     blocks_df = spark.read.parquet(*merge_these)
-    # fresh shard ids above every id the index ever used (the manifest
-    # carries the highest) — scanning every live segment for max(shard)
-    # would make the 'O(merged deltas)' minor merge pay an O(index)
-    # parquet scan just to pick an id
-    first_shard = view.max_shard + 1
     n_sub = max(int(blocks_df.select("shard").distinct().count()), 1)
+    # fresh, claimed shard ids above every id the index ever used (the
+    # manifest carries the highest) — scanning every live segment for
+    # max(shard) would make the 'O(merged deltas)' minor merge pay an
+    # O(index) parquet scan just to pick an id
+    first_shard = Manifest(idx.root).claim_shards(view.max_shard + 1, n_sub)
     # persist: the encode reads its input twice (heavy-term df, then
     # the salted shuffle), and the decode should run once
     posts = decode_to_postings(blocks_df).withColumn(
@@ -296,7 +297,9 @@ def compact_postings(
     Postings, docstats and stats are rebuilt (the termstats runs fold
     into one) and the consumed tombstones cleared in ONE manifest
     commit — a crash before it leaves the old index, after it the
-    compacted one.
+    compacted one.  When tombstones drop docs, the docstats rewrite
+    observes its own ``(n_docs, sum_doclen)`` and the commit adds the
+    difference to the view's totals; with none, the totals stay.
     """
     from pyspark import StorageLevel
 
@@ -355,14 +358,17 @@ def compact_postings(
         "postings": ([seg], prev_segs),
         "termstats": ([ts_seg], view.segments("termstats")),
     }
+    coll = None
     if dead_df is not None:
         # docstats physically drops tombstoned docs, and the tombstone
         # segments whose ids were annihilated are cleared
         live = view.docstats.read(spark).join(dead_df, "doc_id", "left_anti")
-        ds_seg = idx.docstats.write_segment(live, label="compacted")
+        ds_seg, (n, s) = _write_docstats(view, live, "compacted")
+        n0, s0 = view.coll or (0, 0)
+        coll = (n - n0, s - s0)
         changes["docstats"] = ([ds_seg], view.segments("docstats"))
         changes["deletes"] = ([], del_segs)
-    staged = view.stage(
+    view.stage(
         changes,
         operation="compact",
         meta={
@@ -375,5 +381,5 @@ def compact_postings(
         # delta shard id would break the per-(shard,term) salt-modulus
         # invariant the WAND probe routing relies on
         max_shard=int(n_shards) - 1,
-    )
-    finalize_stats(spark, staged, run_id)
+        coll=coll,
+    ).commit()

@@ -3,9 +3,10 @@
 
 Reference: Posdb::getTermFreq *estimates* df from RdbMap page counts and
 Rdb::getNumTotalRecs counts docs.  The rebuild stores them exactly:
-every written batch commits a termstats run (summed on read) and
-``operators.build.finalize_stats`` writes collstats.  These pages report
-on and cross-check what is stored.
+every written batch commits a termstats run (summed on read) and adds
+its ``(n_docs, sum_doclen)`` to the manifest's collection totals.  These
+pages report on and cross-check what is stored;
+``operators.build.finalize_stats`` repairs the totals from docstats.
 """
 
 from __future__ import annotations
@@ -19,9 +20,10 @@ def describe_index(spark, index) -> dict:
     """Operational snapshot of a stored index — the PageStats/Statsdb
     'stats page' analog: per-table segment counts, on-disk bytes of the
     live segments and the manifest version that last changed each table
-    (one driver-side manifest read and directory walk), plus postings
-    shape from BLOCK METADATA only (one pruned-column scan; no posting
-    bytes are decoded).
+    (one driver-side manifest read and directory walk), the collection
+    stats from the manifest's totals, plus postings shape from BLOCK
+    METADATA only (one pruned-column scan; no posting bytes are
+    decoded).
 
     Returns a plain dict so CLIs/tests/serving dashboards can render it:
     {tables: {name: {segments, bytes, version, operation}},
@@ -31,8 +33,8 @@ def describe_index(spark, index) -> dict:
     index = index.view()
     out: dict = {"tables": {}, "features": index.features()}
     for name in (
-        "postings", "docstats", "termstats", "collstats", "deletes",
-        "checkpoints", "metrics", "lineage",
+        "postings", "docstats", "termstats", "deletes", "checkpoints",
+        "metrics", "lineage",
     ):
         snap = index.snapshot(name)
         out["tables"][name] = {
@@ -89,17 +91,9 @@ def describe_index(spark, index) -> dict:
             if p["occurrences"]
             else 0.0
         )
-    cs = index.collstats.read(spark)
-    if cs is not None:
-        # a committed-but-empty segment (crash between write and
-        # finalize) must not crash the stats page
-        rows = cs.collect()
-        if rows and rows[0]["n_docs"] is not None:
-            r = rows[0]
-            out["collstats"] = {
-                "n_docs": int(r["n_docs"]),
-                "avgdl": round(float(r["avgdl"] or 0.0), 2),
-            }
+    coll = index.coll_stats()
+    if coll is not None:
+        out["collstats"] = {"n_docs": coll[0], "avgdl": round(coll[1], 2)}
     # distributed count, NOT deleted_doc_ids(): the stats page only needs
     # the number — collecting + sorting every tombstone id to the driver
     # (and warming the WAND dead-set memo as a side effect) is exactly the
@@ -119,8 +113,10 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
 
     - manifest integrity: every segment directory the head manifest
       references exists on disk;
-    - cross-table invariants (driver-side, tiny reads): collstats.n_docs
-      == docstats row count; termstats.n_blocks sum (over every run) ==
+    - cross-table invariants (driver-side, tiny reads): the manifest's
+      ``(n_docs, sum_doclen)`` == docstats' row count and doclen sum
+      (``operators.build.finalize_stats`` repairs a mismatch);
+      termstats.n_blocks sum (over every run) ==
       postings block count; every posting term_id appears in some
       termstats run;
     - ``deep=True`` additionally decodes every posting block and
@@ -148,9 +144,14 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
                 f"{name}: v{index.version} references {len(missing)} "
                 f"missing segment dir(s), e.g. {os.path.basename(missing[0])}"
             )
-    for name in ("postings", "docstats", "collstats", "termstats"):
+    for name in ("postings", "docstats", "termstats"):
         if name not in tables:
             issues.append(f"{name}: no snapshot (index incomplete?)")
+    if index.coll is None:
+        issues.append(
+            "collstats: the manifest carries no collection totals "
+            "(index incomplete, or written in an older layout?)"
+        )
     checked["tables"] = len(tables)
 
     # cross-table scans only over tables whose segments all exist — a
@@ -161,24 +162,20 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
 
     blocks = _read("postings")
     ds = _read("docstats")
-    cs = _read("collstats")
     ts = _read("termstats")
-    if ds is not None and cs is not None:
-        n_ds = ds.count()
-        cs_rows = cs.collect()
+    if ds is not None and index.coll is not None:
+        row = ds.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")
+        ).collect()[0]
+        n_ds, s_ds = int(row["n"]), int(row["s"] or 0)
         checked["docstats_rows"] = n_ds
-        if not cs_rows or cs_rows[0]["n_docs"] is None:
-            # the checker must report an empty collstats segment, not
-            # die on it ('never raises on findings')
+        n_docs, sum_doclen = index.coll
+        if (n_docs, sum_doclen) != (n_ds, s_ds):
             issues.append(
-                "collstats: segment exists but holds no stats row "
-                "(crash between write and finalize?)"
-            )
-        elif n_ds != int(cs_rows[0]["n_docs"]):
-            issues.append(
-                f"collstats.n_docs={int(cs_rows[0]['n_docs'])} != "
-                f"docstats rows={n_ds} "
-                "(stats not finalized after last mutation?)"
+                f"collstats: manifest n_docs={n_docs}, sum_doclen="
+                f"{sum_doclen} != docstats rows={n_ds}, doclen sum={s_ds} "
+                "(docstats changed outside the batch writer? "
+                "finalize_stats recounts)"
             )
     if blocks is not None and ts is not None:
         n_blocks = blocks.count()
@@ -187,7 +184,7 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
         # a tiered minor merge re-blocks the merged deltas WITHOUT
         # touching stats (df/cf are merge-invariant; n_blocks is a
         # physical count) — after one, the mismatch is expected, not an
-        # orphan signal, until the next finalize/compact
+        # orphan signal, until the next compact_postings
         minor_merged = any(
             rec["operation"] == "minor-merge"
             for rec in Manifest(index.root).records(index.version)

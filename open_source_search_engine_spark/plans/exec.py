@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..functions.bm25 import K1, B, py_idf
 from ..operators.build import Index, docmeta_cached
 from ..operators.topk import _empty_result, _enrich
-from ..schemas import COLLSTATS, TERMSTATS
+from ..schemas import TERMSTATS
 from ..sources.tables import MEMO, read_segments
 from .query import QueryPlan, parse_query
 
@@ -518,15 +518,16 @@ def cached_result(
 ) -> DataFrame:
     """Return a DataFrame for (tag, extra), serving repeated queries from
     collected rows (the reference's serp cache, Msg17).  The key is the
-    segment lists a result is derived from, so any commit that changes
-    them makes a new key and a stale result is never served; entries
-    hold k collected rows (tiny)."""
+    segment lists and collection totals a result is derived from, so any
+    commit that changes them makes a new key and a stale result is never
+    served; entries hold k collected rows (tiny)."""
     import pandas as pd
 
     view = index.view()
     key = (
         "result",
-        view.key("postings", "deletes", "termstats", "collstats", "docstats"),
+        view.key("postings", "deletes", "termstats", "docstats"),
+        view.coll,
         tag,
         extra,
     )
@@ -544,80 +545,50 @@ def cached_result(
 def _stats_cached(
     spark: SparkSession, index: Index, terms: list[str]
 ) -> tuple[float, float, dict[str, tuple[int, int, int]]]:
-    """(n_docs, avgdl, {term: (term_id, df, cf)}) — single job when cold.
+    """(n_docs, avgdl, {term: (term_id, df, cf)}) — one job when cold.
 
-    The Msg2 termlist-cache analog: collection stats and per-term
-    (term_id, df, cf) are tiny and immutable per stats segment list, so
-    they are memoized on it; a cold query batches the collstats row and
-    all missing terms into ONE Spark job (a unioned scan of the two tiny
-    stat tables, read with their declared schemas so no footer read
-    precedes it).  The termstats runs are scanned raw, filtered to the
-    missing terms, and summed here on the driver, so the job has no
+    The Msg2 termlist-cache analog: ``(n_docs, avgdl)`` come from the
+    view's manifest totals with no job, and per-term (term_id, df, cf)
+    are tiny and immutable per termstats segment list, so they are
+    memoized on it (and on the totals).  A cold query looks up all
+    missing terms in ONE Spark job: the termstats runs are scanned raw
+    with their declared schema (no footer read precedes it), filtered to
+    the missing terms, and summed here on the driver, so the job has no
     shuffle stage.
 
-    Raises if the termstats/collstats snapshots are absent: querying an
-    index before its first batch commits collection stats is a caller
+    Raises if the view has no termstats or no collection totals:
+    querying an index before its first batch commits stats is a caller
     error, not an empty result (a missing snapshot would otherwise
     negative-cache every term and silently return nothing)."""
     view = index.view()
-    if not view.segments("collstats") or not view.segments("termstats"):
+    coll = view.coll_stats()
+    if coll is None or not view.segments("termstats"):
         raise RuntimeError(
-            f"index at {index.root} has no finalized stats snapshot — "
-            "run operators.build.finalize_stats for the collection stats "
-            "(build_index and add_documents with refresh_stats=True do "
-            "this) before querying"
+            f"index at {index.root} has no finalized stats (no commit "
+            "carries termstats and collection totals) — build it "
+            "(build_index) or add a batch (add_documents) before querying"
         )
-    key = ("stats", view.key("termstats", "collstats"))
-    entry = MEMO.get(key)
-    if entry is None:
-        entry = MEMO.put(key, {"coll": None, "terms": {}})
-    cache = entry["terms"]
+    key = ("stats", view.key("termstats"), view.coll)
+    cache = MEMO.get(key)
+    if cache is None:
+        cache = MEMO.put(key, {})
     missing = [t for t in terms if t not in cache]
-    if missing or entry["coll"] is None:
-        parts = []
-        if missing:
-            ts = read_segments(spark, view.segments("termstats"), TERMSTATS)
-            parts.append(
-                ts.filter(F.col("term").isin(missing)).select(
-                    F.lit("t").alias("kind"),
-                    "term",
-                    F.col("term_id").cast("long").alias("v1"),
-                    F.col("df").cast("double").alias("v2"),
-                    F.col("cf").cast("double").alias("v3"),
-                )
-            )
-        if entry["coll"] is None:
-            cs = read_segments(spark, view.segments("collstats"), COLLSTATS)
-            parts.append(
-                cs.select(
-                    F.lit("c").alias("kind"),
-                    F.lit(None).cast("string").alias("term"),
-                    F.lit(0).cast("long").alias("v1"),
-                    F.col("n_docs").cast("double").alias("v2"),
-                    F.col("avgdl").cast("double").alias("v3"),
-                )
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+    if missing:
+        ts = read_segments(spark, view.segments("termstats"), TERMSTATS)
         found: dict[str, tuple[int, int, int]] = {}
-        for r in df.collect():
-            if r["kind"] == "c":
-                # an empty-but-finalized index stores n_docs=0 with a
-                # NULL avgdl (avg over no rows) — stats are (0, 0), not
-                # a float(None) TypeError
-                entry["coll"] = (float(r["v2"] or 0.0), float(r["v3"] or 0.0))
-            else:
-                # one row per run holding the term: df and cf add up
-                _tid, df0, cf0 = found.get(r["term"], (0, 0, 0))
-                found[r["term"]] = (
-                    int(r["v1"]), df0 + int(r["v2"]), cf0 + int(r["v3"])
-                )
+        for r in ts.filter(F.col("term").isin(missing)).select(
+            "term", "term_id", "df", "cf"
+        ).collect():
+            # one row per run holding the term: df and cf add up
+            _tid, df0, cf0 = found.get(r["term"], (0, 0, 0))
+            found[r["term"]] = (
+                int(r["term_id"]), df0 + int(r["df"]), cf0 + int(r["cf"])
+            )
         cache.update(found)
         for t in missing:  # negative-cache absent terms
             cache.setdefault(t, (0, 0, 0))
-    n_docs, avgdl = entry["coll"] or (0.0, 0.0)
-    return n_docs, avgdl, {
+    n_docs, avgdl = coll
+    return float(n_docs), avgdl, {
         t: cache[t] for t in terms if cache.get(t, (0, 0, 0))[1] > 0
     }
 

@@ -111,7 +111,10 @@ POSTINGS_BLOCKS = StructType(
 # written batch commits one run of (term_id, df, cf, n_blocks, term) rows
 # for the terms it holds (strings leave the tokenizer only through these
 # rows), a read sums the runs per (term_id, term), and compact_postings
-# folds them into one run.  collstats is one (n_docs, avgdl) row.
+# folds them into one run.  The collection stats are no table: the
+# manifest carries running (n_docs, sum_doclen) totals, each commit adding
+# its batch's delta (Rdb::getNumTotalRecs' counter), and avgdl =
+# sum_doclen / n_docs.
 # ---------------------------------------------------------------------------
 TERMSTATS = StructType(
     [
@@ -120,13 +123,6 @@ TERMSTATS = StructType(
         StructField("cf", LongType(), False),
         StructField("n_blocks", LongType(), False),
         StructField("term", StringType(), False),
-    ]
-)
-
-COLLSTATS = StructType(
-    [
-        StructField("n_docs", LongType(), False),
-        StructField("avgdl", DoubleType(), False),
     ]
 )
 

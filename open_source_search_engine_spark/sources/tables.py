@@ -11,10 +11,16 @@ Layout:
     <root>/<table>/<label>-<uuid>/...parquet   immutable segment data
     <root>/_index/v<k>.json                    manifest k: every table's
                                                live segments
+    <root>/_index/shard-<id>                   a WAND shard id claimed
+                                               by a delta writer
 
 Every segment is parquet written with one codec (``PARQUET_CODEC``).
 termstats holds one additive run per written batch, and its reads sum
-the runs per term.
+the runs per term.  The collection totals BM25 needs live in the
+manifest record itself, ``"coll": {"n_docs": N, "sum_doclen": S}``: a
+commit adds its signed delta to the head's totals (Gigablast's
+docs-indexed counter, Iceberg's additive ``total-records``), so no
+write rescans the index to refresh them.
 
 Commit protocol: a writer stages its segments, then publishes manifest
 k+1 in one step.  It writes a temp file and hard-links it to
@@ -47,7 +53,7 @@ from pyspark.sql import functions as F
 
 # on-disk layout tag: caches of built indexes key on it, so a tree in an
 # older layout is rebuilt instead of adopted
-INDEX_LAYOUT = "manifest-v3"
+INDEX_LAYOUT = "manifest-v4"
 MANIFEST_DIR = "_index"
 # the one codec every parquet segment is written with (Spark and pyarrow
 # writers alike), at the codec's default level
@@ -187,11 +193,15 @@ class Manifest:
         meta: dict | None = None,
         max_shard: int = -1,
         stage=None,
+        coll: tuple[int, int] | None = None,
     ) -> int:
         """Publish one manifest applying ``changes`` ({table: (add,
-        remove)}) to the head.  Optimistic: on losing a race to another
-        writer the change is re-applied to the new head (the way Iceberg
-        commits retry); removing a segment the new head no longer holds
+        remove)}) to the head, and adding ``coll``, a signed
+        ``(n_docs, sum_doclen)`` delta, to the head's collection totals
+        (None carries them over unchanged).  Optimistic: on losing a
+        race to another writer the change and the delta are re-applied
+        to the new head (the way Iceberg commits retry), so concurrent
+        adds commute; removing a segment the new head no longer holds
         is a real conflict and raises ValueError.  ``stage(version)``
         may add version-dependent changes per attempt.  Returns the
         published version."""
@@ -206,8 +216,13 @@ class Manifest:
             for name, (add, remove) in [*changes.items(), *extra.items()]:
                 before = base["tables"].get(name)
                 segs = tables.setdefault(name, [])
-                for r in remove:
-                    segs.remove(self.rel(r))
+                for r in map(self.rel, remove):
+                    if r not in segs:
+                        raise ValueError(
+                            f"{name}: segment {r} is gone from the head "
+                            f"(v{head}): a concurrent commit removed it"
+                        )
+                    segs.remove(r)
                 segs.extend(self.rel(a) for a in add)
                 if segs != before:
                     changed[name] = version
@@ -220,6 +235,9 @@ class Manifest:
                 "max_shard": max(int(base.get("max_shard", -1)), int(max_shard)),
                 "ts": time.time(),
             }
+            totals = _plus(_totals(base), coll)
+            if totals is not None:
+                rec["coll"] = {"n_docs": totals[0], "sum_doclen": totals[1]}
             tmp = os.path.join(self.dir, f".v{version}.{uuid.uuid4().hex[:8]}")
             with open(tmp, "w") as f:
                 json.dump(rec, f)
@@ -233,6 +251,24 @@ class Manifest:
                 os.unlink(tmp)
             return version
         raise RuntimeError(f"manifest commit contention on {self.root}")
+
+    def claim_shards(self, first: int, n: int = 1) -> int:
+        """Claim ``n`` consecutive WAND shard ids from ``first`` up that
+        no writer claimed before (one exclusive create of
+        ``shard-<id>`` each) and return the first.  Writers that start
+        from one view (concurrent adds) so never share a shard id: two
+        sorted runs in one shard would interleave in one sub-list."""
+        os.makedirs(self.dir, exist_ok=True)
+        s = first
+        while True:
+            for i in range(s, s + n):
+                try:
+                    open(os.path.join(self.dir, f"shard-{i}"), "x").close()
+                except FileExistsError:
+                    s = i + 1
+                    break
+            else:
+                return s
 
     def expire(self, keep_last: int = 1) -> dict:
         """Delete all but the newest ``keep_last`` manifest versions and
@@ -382,6 +418,20 @@ class SnapshotTable:
         return read_segments(spark, _prune(segs, term_ids) or segs[:1])
 
 
+def _totals(record: dict) -> tuple[int, int] | None:
+    c = record.get("coll")
+    return None if c is None else (int(c["n_docs"]), int(c["sum_doclen"]))
+
+
+def _plus(totals, delta):
+    """``totals`` plus a ``(n_docs, sum_doclen)`` delta; a None delta
+    leaves them as they are, and None totals count as zero."""
+    if delta is None:
+        return totals
+    n, s = totals or (0, 0)
+    return (n + int(delta[0]), s + int(delta[1]))
+
+
 def segment_bytes(path: str) -> int:
     """On-disk bytes of one segment directory (data files and sidecars)."""
     total = 0
@@ -449,6 +499,9 @@ class Index:
     termdict = property(lambda self: self.table("termdict"))
     termstats_partial = property(lambda self: self.table("termstats_partial"))
     termstats = property(lambda self: self.table("termstats"))
+    # no table holds the collection stats (they live in the manifest,
+    # ``IndexView.coll``); kept only because the benchmark's
+    # table_layers still reads its history — drop with ROADMAP item 5
     collstats = property(lambda self: self.table("collstats"))
     checkpoints = property(lambda self: self.table("checkpoints"))
     metrics = property(lambda self: self.table("metrics"))
@@ -468,13 +521,14 @@ class IndexView(Index):
         version: int | None,
         record: dict,
         staged: dict | None = None,
-        pending: tuple = (None, {}, -1),
+        pending: tuple = (None, {}, -1, None),
     ):
         super().__init__(root)
         self.version = version
         self.record = record
         self.staged = staged or {}
-        self._pending = pending  # (operation, meta, max_shard) of the stage
+        # (operation, meta, max_shard, coll delta) of the stage
+        self._pending = pending
 
     def __repr__(self) -> str:
         return f"IndexView(root={self.root!r}, version={self.version})"
@@ -495,6 +549,22 @@ class IndexView(Index):
     @property
     def max_shard(self) -> int:
         return max(int(self.record.get("max_shard", -1)), self._pending[2])
+
+    @property
+    def coll(self) -> tuple[int, int] | None:
+        """Collection totals ``(n_docs, sum_doclen)`` at this view, staged
+        delta included; None before the first commit that carries them
+        (an empty root, or a tree written in an older layout)."""
+        return _plus(_totals(self.record), self._pending[3])
+
+    def coll_stats(self) -> tuple[int, float] | None:
+        """BM25's ``(n_docs, avgdl)`` from the totals: avgdl is
+        ``sum_doclen / n_docs`` in double, exactly what Spark's ``avg``
+        over the int doclen column gives, and 0 for an empty index."""
+        if self.coll is None:
+            return None
+        n, total = self.coll
+        return n, (float(total) / n if n else 0.0)
 
     def segments(self, name: str) -> list[str]:
         m = Manifest(self.root)
@@ -527,10 +597,11 @@ class IndexView(Index):
         operation: str | None = None,
         meta: dict | None = None,
         max_shard: int = -1,
+        coll: tuple[int, int] | None = None,
     ) -> "IndexView":
-        """A view with ``changes`` ({table: (add, remove)}) layered on
-        top, uncommitted.  The first stage's operation and meta name the
-        eventual commit."""
+        """A view with ``changes`` ({table: (add, remove)}) and the
+        collection-totals delta ``coll`` layered on top, uncommitted.
+        The first stage's operation and meta name the eventual commit."""
         staged = {k: (list(a), list(r)) for k, (a, r) in self.staged.items()}
         for name, (add, remove) in changes.items():
             a, r = staged.setdefault(name, ([], []))
@@ -540,24 +611,27 @@ class IndexView(Index):
                 else:
                     r.append(s)
             a.extend(add)
-        op0, meta0, ms0 = self._pending
+        op0, meta0, ms0, coll0 = self._pending
         pending = (
             op0 or operation,
             {**(meta or {}), **meta0},
             max(ms0, max_shard),
+            _plus(coll0, coll),
         )
         return IndexView(self.root, self.version, self.record, staged, pending)
 
     def commit(
         self, operation: str = "append", meta: dict | None = None, stage=None
     ) -> int:
-        """Publish the staged changes as one manifest version, rebased
-        onto the head if another writer committed since this view."""
-        op, pmeta, max_shard = self._pending
+        """Publish the staged changes and totals delta as one manifest
+        version, rebased onto the head if another writer committed since
+        this view."""
+        op, pmeta, max_shard, coll = self._pending
         return Manifest(self.root).commit(
             self.staged,
             op or operation,
             {**(meta or {}), **pmeta},
             max_shard=max_shard,
             stage=stage,
+            coll=coll,
         )

@@ -9,8 +9,9 @@ adds give exactly-once-ish ingestion.
 Spark mapping:
 - ``add_documents``      one micro-batch through the build's batch writer:
                          tokenize -> encode -> an immutable delta segment
-                         + docstats + its termstats run, and the
-                         refreshed collstats, in one manifest commit.
+                         + docstats + its termstats run, and its delta
+                         to the manifest's collection totals, in one
+                         manifest commit; no O(index) stats refresh.
                          Queries see base ∪ delta the moment it lands
                          (R1/R2).
 - ``update_documents``   delete-then-re-add (R4): old doc_ids tombstoned
@@ -33,13 +34,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.build import (
-    Index,
-    _resolve_features,
-    _write_batch,
-    derive_ids,
-    finalize_stats,
-)
+from ..operators.build import Index, _resolve_features, _write_batch, derive_ids
 from ..sources.tables import Manifest
 
 
@@ -53,16 +48,15 @@ def add_documents(
     numeric_fields: tuple | None = None,
     salt_target: int = 50_000,
     block_size: int = 4096,
-    refresh_stats: bool = True,
     run_id: str | None = None,
 ) -> None:
     """Append one delta segment for ``docs`` (R1: searchable on commit),
     written by the batch writer every build shard shares
     (``operators.build._write_batch``) under a fresh WAND shard id, and
-    committed with its termstats run and its collection-stats refresh
-    (``finalize_stats``) as one manifest version.  ``refresh_stats=False``
-    skips only the collstats refresh: the batch's termstats run always
-    commits with the batch.
+    committed with its termstats run and its ``(n_docs, sum_doclen)``
+    delta to the manifest's collection totals as one manifest version.
+    The work is O(batch): nothing rescans the index, and two concurrent
+    adds commute (each delta is re-applied on a rebase).
 
     ``code_aware=None`` / ``bigram_terms=None`` / ``numeric_fields=None``
     inherit the index's feature markers (a delta tokenized differently —
@@ -77,14 +71,14 @@ def add_documents(
         bigram_terms=bigram_terms,
         numeric_fields=numeric_fields,
     )
-    # a fresh shard id above every id the index ever used
-    shard_id = view.max_shard + 1
+    # a fresh shard id above every id the index ever used, and claimed:
+    # a concurrent add from the same view takes the next one
+    shard_id = Manifest(idx.root).claim_shards(view.max_shard + 1)
     # one commit for the whole batch: its segments, its termstats run
-    # and (refresh_stats) the collstats over them land together, so a
-    # reader sees the index before the batch or after it, and a batch
-    # that dies before the commit leaves nothing visible — re-running it
-    # is a clean add
-    staged = _write_batch(
+    # and its totals delta land together, so a reader sees the index
+    # before the batch or after it, and a batch that dies before the
+    # commit leaves nothing visible — re-running it is a clean add
+    _write_batch(
         spark,
         view,
         derive_ids(docs),
@@ -97,11 +91,7 @@ def add_documents(
         operation="append",
         meta={"run_id": run_id},
         max_shard=shard_id,
-    )
-    if refresh_stats:
-        finalize_stats(spark, staged, run_id)
-    else:
-        staged.commit()
+    ).commit()
 
 
 def committed_run_ids(idx: Index) -> set[str]:

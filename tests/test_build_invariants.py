@@ -6,10 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.functions import codec
-from open_source_search_engine_spark.operators.build import (
-    build_index,
-    decode_blocks,
-)
+from open_source_search_engine_spark.operators.build import build_index
+from open_source_search_engine_spark.operators.merge import decode_to_postings
 from open_source_search_engine_spark.plans.exec import search
 from open_source_search_engine_spark.sources.corpus import synth_documents
 
@@ -20,7 +18,9 @@ def tiny_docs(spark):
 
 
 def _postings_rows_set(spark, idx):
-    rows = decode_blocks(idx.postings.read(spark)).collect()
+    rows = decode_to_postings(
+        idx.postings.read(spark), with_positions=False
+    ).collect()
     return sorted((r["term_id"], r["doc_id"], r["tf"], r["doclen"]) for r in rows)
 
 

@@ -133,8 +133,7 @@ def test_add_keeps_token_free_doc_in_docstats(spark, tmp_path):
         n_shards=1, code_aware=False, field_terms=False, block_size=4,
     )
     for idx in (added, whole):
-        coll = idx.collstats.read(spark).collect()[0]
-        assert (coll["n_docs"], coll["avgdl"]) == (2, 1.5)
+        assert idx.view().coll_stats() == (2, 1.5)
         doclens = {
             r["path"]: r["doclen"] for r in idx.docstats.read(spark).collect()
         }
@@ -144,17 +143,19 @@ def test_add_keeps_token_free_doc_in_docstats(spark, tmp_path):
 def test_compaction_identity_no_deletes(spark, inc_index):
     """compaction of a delta-less index preserves every posting (property
     (b): merge(union) == build(full))."""
-    from open_source_search_engine_spark.operators.build import decode_blocks
+    from open_source_search_engine_spark.operators.merge import decode_to_postings
 
-    before = sorted(
-        (r["term_id"], r["doc_id"], r["tf"])
-        for r in decode_blocks(inc_index.postings.read(spark)).collect()
-    )
+    def rows():
+        return sorted(
+            (r["term_id"], r["doc_id"], r["tf"])
+            for r in decode_to_postings(
+                inc_index.postings.read(spark), with_positions=False
+            ).collect()
+        )
+
+    before = rows()
     compact_postings(spark, inc_index, block_size=4)
-    after = sorted(
-        (r["term_id"], r["doc_id"], r["tf"])
-        for r in decode_blocks(inc_index.postings.read(spark)).collect()
-    )
+    after = rows()
     assert before == after
 
 

@@ -1,7 +1,8 @@
 """The index manifest and its snapshot view (sources/tables.py).
 
-One manifest version per commit: a build shard, a stats finalize, an
-add, a delete and a compaction each publish exactly one version, a
+One manifest version per commit: a build shard, an add, a delete and a
+compaction each publish exactly one version, carrying the collection
+totals, a
 commit interrupted after its version record is written never wedges
 later commits, and a reader never pairs an add's postings with the stats
 from before it.  Answers are checked against the benchmark's independent
@@ -15,8 +16,11 @@ from pyspark.sql import functions as F
 from open_source_search_engine_spark.operators.build import Index, build_index
 from open_source_search_engine_spark.operators.merge import compact_deltas, delete_docs
 from open_source_search_engine_spark.operators.topk import search_wand
-from open_source_search_engine_spark.sources.tables import INDEX_LAYOUT, MEMO
-from open_source_search_engine_spark.streaming import incremental
+from open_source_search_engine_spark.sources.tables import (
+    INDEX_LAYOUT,
+    MEMO,
+    IndexView,
+)
 from open_source_search_engine_spark.streaming.incremental import add_documents
 from perfbench.oracle import Oracle, check
 
@@ -66,13 +70,13 @@ def _doc_id(spark, idx, commit):
     ][0]
 
 
-def test_build_and_two_adds_make_five_versions(spark, tmp_path):
+def test_build_and_two_adds_make_four_versions(spark, tmp_path):
     root = str(tmp_path / "idx")
     idx = _build(spark, root, n_shards=2)
     add_documents(spark, idx, spark.createDataFrame(ADD1, SCHEMA))
     add_documents(spark, idx, spark.createDataFrame(ADD2, SCHEMA))
-    # two shard commits, one finalize, one commit per add
-    assert _versions(root) == [0, 1, 2, 3, 4]
+    # two shard commits and one commit per add: no stats finalize
+    assert _versions(root) == [0, 1, 2, 3]
     assert not [d for d, _, _ in os.walk(root) if os.path.basename(d) == "_snapshots"]
     assert idx.view().max_shard == 3  # shards 0-1 built, 2-3 added
 
@@ -124,18 +128,18 @@ def test_commit_interrupted_after_version_record_does_not_wedge(
 
 
 def test_reader_during_add_sees_the_pre_add_answer(spark, tmp_path, monkeypatch):
-    """A query running while add_documents refreshes stats reads one
-    committed state: the one before the add."""
+    """A query running while add_documents commits reads one committed
+    state: the one before the add."""
     idx = _build(spark, str(tmp_path / "idx"))
     before = _answer(spark, idx, "alpha")
     seen = []
-    real = incremental.finalize_stats
+    real = IndexView.commit
 
-    def spy(spark_, idx_, run_id):
+    def spy(self, *a, **kw):
         seen.append(_answer(spark, idx, "alpha"))
-        return real(spark_, idx_, run_id)
+        return real(self, *a, **kw)
 
-    monkeypatch.setattr(incremental, "finalize_stats", spy)
+    monkeypatch.setattr(IndexView, "commit", spy)
     add_documents(spark, idx, spark.createDataFrame(ADD1, SCHEMA))
     assert seen == [before]
     oracle = Oracle()
@@ -186,8 +190,10 @@ def test_cached_index_rebuilds_old_layout_tree(spark, tmp_path):
     carries a fingerprint without the layout tag: it must be rebuilt,
     not adopted (it would fail with 'no finalized stats').  So must a
     ``manifest-v1`` tree, whose termstats partials carry no term
-    strings, and a ``manifest-v2`` tree, whose term stats are stored
-    twice (partials and their fold)."""
+    strings, a ``manifest-v2`` tree, whose term stats are stored twice
+    (partials and their fold), and a ``manifest-v3`` tree, whose
+    collection stats are a ``collstats`` table the manifest carries no
+    totals for."""
     import json
 
     import pandas as pd
@@ -236,6 +242,15 @@ def test_cached_index_rebuilds_old_layout_tree(spark, tmp_path):
     assert json.loads((root / "_corpus_meta.json").read_text()) == fp
     assert _answer(spark, idx, "alpha")
 
+    # so is manifest-v3 (a collstats table, no totals in the manifest)
+    assert INDEX_LAYOUT != "manifest-v3"
+    (root / "_corpus_meta.json").write_text(json.dumps({**fp, "layout": "manifest-v3"}))
+    idx = _cached_index(str(root), "_corpus_meta.json", fp, build)
+    assert len(calls) == 4
+    assert json.loads((root / "_corpus_meta.json").read_text()) == fp
+    assert idx.view().coll is not None
+    assert _answer(spark, idx, "alpha")
+
 
 def test_build_writes_one_termstats_run_per_shard_in_zstd(spark, tmp_path):
     """Term stats live in one table of additive runs, one per written
@@ -259,8 +274,8 @@ def test_build_writes_one_termstats_run_per_shard_in_zstd(spark, tmp_path):
         if f.endswith(".parquet")
     ]
     assert {os.path.basename(os.path.dirname(os.path.dirname(f))) for f in files} >= {
-        "postings", "docstats", "termstats", "collstats", "checkpoints",
-        "metrics", "lineage",
+        "postings", "docstats", "termstats", "checkpoints", "metrics",
+        "lineage",
     }
     for f in files:
         meta = pq.ParquetFile(f).metadata
@@ -311,7 +326,7 @@ def test_default_cores_are_the_host_usable_cores():
 def test_concurrent_commits_all_land(tmp_path):
     """Optimistic retry-and-rebase under thread contention: every commit
     lands exactly once, in contiguous versions (a lost rebase would drop
-    a segment)."""
+    a segment or a totals delta), and every shard-id claim is distinct."""
     import sys
     import threading
 
@@ -319,10 +334,17 @@ def test_concurrent_commits_all_land(tmp_path):
 
     m = Manifest(str(tmp_path))
     n_threads, per_thread = 8, 10
+    claims = []
 
     def worker(i):
         for j in range(per_thread):
-            m.commit({"t": ([str(tmp_path / "t" / f"s{i}-{j}")], [])}, "append")
+            width = 1 + j % 2
+            first = m.claim_shards(0, width)
+            claims.extend(range(first, first + width))
+            m.commit(
+                {"t": ([str(tmp_path / "t" / f"s{i}-{j}")], [])}, "append",
+                coll=(1, j),
+            )
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -338,3 +360,119 @@ def test_concurrent_commits_all_land(tmp_path):
     n = n_threads * per_thread
     assert m.versions() == list(range(n))
     assert len(set(m.load(n - 1)["tables"]["t"])) == n
+    assert m.load(n - 1)["coll"] == {
+        "n_docs": n, "sum_doclen": n_threads * sum(range(per_thread))
+    }
+    # 1 or 2 ids a claim, none claimed twice
+    assert len(claims) == n_threads * per_thread * 3 // 2
+    assert len(set(claims)) == len(claims)
+
+
+def _recount(spark, idx):
+    """``finalize_stats``' recount: (rows, doclen sum) over docstats."""
+    row = idx.docstats.read(spark).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")
+    ).collect()[0]
+    return int(row["n"]), int(row["s"] or 0)
+
+
+def test_totals_live_in_the_manifest_through_add_delete_and_compaction(
+    spark, tmp_path
+):
+    """Every commit carries the collection totals: no collstats table
+    or directory, and after each step the totals equal a recount over
+    docstats.  A delete leaves them (tombstoned docs count until a
+    major compaction), a compaction without tombstones stages no delta,
+    and one that drops docs subtracts them."""
+    from open_source_search_engine_spark.operators.merge import compact_postings
+    from open_source_search_engine_spark.sources.tables import Manifest
+
+    root = str(tmp_path / "idx")
+    idx = _build(spark, root, n_shards=2)
+
+    def check_totals():
+        head = Manifest(root).load(Manifest(root).head())
+        assert "collstats" not in head["tables"]
+        assert not os.path.exists(os.path.join(root, "collstats"))
+        coll = head["coll"]
+        assert (coll["n_docs"], coll["sum_doclen"]) == _recount(spark, idx)
+        return idx.view().coll
+
+    assert check_totals()[0] == len(DOCS)
+    add_documents(spark, idx, spark.createDataFrame(ADD1, SCHEMA))
+    added = check_totals()
+    assert added[0] == len(DOCS) + 1
+    compact_postings(spark, idx, block_size=4)
+    assert check_totals() == added
+    c2 = idx.docstats.read(spark).filter(F.col("commit") == "c2").collect()[0]
+    delete_docs(spark, idx, [c2["doc_id"]])
+    assert idx.view().coll == added
+    compact_postings(spark, idx, block_size=4)
+    assert check_totals() == (added[0] - 1, added[1] - c2["doclen"])
+    # the major compaction dropped c2 from every stat
+    oracle = Oracle()
+    oracle.add([d for d in DOCS + ADD1 if d[2] != "c2"])
+    for q in QUERIES:
+        assert check(oracle.answer(q), _answer(spark, idx, q), 10) is None, q
+
+
+def test_concurrent_adds_commute(spark, tmp_path):
+    """Two add_documents on one index at once: both commit (the loser
+    of the manifest race re-applies its totals delta to the new head),
+    n_docs is the sum, and the totals equal a recount over docstats."""
+    import threading
+
+    idx = _build(spark, str(tmp_path / "idx"))
+    batches = [
+        [(f"r/t{i}", f"f{j}.py", f"t{i}-{j}", "python", "alpha omega " * (j + 1))
+         for j in range(n)]
+        for i, n in enumerate((3, 2))
+    ]
+    errors = []
+
+    def add(rows):
+        try:
+            add_documents(spark, idx, spark.createDataFrame(rows, SCHEMA))
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=add, args=(b,)) for b in batches]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert idx.view().coll[0] == len(DOCS) + 5
+    assert idx.view().coll == _recount(spark, idx)
+    assert idx.docstats.read(spark).count() == len(DOCS) + 5
+    # each batch got a WAND shard of its own (a shared one would mix
+    # two sorted runs in one sub-list), and answers match the oracle
+    shards = idx.postings.read(spark).select("shard").distinct().collect()
+    assert sorted(r["shard"] for r in shards) == [0, 1, 2]
+    oracle = Oracle()
+    oracle.add(DOCS + batches[0] + batches[1])
+    for q in ("alpha", "omega", "alpha omega", "beta OR omega"):
+        assert check(oracle.answer(q), _answer(spark, idx, q), 10) is None, q
+
+
+def test_removing_a_segment_another_commit_removed_names_the_conflict(tmp_path):
+    """Two writers replacing the same segment from one view: the second
+    commit is a real conflict, and its error names the table, the
+    segment and the cause."""
+    from open_source_search_engine_spark.sources.tables import Manifest
+
+    root = str(tmp_path)
+    Manifest(root).commit(
+        {"postings": ([os.path.join(root, "postings", "a")], [])}, "append"
+    )
+    view = Index(root).view()
+    seg = view.segments("postings")[0]
+    first = view.stage({"postings": ([os.path.join(root, "postings", "b")], [seg])})
+    second = view.stage({"postings": ([os.path.join(root, "postings", "c")], [seg])})
+    first.commit("compact")
+    with pytest.raises(
+        ValueError,
+        match=r"postings: segment postings/a is gone .*concurrent commit removed it",
+    ):
+        second.commit("compact")

@@ -64,10 +64,10 @@ def test_phrase_bigram_equals_positional(spark, idx_pair, q, must_match):
 
 def test_bigrams_do_not_change_scoring_or_stats(spark, idx_pair):
     plain, bi = idx_pair
-    cs_p = plain.collstats.read(spark).collect()[0]
-    cs_b = bi.collstats.read(spark).collect()[0]
-    assert cs_p["n_docs"] == cs_b["n_docs"]
-    assert cs_p["avgdl"] == pytest.approx(cs_b["avgdl"], rel=1e-12)
+    n_p, avgdl_p = plain.view().coll_stats()
+    n_b, avgdl_b = bi.view().coll_stats()
+    assert n_p == n_b
+    assert avgdl_p == pytest.approx(avgdl_b, rel=1e-12)
     assert _rows(search(spark, plain, "def return", k=50, enrich=False)) == _rows(
         search(spark, bi, "def return", k=50, enrich=False)
     )
@@ -90,7 +90,7 @@ def test_incremental_inherits_bigram_marker(spark, tmp_path):
     idx = Index(str(tmp_path / "incrbi"))
     add_documents(
         spark, idx, docs.filter("lang = 'python'"), bigram_terms=True,
-        salt_target=100, block_size=16, refresh_stats=False,
+        salt_target=100, block_size=16,
     )
     # None inherits the marker; explicit mismatch raises
     add_documents(

@@ -7,8 +7,9 @@
 2. ``_docmeta_rows`` refetches EVERY requested id after a size-bound
    cache reset (previously cached ids silently vanished from enriched
    top-k results).
-3. ``fsck_index`` / ``describe_index`` report an empty collstats segment
-   instead of dying on it.
+3. ``fsck_index`` reports a docstats segment committed outside the
+   batch writer (manifest totals that disagree with docstats) instead of
+   dying on it, and ``finalize_stats`` repairs the totals.
 4. The read memo keeps the head's and an AS-OF view's frames resident
    together (time-travel alternation no longer thrashes the cache).
 5. The streaming sessionizer absorbs late cross-batch events without
@@ -117,26 +118,49 @@ def test_docmeta_rows_survives_cache_reset(spark, micro_index, monkeypatch):
     MEMO.clear()
 
 
-def test_fsck_reports_empty_collstats(spark, tmp_path):
+def test_fsck_reports_and_finalize_repairs_a_totals_mismatch(spark, tmp_path):
+    from open_source_search_engine_spark.operators.build import finalize_stats
     from open_source_search_engine_spark.operators.stats import (
         describe_index,
         fsck_index,
     )
+    from open_source_search_engine_spark.plans.exec import _stats_cached
+    from open_source_search_engine_spark.sources.tables import MEMO
 
     docs = spark.createDataFrame(ANY_DOCS, SCHEMA)
     idx = build_index(
         spark, docs, str(tmp_path / "idx"), n_shards=1, code_aware=False
     )
     assert fsck_index(spark, idx)["ok"]
-    empty = spark.createDataFrame([], "n_docs long, avgdl double")
-    seg = idx.collstats.write_segment(empty, label="empty")
-    prev = idx.collstats.latest()
-    idx.collstats.commit(add=[seg], remove=list(prev.segments), operation="test")
+    n0 = len(ANY_DOCS)
+    assert _stats_cached(spark, idx, ["banana"])[0] == n0
+    # one more docstats row, committed outside the batch writer: the
+    # manifest's totals do not count it
+    stray = (
+        idx.docstats.read(spark)
+        .filter(F.col("path") == "adj.py")
+        .withColumn("doc_id", F.lit(12345).cast("long"))
+        .withColumn("doclen", F.lit(7))
+    )
+    seg = idx.docstats.write_segment(stray, label="stray")
+    idx.docstats.commit(add=[seg], operation="test")
     report = fsck_index(spark, idx)  # must report, not raise
     assert not report["ok"]
-    assert any("collstats" in i for i in report["issues"])
-    described = describe_index(spark, idx)  # must not raise either
-    assert "collstats" not in described
+    assert any("n_docs=4" in i and "rows=5" in i for i in report["issues"])
+    assert describe_index(spark, idx)["collstats"]["n_docs"] == n0
+
+    finalize_stats(spark, idx, "repair")
+    assert fsck_index(spark, idx)["ok"], fsck_index(spark, idx)["issues"]
+    doclens = [r["doclen"] for r in idx.docstats.read(spark).collect()]
+    assert idx.view().coll == (n0 + 1, sum(doclens))
+    # a cold lookup under the repaired totals: a new stats memo key
+    n_docs, avgdl, _ = _stats_cached(spark, idx, ["banana"])
+    assert (n_docs, avgdl) == (n0 + 1, sum(doclens) / (n0 + 1))
+    assert any(k[2] == idx.view().coll for k in MEMO.keys("stats"))
+    # a recount that finds nothing to change commits nothing
+    v = idx.view().version
+    finalize_stats(spark, idx, "noop")
+    assert idx.view().version == v
 
 
 def test_read_memo_keeps_head_and_pinned_versions(spark, tmp_path):

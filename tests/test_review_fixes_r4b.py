@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.operators.build import build_index
-from open_source_search_engine_spark.streaming import incremental
+from open_source_search_engine_spark.sources.tables import IndexView
 from open_source_search_engine_spark.streaming.incremental import add_documents
 
 SCHEMA = "repo string, path string, commit string, lang string, content string"
@@ -47,8 +47,7 @@ def _stats(spark, idx):
         (r["term"], r["df"], r["cf"], r["n_blocks"])
         for r in idx.termstats.read(spark).collect()
     )
-    cs = idx.collstats.read(spark).collect()[0]
-    return ts, (int(cs["n_docs"]), float(cs["avgdl"]))
+    return ts, idx.view().coll_stats()
 
 
 def test_add_batch_crash_before_commit_leaves_nothing_visible(
@@ -63,9 +62,9 @@ def test_add_batch_crash_before_commit_leaves_nothing_visible(
     def crash(*a, **kw):
         raise RuntimeError("injected: crash before the batch commit")
 
-    # finalize_stats is the batch's last step before its one commit: by
-    # then every segment of the batch has been written
-    monkeypatch.setattr(incremental, "finalize_stats", crash)
+    # the batch's one commit is its last step: by then every segment of
+    # the batch has been written
+    monkeypatch.setattr(IndexView, "commit", crash)
     with pytest.raises(RuntimeError, match="injected"):
         add_documents(
             spark, idx, spark.createDataFrame(NEW, SCHEMA), code_aware=False

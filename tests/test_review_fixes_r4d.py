@@ -96,31 +96,39 @@ def test_as_of_missing_pin_reads_as_absent(spark, tmp_path):
         add_documents,
     )
     from open_source_search_engine_spark.operators.build import Index
-
-    idx = Index(str(tmp_path / "idx"))
-    add_documents(
-        spark,
-        idx,
-        spark.createDataFrame(DOCS[:2], SCHEMA),
-        code_aware=False,
-        refresh_stats=False,  # NO collstats snapshot yet
-    )
+    from open_source_search_engine_spark.operators.merge import delete_docs
     from open_source_search_engine_spark.operators.timetravel import (
         index_versions,
     )
 
-    pins = index_versions(idx)
-    assert as_of(idx, pins).collstats.latest() is None
-    # finalize stats AFTER the pin
+    def answer(index):
+        rows = search(spark, index, "beta", k=5, enrich=False).collect()
+        return [(r["doc_id"], r["score"]) for r in rows]
+
+    idx = Index(str(tmp_path / "idx"))
+    # a first commit that carries no stats: a tombstone
+    delete_docs(spark, idx, [1])
+    pin0 = index_versions(idx)
+    assert as_of(idx, pin0).coll is None
+    add_documents(
+        spark, idx, spark.createDataFrame(DOCS[:2], SCHEMA), code_aware=False
+    )
+    pin1 = index_versions(idx)
+    at_pin1 = answer(idx)
+    # more stats AFTER the pins
     add_documents(
         spark, idx, spark.createDataFrame(DOCS[2:], SCHEMA), code_aware=False
     )
-    pinned = as_of(idx, pins)
-    # stats had no history at the pin: the as-of view must behave like
+    # stats had no history at pin0: the as-of view must behave like
     # the true pre-pin index (which would raise 'no finalized stats'),
     # not silently score with post-pin idf/avgdl
     with pytest.raises(RuntimeError, match="stats"):
-        search(spark, pinned, "beta", k=5, enrich=False).collect()
+        search(spark, as_of(idx, pin0), "beta", k=5, enrich=False).collect()
+    # between the adds, the pin scores with the pin's totals
+    assert as_of(idx, pin1).coll_stats()[0] == 2
+    assert idx.view().coll_stats()[0] == 3
+    assert answer(as_of(idx, pin1)) == at_pin1
+    assert answer(idx) != at_pin1
 
 
 def test_urlfilters_value_containing_operator(spark):

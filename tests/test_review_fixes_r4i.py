@@ -64,8 +64,8 @@ def test_zero_posting_doc_kept_in_docstats(spark, tmp_path):
     assert ds.count() == len(DOCS) + 1
     row = ds.filter(F.col("path") == "empty.py").collect()[0]
     assert row["doclen"] == 0 and row["content_sha256"]
-    # collstats counts the true corpus
-    assert idx.collstats.read(spark).collect()[0]["n_docs"] == len(DOCS) + 1
+    # the collection totals count the true corpus
+    assert idx.view().coll_stats()[0] == len(DOCS) + 1
 
 
 def test_duplicate_injected_posting_fails_loudly(spark, tmp_path):
