@@ -35,7 +35,9 @@ from pyspark.sql import functions as F
 from .operators.build import Index, build_index
 from .sources.tables import INDEX_LAYOUT
 from .operators.topk import search_wand
-from .plans.exec import _stats_cached, search
+from .plans.exec import search
+from .plans.query import terms_plan
+from .plans.reindex import match_docs
 
 TOKEN_RE = "[a-z0-9]+"
 
@@ -753,29 +755,6 @@ def q_engine_query_delete(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Index-backed aggregates / serp ops
 # ---------------------------------------------------------------------------
-def _matched_docs(spark, idx: Index, terms: list[str]) -> DataFrame:
-    """doc_ids matching ALL terms, straight from decoded postings."""
-    from .operators.merge import decode_to_postings
-
-    _n, _a, stats = _stats_cached(spark, idx, terms)
-    if len(stats) < len(terms):
-        return spark.createDataFrame([], "doc_id long")
-    ids = [stats[t][0] for t in terms]
-    blocks = idx.postings.read_pruned(spark, ids)
-    if blocks is None:
-        return spark.createDataFrame([], "doc_id long")
-    rows = decode_to_postings(
-        blocks.filter(F.col("term_id").isin(ids)),
-        with_positions=False,
-    )
-    return (
-        rows.groupBy("doc_id")
-        .agg(F.countDistinct("term_id").alias("nt"))
-        .filter(F.col("nt") == len(set(ids)))
-        .select("doc_id")
-    )
-
-
 def q_engine_compacted(spark, sf_dir):
     """R3/R4 under the oracle: delete + compact, then query — blocks
     decoded/re-merged/re-encoded, tombstones physically gone, stats
@@ -878,7 +857,7 @@ ORDER BY doc_id
 def q_engine_total_hits(spark, sf_dir):
     """A6 from the index: exact hit count of a conjunctive query."""
     idx = engine_index(spark, sf_dir)
-    return _matched_docs(spark, idx, ["spark", "join"]).agg(
+    return match_docs(spark, idx, terms_plan(["spark", "join"])).agg(
         F.count("*").alias("total_hits")
     )
 
@@ -901,7 +880,7 @@ def q_engine_gigabits(spark, sf_dir):
     counts (the reference computes gigabits from the top results'
     summaries, not the whole corpus)."""
     idx = engine_index(spark, sf_dir)
-    cand = _matched_docs(spark, idx, ["spark"]).orderBy("doc_id").limit(50)
+    cand = match_docs(spark, idx, terms_plan(["spark"])).orderBy("doc_id").limit(50)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").join(
         F.broadcast(cand), "doc_id"
     )

@@ -485,19 +485,14 @@ def q_tf(spark, sf_dir):
     pruned postings scan + Arrow block decode, not a corpus re-tokenize
     (the oracle recomputes from raw text independently)."""
     from .engine_entries import engine_index
-    from .operators.merge import decode_to_postings
+    from .operators.merge import term_postings
     from .plans.exec import _stats_cached
 
     idx = engine_index(spark, sf_dir)
     _n, _a, stats = _stats_cached(spark, idx, ["table"])
     if "table" not in stats:
         return spark.createDataFrame([], "doc_id long, tf long")
-    rows = decode_to_postings(
-        idx.postings.read_pruned(spark, [stats["table"][0]]).filter(
-            F.col("term_id") == stats["table"][0]
-        ),
-        with_positions=False,
-    )
+    rows = term_postings(spark, idx, [stats["table"][0]])
     return rows.select(
         "doc_id", F.col("tf").cast("long").alias("tf")
     ).orderBy("doc_id")
@@ -603,10 +598,12 @@ def q_gigabits(spark, sf_dir):
     """A7 index-backed: related terms over docs matching 'spark' — the
     match set comes from a pruned postings seek (no corpus-wide predicate
     scan); only the matched docs' text is then fetched and tokenized."""
-    from .engine_entries import _matched_docs, engine_index
+    from .engine_entries import engine_index
+    from .plans.query import terms_plan
+    from .plans.reindex import match_docs
 
     idx = engine_index(spark, sf_dir)
-    cand = _matched_docs(spark, idx, ["spark"])
+    cand = match_docs(spark, idx, terms_plan(["spark"]))
     docs = _t(spark, sf_dir, "documents").join(F.broadcast(cand), "doc_id")
     return (
         docs.select(F.explode(_toks()).alias("term"))

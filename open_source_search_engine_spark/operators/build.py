@@ -238,7 +238,6 @@ def encode_blocks(
     postings: DataFrame,
     salt_target: int = 50_000,
     block_size: int = 4096,
-    sharded: bool = False,
 ) -> DataFrame:
     """Salted repartition + sorted varint-block encode (S4/T5/X10).
 
@@ -254,14 +253,15 @@ def encode_blocks(
     single task (north-rule explicit skew handling).  The stats join rides
     the same hash key as the repartition.
 
-    ``sharded=True`` (the mode ``_write_postings`` uses for every
-    write): input additionally carries a ``shard`` column (the
-    doc-partition id) and blocks come out shard-pure with the shard in
-    the output schema — a compaction encodes every doc-partition's
-    sorted run in the SAME single shuffle (RdbBase keeps per-host file
-    sets; one merge rewrites them all).  Salting then uses shard-local
-    df, matching what a per-shard build would have produced.
+    When the input also carries a ``shard`` column (the doc-partition
+    id, as in every ``_write_postings`` write), blocks come out
+    shard-pure with the shard in the output schema — a compaction
+    encodes every doc-partition's sorted run in the SAME single shuffle
+    (RdbBase keeps per-host file sets; one merge rewrites them all).
+    Salting then uses shard-local df, matching what a per-shard build
+    would have produced.
     """
+    sharded = "shard" in postings.columns
     n_row = 7 if sharded else 6  # leading fixed-width row arrays per batch
     shard_key = ["shard"] if sharded else []
     # only the zipf head needs salting: aggregate df per term, keep just
@@ -447,7 +447,7 @@ def _write_postings(
     # persist encoded blocks: repartitionByRange's boundary-sampling
     # pass would otherwise run the whole encode twice
     blocks = encode_blocks(
-        posts, salt_target=salt_target, block_size=block_size, sharded=True
+        posts, salt_target=salt_target, block_size=block_size
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # range-partition + sort by term_id so query-time term lookups prune
     # to a handful of row groups (RdbMap sparse-index seek analog, S2).

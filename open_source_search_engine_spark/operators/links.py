@@ -391,23 +391,14 @@ def anchor_counts(spark: SparkSession, index, token: str) -> DataFrame:
     link-graph recompute: the build already inverted the graph into the
     index, which is the whole Linkdb point.  One row per target doc, so
     the result broadcasts into ranking joins the way inlink_counts does."""
-    from .merge import decode_to_postings
+    from .merge import drop_deleted, term_postings
 
     tid = int(term_hash_py(f"anchor:{token.lower()}"))
     index = index.view()  # one manifest version for postings and deletes
-    blocks = index.postings.read_pruned(spark, [tid])
-    if blocks is None:
-        raise RuntimeError(f"postings snapshot absent under {index.root!r}")
-    rows = decode_to_postings(
-        blocks.filter(F.col("term_id") == F.lit(tid)), with_positions=False
-    ).select("doc_id", F.col("tf").cast("long").alias("n_anchor"))
-    ddf = index.deletes.read(spark)
-    if ddf is not None:
-        # no broadcast hint (plans/exec.py convention): a PageReindex-
-        # scale delete batch must stay distributed; AQE broadcasts the
-        # tombstone side exactly when it is actually small
-        rows = rows.join(ddf.select("doc_id").distinct(), "doc_id", "left_anti")
-    return rows
+    rows = term_postings(spark, index, [tid]).select(
+        "doc_id", F.col("tf").cast("long").alias("n_anchor")
+    )
+    return drop_deleted(spark, index, rows)
 
 
 def search_anchor(

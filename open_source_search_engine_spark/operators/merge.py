@@ -123,6 +123,40 @@ def _sorted_dead(rows) -> np.ndarray:
     return np.unique(np.array([r["doc_id"] for r in rows], dtype=np.int64))
 
 
+def drop_deleted(
+    spark: SparkSession, view, df: DataFrame, col: str = "doc_id"
+) -> DataFrame:
+    """``df`` without its tombstoned docs (merge-on-read, U4): one
+    anti-join on ``col`` against the view's distinct ``deletes`` ids.
+    No broadcast hint: AQE broadcasts the tombstone side when it is
+    small, and a PageReindex-scale delete batch stays distributed."""
+    ddf = view.deletes.read(spark)
+    if ddf is None:
+        return df
+    dead = ddf.select(F.col("doc_id").alias(col)).distinct()
+    return df.join(dead, col, "left_anti")
+
+
+def term_postings(
+    spark: SparkSession, view, term_ids, positions: bool = False
+) -> DataFrame:
+    """The termlists of ``term_ids`` as posting rows (term_id, doc_id,
+    doclen, tf[, pos_enc]) — the one termlist read (Msg5::getList):
+    bloom-pruned segments, the ``term_id`` filter pushed to the parquet
+    row groups, then the Arrow decode.  Tombstones are not applied here
+    (``drop_deleted``)."""
+    ids = [int(t) for t in term_ids]
+    blocks = view.postings.read_pruned(spark, ids)
+    if blocks is None:
+        raise RuntimeError(
+            f"postings snapshot absent under {view.root!r} — build the "
+            "index before querying"
+        )
+    return decode_to_postings(
+        blocks.filter(F.col("term_id").isin(ids)), with_positions=positions
+    )
+
+
 def decode_to_postings(blocks: DataFrame, with_positions: bool = True) -> DataFrame:
     """Stored blocks -> posting rows (term_id, doc_id, doclen, tf
     [, pos_enc]) — the exact inverse of the encode kernel, so a

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenize import _tokenize_one
 from ..operators.build import Index
-from ..operators.merge import decode_to_postings
+from ..operators.merge import drop_deleted, term_postings
 
 
 @dataclass(frozen=True)
@@ -172,17 +172,7 @@ def search_boolean(
     ids = {t: stats[t][0] for t in leaves if t in stats}
     if not ids:
         return spark.createDataFrame([], "doc_id long")
-    blocks = index.postings.read_pruned(spark, list(ids.values()))
-    if blocks is None:
-        # informative, like the sibling plans — not a bare AttributeError
-        raise RuntimeError(
-            f"postings snapshot absent under {index.root!r} — build the "
-            "index before querying"
-        )
-    rows = decode_to_postings(
-        blocks.filter(F.col("term_id").isin(list(ids.values()))),
-        with_positions=False,
-    )
+    rows = term_postings(spark, index, list(ids.values()))
     per_doc = (
         rows.select("doc_id", "term_id")
         .distinct()
@@ -190,7 +180,4 @@ def search_boolean(
         .agg(F.collect_set("term_id").alias("ts"))
     )
     matched = per_doc.filter(_to_col(node, F.col("ts"), ids)).select("doc_id")
-    ddf = index.deletes.read(spark)
-    if ddf is not None:
-        matched = matched.join(ddf.select("doc_id").distinct(), "doc_id", "left_anti")
-    return matched.orderBy("doc_id")
+    return drop_deleted(spark, index, matched).orderBy("doc_id")

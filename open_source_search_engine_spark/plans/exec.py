@@ -7,13 +7,20 @@ TopTree per shard and k-way merges (Msg3a).  Spark expresses the same
 physical shape declaratively:
 
   pruned parquet scan of postings by term_id     = Msg5 termlist fetch
-  decode (Arrow mapInPandas)                     = RdbList -> records
+  decode (Arrow mapInArrow)                      = RdbList -> records
   broadcast join of the tiny query-term table    = Msg39Request fan-out
-  two-level hash agg on (doc_id, slot)           = intersectLists DAAT loop
-  HAVING n_slots == n_required                   = conjunctive AND
+  one pivoted hash agg on doc_id (max per slot)  = intersectLists DAAT loop
+  every slot column non-null                     = conjunctive AND
+  anti-join of the deletes table                 = Msg5 tombstone drop
   orderBy(score desc, doc_id).limit(k)           = TopTree + Msg3a merge
                                                    (TakeOrderedAndProject)
   driver-side docmeta rows for the top-k         = Msg20 title-rec enrich
+
+The scan and decode are ``operators.merge.term_postings`` and the
+tombstone anti-join ``operators.merge.drop_deleted``, the termlist read
+and tombstone rule every index plan shares.  ``_scored`` is the match
+plan up to the tombstone join; ``search`` ranks it and
+``plans.reindex.match_docs`` keeps only its doc ids.
 
 Scoring is BM25 (k1=1.2, b=0.75), idf = ln(1 + (N - df + .5)/(df + .5)),
 float64, tie-break (score desc, doc_id asc) — SURVEY §2.8 X17, §7.5.
@@ -26,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.bm25 import K1, B, py_idf
 from ..operators.build import Index, docmeta_cached
+from ..operators.merge import drop_deleted, term_postings
 from ..operators.topk import _empty_result, _enrich
 from ..schemas import TERMSTATS
 from ..sources.tables import MEMO, read_segments
@@ -95,10 +103,7 @@ def search(
         from ..functions.synonyms import expand_plan
 
         plan = expand_plan(plan, None if synonyms is True else synonyms)
-    if not plan.groups:
-        raise ValueError("query has no positive terms")
-    if match_mode not in ("all", "any"):
-        raise ValueError(f"match_mode must be 'all' or 'any', got {match_mode!r}")
+    _check_plan(plan, match_mode)
     if match_mode == "any" and proximity_bonus > 0:
         raise ValueError("proximity_bonus requires match_mode='all' "
                          "(minspan is defined over all slots present)")
@@ -130,6 +135,76 @@ def search(
         # both query paths (search_wand guards identically)
         return _empty_result(spark, enrich)
 
+    scored, term_slots = _scored(spark, index, plan, match_mode)
+    if scored is None:
+        return _empty_result(spark, enrich)
+
+    if lang_boost is not None:
+        # F8 soft language preference: a score multiplier, not a filter —
+        # doc_id-keyed join against docstats (both sides doc-partitioned)
+        blang, factor = lang_boost
+        langs = docmeta_cached(spark, index).select("doc_id", "lang")
+        scored = (
+            scored.join(langs, "doc_id", "left")
+            .withColumn(
+                "score",
+                # case-fold BOTH sides (review r4-s2): the index stores
+                # the lowercased lang:<x> term and the WAND path matches
+                # it case-insensitively, but docstats carries the RAW
+                # lang value — a raw comparison would make the two query
+                # paths boost different docs on a mixed-case corpus
+                F.when(
+                    F.lower(F.col("lang")) == blang.lower(),
+                    F.col("score") * F.lit(float(factor)),
+                ).otherwise(F.col("score")),
+            )
+            .drop("lang")
+        )
+
+    n_slots = len({s for _t, s in term_slots})
+    if proximity_bonus > 0 and n_slots > 1:
+        # two-phase W4: scoring above never touched positions; the
+        # re-rank builds its OWN position-bearing scan over the same
+        # termlists, consumed once (no persist to leak) and only when a
+        # multi-slot re-rank actually runs (under 'all' every slot is
+        # live, so the live slots are all the plan's slots)
+        slots = spark.createDataFrame(term_slots, "term_id long, slot int")
+        pos_src = term_postings(
+            spark, index, [t for t, _s in term_slots], positions=True
+        ).join(F.broadcast(slots.distinct()), "term_id")
+        scored = _proximity_rerank(scored, pos_src, n_slots, proximity_bonus, k)
+
+    if after is not None:
+        # keyset cursor: keep only docs ranking strictly after (score
+        # desc, doc_id asc) — same scored plan, one extra filter, O(k)
+        # result at any page depth (the scale-correct T3, vs offset(n)
+        # whose merge cost grows linearly with depth)
+        a_s, a_d = float(after[0]), int(after[1])
+        scored = scored.filter(
+            (F.col("score") < F.lit(a_s))
+            | ((F.col("score") == F.lit(a_s)) & (F.col("doc_id") > F.lit(a_d)))
+        )
+    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    # J5 enrich: the WAND paths' driver-side docmeta enrich
+    return _enrich(spark, index, topk) if enrich else topk
+
+
+def _check_plan(plan: QueryPlan, match_mode: str) -> None:
+    """The argument errors ``search`` and ``match_docs`` share."""
+    if not plan.groups:
+        raise ValueError("query has no positive terms")
+    if match_mode not in ("all", "any"):
+        raise ValueError(f"match_mode must be 'all' or 'any', got {match_mode!r}")
+
+
+def _scored(
+    spark: SparkSession, index: Index, plan: QueryPlan, match_mode: str
+) -> tuple[DataFrame | None, list[tuple[int, int]]]:
+    """Every live doc matching ``plan`` with its BM25 score: (doc_id,
+    score) after phrase adjacency, negation and tombstones, before any
+    boost, re-rank or top-k.  Also returns the (term_id, slot) rows of
+    the plan's terms present in the corpus.  ``(None, [])`` when the
+    plan provably matches nothing.  ``index`` is a view."""
     # phrase members OUTSIDE their own singleton group (inside a
     # multi-member OR, or negated) can only be honored via a stored
     # adjacent-pair termlist: exactly 2 tokens on a bigram index.
@@ -154,46 +229,40 @@ def search(
     # adjacency filter (J4) applied before aggregation.
     # (term, slot, phrase_id, seq, weight)
     member_rows: list[tuple[str, int, int, int, float]] = []
-    phrase_specs: list[tuple[int, int]] = []  # (phrase_id, n_members)
     phrase_toks: dict[int, tuple[str, ...]] = {}
     slot = 0
-    phrase_id = 0
     for g in plan.groups:
         if len(g.members) == 1 and g.members[0].phrase:
             toks = g.members[0].phrase
+            pid = len(phrase_toks)
             # '"a b"^W' scales every member token's idf (parity with the
             # WAND kernel's _build_slots phrase branch)
             pw = float(getattr(g.members[0], "weight", 1.0))
             for seq, t in enumerate(toks):
-                member_rows.append((t, slot + seq, phrase_id, seq, pw))
-            phrase_specs.append((phrase_id, len(toks)))
-            phrase_toks[phrase_id] = toks
+                member_rows.append((t, slot + seq, pid, seq, pw))
+            phrase_toks[pid] = toks
             slot += len(toks)
-            phrase_id += 1
         else:
             for m in g.members:
                 member_rows.append(
                     (m.text, slot, -1, 0, getattr(m, "weight", 1.0))
                 )
             slot += 1
-    n_slots = slot
     neg_terms = [t.text for t in plan.negatives]
 
-    # X3 fast path: an index built with bigram_terms carries one termlist
-    # per adjacent token pair, so phrase candidates come from intersecting
-    # pair termlists instead of positional-scanning every member termlist
-    use_bigrams = bool(phrase_specs) and index.features().get("bigrams", False)
-    phrase_bigrams: dict[int, list[str]] = {}
-    if use_bigrams:
-        for pid, toks in phrase_toks.items():
-            phrase_bigrams[pid] = [
-                f"{toks[j]} {toks[j + 1]}" for j in range(len(toks) - 1)
-            ]
-
+    # the terms whose adjacency verifies each phrase: its member tokens,
+    # or (X3 fast path) on an index built with bigram_terms the one
+    # termlist per adjacent token pair, far rarer than either token
+    chains = {
+        pid: [f"{a} {b}" for a, b in zip(toks, toks[1:])]
+        if has_bigrams
+        else list(toks)
+        for pid, toks in phrase_toks.items()
+    }
     all_terms = sorted(
         {r[0] for r in member_rows}
         | set(neg_terms)
-        | {b for bs in phrase_bigrams.values() for b in bs}
+        | {c for chain in chains.values() for c in chain}
     )
     n_docs, avgdl, df_by_term = _stats_cached(spark, index, all_terms)
 
@@ -205,39 +274,42 @@ def search(
     if match_mode == "any":
         # match-any: only an entirely-absent vocabulary empties the result
         if not live_slots:
-            return _empty_result(spark, enrich)
+            return None, []
     elif len(live_slots) < len(required_slots):
-        return _empty_result(spark, enrich)
+        return None, []
+
+    # adjacency metadata: chain term_id -> [(phrase_id, seq)].  A phrase
+    # whose chain has a term absent from the corpus can match no doc: it
+    # empties an AND query and is one unmatchable unit under 'any'.
+    adj_meta: dict[int, list[tuple[int, int]]] = {}
+    adj_specs: list[tuple[int, int]] = []
+    for pid, chain in chains.items():
+        if any(c not in df_by_term for c in chain):
+            if match_mode == "all":
+                return None, []
+            continue
+        for seq, c in enumerate(chain):
+            adj_meta.setdefault(df_by_term[c][0], []).append((pid, seq))
+        adj_specs.append((pid, len(chain)))
 
     qt_rows = [
         (
             df_by_term[t][0],
             s,
-            pid,
-            seq,
             # member weight scales idf (synonym weights, X5): slot-max of
             # weighted contribs == the kernel's weighted slot scoring
             float(w) * float(py_idf(df_by_term[t][1], n_docs)),
         )
-        for (t, s, pid, seq, w) in present_members
+        for (t, s, _pid, _seq, w) in present_members
     ]
     # phrase adjacency rides a dedicated Arrow pass over encoded bytes;
     # only the proximity re-rank consumes decoded position arrays (over
     # the tiny candidate set, in its own second scan — scoring NEVER
     # reads the positions column from parquet)
-    qterms = spark.createDataFrame(
-        qt_rows, "term_id long, slot int, phrase_id int, seq int, idf double"
+    qterms = spark.createDataFrame(qt_rows, "term_id long, slot int, idf double")
+    cand = term_postings(spark, index, [r[0] for r in qt_rows]).join(
+        F.broadcast(qterms), "term_id"
     )
-
-    pos_ids = [df_by_term[t][0] for (t, _s, _p, _q, _w) in present_members]
-    # bloom-sidecar segment pruning: skip segments containing no query term
-    blocks = index.postings.read_pruned(spark, pos_ids)
-    from ..operators.merge import decode_to_postings
-
-    cand = decode_to_postings(
-        blocks.filter(F.col("term_id").isin(pos_ids)), with_positions=False
-    ).join(F.broadcast(qterms), "term_id")
-
     cand = cand.withColumn(
         "contrib",
         F.col("idf") * impact_col(F.col("tf"), F.col("doclen"), F.lit(avgdl)),
@@ -252,175 +324,49 @@ def search(
         for s in required_slots
     ]
     g = cand.groupBy("doc_id").agg(*slot_cols)
-    if phrase_specs and match_mode == "any":
-        # disjunctive phrases: each quoted phrase is ONE matchable unit —
-        # its member-token slot contributions count only for docs where
-        # the positional adjacency holds, and an unmatchable phrase (pair
-        # or token absent from the corpus) contributes nothing instead of
-        # emptying the result (that empty is correct only under AND).
-        slot_pid = {s: pid for (_t, s, pid, _q, _w) in member_rows if pid >= 0}
-        if use_bigrams:
-            adj_meta = {}
-            adj_specs = []
-            for pid, bis in phrase_bigrams.items():
-                if any(b not in df_by_term for b in bis):
-                    continue  # unit can match no doc; skip, don't empty
-                for seq, b in enumerate(bis):
-                    adj_meta.setdefault(df_by_term[b][0], []).append((pid, seq))
-                adj_specs.append((pid, len(bis)))
+    if adj_specs:
+        # J4: positional adjacency per quoted phrase, checked by the
+        # Arrow kernel over the still-encoded per-doc position streams
+        # (no array materialization), pivoted to one flag per phrase
+        ok = _phrase_ok_docs(spark, index, adj_meta, adj_specs)
+        flags = [
+            F.max(F.when(F.col("phrase_id") == pid, F.lit(1))).alias(f"_p{pid}")
+            for pid, _n in adj_specs
+        ]
+        g = g.join(ok.groupBy("doc_id").agg(*flags), "doc_id", "left")
+    verified = {pid for pid, _n in adj_specs}
+    slot_pid = {s: pid for (_t, s, pid, _q, _w) in member_rows if pid >= 0}
+    present = None
+    total = None
+    for s in required_slots:
+        c_score = F.col(f"_s{s}")
+        c_present = c_score.isNotNull()
+        pid = slot_pid.get(s)
+        if pid is not None:
+            # a phrase member counts only where its phrase's adjacency
+            # holds: under 'any' each phrase is ONE matchable unit, and
+            # an unmatchable one contributes nothing
+            holds = (F.col(f"_p{pid}") == 1) if pid in verified else F.lit(False)
+            c_present = c_present & holds
+            c_score = F.when(holds, c_score)
+        if match_mode == "any":
+            c_score = F.coalesce(c_score, F.lit(0.0))
+        if present is None:
+            present, total = c_present, c_score
+        elif match_mode == "any":
+            present, total = present | c_present, total + c_score
         else:
-            adj_meta = {}
-            for (t, _s, pid, seq, _w) in present_members:
-                if pid >= 0:
-                    adj_meta.setdefault(df_by_term[t][0], []).append((pid, seq))
-            adj_specs = phrase_specs
-        pids = sorted({pid for pid, _n in phrase_specs})
-        if adj_specs:
-            ok = _phrase_ok_docs(blocks, adj_meta, adj_specs)
-            okp = ok.groupBy("doc_id").agg(
-                *[
-                    F.max(
-                        F.when(F.col("phrase_id") == pid, F.lit(1))
-                    ).alias(f"_p{pid}")
-                    for pid in pids
-                ]
-            )
-            g = g.join(okp, "doc_id", "left")
-        else:
-            for pid in pids:
-                g = g.withColumn(f"_p{pid}", F.lit(None).cast("int"))
-        present = None
-        total = None
-        for s in required_slots:
-            pid = slot_pid.get(s)
-            if pid is None:
-                c_present = F.col(f"_s{s}").isNotNull()
-                c_score = F.coalesce(F.col(f"_s{s}"), F.lit(0.0))
-            else:
-                verified = F.col(f"_p{pid}") == 1
-                c_present = verified
-                c_score = F.when(
-                    verified, F.coalesce(F.col(f"_s{s}"), F.lit(0.0))
-                ).otherwise(F.lit(0.0))
-            present = c_present if present is None else (present | c_present)
-            total = c_score if total is None else (total + c_score)
-        scored = g.filter(present).select("doc_id", total.alias("score"))
-    else:
-        present = None
-        for s in required_slots:
-            c = F.col(f"_s{s}").isNotNull()
-            if match_mode == "any":
-                present = c if present is None else (present | c)
-            else:
-                present = c if present is None else (present & c)
-        total = None
-        for s in required_slots:
-            c = F.col(f"_s{s}")
-            if match_mode == "any":
-                c = F.coalesce(c, F.lit(0.0))
-            total = c if total is None else (total + c)
-        scored = g.filter(present).select("doc_id", total.alias("score"))
+            present, total = present & c_present, total + c_score
+    scored = g.filter(present).select("doc_id", total.alias("score"))
 
-    if phrase_specs and match_mode == "all":
-        # J4: a doc additionally needs positional adjacency for every
-        # quoted phrase — checked by the Arrow kernel over the still-
-        # encoded per-doc position streams (no array materialization)
-        if use_bigrams:
-            # pair-termlist intersection: phrase t0..tn matches iff the
-            # chain bigram_j @ p+j has a common start p — same kernel,
-            # run over the (far rarer) pair termlists only.  A pair
-            # absent from the corpus makes its phrase (and the whole AND
-            # query) unsatisfiable.
-            adj_meta: dict[int, list[tuple[int, int]]] = {}
-            adj_specs: list[tuple[int, int]] = []
-            for pid, bis in phrase_bigrams.items():
-                if any(b not in df_by_term for b in bis):
-                    return _empty_result(spark, enrich)
-                for seq, b in enumerate(bis):
-                    adj_meta.setdefault(df_by_term[b][0], []).append((pid, seq))
-                adj_specs.append((pid, len(bis)))
-        else:
-            adj_meta = {}
-            for (t, _s, pid, seq, _w) in present_members:
-                if pid >= 0:
-                    adj_meta.setdefault(df_by_term[t][0], []).append((pid, seq))
-            adj_specs = phrase_specs
-        ok = _phrase_ok_docs(blocks, adj_meta, adj_specs)
-        ok_all = (
-            ok.groupBy("doc_id")
-            .agg(F.count_distinct("phrase_id").alias("_np"))
-            .filter(F.col("_np") == len(phrase_specs))
-            .select("doc_id")
-        )
-        scored = scored.join(ok_all, "doc_id", "left_semi")
+    neg_ids = [df_by_term[t][0] for t in neg_terms if t in df_by_term]
+    if neg_ids:
+        neg_docs = term_postings(spark, index, neg_ids).select("doc_id").distinct()
+        scored = scored.join(neg_docs, "doc_id", "left_anti")  # F3/J3
 
-    if neg_terms:
-        neg_ids = [df_by_term[t][0] for t in neg_terms if t in df_by_term]
-        if neg_ids:
-            neg_docs = decode_to_postings(
-                blocks.filter(F.col("term_id").isin(neg_ids)),
-                with_positions=False,
-            ).select("doc_id").distinct()
-            scored = scored.join(neg_docs, "doc_id", "left_anti")  # F3/J3
-
-    # merge-on-read tombstones (U4): exclude deleted docs until compaction.
-    # Pure DataFrame anti-join against the deletes table — nothing collects
-    # to the driver, so a large delete batch stays distributed (AQE picks
-    # broadcast when the table is small, shuffle when it isn't).
-    ddf = index.deletes.read(spark)
-    if ddf is not None:
-        scored = scored.join(
-            ddf.select("doc_id").distinct(), "doc_id", "left_anti"
-        )
-
-    if lang_boost is not None:
-        # F8 soft language preference: a score multiplier, not a filter —
-        # doc_id-keyed join against docstats (both sides doc-partitioned)
-        blang, factor = lang_boost
-        langs = docmeta_cached(spark, index).select("doc_id", "lang")
-        scored = (
-            scored.join(langs, "doc_id", "left")
-            .withColumn(
-                "score",
-                # case-fold BOTH sides (review r4-s2): the index stores
-                # the lowercased lang:<x> term and the WAND path matches
-                # it case-insensitively, but docstats carries the RAW
-                # lang value — a raw comparison would make the two query
-                # paths boost different docs on a mixed-case corpus
-                F.when(
-                    F.lower(F.col("lang")) == blang.lower(),
-                    F.col("score") * F.lit(float(factor)),
-                ).otherwise(F.col("score")),
-            )
-            .drop("lang")
-        )
-
-    if proximity_bonus > 0 and len(required_slots) > 1:
-        # two-phase W4: scoring above never touched positions; the
-        # re-rank builds its OWN position-bearing scan over the same
-        # pruned termlists, consumed once (no persist to leak) and only
-        # when a multi-slot re-rank actually runs
-        pos_src = decode_to_postings(
-            blocks.filter(F.col("term_id").isin(pos_ids)),
-            with_positions=True,
-        ).join(F.broadcast(qterms.select("term_id", "slot").distinct()), "term_id")
-        scored = _proximity_rerank(
-            scored, pos_src, len(required_slots), proximity_bonus, k
-        )
-
-    if after is not None:
-        # keyset cursor: keep only docs ranking strictly after (score
-        # desc, doc_id asc) — same scored plan, one extra filter, O(k)
-        # result at any page depth (the scale-correct T3, vs offset(n)
-        # whose merge cost grows linearly with depth)
-        a_s, a_d = float(after[0]), int(after[1])
-        scored = scored.filter(
-            (F.col("score") < F.lit(a_s))
-            | ((F.col("score") == F.lit(a_s)) & (F.col("doc_id") > F.lit(a_d)))
-        )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    # J5 enrich: the WAND paths' driver-side docmeta enrich
-    return _enrich(spark, index, topk) if enrich else topk
+    # merge-on-read tombstones (U4): exclude deleted docs until compaction
+    scored = drop_deleted(spark, index, scored)
+    return scored, [(r[0], r[1]) for r in qt_rows]
 
 
 def _proximity_rerank(
@@ -594,7 +540,8 @@ def _stats_cached(
 
 
 def _phrase_ok_docs(
-    blocks: DataFrame,
+    spark: SparkSession,
+    index: Index,
     member_meta: dict[int, list[tuple[int, int]]],
     phrase_specs: list[tuple[int, int]],
 ) -> DataFrame:
@@ -606,18 +553,16 @@ def _phrase_ok_docs(
     per-doc Arrow kernel — no array<int> columns ever materialize in the
     plan (the object-array decode path was the phrase hot spot and dies
     at 100-TB position volumes).  Positional decode runs ONLY over the
-    phrase members' blocks (pruned scan).
+    phrase members' termlists.
     """
     import numpy as np
     import pandas as pd
 
     from ..functions import codec
-    from ..operators.merge import decode_to_postings
 
-    ids = list(member_meta)
-    rows = decode_to_postings(
-        blocks.filter(F.col("term_id").isin(ids)), with_positions=True
-    ).select("doc_id", "term_id", "tf", "pos_enc")
+    rows = term_postings(spark, index, list(member_meta), positions=True).select(
+        "doc_id", "term_id", "tf", "pos_enc"
+    )
 
     specs = dict(phrase_specs)  # phrase_id -> n_members
 

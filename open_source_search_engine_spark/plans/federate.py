@@ -163,41 +163,12 @@ def search_collections_batch(
 
 
 def _conjunctive_hits(spark: SparkSession, idx: Index, terms: list[str]) -> int:
-    """Exact hit count of a plain AND query from decoded postings (A6) —
-    one pruned termlist scan, no corpus access."""
-    from ..operators.merge import decode_to_postings
-    from .exec import _stats_cached
+    """Exact live hit count of a plain AND query (A6): the size of its
+    match set, with the same tombstones the SERP honours."""
+    from .query import terms_plan
+    from .reindex import match_docs
 
-    # a repeated term is the same constraint twice — dedup before the
-    # len(stats) < len(terms) dictionary-miss check or ["a","a"] would
-    # read as a miss and report 0 hits
-    terms = list(dict.fromkeys(terms))
-    idx = idx.view()  # one manifest version for stats, postings, deletes
-    _n, _a, stats = _stats_cached(spark, idx, terms)
-    if len(stats) < len(terms):
-        return 0
-    ids = [stats[t][0] for t in terms]
-    blocks = idx.postings.read_pruned(spark, ids)
-    if blocks is None:
-        return 0
-    rows = decode_to_postings(
-        blocks.filter(F.col("term_id").isin(ids)), with_positions=False
-    )
-    matched = (
-        rows.groupBy("doc_id")
-        .agg(F.countDistinct("term_id").alias("nt"))
-        .filter(F.col("nt") == len(set(ids)))
-        .select("doc_id")
-    )
-    # merge-on-read tombstones: the count line must agree with the SERP's
-    # doc visibility between delete_docs and compaction (same anti-join
-    # every search path and serp's facet count apply)
-    ddf = idx.deletes.read(spark)
-    if ddf is not None:
-        matched = matched.join(
-            ddf.select("doc_id").distinct(), "doc_id", "left_anti"
-        )
-    return matched.count()
+    return match_docs(spark, idx, terms_plan(terms)).count() if terms else 0
 
 
 def collection_total_hits(

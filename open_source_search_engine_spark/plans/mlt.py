@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.bm25 import py_idf
 from ..functions.tokenize import _tokenize_one
 from ..operators.build import Index
-from .query import Group, QueryPlan, Term
+from .query import terms_plan
 
 
 def doc_top_terms(
@@ -111,12 +111,8 @@ def more_like_this(
         from ..operators.topk import _empty_result
 
         return _empty_result(spark, enrich)
-    plan = QueryPlan(
-        groups=[Group(members=[Term(t)]) for t in terms],
-        raw=f"mlt:{doc_id}",
-    )
     res = search(
-        spark, index, plan, k=k + 1, enrich=enrich, match_mode="any"
+        spark, index, terms_plan(terms), k=k + 1, enrich=enrich, match_mode="any"
     )
     # the source doc can occupy at most one of the k+1 slots, so top-k of
     # (results minus source) == first k of (top k+1 minus source)

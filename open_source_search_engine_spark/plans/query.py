@@ -54,6 +54,13 @@ class QueryPlan:
         return out
 
 
+def terms_plan(terms: list[str]) -> QueryPlan:
+    """An AND of plain terms, one group per term: the terms are data, not
+    query syntax, so none is re-parsed as an operator (a term that is
+    literally ``or`` or ``-x`` stays a term)."""
+    return QueryPlan(groups=[Group(members=[Term(t)]) for t in terms])
+
+
 # a quoted phrase may carry a leading '-' (negated phrase: -"a b");
 # without the -? the unit tokenized as -"a  +  b" — a negated first
 # token plus a stray positive, silently inverting the user's intent

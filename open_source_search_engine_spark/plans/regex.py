@@ -190,34 +190,21 @@ def regex_search(
     Results order by (n_matches desc, doc_id) — grep-style density
     ranking — with an optional limit.
     """
-    from ..operators.merge import decode_to_postings
-    from .exec import _stats_cached
+    from ..operators.merge import drop_deleted
+    from .query import terms_plan
+    from .reindex import match_docs
 
     toks = required_literal_tokens(pattern)
     index = index.view()  # one manifest version for stats, postings, deletes
-    base = corpus
     if toks:
-        _n_docs, _avgdl, stats = _stats_cached(spark, index, toks)
-        if any(t not in stats for t in toks):
-            # a required token absent from the dictionary: provably no match
-            return spark.createDataFrame(
-                [], f"{id_col} long, n_matches long"
-            )
-        tids = [stats[t][0] for t in toks]
-        blocks = index.postings.read_pruned(spark, tids)
-        cand = (
-            decode_to_postings(
-                blocks.filter(F.col("term_id").isin(tids)),
-                with_positions=False,
-            )
-            .groupBy("doc_id")
-            .agg(F.countDistinct("term_id").alias("_nt"))
-            .filter(F.col("_nt") == len(tids))
-            .select(F.col("doc_id").alias(id_col))
-        )
+        # candidates: the live docs holding every required token
+        cand = match_docs(spark, index, terms_plan(toks))
+        cand = cand.withColumnRenamed("doc_id", id_col)
         base = corpus.join(cand, id_col, "left_semi")
-    # else: no safe required literal — honest full scan (the Code Search
-    # fallback); the regex below is still one codegen pass
+    else:
+        # no safe required literal — honest full scan of the live docs
+        # (the Code Search fallback); the regex is still one codegen pass
+        base = drop_deleted(spark, index, corpus, id_col)
 
     out = (
         base.select(
@@ -228,10 +215,6 @@ def regex_search(
         )
         .filter(F.col("n_matches") > 0)
     )
-    ddf = index.deletes.read(spark)
-    if ddf is not None:
-        dead = ddf.select(F.col("doc_id").alias(id_col)).distinct()
-        out = out.join(dead, id_col, "left_anti")
     out = out.orderBy(F.desc("n_matches"), id_col)
     return out.limit(int(limit)) if limit is not None else out
 

@@ -7,9 +7,9 @@ deletes.  The Spark rebuild keeps the whole pipeline declarative and
 distributed:
 
 - ``match_docs``: ALL doc_ids matching a query plan (the Msg1c docid
-  harvest).  Same pruned termlist scan and slot-coverage intersection
-  the scoring paths use, minus BM25 and minus the global top-k sort —
-  the match set never collects to the driver, so a query matching a
+  harvest): ``plans.exec.search``'s own match plan (``_scored``) with
+  its scores dropped instead of ranked — no global top-k sort, so the
+  match set never collects to the driver and a query matching a
   billion docs stays a DataFrame.
 - ``delete_by_query``: match set -> distributed tombstone append
   (merge-on-read delete, physically annihilated at next compaction).
@@ -19,13 +19,8 @@ distributed:
   that vanished from the source are tombstoned (the re-spider of a 404
   page deletes it).
 
-Scale notes: segments are doc-complete (a build/add shard's segment
-carries ALL termlists of its docs), so the bloom-pruned read keyed on
-the POSITIVE member ids is sufficient for negation and phrase verify —
-the same invariant the scoring paths rely on.  Slot coverage is one
-hash aggregation (count_distinct over <= n_slots values per doc);
-tombstone exclusion and negation are anti-joins AQE resolves to
-broadcast when small.
+The termlist read and the tombstone rule are ``operators.merge``'s
+``term_postings`` and ``drop_deleted``, as in every query plan.
 """
 
 from __future__ import annotations
@@ -43,133 +38,22 @@ def match_docs(
     query: str | QueryPlan,
     match_mode: str = "all",
 ) -> DataFrame:
-    """Every live doc_id matching the query — no scoring, no top-k.
+    """Every live doc_id matching the query — no top-k.
 
-    Supports the full conjunctive query surface: AND of OR-groups,
-    quoted phrases (bigram-pair fast path when the index carries pair
-    termlists, positional member verify otherwise), negative terms,
-    fielded terms, merge-on-read tombstone exclusion.  ``match_mode``
-    follows plans.exec.search: 'all' = every group present (default),
-    'any' = at least one group present (a phrase counts as present only
-    where its positional adjacency holds).
-
-    NOTE: this mirrors exec.search's slot/phrase/negation plumbing minus
-    scoring (the scoring plan can't simply run with k=infinity — the
-    global top-k sort is the thing a billion-doc match set must avoid).
-    Any semantic change to exec.search's group handling must land here
-    too; tests/test_reindex.py::test_match_docs_equals_search_match_set
-    pins the parity across the query shapes.
-    """
-    from ..operators.merge import decode_to_postings
-    from .exec import _phrase_ok_docs, _stats_cached
+    The match set of ``plans.exec.search`` under the same ``match_mode``
+    ('all' = every group present, the default; 'any' = at least one,
+    a phrase counting only where its adjacency holds): the same plan,
+    with its scores dropped before any global sort, so a billion-doc
+    match set stays a DataFrame."""
+    from .exec import _check_plan, _scored
 
     plan = parse_query(query) if isinstance(query, str) else query
-    if not plan.groups:
-        raise ValueError("query has no positive terms")
-    if match_mode not in ("all", "any"):
-        raise ValueError(f"match_mode must be 'all' or 'any', got {match_mode!r}")
-
-    # one slot per AND-group; a phrase group is ONE presence unit whose
-    # membership is positional adjacency, not token co-occurrence
-    term_rows: list[tuple[str, int]] = []  # (term, slot) — OR within slot
-    phrase_slots: dict[int, tuple[str, ...]] = {}  # slot -> tokens
-    for slot, g in enumerate(plan.groups):
-        if len(g.members) == 1 and g.members[0].phrase:
-            phrase_slots[slot] = g.members[0].phrase
-        else:
-            for m in g.members:
-                term_rows.append((m.text, slot))
-    n_slots = len(plan.groups)
-    neg_terms = [t.text for t in plan.negatives]
-
-    use_bigrams = bool(phrase_slots) and index.features().get("bigrams", False)
-    phrase_chains: dict[int, list[str]] = {}  # slot -> chain terms to verify
-    for slot, toks in phrase_slots.items():
-        phrase_chains[slot] = (
-            [f"{toks[j]} {toks[j + 1]}" for j in range(len(toks) - 1)]
-            if use_bigrams
-            else list(toks)
-        )
-
-    all_terms = sorted(
-        {t for t, _s in term_rows}
-        | set(neg_terms)
-        | {c for chain in phrase_chains.values() for c in chain}
-    )
-    index = index.view()  # one manifest version for stats, postings, deletes
-    _n_docs, _avgdl, df_by_term = _stats_cached(spark, index, all_terms)
-
-    # slot liveness: an OR slot lives if any member is in the corpus; a
-    # phrase slot lives only if its whole chain is (an absent pair/token
-    # makes the phrase unmatchable)
-    live_term_rows = [(t, s) for (t, s) in term_rows if t in df_by_term]
-    live_or_slots = {s for _t, s in live_term_rows}
-    live_phrase_slots = {
-        s
-        for s, chain in phrase_chains.items()
-        if all(c in df_by_term for c in chain)
-    }
-    n_live = len(live_or_slots | live_phrase_slots)
-    if (match_mode == "all" and n_live < n_slots) or n_live == 0:
+    _check_plan(plan, match_mode)
+    # one manifest version for stats, postings and deletes
+    scored, _slots = _scored(spark, index.view(), plan, match_mode)
+    if scored is None:
         return spark.createDataFrame([], "doc_id long")
-
-    pos_ids = sorted({df_by_term[t][0] for t, _s in live_term_rows})
-    chain_ids = sorted(
-        {df_by_term[c][0] for s in live_phrase_slots for c in phrase_chains[s]}
-    )
-    blocks = index.postings.read_pruned(spark, pos_ids + chain_ids)
-
-    pres = None
-    if live_term_rows:
-        qterms = spark.createDataFrame(
-            [(df_by_term[t][0], s) for t, s in live_term_rows],
-            "term_id long, slot int",
-        ).distinct()
-        pres = (
-            decode_to_postings(
-                blocks.filter(F.col("term_id").isin(pos_ids)),
-                with_positions=False,
-            )
-            .join(F.broadcast(qterms), "term_id")
-            .select("doc_id", "slot")
-        )
-    if live_phrase_slots:
-        adj_meta: dict[int, list[tuple[int, int]]] = {}
-        adj_specs: list[tuple[int, int]] = []
-        for s in sorted(live_phrase_slots):
-            chain = phrase_chains[s]
-            for seq, c in enumerate(chain):
-                adj_meta.setdefault(df_by_term[c][0], []).append((s, seq))
-            adj_specs.append((s, len(chain)))
-        ok = _phrase_ok_docs(blocks, adj_meta, adj_specs).select(
-            "doc_id", F.col("phrase_id").alias("slot")
-        )
-        pres = ok if pres is None else pres.unionByName(ok)
-
-    cov = pres.groupBy("doc_id").agg(F.count_distinct("slot").alias("_ns"))
-    if match_mode == "all":
-        matched = cov.filter(F.col("_ns") == n_slots).select("doc_id")
-    else:
-        matched = cov.select("doc_id")  # >=1 slot by construction
-
-    neg_ids = [df_by_term[t][0] for t in neg_terms if t in df_by_term]
-    if neg_ids:
-        neg_docs = (
-            decode_to_postings(
-                blocks.filter(F.col("term_id").isin(neg_ids)),
-                with_positions=False,
-            )
-            .select("doc_id")
-            .distinct()
-        )
-        matched = matched.join(neg_docs, "doc_id", "left_anti")
-
-    ddf = index.deletes.read(spark)
-    if ddf is not None:
-        matched = matched.join(
-            ddf.select("doc_id").distinct(), "doc_id", "left_anti"
-        )
-    return matched
+    return scored.select("doc_id")
 
 
 def delete_by_query(
@@ -220,7 +104,7 @@ def reindex_by_query(
     feature flags inherit from the index's feature markers there).
     """
     from ..functions.hashing import doc_id_col
-    from ..operators.merge import delete_docs_df
+    from ..operators.merge import delete_docs_df, drop_deleted
     from ..streaming.incremental import add_documents
 
     matched = match_docs(spark, index, query, match_mode)
@@ -255,9 +139,7 @@ def reindex_by_query(
         else doc_id_col(F.col("repo"), F.col("path"), F.col("commit"))
     )
     live = docstats.select("doc_id").join(to_delete, "doc_id", "left_anti")
-    ddf = index.deletes.read(spark)
-    if ddf is not None:
-        live = live.join(ddf.select("doc_id").distinct(), "doc_id", "left_anti")
+    live = drop_deleted(spark, index, live)
     to_add = (
         to_add.withColumn("_add_id", add_id)
         .join(live.withColumnRenamed("doc_id", "_add_id"), "_add_id", "left_anti")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.build import Index
+from ..operators.merge import drop_deleted, term_postings
 from .exec import _stats_cached
 from .query import parse_query
 
@@ -72,14 +73,7 @@ def facets_for_query(
             return spark.createDataFrame([], "field string, value string, n long")
         live_groups.append(present)
     ids = sorted({stats[t][0] for gs in live_groups for t in gs})
-    from ..operators.merge import decode_to_postings
-
-    rows = decode_to_postings(
-        index.postings.read_pruned(spark, ids).filter(
-            F.col("term_id").isin(ids)
-        ),
-        with_positions=False,
-    )
+    rows = term_postings(spark, index, ids)
     mapping = [
         (stats[t][0], gi) for gi, gs in enumerate(live_groups) for t in gs
     ]
@@ -95,9 +89,7 @@ def facets_for_query(
     )
     # merge-on-read tombstones: facet counts must match search results'
     # doc visibility between delete_docs and compaction (ADVICE_r01)
-    ddf = index.deletes.read(spark)
-    if ddf is not None:
-        matched = matched.join(ddf.select("doc_id").distinct(), "doc_id", "left_anti")
+    matched = drop_deleted(spark, index, matched)
     docs = index.docstats.read(spark).join(matched, "doc_id")
     out = None
     for f in fields:

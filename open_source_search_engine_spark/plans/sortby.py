@@ -66,16 +66,12 @@ def search_sortby(
     if min_value is not None:
         blocks = blocks.filter(F.col("max_tf") >= int(min_value))
 
-    from ..operators.merge import decode_to_postings
+    from ..operators.merge import decode_to_postings, drop_deleted
 
     rows = decode_to_postings(blocks, with_positions=False).select(
         "doc_id", F.col("tf").alias("value")
     )
-    ddf = index.deletes.read(spark)
-    if ddf is not None:
-        rows = rows.join(
-            F.broadcast(ddf.select("doc_id").distinct()), "doc_id", "left_anti"
-        )
+    rows = drop_deleted(spark, index, rows)
     if min_value is not None:
         rows = rows.filter(F.col("value") >= int(min_value))
     if max_value is not None:

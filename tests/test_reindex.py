@@ -53,17 +53,54 @@ def _search_paths(spark, idx, q, **kw):
     return {r["path"] for r in search(spark, idx, q, k=100, **kw).collect()}
 
 
-def test_match_docs_equals_search_match_set(spark, ridx):
-    # conjunctive, OR-group, negation, fielded — the exhaustive scoring
-    # plan with huge k returns the identical match set
-    for q in [
-        "alpha beta",
-        "fast table",
-        "alpha -delta",
-        "gamma OR epsilon",
-        "alpha lang:rust",
-    ]:
-        assert _match_paths(spark, ridx, q) == _search_paths(spark, ridx, q), q
+def test_match_docs_equals_search_match_set(spark, ridx, tmp_path):
+    # conjunctive, OR-group, negation, fielded, phrase, match-any with a
+    # phrase (matchable and not), a repeated term — the exhaustive
+    # scoring plan with huge k returns the identical match set, on the
+    # bigram index (pair termlists) and a bigram-less one (positional
+    # phrase verify), before and after a matching doc is tombstoned
+    plain = build_index(
+        spark,
+        spark.createDataFrame(DOCS, SCHEMA),
+        str(tmp_path / "plain"),
+        n_shards=2,
+        code_aware=False,
+        block_size=4,
+    )
+    queries = [
+        ("alpha beta", "all"),
+        ("fast table", "all"),
+        ("alpha -delta", "all"),
+        ("gamma OR epsilon", "all"),
+        ("alpha lang:rust", "all"),
+        ('"fast table"', "all"),
+        ('"fast table" sigma', "any"),
+        ('"table fast" sigma', "any"),
+        ("alpha alpha", "all"),
+    ]
+
+    def match_sets(idx, path_of):
+        out = {}
+        for q, mode in queries:
+            if idx is plain and '"' not in q:
+                continue  # only phrases take another path without bigrams
+            got = match_docs(spark, idx, q, match_mode=mode).collect()
+            want = search(spark, idx, q, k=100, enrich=False, match_mode=mode)
+            got = {path_of[r["doc_id"]] for r in got}
+            assert got == {path_of[r["doc_id"]] for r in want.collect()}, (q, mode)
+            out[q] = got
+        return out
+
+    for idx in (ridx, plain):
+        meta = idx.docstats.read(spark).select("doc_id", "path").collect()
+        path_of = {r["doc_id"]: r["path"] for r in meta}
+        before = match_sets(idx, path_of)
+        assert before['"fast table" sigma'] == {"a.py", "c.py", "f.rs"}
+        if idx is ridx:
+            assert before["alpha alpha"] == {"a.py", "b.py", "d.go", "e.rs"}
+        delete_docs(spark, idx, [d for d, p in path_of.items() if p == "a.py"])
+        after = match_sets(idx, path_of)
+        assert after == {q: got - {"a.py"} for q, got in before.items()}
 
 
 def test_match_docs_phrase_and_any(spark, ridx):
