@@ -1247,8 +1247,8 @@ def q_engine_regex(spark, sf_dir):
     """Indexed regex search — grep-at-scale (plans/regex.py; the Google
     Code Search / Zoekt prefilter shape over WORD termlists, no
     reference analog).  The pattern's required literal token ('join')
-    is intersected from the bloom-pruned stored termlists; the regex
-    itself runs only on the candidate docs semi-joined back into the
+    is intersected from the stored termlists; the regex itself runs
+    only on the candidate docs semi-joined back into the
     source corpus table.  Oracle = a full-scan regexp over raw text, so
     a green hash proves the prefilter lost no matching doc (100%
     recall) AND the Java/RE2 match-count parity."""

@@ -439,8 +439,9 @@ def _write_postings(
     terms: DataFrame | None = None,
 ) -> tuple[str, str | None]:
     """Posting rows that carry their WAND ``shard`` -> one uncommitted
-    postings segment: encoded shard-pure, range-sorted on term_id, with
-    its bloom sidecar.  With ``terms`` (distinct ``term_id, term``) the
+    postings segment: encoded shard-pure, range-sorted on term_id, and
+    no sidecar (a termlist read narrows by the row-group statistics of
+    that sort).  With ``terms`` (distinct ``term_id, term``) the
     segment's termstats run is written too: one ``(term_id, df, cf,
     n_blocks, term)`` row per term, summed by readers with every other
     run.  Returns ``(postings_segment, termstats_run | None)``."""
@@ -468,7 +469,6 @@ def _write_postings(
             "term_id", "salt", "block_id"
         ),
         label=label,
-        bloom_col="term_id",
     )
     ts_seg = None
     if terms is not None:
@@ -481,8 +481,12 @@ def _write_postings(
             )
             .join(terms, "term_id")
         )
-        # one file per run: a cold stats lookup opens every run's files
-        ts_seg = idx.termstats.write_segment(run.coalesce(1), label=label)
+        # one file per run: a cold stats lookup opens every run's files.
+        # Sorted by term, the run's bytes do not follow shuffle timing,
+        # and the lookup's ``term IN (...)`` filter can skip row groups
+        ts_seg = idx.termstats.write_segment(
+            run.coalesce(1).sortWithinPartitions("term"), label=label
+        )
     blocks.unpersist()
     return po_seg, ts_seg
 

@@ -23,13 +23,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import MEMO, Manifest, segment_bytes
+from ..schemas import POSTINGS_BLOCKS
+from ..sources.tables import MEMO, Manifest, read_segments, segment_bytes
 from .build import Index, _write_docstats, _write_postings, _write_tiny_segment
-
-# tombstone count above which compaction stops collecting the dead set to
-# the driver for a broadcast anti-join and instead anti-joins against the
-# deletes table directly (distributed).  Mirrors topk.MAX_DEAD_INLINE.
-DEAD_BROADCAST_CAP = 100_000
 
 
 def delete_docs(spark: SparkSession, idx: Index, doc_ids: list[int]) -> None:
@@ -77,8 +73,7 @@ def deleted_doc_ids(
     collecting it per query was a Spark job on the hot path.  Dedup
     matters: delete_docs appends without checking prior segments, and a
     repeated delete must not inflate the count toward MAX_DEAD_INLINE.
-    ``version`` pins a manifest version (compaction uses this so the set
-    it annihilates is exactly the set whose segments it clears).
+    ``version`` pins a manifest version.
 
     ``cap``: when given, returns ``None`` if the DISTINCT tombstone
     count exceeds it — and decides that WITHOUT ever materializing more
@@ -142,11 +137,12 @@ def term_postings(
 ) -> DataFrame:
     """The termlists of ``term_ids`` as posting rows (term_id, doc_id,
     doclen, tf[, pos_enc]) — the one termlist read (Msg5::getList):
-    bloom-pruned segments, the ``term_id`` filter pushed to the parquet
-    row groups, then the Arrow decode.  Tombstones are not applied here
-    (``drop_deleted``)."""
+    the view's live segments with the ``term_id`` filter pushed to the
+    parquet row groups (each segment is range-sorted on term_id, so the
+    row-group statistics skip what holds none), then the Arrow decode.
+    Tombstones are not applied here (``drop_deleted``)."""
     ids = [int(t) for t in term_ids]
-    blocks = view.postings.read_pruned(spark, ids)
+    blocks = view.postings.read(spark)
     if blocks is None:
         raise RuntimeError(
             f"postings snapshot absent under {view.root!r} — build the "
@@ -281,7 +277,7 @@ def compact_deltas(
 
     by_size = sorted(segments, key=segment_bytes, reverse=True)
     merge_these = by_size[keep_largest:]
-    blocks_df = spark.read.parquet(*merge_these)
+    blocks_df = read_segments(spark, merge_these, POSTINGS_BLOCKS)
     n_sub = max(int(blocks_df.select("shard").distinct().count()), 1)
     # fresh, claimed shard ids above every id the index ever used (the
     # manifest carries the highest) — scanning every live segment for
@@ -348,37 +344,7 @@ def compact_postings(
     del_segs = view.segments("deletes")
     if n_shards is None:
         n_shards = max(int(blocks_df.select("shard").distinct().count()), 1)
-    dead = (
-        deleted_doc_ids(spark, view, cap=DEAD_BROADCAST_CAP)
-        if del_segs
-        else np.empty(0, dtype=np.int64)
-    )
-    if dead is None:
-        # bulk-delete scale: the tombstone set never touches the driver —
-        # the anti-joins below run against the deletes table itself
-        # (sort-merge/shuffled hash under AQE; a broadcast of this side
-        # would be exactly the OOM the cap guards against)
-        dead_df = (
-            view.deletes.read(spark)
-            .select(F.col("doc_id").cast("long"))
-            .distinct()
-        )
-        n_dead = int(dead_df.count())
-    else:
-        dead_df = (
-            F.broadcast(
-                spark.createDataFrame(
-                    pd.DataFrame({"doc_id": dead.astype(np.int64)})
-                )
-            )
-            if len(dead)
-            else None
-        )
-        n_dead = int(len(dead))
-    posts = decode_to_postings(blocks_df)
-    if dead_df is not None:
-        posts = posts.join(dead_df, "doc_id", "left_anti")
-    posts = posts.withColumn(
+    posts = drop_deleted(spark, view, decode_to_postings(blocks_df)).withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # fold: one termstats run from the compacted blocks replaces every
@@ -392,14 +358,14 @@ def compact_postings(
         "postings": ([seg], prev_segs),
         "termstats": ([ts_seg], view.segments("termstats")),
     }
-    coll = None
-    if dead_df is not None:
+    coll, dropped = None, 0
+    if del_segs:
         # docstats physically drops tombstoned docs, and the tombstone
         # segments whose ids were annihilated are cleared
-        live = view.docstats.read(spark).join(dead_df, "doc_id", "left_anti")
+        live = drop_deleted(spark, view, view.docstats.read(spark))
         ds_seg, (n, s) = _write_docstats(view, live, "compacted")
         n0, s0 = view.coll or (0, 0)
-        coll = (n - n0, s - s0)
+        coll, dropped = (n - n0, s - s0), n0 - n
         changes["docstats"] = ([ds_seg], view.segments("docstats"))
         changes["deletes"] = ([], del_segs)
     view.stage(
@@ -407,7 +373,7 @@ def compact_postings(
         operation="compact",
         meta={
             "run_id": run_id,
-            "tombstones_dropped": n_dead,
+            "tombstones_dropped": dropped,
             "n_shards": int(n_shards),
         },
         # a later add_documents allocates shard ids ABOVE this: the

@@ -596,14 +596,13 @@ def _positive_terms(plan) -> list[str]:
 def _scan_blocks(
     spark: SparkSession, index: Index, word_ids: list[int], pair_ids: list[int]
 ) -> DataFrame:
-    """Pruned postings scan for the WAND kernel.  positions_enc (the
-    largest column) is read ONLY for the bigram pair termlists a phrase
-    chain needs — scoring termlists ride a scan that never touches the
-    position bytes (two pushed-filter scans unioned; the pair side is
-    tiny by construction)."""
-    # bloom-sidecar segment pruning (functions/bloom.py): only the
-    # segments that may contain a queried term are listed/scanned
-    base = index.postings.read_pruned(spark, list(word_ids) + list(pair_ids))
+    """Postings scan for the WAND kernel: the live segments with the
+    ``term_id`` filter pushed down.  positions_enc (the largest column)
+    is read ONLY for the bigram pair termlists a phrase chain needs —
+    scoring termlists ride a scan that never touches the position bytes
+    (two pushed-filter scans unioned; the pair side is tiny by
+    construction)."""
+    base = index.postings.read(spark)
     _pair_set = set(pair_ids)
     word_ids = [t for t in word_ids if t not in _pair_set]
     scan = base.filter(F.col("term_id").isin(word_ids)).drop("positions_enc")

@@ -13,9 +13,9 @@ but always emits the whole word too):
    ``required_literal_tokens``).  Soundness, not completeness, is the
    contract — returning FEWER tokens only widens the candidate set.
 2. **Candidates from the index**: the required tokens' termlists are
-   read through the bloom-pruned postings scan (same path as every
-   query plan) and intersected with one ``groupBy(doc_id)`` whose
-   distinct-term count must equal the token count.  A required token
+   read through the pushed-filter postings scan every query plan uses
+   and intersected with one ``groupBy(doc_id)`` whose distinct-term
+   count must equal the token count.  A required token
    missing from the dictionary proves zero matches without touching
    the corpus.
 3. **Verify on candidates only**: the candidate set semi-joins the

@@ -59,7 +59,7 @@ def search_sortby(
         )
     tid = int(term_hash_py(f"num:{field}"))
     index = index.view()  # one manifest version for postings, deletes, docmeta
-    blocks = index.postings.read_pruned(spark, [tid])
+    blocks = index.postings.read(spark)
     if blocks is None:
         raise RuntimeError(f"postings snapshot absent under {index.root!r}")
     blocks = blocks.filter(F.col("term_id") == F.lit(tid))

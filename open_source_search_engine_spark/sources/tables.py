@@ -32,7 +32,7 @@ or the new one, and never a pointer that later commits trip over.
 
 Reads go through an ``IndexView`` pinned at one manifest version.  What
 is derived from segment data (read frames, stats, tombstone sets,
-docmeta, bloom sidecars, serp results) lives in one bounded memo keyed
+docmeta, serp results) lives in one bounded memo keyed
 on the immutable segment lists it came from; segment directories carry
 a uuid, so a root rebuilt in place never aliases an old entry.
 """
@@ -50,6 +50,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..schemas import POSTINGS_BLOCKS
 
 # on-disk layout tag: caches of built indexes key on it, so a tree in an
 # older layout is rebuilt instead of adopted
@@ -75,7 +77,6 @@ class Memo:
         "stats": 64,
         "dead": 64,
         "result": 512,
-        "bloom": 4096,
     }
 
     def __init__(self):
@@ -317,33 +318,12 @@ class SnapshotTable:
     def new_segment_path(self, label: str = "seg") -> str:
         return os.path.join(self.dir, f"{label}-{uuid.uuid4().hex[:12]}")
 
-    def write_segment(
-        self, df: DataFrame, label: str = "seg", bloom_col: str | None = None
-    ) -> str:
+    def write_segment(self, df: DataFrame, label: str = "seg") -> str:
         """Write ``df`` as a new, not yet committed segment directory."""
         path = self.new_segment_path(label)
         df.write.mode("errorifexists").option("compression", PARQUET_CODEC).parquet(
             path
         )
-        if bloom_col is not None:
-            # membership sidecar for read_pruned (functions/bloom.py —
-            # the RdbMap file-pruning analog).  Ids are read back from
-            # the segment's OWN parquet (one cheap single-column scan)
-            # rather than from ``df``, so the upstream plan is never
-            # recomputed; written before commit, immutable with the dir.
-            # The build is distributed: the driver never receives an
-            # unbounded id list — only the fixed-size bitmap (or a
-            # count-bounded pull for small segments).
-            from ..functions import bloom as _bloom
-
-            sidecar = _bloom.build_bloom_distributed(
-                df.sparkSession.read.parquet(path), bloom_col
-            )
-            # None = vocabulary over BLOOM_MAX_KEYS: no sidecar, the
-            # segment is always scanned (read_pruned treats a missing
-            # sidecar as unprunable — correct, just unpruned)
-            if sidecar is not None:
-                _bloom.write_sidecar(path, sidecar)
         return path
 
     def commit(
@@ -383,7 +363,10 @@ class SnapshotTable:
         segs = self.view(version).segments(self.name)
         if not segs:
             return None
-        df = read_segments(spark, segs)
+        # postings declare their schema, so a cold read analyzes
+        # without a footer-inference job
+        schema = POSTINGS_BLOCKS if self.name == "postings" else None
+        df = read_segments(spark, segs, schema)
         if self.name == "termstats" and len(segs) > 1:
             df = (
                 df.groupBy("term_id", "term")
@@ -391,31 +374,6 @@ class SnapshotTable:
                 .select(*df.columns)
             )
         return df
-
-    def pruned_segments(
-        self, term_ids, version: int | None = None
-    ) -> tuple[list[str], int]:
-        """(segments that may contain any of ``term_ids``, total live
-        segments) — bloom-sidecar file pruning (the Msg5/RdbMap 'which
-        runs hold this key' narrowing).  Segments without a sidecar are
-        never pruned."""
-        segs = self.view(version).segments(self.name)
-        return _prune(segs, term_ids), len(segs)
-
-    def read_pruned(
-        self, spark: SparkSession, term_ids, version: int | None = None
-    ) -> DataFrame | None:
-        """``read()`` restricted to the segments whose bloom sidecar may
-        contain any of ``term_ids``.  Strictly a superset-of-the-truth
-        file set, so every downstream pushed ``term_id`` filter returns
-        identical rows — only the files listed/scanned shrink."""
-        segs = self.view(version).segments(self.name)
-        if not segs:
-            return None
-        # when every bloom excludes every queried term, serve the
-        # cheapest scan with the table's schema: one segment, whose
-        # pushed filter then matches no row
-        return read_segments(spark, _prune(segs, term_ids) or segs[:1])
 
 
 def _totals(record: dict) -> tuple[int, int] | None:
@@ -433,7 +391,7 @@ def _plus(totals, delta):
 
 
 def segment_bytes(path: str) -> int:
-    """On-disk bytes of one segment directory (data files and sidecars)."""
+    """On-disk bytes of one segment directory (every file in it)."""
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -442,18 +400,6 @@ def segment_bytes(path: str) -> int:
             except OSError:
                 pass
     return total
-
-
-def _prune(segments: list[str], term_ids) -> list[str]:
-    from ..functions import bloom as _bloom
-
-    ids = list(term_ids)
-    keep = []
-    for seg in segments:
-        b = _bloom.load_sidecar(seg)
-        if b is None or _bloom.might_contain_any(b, ids):
-            keep.append(seg)
-    return keep
 
 
 @dataclass

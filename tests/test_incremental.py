@@ -271,3 +271,55 @@ def test_serp_result_cache_invalidates_on_mutation(spark, inc_index):
         for r in search(spark, inc_index, "alpha", k=10, use_cache=True).collect()
     }
     assert "d.py" in r3
+
+
+BASE_DOCS = [
+    ("r/a", f"f{i}.py", f"c{i}", "python", "alpha bravo charlie delta")
+    for i in range(8)
+]
+DELTA_DOCS = [
+    ("r/b", "g0.go", "d0", "go", "zebra quagga okapi"),
+    ("r/b", "g1.go", "d1", "go", "zebra okapi gnu"),
+]
+
+
+@pytest.fixture(scope="module")
+def delta_index(spark, tmp_path_factory):
+    """Two build shards plus one added delta segment that alone holds
+    'zebra'."""
+    root = str(tmp_path_factory.mktemp("deltaidx"))
+    idx = build_index(
+        spark,
+        spark.createDataFrame(BASE_DOCS, SCHEMA),
+        root,
+        n_shards=2,
+        code_aware=False,
+        block_size=4,
+    )
+    add_documents(spark, idx, spark.createDataFrame(DELTA_DOCS, SCHEMA))
+    return idx
+
+
+def _rows(spark, idx, q, fn):
+    return sorted(
+        (r.doc_id, round(r.score, 9))
+        for r in fn(spark, idx, q, k=10, enrich=False).collect()
+    )
+
+
+def test_delta_only_term_same_rows_on_both_paths(spark, delta_index):
+    # the termlist lives in one of three segments; both query paths read
+    # every live segment with the term_id filter pushed down
+    assert len(delta_index.view().segments("postings")) == 3
+    w = _rows(spark, delta_index, "zebra", search_wand)
+    assert w == _rows(spark, delta_index, "zebra", search)
+    assert len(w) == 2
+
+
+def test_delta_only_term_after_compaction(spark, delta_index):
+    before = _rows(spark, delta_index, "zebra", search_wand)
+    compact_postings(spark, delta_index)
+    assert len(delta_index.view().segments("postings")) == 1
+    w = _rows(spark, delta_index, "zebra", search_wand)
+    assert w == _rows(spark, delta_index, "zebra", search)
+    assert w == before and len(w) == 2

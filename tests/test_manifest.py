@@ -290,6 +290,14 @@ def test_build_writes_one_termstats_run_per_shard_in_zstd(spark, tmp_path):
     assert [(r["df"], r["cf"]) for r in ts] == [(3, 4)]
 
 
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it dispatched."""
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(st.getJobIdsForGroup(None)) - before)
+
+
 def test_cold_stats_lookup_over_runs_is_one_job(spark, tmp_path):
     """After two adds the index holds 4 termstats runs.  A cold stats
     lookup scans them raw and sums on the driver: one Spark job, and
@@ -301,11 +309,8 @@ def test_cold_stats_lookup_over_runs_is_one_job(spark, tmp_path):
     add_documents(spark, idx, spark.createDataFrame(ADD2, SCHEMA))
     assert len(idx.view().segments("termstats")) == 4
     terms = ["alpha", "beta", "omega", "lambda", "nosuchterm"]
-    st = spark.sparkContext.statusTracker()
-    before = set(st.getJobIdsForGroup(None))
-    _n, _a, got = _stats_cached(spark, idx, terms)
-    jobs = set(st.getJobIdsForGroup(None)) - before
-    assert len(jobs) == 1, f"cold stats lookup ran {len(jobs)} jobs"
+    (_n, _a, got), jobs = _jobs(spark, lambda: _stats_cached(spark, idx, terms))
+    assert jobs == 1, f"cold stats lookup ran {jobs} jobs"
     summed = {
         r["term"]: (r["term_id"], r["df"], r["cf"])
         for r in idx.termstats.read(spark).filter(
@@ -314,6 +319,59 @@ def test_cold_stats_lookup_over_runs_is_one_job(spark, tmp_path):
     }
     assert got == summed
     assert got["alpha"][1:] == (5, 7)  # 3 built docs + one per add
+
+
+def test_small_add_job_budget_and_no_sidecars(spark, tmp_path):
+    """A postings write reads nothing back: one small add into a built
+    index runs at most 16 Spark jobs (22 when every postings write also
+    built a bloom sidecar), and no postings segment holds a sidecar."""
+    idx = _build(spark, str(tmp_path / "idx"), n_shards=2)
+    _, jobs = _jobs(
+        spark, lambda: add_documents(spark, idx, spark.createDataFrame(ADD1, SCHEMA))
+    )
+    assert jobs <= 16, f"add_documents ran {jobs} jobs"
+    for seg in idx.view().segments("postings"):
+        assert not [f for f in os.listdir(seg) if "bloom" in f], seg
+
+
+def test_cold_postings_read_runs_no_job(spark, tmp_path):
+    """postings are read with their declared schema, so a cold read
+    analyzes without the footer-inference job."""
+    from open_source_search_engine_spark.schemas import POSTINGS_BLOCKS
+
+    idx = _build(spark, str(tmp_path / "idx"), n_shards=2)
+    MEMO.clear()
+    df, jobs = _jobs(spark, lambda: idx.view().postings.read(spark))
+    assert jobs == 0
+    assert df.columns == POSTINGS_BLOCKS.fieldNames()
+
+
+def test_termstats_runs_are_sorted_by_term_and_reproducible(spark, tmp_path):
+    """Each termstats run is written sorted by term, so two builds of the
+    same docs write byte-identical runs."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    def run_files(root):
+        idx = _build(spark, root, n_shards=2)
+        return sorted(
+            os.path.join(seg, f)
+            for seg in idx.view().segments("termstats")
+            for f in os.listdir(seg)
+            if f.endswith(".parquet")
+        )
+
+    a = run_files(str(tmp_path / "a"))
+    b = run_files(str(tmp_path / "b"))
+    for f in a:
+        terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+        assert terms == sorted(terms), f
+
+    def digests(files):
+        return sorted(hashlib.sha256(open(f, "rb").read()).hexdigest() for f in files)
+
+    assert len(a) == 2 and digests(a) == digests(b)
 
 
 def test_default_cores_are_the_host_usable_cores():

@@ -4,7 +4,7 @@
 decide "over cap" WITHOUT materializing the deletes table on the driver
 (the old shape collected everything, then compared len() to the cap —
 a bulk-delete-scale table OOMed the driver inside that collect), and
-both WAND guards + compaction must take their distributed path on None.
+both WAND guards must take their distributed path on None.
 """
 
 import shutil
@@ -12,7 +12,6 @@ import shutil
 import pytest
 from pyspark.sql import DataFrame
 
-from open_source_search_engine_spark.operators import merge as M
 from open_source_search_engine_spark.operators import topk as T
 from open_source_search_engine_spark.operators.build import Index
 from open_source_search_engine_spark.operators.merge import (
@@ -99,9 +98,9 @@ def test_batch_over_cap_falls_back_correctly(spark, capidx, monkeypatch):
     assert by_q.get("binary search") == want1
 
 
-def test_compaction_over_cap_uses_distributed_antijoin(
-    spark, micro_index, tmp_path, monkeypatch
-):
+def test_compaction_over_cap_uses_distributed_antijoin(spark, micro_index, tmp_path):
+    # compaction takes no tombstone cap: it drops tombstoned docs with
+    # drop_deleted's anti-join against the deletes table, whatever its size
     from pyspark.sql import functions as F
 
     from open_source_search_engine_spark.operators.merge import compact_postings
@@ -118,21 +117,7 @@ def test_compaction_over_cap_uses_distributed_antijoin(
     assert len(victims) == 3
     delete_docs(spark, idx, victims)
     MEMO.clear()
-    monkeypatch.setattr(M, "DEAD_BROADCAST_CAP", 2)
-
-    # spy: compaction must see the over-cap probe return None (i.e. take
-    # the distributed anti-join), never a driver-materialized dead array
-    probe_results = []
-    real_probe = M.deleted_doc_ids
-
-    def spy(spark_, idx_, version=None, cap=None):
-        out = real_probe(spark_, idx_, version=version, cap=cap)
-        probe_results.append((cap, None if out is None else len(out)))
-        return out
-
-    monkeypatch.setattr(M, "deleted_doc_ids", spy)
     compact_postings(spark, idx)
-    assert (2, None) in probe_results
     # correctness: tombstoned docs are physically gone, stats consistent
     snap = idx.postings.latest()
     assert snap.operation == "compact"

@@ -127,4 +127,3 @@ def test_empty_table_accepts_explicit_version(spark, tt_setup):
     assert t.latest() is None
     assert t.read(spark) is None
     assert t.read(spark, version=0) is None
-    assert t.read_pruned(spark, [1, 2], version=0) is None
