@@ -39,18 +39,13 @@ import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import codec
 from ..functions.hashing import content_sha256, doc_id_col, term_hash_py
 from ..functions.tokenize import tokenize_to_postings
+from ..schemas import TABLES
 from ..sources.tables import MEMO, PARQUET_CODEC, Index, IndexView
-
-BLOCK_SCHEMA = (
-    "term_id long, salt int, n_salts int, block_id int, n_docs int, sum_tf long, "
-    "min_doc_id long, "
-    "max_doc_id long, max_tf int, min_doclen int, doc_ids_enc binary, tfs_enc binary, "
-    "doclens_enc binary, positions_enc binary"
-)
 
 
 def docmeta_cached(spark: SparkSession, index: Index) -> DataFrame:
@@ -91,22 +86,9 @@ def derive_ids(docs: DataFrame) -> DataFrame:
     return docs.withColumn("content_sha256", content_sha256(F.col("content")))
 
 
-_BLOCK_COLS = [
-    "term_id",
-    "salt",
-    "n_salts",
-    "block_id",
-    "n_docs",
-    "sum_tf",
-    "min_doc_id",
-    "max_doc_id",
-    "max_tf",
-    "min_doclen",
-    "doc_ids_enc",
-    "tfs_enc",
-    "doclens_enc",
-    "positions_enc",
-]
+# the encode kernel's output columns: the stored block layout, whose
+# last column, ``shard``, rides along only when the input carries it
+_BLOCK_COLS = TABLES["postings"].fieldNames()[:-1]
 
 
 def _encode_sorted_postings(
@@ -366,7 +348,7 @@ def encode_blocks(
         if carry is not None and len(carry[0]):
             yield _encode(carry)
 
-    schema = BLOCK_SCHEMA + (", shard int" if sharded else "")
+    schema = StructType(TABLES["postings"].fields[: len(_BLOCK_COLS) + sharded])
     return part.mapInArrow(encode_stream, schema)
 
 
@@ -400,6 +382,8 @@ def numeric_postings(d: DataFrame, numeric_fields) -> DataFrame | None:
 _FEATURES = {
     "code_aware": ("code_aware", True, bool,
                    "the same text would split into different terms"),
+    "field_terms": ("field_terms", True, bool,
+                    "lang:/repo: termlist lookups would miss docs"),
     "bigram_terms": ("bigrams", False, bool,
                      "phrase pair-termlist lookups would miss docs"),
     "numeric_fields": ("numeric_fields", [], sorted,
@@ -436,15 +420,11 @@ def _write_postings(
     label: str,
     salt_target: int,
     block_size: int,
-    terms: DataFrame | None = None,
-) -> tuple[str, str | None]:
+) -> str:
     """Posting rows that carry their WAND ``shard`` -> one uncommitted
     postings segment: encoded shard-pure, range-sorted on term_id, and
     no sidecar (a termlist read narrows by the row-group statistics of
-    that sort).  With ``terms`` (distinct ``term_id, term``) the
-    segment's termstats run is written too: one ``(term_id, df, cf,
-    n_blocks, term)`` row per term, summed by readers with every other
-    run.  Returns ``(postings_segment, termstats_run | None)``."""
+    that sort).  Returns the segment path."""
     # persist encoded blocks: repartitionByRange's boundary-sampling
     # pass would otherwise run the whole encode twice
     blocks = encode_blocks(
@@ -464,31 +444,37 @@ def _write_postings(
     # batches of KB-sized block rows — hundreds of MB per Arrow
     # transfer.  A per-plan batch-size knob would make this safe;
     # Spark has none today.
-    po_seg = idx.postings.write_segment(
+    seg = idx.postings.write_segment(
         blocks.repartitionByRange("term_id").sortWithinPartitions(
             "term_id", "salt", "block_id"
         ),
         label=label,
     )
-    ts_seg = None
-    if terms is not None:
-        run = (
-            blocks.groupBy("term_id")
-            .agg(
-                F.sum("n_docs").alias("df"),
-                F.sum("sum_tf").alias("cf"),
-                F.count("*").alias("n_blocks"),
-            )
-            .join(terms, "term_id")
-        )
-        # one file per run: a cold stats lookup opens every run's files.
-        # Sorted by term, the run's bytes do not follow shuffle timing,
-        # and the lookup's ``term IN (...)`` filter can skip row groups
-        ts_seg = idx.termstats.write_segment(
-            run.coalesce(1).sortWithinPartitions("term"), label=label
-        )
     blocks.unpersist()
-    return po_seg, ts_seg
+    return seg
+
+
+def _write_termstats(
+    idx: Index, posts: DataFrame, label: str, terms: DataFrame | None = None
+) -> str:
+    """Posting rows -> one uncommitted termstats run, the aggregate
+    ``groupBy(term_id)``: df = posting count, cf = sum of tf (what
+    Posdb::getTermFreq reads off the termlist).  The term string is the
+    rows' own ``term`` (a batch's tokenizer output sets it on at least
+    one row per term), or, for decoded postings, which carry none, the
+    one ``terms`` pairs ``(term_id, term)`` give; a term with no row
+    gets no run row.  Readers sum the run with every other run."""
+    stats = [F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")]
+    if terms is None:
+        run = posts.groupBy("term_id").agg(*stats, F.max("term").alias("term"))
+    else:
+        run = posts.groupBy("term_id").agg(*stats).join(terms, "term_id")
+    # one file per run: a cold stats lookup opens every run's files.
+    # Sorted by term, the run's bytes do not follow shuffle timing, and
+    # the lookup's ``term IN (...)`` filter can skip row groups
+    return idx.termstats.write_segment(
+        run.coalesce(1).sortWithinPartitions("term"), label=label
+    )
 
 
 def _write_docstats(
@@ -515,15 +501,15 @@ def _write_batch(
     shard: int,
     label: str,
     features: dict,
-    field_terms: bool,
     salt_target: int,
     block_size: int,
     extra_postings: DataFrame | None = None,
     **stage,
 ) -> IndexView:
     """One batch of documents (with ``derive_ids`` columns) -> its
-    docstats and postings segments in WAND shard ``shard`` and its
-    termstats run, staged on ``view`` with ``stage`` (operation, meta,
+    docstats segment, its termstats run (one aggregate of the batch's
+    posting rows, ``_write_termstats``) and its postings segment in WAND
+    shard ``shard``, staged on ``view`` with ``stage`` (operation, meta,
     max_shard) and the batch's ``(n_docs, sum_doclen)`` delta, and left
     for the caller to commit, so the batch's term and collection stats
     always land with its postings.  The one write path
@@ -537,7 +523,7 @@ def _write_batch(
     posts = tokenize_to_postings(
         docs,
         code_aware=features["code_aware"],
-        field_terms=field_terms,
+        field_terms=features["field_terms"],
         bigram_terms=features["bigram_terms"],
     )
     if features["numeric_fields"]:
@@ -563,14 +549,9 @@ def _write_batch(
         .withColumn("doclen", F.coalesce(F.col("doclen"), F.lit(0)).cast("int"))
     )
     ds_seg, coll = _write_docstats(view, docstats, label)
-    terms = posts.filter(F.col("term").isNotNull()).select("term_id", "term").distinct()
-    po_seg, ts_seg = _write_postings(
-        view,
-        posts.withColumn("shard", F.lit(shard)),
-        label,
-        salt_target,
-        block_size,
-        terms=terms,
+    ts_seg = _write_termstats(view, posts, label)
+    po_seg = _write_postings(
+        view, posts.withColumn("shard", F.lit(shard)), label, salt_target, block_size
     )
     posts.unpersist()
     return view.stage(
@@ -608,9 +589,9 @@ def build_index(
     the collection totals.
 
     A resume (postings already in the root) must match the root's
-    sharding, its tokenizer features (``code_aware``, ``bigram_terms``,
-    ``numeric_fields``) and its ``extra_postings`` source; a mismatch
-    raises ValueError before anything is written.
+    sharding, its tokenizer features (``code_aware``, ``field_terms``,
+    ``bigram_terms``, ``numeric_fields``) and its ``extra_postings``
+    source; a mismatch raises ValueError before anything is written.
 
     ``extra_postings`` injects externally-derived posting rows (schema
     ``term_id long, doc_id long, doclen int, tf int, pos_enc binary,
@@ -667,6 +648,7 @@ def build_index(
     features = _resolve_features(
         view,
         code_aware=code_aware,
+        field_terms=field_terms,
         bigram_terms=bigram_terms,
         numeric_fields=numeric_fields,
     )
@@ -707,7 +689,6 @@ def build_index(
             shard,
             f"shard{shard}",
             features,
-            field_terms,
             salt_target,
             block_size,
             extra_postings=extra_rows,

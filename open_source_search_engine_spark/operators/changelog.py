@@ -46,16 +46,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# docstats columns carried on every changelog row (schemas.DOCSTATS)
-_META_COLS = (
-    "doc_id",
-    "repo",
-    "path",
-    "commit",
-    "lang",
-    "content_sha256",
-    "doclen",
-)
+from ..schemas import TABLES
+from ..sources.tables import read_segments
+
+# docstats columns carried on every changelog row
+_META_COLS = TABLES["docstats"].fieldNames()
 
 
 def _segments(index, version: int, table: str) -> list[str]:
@@ -64,15 +59,14 @@ def _segments(index, version: int, table: str) -> list[str]:
     return [] if version < 0 else index.view(version).segments(table)
 
 
-def _read_segments(spark: SparkSession, paths: list[str]) -> DataFrame | None:
-    if not paths:
-        return None
-    return spark.read.parquet(*sorted(paths))
+def _read(spark: SparkSession, index, version: int, table: str):
+    """``table`` at ``version`` (None: no segment, or version -1)."""
+    return None if version < 0 else index.view(version).table(table).read(spark)
 
 
 def _dead_ids(spark: SparkSession, index, version: int) -> DataFrame | None:
     """Distinct tombstoned doc_ids at ``version`` (None = no deletes)."""
-    df = _read_segments(spark, _segments(index, version, "deletes"))
+    df = _read(spark, index, version, "deletes")
     return None if df is None else df.select("doc_id").distinct()
 
 
@@ -113,8 +107,8 @@ def index_changes(
 
     if version_to is None:
         version_to = index_versions(index)
-    ds_from = _read_segments(spark, _segments(index, version_from, "docstats"))
-    ds_to = _read_segments(spark, _segments(index, version_to, "docstats"))
+    ds_from = _read(spark, index, version_from, "docstats")
+    ds_to = _read(spark, index, version_to, "docstats")
     dead_from = _dead_ids(spark, index, version_from)
     dead_to = _dead_ids(spark, index, version_to)
 
@@ -128,7 +122,7 @@ def index_changes(
             set(_segments(index, version_to, "docstats"))
             - set(_segments(index, version_from, "docstats"))
         )
-        added = _read_segments(spark, new_ds)
+        added = read_segments(spark, new_ds, TABLES["docstats"])
         if added is not None:
             if dead_to is not None:
                 added = added.join(dead_to, "doc_id", "left_anti")
@@ -144,7 +138,7 @@ def index_changes(
             - set(_segments(index, version_from, "deletes"))
         )
         removed = None
-        new_dead = _read_segments(spark, new_del)
+        new_dead = read_segments(spark, new_del, TABLES["deletes"])
         if new_dead is not None and ds_from is not None:
             new_dead = new_dead.select("doc_id").distinct()
             if dead_from is not None:

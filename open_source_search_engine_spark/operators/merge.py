@@ -23,9 +23,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import POSTINGS_BLOCKS
+from ..schemas import TABLES
 from ..sources.tables import MEMO, Manifest, read_segments, segment_bytes
-from .build import Index, _write_docstats, _write_postings, _write_tiny_segment
+from .build import (
+    Index,
+    _write_docstats,
+    _write_postings,
+    _write_termstats,
+    _write_tiny_segment,
+)
 
 
 def delete_docs(spark: SparkSession, idx: Index, doc_ids: list[int]) -> None:
@@ -61,10 +67,7 @@ def delete_docs_df(spark: SparkSession, idx: Index, doc_ids: DataFrame) -> int:
 
 
 def deleted_doc_ids(
-    spark: SparkSession,
-    idx: Index,
-    version: int | None = None,
-    cap: int | None = None,
+    spark: SparkSession, idx: Index, cap: int | None = None
 ) -> np.ndarray | None:
     """Sorted DISTINCT live tombstones (small between compactions by
     design), memoized per deletes segment list.  The WAND kernel needs
@@ -73,7 +76,7 @@ def deleted_doc_ids(
     collecting it per query was a Spark job on the hot path.  Dedup
     matters: delete_docs appends without checking prior segments, and a
     repeated delete must not inflate the count toward MAX_DEAD_INLINE.
-    ``version`` pins a manifest version.
+    A pinned view (``idx.view(v)``) answers at its version.
 
     ``cap``: when given, returns ``None`` if the DISTINCT tombstone
     count exceeds it — and decides that WITHOUT ever materializing more
@@ -84,7 +87,7 @@ def deleted_doc_ids(
     hit ``None`` must take their distributed path (anti-join against the
     deletes table).  The memo holds either the array or an ("over", cap)
     marker recording that the distinct count is known to exceed cap."""
-    view = idx.view(version)
+    view = idx.view()
     key = ("dead", view.key("deletes"))
     hit = MEMO.get(key)
     if hit is not None:
@@ -277,7 +280,7 @@ def compact_deltas(
 
     by_size = sorted(segments, key=segment_bytes, reverse=True)
     merge_these = by_size[keep_largest:]
-    blocks_df = read_segments(spark, merge_these, POSTINGS_BLOCKS)
+    blocks_df = read_segments(spark, merge_these, TABLES["postings"])
     n_sub = max(int(blocks_df.select("shard").distinct().count()), 1)
     # fresh, claimed shard ids above every id the index ever used (the
     # manifest carries the highest) — scanning every live segment for
@@ -292,7 +295,7 @@ def compact_deltas(
             "int"
         ),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    seg, _ = _write_postings(idx, posts, "minor", salt_target, block_size)
+    seg = _write_postings(idx, posts, "minor", salt_target, block_size)
     posts.unpersist()
     view.stage(
         {"postings": ([seg], list(merge_these))},
@@ -324,12 +327,16 @@ def compact_postings(
     ids per batch, so this also renormalizes shard proliferation back to
     the index's steady-state width).
 
-    Postings, docstats and stats are rebuilt (the termstats runs fold
-    into one) and the consumed tombstones cleared in ONE manifest
-    commit — a crash before it leaves the old index, after it the
-    compacted one.  When tombstones drop docs, the docstats rewrite
-    observes its own ``(n_docs, sum_doclen)`` and the commit adds the
-    difference to the view's totals; with none, the totals stay.
+    Postings, docstats and stats are rebuilt and the consumed
+    tombstones cleared in ONE manifest commit.  The termstats runs fold
+    into one, the same posting-row aggregate a batch writes, taken over
+    the tombstone-filtered rows (a term with no live posting drops
+    out); decoded postings carry no term, so the strings come from the
+    runs' ``(term_id, term)`` pairs.  A crash before the commit leaves
+    the old index, after it the compacted one.  When tombstones drop
+    docs, the docstats rewrite observes its own ``(n_docs,
+    sum_doclen)`` and the commit adds the difference to the view's
+    totals; with none, the totals stay.
     """
     from pyspark import StorageLevel
 
@@ -347,12 +354,11 @@ def compact_postings(
     posts = drop_deleted(spark, view, decode_to_postings(blocks_df)).withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # fold: one termstats run from the compacted blocks replaces every
-    # run, each surviving term keeping the string the runs carry
+    # fold: one aggregate of the live posting rows replaces every run,
+    # each surviving term keeping the string the runs carry
     terms = view.termstats.read(spark).select("term_id", "term")
-    seg, ts_seg = _write_postings(
-        idx, posts, "compacted", salt_target, block_size, terms=terms
-    )
+    ts_seg = _write_termstats(idx, posts, "compacted", terms)
+    seg = _write_postings(idx, posts, "compacted", salt_target, block_size)
     posts.unpersist()
     changes = {
         "postings": ([seg], prev_segs),

@@ -13,7 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..sources.tables import Manifest, segment_bytes
+from ..schemas import TABLES
+from ..sources.tables import segment_bytes
 
 
 def describe_index(spark, index) -> dict:
@@ -32,10 +33,7 @@ def describe_index(spark, index) -> dict:
      features: {...}, tombstones: n}."""
     index = index.view()
     out: dict = {"tables": {}, "features": index.features()}
-    for name in (
-        "postings", "docstats", "termstats", "deletes", "checkpoints",
-        "metrics", "lineage",
-    ):
+    for name in TABLES:
         snap = index.snapshot(name)
         out["tables"][name] = {
             "segments": len(snap.segments) if snap else 0,
@@ -116,8 +114,10 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
     - cross-table invariants (driver-side, tiny reads): the manifest's
       ``(n_docs, sum_doclen)`` == docstats' row count and doclen sum
       (``operators.build.finalize_stats`` repairs a mismatch);
-      termstats.n_blocks sum (over every run) ==
-      postings block count; every posting term_id appears in some
+      termstats' df sum (over every run) == the postings' ``n_docs``
+      sum — both count postings, and a minor merge re-blocks postings
+      without adding or dropping any, so a postings segment committed
+      without its run is caught; every posting term_id appears in some
       termstats run;
     - ``deep=True`` additionally decodes every posting block and
       re-verifies the sorted-run invariant (doc_ids strictly increasing
@@ -178,25 +178,13 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
                 "finalize_stats recounts)"
             )
     if blocks is not None and ts is not None:
-        n_blocks = blocks.count()
-        ts_blocks = ts.agg(F.sum("n_blocks").alias("b")).collect()[0]["b"]
-        checked["postings_blocks"] = n_blocks
-        # a tiered minor merge re-blocks the merged deltas WITHOUT
-        # touching stats (df/cf are merge-invariant; n_blocks is a
-        # physical count) — after one, the mismatch is expected, not an
-        # orphan signal, until the next compact_postings
-        minor_merged = any(
-            rec["operation"] == "minor-merge"
-            for rec in Manifest(index.root).records(index.version)
-        )
-        if (
-            ts_blocks is not None
-            and int(ts_blocks) != n_blocks
-            and not minor_merged
-        ):
+        n_post = int(blocks.agg(F.sum("n_docs")).collect()[0][0] or 0)
+        n_df = int(ts.agg(F.sum("df")).collect()[0][0] or 0)
+        checked["postings"] = n_post
+        if n_df != n_post:
             issues.append(
-                f"termstats n_blocks sum={int(ts_blocks)} != postings "
-                f"block count={n_blocks} (orphan or missing segments?)"
+                f"termstats df sum={n_df} != postings count={n_post} "
+                "(a postings segment without its termstats run?)"
             )
         orphan_terms = (
             blocks.select("term_id")

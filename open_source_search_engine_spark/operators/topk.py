@@ -593,7 +593,7 @@ def _positive_terms(plan) -> list[str]:
     return out
 
 
-def _scan_blocks(
+def _wand_blocks(
     spark: SparkSession, index: Index, word_ids: list[int], pair_ids: list[int]
 ) -> DataFrame:
     """Postings scan for the WAND kernel: the live segments with the
@@ -634,10 +634,11 @@ def _plan_wand(
     from ..plans.exec import _stats_cached
     from .merge import deleted_doc_ids
 
+    feats = index.features()
     has_phrase = any(
         len(m.phrase) > 1 for p in plans for g in p.groups for m in g.members
     ) or any(len(t.phrase) > 1 for p in plans for t in p.negatives)
-    if has_phrase and not index.features().get("bigrams", False):
+    if has_phrase and not feats.get("bigrams", False):
         # no pair termlists in this index: the general plan's positional
         # scan over member termlists is the only exact path
         return (
@@ -648,6 +649,13 @@ def _plan_wand(
         return (
             "lang_boost factor < 1.0 is unsound for the WAND prune "
             "bound; use plans.exec.search for de-boosting"
+        ), None
+    if lang_boost is not None and not feats.get("field_terms", True):
+        # the kernel boosts through the lang:xx field-term postings; an
+        # index built without them boosts only through docstats' lang
+        return (
+            "lang_boost on an index without field terms runs via "
+            "plans.exec.search (no lang: termlists to boost through)"
         ), None
     pos_terms = [_positive_terms(p) for p in plans]
     if not all(pos_terms):
@@ -706,7 +714,7 @@ def _plan_wand(
     word_ids |= {t for qm in live for t in qm["neg_ids"]}
     if boost_tid is not None:
         word_ids.add(boost_tid)
-    blocks = _scan_blocks(spark, index, sorted(word_ids), pair_ids)
+    blocks = _wand_blocks(spark, index, sorted(word_ids), pair_ids)
 
     # dispatch-floor fast path (r5): when the stored stats bound the
     # scanned volume (Σ df over every scanned termlist), run the kernel in

@@ -35,7 +35,7 @@ from ..functions.bm25 import K1, B, py_idf
 from ..operators.build import Index, docmeta_cached
 from ..operators.merge import drop_deleted, term_postings
 from ..operators.topk import _empty_result, _enrich
-from ..schemas import TERMSTATS
+from ..schemas import TABLES
 from ..sources.tables import MEMO, read_segments
 from .query import QueryPlan, parse_query
 
@@ -520,7 +520,9 @@ def _stats_cached(
         cache = MEMO.put(key, {})
     missing = [t for t in terms if t not in cache]
     if missing:
-        ts = read_segments(spark, view.segments("termstats"), TERMSTATS)
+        ts = read_segments(
+            spark, view.segments("termstats"), TABLES["termstats"]
+        )
         found: dict[str, tuple[int, int, int]] = {}
         for r in ts.filter(F.col("term").isin(missing)).select(
             "term", "term_id", "df", "cf"

@@ -9,7 +9,6 @@ columnar schemas; this module is the single analog of all those headers.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -49,35 +48,8 @@ DOCSTATS = StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Postings — the posdb analog (SURVEY §1.2 row 1).  Two grains:
+# Postings — the posdb analog (SURVEY §1.2 row 1).
 #
-# posting rows (build-time intermediate, one row per (term, doc)):
-#   the reference's "one 18-byte key per occurrence" becomes one row per
-#   (term_id, doc_id) with tf + sorted positions array — occurrence grain
-#   is recovered by posexplode(positions).
-POSTINGS_ROWS = StructType(
-    [
-        StructField("term_id", LongType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("tf", IntegerType(), False),
-        StructField("positions", ArrayType(IntegerType(), False), False),
-    ]
-)
-
-# posting rows at tokenizer-output grain: one row per (term, doc) with
-# per-doc positions already delta+varint encoded (the hot path carries no
-# array columns — see functions/tokenize.tokenize_to_postings)
-POSTING_ROWS_ENC = StructType(
-    [
-        StructField("term_id", LongType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("doclen", IntegerType(), False),
-        StructField("tf", IntegerType(), False),
-        StructField("pos_enc", BinaryType(), False),
-        StructField("term", StringType(), True),  # first occurrence only
-    ]
-)
-
 # termlist blocks (stored segments): one row per (term_id, salt, block)
 # with delta+varint encoded columns — the analog of a prefix-compressed
 # RdbList (18B -> 12B -> 6B keys, Posdb.h key-format comment).
@@ -105,23 +77,23 @@ POSTINGS_BLOCKS = StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Collection statistics (drive BM25; reference: Posdb::getTermFreq estimate
-# + Rdb::getNumTotalRecs — we compute them exactly as DataFrame aggregates,
-# SURVEY §2.4 A2/A3).  termstats is a list of additive runs: every
-# written batch commits one run of (term_id, df, cf, n_blocks, term) rows
-# for the terms it holds (strings leave the tokenizer only through these
-# rows), a read sums the runs per (term_id, term), and compact_postings
-# folds them into one run.  The collection stats are no table: the
-# manifest carries running (n_docs, sum_doclen) totals, each commit adding
-# its batch's delta (Rdb::getNumTotalRecs' counter), and avgdl =
-# sum_doclen / n_docs.
+# Collection statistics (drive BM25; reference: Posdb::getTermFreq takes
+# them from the termlist + Rdb::getNumTotalRecs — we compute them exactly
+# as DataFrame aggregates, SURVEY §2.4 A2/A3).  termstats is a list of
+# additive runs: every written batch commits one run of (term_id, df, cf,
+# term) rows, the aggregate groupBy(term_id) of the batch's posting rows
+# (strings leave the tokenizer only through these rows); a read sums the
+# runs per (term_id, term), and compact_postings folds them into one run
+# by the same aggregate over the live posting rows.  The collection stats
+# are no table: the manifest carries running (n_docs, sum_doclen) totals,
+# each commit adding its batch's delta (Rdb::getNumTotalRecs' counter),
+# and avgdl = sum_doclen / n_docs.
 # ---------------------------------------------------------------------------
 TERMSTATS = StructType(
     [
         StructField("term_id", LongType(), False),
         StructField("df", LongType(), False),
         StructField("cf", LongType(), False),
-        StructField("n_blocks", LongType(), False),
         StructField("term", StringType(), False),
     ]
 )
@@ -162,3 +134,19 @@ LINEAGE = StructType(
         StructField("output_snapshot", StringType(), False),
     ]
 )
+
+# deletes: one tombstoned doc_id per row (merge-on-read, SURVEY §2.9 U4)
+DELETES = StructType([StructField("doc_id", LongType(), False)])
+
+# the one declared layout of every stored table: reads pass it, so no
+# read infers a schema from parquet footers (a driver-side job per cold
+# read), and a column a run written by older code still carries is skipped
+TABLES = {
+    "postings": POSTINGS_BLOCKS,
+    "docstats": DOCSTATS,
+    "termstats": TERMSTATS,
+    "deletes": DELETES,
+    "checkpoints": CHECKPOINTS,
+    "metrics": METRICS,
+    "lineage": LINEAGE,
+}

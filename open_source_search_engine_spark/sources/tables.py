@@ -51,7 +51,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import POSTINGS_BLOCKS
+from ..schemas import TABLES
 
 # on-disk layout tag: caches of built indexes key on it, so a tree in an
 # older layout is rebuilt instead of adopted
@@ -116,12 +116,16 @@ class Memo:
 MEMO = Memo()
 
 
-def read_segments(spark: SparkSession, segments, schema=None) -> DataFrame:
-    """``spark.read.parquet`` over a segment list, memoized: analyzing a
-    read re-lists the directories and re-reads footers, a driver-side job
-    every warm query would otherwise pay per table touch.  A declared
-    ``schema`` skips the footer read, so even a cold read analyzes
-    without a job."""
+def read_segments(
+    spark: SparkSession, segments, schema=None
+) -> DataFrame | None:
+    """``spark.read.parquet`` over a segment list (None when it is
+    empty), memoized: analyzing a read re-lists the directories and
+    re-reads footers, a driver-side job every warm query would otherwise
+    pay per table touch.  A declared ``schema`` skips the footer read,
+    so even a cold read analyzes without a job."""
+    if not segments:
+        return None
     key = ("frame", spark.sparkContext.applicationId, tuple(segments), schema)
     df = MEMO.get(key)
     if df is None:
@@ -355,22 +359,19 @@ class SnapshotTable:
         return Manifest(self.root).history(self.name, upto)
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
-        """DataFrame over the live segments at the view (or ``version``).
-        termstats segments are additive runs, one per written batch: with
-        more than one, the read sums df, cf and n_blocks per (term_id,
-        term), the way Gigablast merges its sorted runs when it reads
-        them."""
+        """DataFrame over the live segments at the view (or ``version``;
+        None without any), read with the table's declared layout
+        (``schemas.TABLES``), so a cold read analyzes without a
+        footer-inference job.  termstats
+        segments are additive runs, one per written batch: with more than
+        one, the read sums df and cf per (term_id, term), the way
+        Gigablast merges its sorted runs when it reads them."""
         segs = self.view(version).segments(self.name)
-        if not segs:
-            return None
-        # postings declare their schema, so a cold read analyzes
-        # without a footer-inference job
-        schema = POSTINGS_BLOCKS if self.name == "postings" else None
-        df = read_segments(spark, segs, schema)
+        df = read_segments(spark, segs, TABLES.get(self.name))
         if self.name == "termstats" and len(segs) > 1:
             df = (
                 df.groupBy("term_id", "term")
-                .agg(*[F.sum(c).alias(c) for c in ("df", "cf", "n_blocks")])
+                .agg(*[F.sum(c).alias(c) for c in ("df", "cf")])
                 .select(*df.columns)
             )
         return df

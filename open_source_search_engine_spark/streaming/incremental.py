@@ -43,7 +43,7 @@ def add_documents(
     idx: Index,
     docs: DataFrame,
     code_aware: bool | None = None,
-    field_terms: bool = True,
+    field_terms: bool | None = None,
     bigram_terms: bool | None = None,
     numeric_fields: tuple | None = None,
     salt_target: int = 50_000,
@@ -58,16 +58,17 @@ def add_documents(
     The work is O(batch): nothing rescans the index, and two concurrent
     adds commute (each delta is re-applied on a rebase).
 
-    ``code_aware=None`` / ``bigram_terms=None`` / ``numeric_fields=None``
-    inherit the index's feature markers (a delta tokenized differently —
-    or without pair or num: termlists — in an index that has them would
-    make lookups silently incomplete); an explicit mismatch raises, and
+    ``code_aware=None`` / ``field_terms=None`` / ``bigram_terms=None`` /
+    ``numeric_fields=None`` inherit the index's feature markers (a delta
+    tokenized differently — or without field, pair or num: termlists —
+    in an index that has them would make lookups silently incomplete); an explicit mismatch raises, and
     into a root with no postings the given values are recorded."""
     run_id = run_id or uuid.uuid4().hex[:8]
     view = idx.view()
     features = _resolve_features(
         view,
         code_aware=code_aware,
+        field_terms=field_terms,
         bigram_terms=bigram_terms,
         numeric_fields=numeric_fields,
     )
@@ -85,7 +86,6 @@ def add_documents(
         shard_id,
         f"delta{shard_id}",
         features,
-        field_terms,
         salt_target,
         block_size,
         operation="append",

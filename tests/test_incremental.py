@@ -323,3 +323,17 @@ def test_delta_only_term_after_compaction(spark, delta_index):
     w = _rows(spark, delta_index, "zebra", search_wand)
     assert w == _rows(spark, delta_index, "zebra", search)
     assert w == before and len(w) == 2
+
+
+def test_add_with_other_field_terms_raises(spark, inc_index):
+    """field_terms is a tokenizer feature of the index: an add without
+    lang:/repo: terms cannot join an index that has them, and an add
+    that leaves it unset inherits the index's choice."""
+    more = spark.createDataFrame(DOC_NEW, SCHEMA)
+    with pytest.raises(ValueError, match="field_terms"):
+        add_documents(spark, inc_index, more, field_terms=False)
+    add_documents(spark, inc_index, more)
+    assert inc_index.features()["field_terms"] is True
+    # the add wrote its lang: postings too: 3 built docs + 1 added
+    df = inc_index.termstats.read(spark).filter(F.col("term") == "lang:python")
+    assert [r["df"] for r in df.collect()] == [4]

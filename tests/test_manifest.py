@@ -322,28 +322,33 @@ def test_cold_stats_lookup_over_runs_is_one_job(spark, tmp_path):
 
 
 def test_small_add_job_budget_and_no_sidecars(spark, tmp_path):
-    """A postings write reads nothing back: one small add into a built
-    index runs at most 16 Spark jobs (22 when every postings write also
-    built a bloom sidecar), and no postings segment holds a sidecar."""
+    """A postings write reads nothing back and a termstats run is one
+    aggregate of the batch's posting rows: one small add into a built
+    index runs at most 14 Spark jobs (16 when each run was aggregated
+    from the encoded blocks and joined to the batch's distinct terms,
+    22 when every postings write also built a bloom sidecar), and no
+    postings segment holds a sidecar."""
     idx = _build(spark, str(tmp_path / "idx"), n_shards=2)
     _, jobs = _jobs(
         spark, lambda: add_documents(spark, idx, spark.createDataFrame(ADD1, SCHEMA))
     )
-    assert jobs <= 16, f"add_documents ran {jobs} jobs"
+    assert jobs <= 14, f"add_documents ran {jobs} jobs"
     for seg in idx.view().segments("postings"):
         assert not [f for f in os.listdir(seg) if "bloom" in f], seg
 
 
-def test_cold_postings_read_runs_no_job(spark, tmp_path):
-    """postings are read with their declared schema, so a cold read
+@pytest.mark.parametrize("table", ["postings", "docstats", "termstats", "deletes"])
+def test_cold_read_runs_no_job(spark, tmp_path, table):
+    """Every table is read with its declared layout, so a cold read
     analyzes without the footer-inference job."""
-    from open_source_search_engine_spark.schemas import POSTINGS_BLOCKS
+    from open_source_search_engine_spark.schemas import TABLES
 
     idx = _build(spark, str(tmp_path / "idx"), n_shards=2)
+    delete_docs(spark, idx, [1])
     MEMO.clear()
-    df, jobs = _jobs(spark, lambda: idx.view().postings.read(spark))
+    df, jobs = _jobs(spark, lambda: idx.view().table(table).read(spark))
     assert jobs == 0
-    assert df.columns == POSTINGS_BLOCKS.fieldNames()
+    assert df.columns == TABLES[table].fieldNames()
 
 
 def test_termstats_runs_are_sorted_by_term_and_reproducible(spark, tmp_path):

@@ -44,7 +44,7 @@ NEW = [("r/2", "e.py", "c5", "python", "zeta eta theta")]
 
 def _stats(spark, idx):
     ts = sorted(
-        (r["term"], r["df"], r["cf"], r["n_blocks"])
+        (r["term"], r["df"], r["cf"])
         for r in idx.termstats.read(spark).collect()
     )
     return ts, idx.view().coll_stats()

@@ -94,6 +94,45 @@ def test_lang_boost_case_folds_on_exhaustive_path(
     assert wand == {r["doc_id"]: pytest.approx(r["score"]) for r in boosted}
 
 
+def test_wand_lang_boost_without_field_terms_matches_exhaustive(spark, tmp_path):
+    # the WAND kernel boosts through lang: field-term postings; on an
+    # index built without them it used to score unboosted silently
+    docs = spark.createDataFrame(
+        [
+            ("r/a", "a.py", "c1", "rust", "alpha beta"),
+            ("r/a", "b.py", "c2", "go", "alpha gamma delta"),
+            ("r/b", "c.py", "c3", "python", "alpha zeta"),
+        ],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    idx = build_index(
+        spark, docs, str(tmp_path / "idx"), n_shards=1, code_aware=False,
+        block_size=4, field_terms=False,
+    )
+    boost = ("python", 2.0)
+    plain = {
+        r["path"]: r["score"]
+        for r in search(spark, idx, "alpha", k=10, enrich=True).collect()
+    }
+    ex = {
+        r["path"]: r["score"]
+        for r in search(
+            spark, idx, "alpha", k=10, enrich=True, lang_boost=boost
+        ).collect()
+    }
+    assert ex["c.py"] == pytest.approx(plain["c.py"] * 2.0)
+    for fn in (search_wand, search_wand_batch):
+        q = "alpha" if fn is search_wand else ["alpha"]
+        extra = {"use_cache": False} if fn is search_wand else {}
+        got = {
+            r["path"]: r["score"]
+            for r in fn(
+                spark, idx, q, k=10, enrich=True, lang_boost=boost, **extra
+            ).collect()
+        }
+        assert got == pytest.approx(ex), fn.__name__
+
+
 def test_concurrent_federated_queries_do_not_crash(spark, bigram_idx):
     # hammer the shared caches from driver threads (the federate_search
     # concurrency pattern); pre-fix this could raise RuntimeError

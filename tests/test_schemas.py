@@ -11,31 +11,59 @@ def _shape(st):
     return [(f.name, f.dataType.simpleString()) for f in st.fields]
 
 
-def test_stored_tables_match_declared_schemas(spark, micro_index):
-    idx = micro_index
-    got_blocks = _shape(idx.postings.read(spark).schema)
-    assert got_blocks == _shape(schemas.POSTINGS_BLOCKS)
+# parquet footer types (as pyarrow reads them) -> Spark simple strings
+_ARROW_TO_SPARK = {
+    "int64": "bigint",
+    "int32": "int",
+    "double": "double",
+    "string": "string",
+    "binary": "binary",
+    "timestamp[us]": "timestamp_ntz",
+}
 
-    got_ts = _shape(idx.termstats.read(spark).schema)
-    # termstats is written df,cf,n_blocks,term joined after term_id
-    assert sorted(got_ts) == sorted(_shape(schemas.TERMSTATS))
 
-    assert sorted(_shape(idx.docstats.read(spark).schema)) == sorted(
-        _shape(schemas.DOCSTATS)
+def _stored_shapes(view, table):
+    """The schema of every parquet file of ``table``'s live segments, as
+    stored in its footer (a declared-schema read would return the
+    declared layout whatever is on disk)."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for seg in view.segments(table):
+        for f in sorted(os.listdir(seg)):
+            if f.endswith(".parquet"):
+                sch = pq.read_schema(os.path.join(seg, f))
+                out.append(
+                    [(n, _ARROW_TO_SPARK[str(t)]) for n, t in zip(sch.names, sch.types)]
+                )
+    assert out, f"{table}: no parquet file"
+    return out
+
+
+def test_stored_tables_match_declared_schemas(spark, micro_index, tmp_path):
+    from open_source_search_engine_spark.operators.build import Index
+    from open_source_search_engine_spark.operators.merge import (
+        delete_docs,
+        delete_docs_df,
     )
+
+    view = micro_index.view()
+    for table in (
+        "postings", "docstats", "termstats", "checkpoints", "metrics", "lineage",
+    ):
+        for got in _stored_shapes(view, table):
+            assert got == _shape(schemas.TABLES[table]), table
+    # both tombstone writers: the driver-side one and the distributed one
+    dels = Index(str(tmp_path / "dels"))
+    delete_docs(spark, dels, [1, 2])
+    delete_docs_df(spark, dels, spark.range(3).withColumnRenamed("id", "doc_id"))
+    shapes = _stored_shapes(dels.view(), "deletes")
+    assert shapes and all(s == _shape(schemas.TABLES["deletes"]) for s in shapes)
+
     # the collection stats are manifest totals, not a table
-    assert idx.collstats.read(spark) is None
-    doclen_sum = idx.docstats.read(spark).agg({"doclen": "sum"}).collect()[0][0]
-    assert idx.view().coll == (5, doclen_sum)
-    assert sorted(_shape(idx.checkpoints.read(spark).schema)) == sorted(
-        _shape(schemas.CHECKPOINTS)
-    )
-    assert sorted(_shape(idx.metrics.read(spark).schema)) == sorted(
-        _shape(schemas.METRICS)
-    )
-    assert sorted(_shape(idx.lineage.read(spark).schema)) == sorted(
-        _shape(schemas.LINEAGE)
-    )
+    assert micro_index.collstats.read(spark) is None
+    doclen_sum = micro_index.docstats.read(spark).agg({"doclen": "sum"}).collect()[0][0]
+    assert view.coll == (5, doclen_sum)
 
 
 def test_lineage_rows_per_shard(spark, micro_index):
@@ -82,6 +110,7 @@ def test_describe_index(spark, micro_index):
         "bigrams": False,
         "numeric_fields": [],
         "code_aware": False,
+        "field_terms": True,
         "n_shards": 1,
         "extra_postings": "",
     }
