@@ -3,19 +3,27 @@
 Reference analog: posdb's key prefix compression — 18-byte full keys shrink
 to 12B (same termId) and 6B (same termId+docId) inside an RdbList
 (Posdb.h key-format comment; RdbList.cpp addRecord/constrain).  Here the
-same redundancy is removed explicitly: within one termlist block, doc_ids
-are ascending, so we store varint(delta(doc_ids)); tfs are small ints ->
+same redundancy is removed explicitly: within one termlist block, docs
+are ascending, so we store varint(delta(doc keys)); tfs are small ints ->
 varint; positions are stored as varint(delta) per doc, length-prefixed by tf.
 
 All encode/decode is numpy-vectorized (no per-element Python loops beyond
 byte assembly) and runs inside Arrow-batched pandas UDFs / applyInPandas —
 never row-at-a-time (input_hint mandate).
 
-Wire format (little-endian LEB128 varints):
-  doc_ids_enc  : varint(d0), varint(d1-d0), varint(d2-d1), ...
-  tfs_enc      : varint(tf0), varint(tf1), ...
+Wire format (little-endian LEB128 varints), layout manifest-v5:
+  doc_ids_enc  : a termlist block: varint(o0), varint(o1-o0), ... over
+                 ordinals, each doc's rank in its shard's doc dictionary;
+                 a dictionary block (schemas.DICT_TERM_ID): varint(u0),
+                 varint(u1-u0), ... over the absolute ids shifted to
+                 uint64 (``delta_encode``)
+  tfs_enc      : varint(tf0), varint(tf1), ...; a dictionary block holds
+                 each doc's doclen here
   positions_enc: for each doc in order: varint(p0), varint(p1-p0), ...
                  (count of positions for doc i == tf_i, so no length prefix)
+Deltas restart from an absolute value at every block.  A shard's
+dictionary maps ordinals back to ``(doc_id, doclen)`` (``DocDict``), so a
+doclen is stored once per doc, not once per posting.
 """
 
 from __future__ import annotations
@@ -128,7 +136,9 @@ def encode_postings_block(
     doc_ids: np.ndarray, tfs: np.ndarray, positions_concat: np.ndarray,
     pos_doc_boundaries: np.ndarray,
 ) -> tuple[bytes, bytes, bytes]:
-    """Encode one termlist block.
+    """Encode one block with absolute ids — the inverse of
+    ``decode_postings_block`` without a dictionary (a dictionary block's
+    form; termlist blocks come from ``operators.build``'s batch encoder).
 
     positions_concat: all docs' position lists concatenated in doc order;
     pos_doc_boundaries: start offset of each doc's positions (len == n_docs),
@@ -151,11 +161,78 @@ def encode_postings_block(
     return doc_enc, tf_enc, pos_enc
 
 
+class DocDict:
+    """One shard's doc dictionary: the blocks of its reserved termlist,
+    in ordinal order, each holding a run of consecutive ordinals (ids in
+    ``doc_ids_enc``, doclens in ``tfs_enc``).  ``lookup`` maps ordinals to
+    ``(doc_id, doclen)`` and decodes only the blocks its ordinals fall
+    in, once each.  Picklable, so a Spark closure can carry it."""
+
+    def __init__(self, block_ids, n_docs, doc_encs, tf_encs):
+        order = np.argsort(np.asarray(block_ids, dtype=np.int64), kind="stable")
+        self.n_docs = np.asarray(n_docs, dtype=np.int64)[order]
+        self.doc_encs = [bytes(doc_encs[i]) for i in order]
+        self.tf_encs = [bytes(tf_encs[i]) for i in order]
+        # first ordinal of each block
+        self.starts = np.zeros(len(order), dtype=np.int64)
+        np.cumsum(self.n_docs[:-1], out=self.starts[1:])
+        self._decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+
+    def __len__(self) -> int:
+        return int(self.n_docs.sum())
+
+    def __getstate__(self):
+        # a pickled copy (a Spark closure) carries the encoded blocks only
+        return {**self.__dict__, "_decoded": {}}
+
+    def _block(self, b: int) -> tuple[np.ndarray, np.ndarray]:
+        """Block ``b`` -> (doc_ids, doclens)."""
+        hit = self._decoded.get(b)
+        if hit is None:
+            nd = int(self.n_docs[b])
+            hit = self._decoded[b] = (
+                delta_decode(decode_varint(self.doc_encs[b], nd)),
+                decode_varint(self.tf_encs[b], nd),
+            )
+        return hit
+
+    def lookup(self, ords: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Ordinals -> (doc_ids, doclens); ValueError if one is out of
+        range."""
+        ords = np.asarray(ords, dtype=np.int64)
+        if ords.size and (ords.min() < 0 or ords.max() >= len(self)):
+            raise ValueError(
+                f"ordinal out of range [0, {len(self)}) of the doc dictionary"
+            )
+        ids = np.empty(ords.size, dtype=np.int64)
+        dls = np.empty(ords.size, dtype=np.int64)
+        which = np.searchsorted(self.starts, ords, side="right") - 1
+        for b in np.unique(which).tolist():
+            sel = which == b
+            b_ids, b_dls = self._block(b)
+            local = ords[sel] - self.starts[b]
+            ids[sel] = b_ids[local]
+            dls[sel] = b_dls[local]
+        return ids, dls
+
+
+def decode_ordinals(doc_enc: bytes, n_docs: int) -> np.ndarray:
+    """A termlist block's ``doc_ids_enc`` -> its int64 ordinals."""
+    return np.cumsum(decode_varint(doc_enc, n_docs))
+
+
 def decode_postings_block(
-    doc_enc: bytes, tf_enc: bytes, pos_enc: bytes, n_docs: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode one block -> (doc_ids, tfs, positions_concat, boundaries)."""
-    doc_ids = delta_decode(decode_varint(doc_enc, n_docs))
+    doc_enc: bytes, tf_enc: bytes, pos_enc: bytes, n_docs: int,
+    docs: DocDict | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray | None]:
+    """Decode one block -> (doc_ids, tfs, positions_concat, boundaries,
+    doclens).  With ``docs`` (the block's shard dictionary) the id stream
+    holds ordinals, mapped to ids and doclens; without it the stream
+    holds absolute ids (a dictionary block) and doclens is None."""
+    if docs is None:
+        doc_ids, doclens = delta_decode(decode_varint(doc_enc, n_docs)), None
+    else:
+        doc_ids, doclens = docs.lookup(decode_ordinals(doc_enc, n_docs))
     tfs = decode_varint(tf_enc, n_docs)
     boundaries = np.zeros(n_docs, dtype=np.int64)
     if n_docs:
@@ -175,4 +252,4 @@ def decode_postings_block(
         positions = g - offsets
     else:
         positions = pos_deltas
-    return doc_ids, tfs.astype(np.int64), positions, boundaries
+    return doc_ids, tfs.astype(np.int64), positions, boundaries, doclens

@@ -5,7 +5,8 @@ Shape:
     documents -> derive(doc_id, content_sha256, doclen, tokens)
               -> posexplode -> groupBy(term, doc_id) agg(tf, positions)   # A1
               -> shard-local df per term -> salted repartition            # skew
-              -> applyInPandas encode (sorted, delta+varint blocks)       # X10/T5
+              -> mapInArrow encode (sorted, delta+varint blocks)          # X10/T5
+                 over doc ordinals, plus each shard's doc dictionary
               -> repartitionByRange(term_id) sorted segment write         # S4
     + docstats / one termstats run per batch / checkpoints / metrics, and
       the batch's (n_docs, sum_doclen) added to the manifest's totals.
@@ -22,8 +23,13 @@ Scale design (100 TB story):
   (term, pmod(doc_id, n_salts)) before the encode groupBy, so no single
   task materializes a monster termlist.  Salt is a build-time partitioning
   device only — queries match blocks by term_id and never see salts.
-- doclen is denormalized into each block (the way posdb packs densityRank
-  into every key) so scoring never joins docstats.
+- Each shard of a segment carries a doc dictionary, its sorted doc ids
+  and their doclens, stored once as the termlist of a reserved term
+  (``schemas.DICT_TERM_ID``).  Termlist blocks store each doc as its
+  ordinal, its rank in that dictionary: dense small deltas where the
+  xxhash64 ids differ by random 64-bit gaps (posdb's docId prefix
+  compression), and the doclen comes from the dictionary, so scoring
+  never joins docstats and no doclen is stored per posting.
 - Everything shuffles on term or doc_id; nothing collects to the driver.
 """
 
@@ -44,7 +50,7 @@ from pyspark.sql.types import StructType
 from ..functions import codec
 from ..functions.hashing import content_sha256, doc_id_col, term_hash_py
 from ..functions.tokenize import tokenize_to_postings
-from ..schemas import TABLES
+from ..schemas import DICT_TERM_ID, TABLES
 from ..sources.tables import MEMO, PARQUET_CODEC, Index, IndexView
 
 
@@ -102,6 +108,7 @@ def _encode_sorted_postings(
     pos_offsets: np.ndarray,
     block_size: int,
     shards: np.ndarray | None = None,
+    ordinals: np.ndarray | None = None,
 ) -> pa.RecordBatch:
     """Encode posting rows sorted by (term_id, salt, doc_id) into termlist
     blocks — ONE numpy pass, primitives + pre-encoded position bytes.
@@ -109,10 +116,14 @@ def _encode_sorted_postings(
     Positions arrive already delta+varint encoded per doc (tokenizer
     kernel), and the wire format is per-doc self-contained, so a block's
     positions stream is a pure byte-range concat: zero-copy via the input
-    binary column's values buffer + offset vector.  Doc-id deltas reset to
-    absolute at each block boundary; all varint streams are encoded
-    globally with per-value lengths and sliced via offset vectors — no
-    per-block python beyond assembling the Arrow arrays.
+    binary column's values buffer + offset vector.  The id stream holds
+    ``ordinals`` (each row's rank in its shard's doc dictionary) when
+    given, else the absolute ids (a dictionary's own blocks, or an encode
+    with no dictionary); its deltas reset to absolute at each block
+    boundary.  ``doclens`` only bound the block (``min_doclen``).  All
+    varint streams are encoded globally with per-value lengths and
+    sliced via offset vectors — no per-block python beyond assembling
+    the Arrow arrays.
     """
     nd = len(term_ids)
 
@@ -134,13 +145,16 @@ def _encode_sorted_postings(
     bends = np.append(bstarts[1:], nd)
     block_id = (within[bstarts] // block_size).astype(np.int64)
 
-    # ---- doc ids: shifted-uint64 deltas, reset to absolute per block ----
-    u = doc_ids.astype(np.uint64) + np.uint64(1 << 63)
+    # ---- doc keys (ordinals, or shifted-uint64 ids): deltas, reset to
+    # absolute per block ----
+    if ordinals is None:
+        u = doc_ids.astype(np.uint64) + np.uint64(1 << 63)
+    else:
+        u = ordinals.astype(np.uint64)
     # sorted-run invariant: within a (term, salt[, shard]) group doc ids
-    # must be STRICTLY ascending.  A duplicate (term, doc) — e.g.
-    # extra_postings colliding with a term the doc's own content produced
-    # — would double-count df and break per-doc probes; fail the build
-    # loudly instead of writing a corrupt block.
+    # must be STRICTLY ascending.  A duplicate (term, doc) would double-
+    # count df and break per-doc probes; fail loudly instead of writing
+    # a corrupt block.
     if nd > 1:
         dup = (~change[1:]) & (u[1:] == u[:-1])
         if dup.any():
@@ -148,8 +162,11 @@ def _encode_sorted_postings(
             raise ValueError(
                 "duplicate (term_id, doc_id) posting in encode input: "
                 f"term_id={int(term_ids[i])} doc_id={int(doc_ids[i])} — "
-                "injected extra_postings must use terms the document's "
-                "own content never produces (prefix them, e.g. 'anchor:')"
+                "the doc is indexed twice.  Either add_documents re-added "
+                "a doc that is already live (same repo, path and commit, "
+                "so the same doc_id; delete it before re-adding), or "
+                "injected extra_postings used a term the document's own "
+                "content produces (prefix them, e.g. 'anchor:')"
             )
     ddelta = np.empty(nd, dtype=np.uint64)
     ddelta[0] = u[0]
@@ -162,10 +179,6 @@ def _encode_sorted_postings(
     tf_bytes, tf_nb = codec.encode_varint_with_lengths(tfs.astype(np.uint64))
     tf_off = np.zeros(nd + 1, dtype=np.int64)
     np.cumsum(tf_nb, out=tf_off[1:])
-
-    dl_bytes, dl_nb = codec.encode_varint_with_lengths(doclens.astype(np.uint64))
-    dl_off = np.zeros(nd + 1, dtype=np.int64)
-    np.cumsum(dl_nb, out=dl_off[1:])
 
     # ---- per-block metadata + WAND bounds (§4.1 getMaxPossibleScore):
     # impact(tf,dl) is monotone up in tf / down in dl, so the query-time
@@ -206,7 +219,6 @@ def _encode_sorted_postings(
         pa.array(min_dl.astype(np.int32)),
         bin_col(doc_bytes, doc_off),
         bin_col(tf_bytes, tf_off),
-        bin_col(dl_bytes, dl_off),
         bin_col(pos_values, pos_offsets),
     ]
     names = list(_BLOCK_COLS)
@@ -220,6 +232,7 @@ def encode_blocks(
     postings: DataFrame,
     salt_target: int = 50_000,
     block_size: int = 4096,
+    docs: dict[int, tuple[np.ndarray, np.ndarray]] | None = None,
 ) -> DataFrame:
     """Salted repartition + sorted varint-block encode (S4/T5/X10).
 
@@ -242,6 +255,12 @@ def encode_blocks(
     (RdbBase keeps per-host file sets; one merge rewrites them all).
     Salting then uses shard-local df, matching what a per-shard build
     would have produced.
+
+    ``docs`` (sharded input only) gives each shard's doc dictionary,
+    ``{shard: (sorted doc ids, doclens)}`` (``_doc_dicts``): each row is
+    then encoded as its ordinal by ``searchsorted``, and its block bound
+    uses its dictionary doclen.  Without it the blocks hold absolute
+    ids.
     """
     sharded = "shard" in postings.columns
     n_row = 7 if sharded else 6  # leading fixed-width row arrays per batch
@@ -312,12 +331,18 @@ def encode_blocks(
         )
 
     def _encode(arrs) -> pa.RecordBatch:
+        doclens, ords = arrs[4], None
+        if docs is not None:
+            ords, doclens = _ordinals(docs, arrs[6], arrs[3])
         return _encode_sorted_postings(
-            *arrs[:6],
+            *arrs[:4],
+            doclens,
+            arrs[5],
             arrs[n_row],
             arrs[n_row + 1],
             block_size,
             shards=arrs[6] if sharded else None,
+            ordinals=ords,
         )
 
     def encode_stream(batches):
@@ -350,6 +375,87 @@ def encode_blocks(
 
     schema = StructType(TABLES["postings"].fields[: len(_BLOCK_COLS) + sharded])
     return part.mapInArrow(encode_stream, schema)
+
+
+def _ordinals(
+    docs: dict, shards: np.ndarray, doc_ids: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Each row's (ordinal, doclen) in its shard's doc dictionary."""
+    ords = np.empty(len(doc_ids), dtype=np.int64)
+    doclens = np.empty(len(doc_ids), dtype=np.int64)
+    for s in np.unique(shards).tolist():
+        sel = shards == s
+        ids, lens = docs[s]
+        o = np.searchsorted(ids, doc_ids[sel])
+        if (o >= len(ids)).any() or (ids[o.clip(0, len(ids) - 1)] != doc_ids[sel]).any():
+            raise ValueError(
+                f"a posting's doc_id is absent from shard {s}'s doc dictionary"
+            )
+        ords[sel] = o
+        doclens[sel] = lens[o]
+    return ords, doclens
+
+
+def _doc_maxima(shards, doc_ids, doclens):
+    """One row per (shard, doc_id), sorted by both, with its max doclen."""
+    o = np.lexsort((doc_ids, shards))
+    s, d, dl = shards[o], doc_ids[o], doclens[o]
+    if not len(s):
+        return s, d, dl
+    new = np.ones(len(s), dtype=bool)
+    new[1:] = (s[1:] != s[:-1]) | (d[1:] != d[:-1])
+    starts = np.flatnonzero(new)
+    return s[starts], d[starts], np.maximum.reduceat(dl, starts)
+
+
+def _doc_dicts(posts: DataFrame) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+    """Each shard's doc dictionary ``{shard: (sorted doc ids, doclens)}``
+    from posting rows that carry their shard — one Spark job: each task
+    keeps one row per doc, and the driver merges them.  A doc's doclen
+    is the max over its rows, as docstats takes it (``num:`` and
+    ``anchor:`` lookup rows carry 0)."""
+    names = ["shard", "doc_id", "doclen"]
+
+    def per_task(batches):
+        for b in batches:
+            cols = [b.column(n).to_numpy(zero_copy_only=False) for n in names]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c) for c in _doc_maxima(*cols)], names=names
+            )
+
+    got = (
+        posts.select(*names)
+        .mapInArrow(per_task, "shard int, doc_id long, doclen int")
+        .toArrow()
+    )
+    s, d, dl = _doc_maxima(
+        *(got.column(n).to_numpy().astype(np.int64) for n in names)
+    )
+    cuts = np.flatnonzero(np.diff(s)) + 1
+    starts = np.concatenate([[0], cuts]).astype(np.int64)
+    ends = np.concatenate([cuts, [len(s)]]).astype(np.int64)
+    return {
+        int(s[a]): (d[a:b], dl[a:b]) for a, b in zip(starts, ends) if b > a
+    }
+
+
+def _dict_blocks(docs: dict, block_size: int) -> pa.Table | None:
+    """The doc dictionaries' own blocks: each shard's sorted doc ids as
+    the termlist of ``DICT_TERM_ID`` in absolute form, the doclen in the
+    tf slot, no positions, never salted (None without docs)."""
+    out = []
+    for shard, (ids, lens) in sorted(docs.items()):
+        n = len(ids)
+        zero = np.zeros(n, dtype=np.int64)
+        out.append(
+            _encode_sorted_postings(
+                np.full(n, DICT_TERM_ID, dtype=np.int64), zero, zero + 1,
+                ids, lens, lens, np.empty(0, dtype=np.uint8),
+                np.zeros(n + 1, dtype=np.int64), block_size,
+                shards=np.full(n, shard, dtype=np.int64),
+            )
+        )
+    return pa.Table.from_batches(out) if out else None
 
 
 def numeric_postings(d: DataFrame, numeric_fields) -> DataFrame | None:
@@ -422,14 +528,24 @@ def _write_postings(
     block_size: int,
 ) -> str:
     """Posting rows that carry their WAND ``shard`` -> one uncommitted
-    postings segment: encoded shard-pure, range-sorted on term_id, and
-    no sidecar (a termlist read narrows by the row-group statistics of
-    that sort).  Returns the segment path."""
+    postings segment: each shard's doc dictionary (``_doc_dicts``, the
+    one extra job), its termlists encoded shard-pure over the
+    dictionary's ordinals, and the dictionary's own blocks, range-sorted
+    on term_id, and no sidecar (a termlist read narrows by the row-group
+    statistics of that sort).  The one postings writer of build shards,
+    adds and both compactions.  Returns the segment path."""
+    docs = _doc_dicts(posts)
     # persist encoded blocks: repartitionByRange's boundary-sampling
     # pass would otherwise run the whole encode twice
     blocks = encode_blocks(
-        posts, salt_target=salt_target, block_size=block_size
+        posts, salt_target=salt_target, block_size=block_size, docs=docs
     ).persist(StorageLevel.MEMORY_AND_DISK)
+    dict_blocks = _dict_blocks(docs, block_size)
+    rows = blocks
+    if dict_blocks is not None:
+        rows = blocks.unionByName(
+            posts.sparkSession.createDataFrame(dict_blocks, TABLES["postings"])
+        )
     # range-partition + sort by term_id so query-time term lookups prune
     # to a handful of row groups (RdbMap sparse-index seek analog, S2).
     # The shard column marks the doc-partition each block belongs to —
@@ -445,7 +561,7 @@ def _write_postings(
     # transfer.  A per-plan batch-size knob would make this safe;
     # Spark has none today.
     seg = idx.postings.write_segment(
-        blocks.repartitionByRange("term_id").sortWithinPartitions(
+        rows.repartitionByRange("term_id").sortWithinPartitions(
             "term_id", "salt", "block_id"
         ),
         label=label,
@@ -463,7 +579,8 @@ def _write_termstats(
     rows' own ``term`` (a batch's tokenizer output sets it on at least
     one row per term), or, for decoded postings, which carry none, the
     one ``terms`` pairs ``(term_id, term)`` give; a term with no row
-    gets no run row.  Readers sum the run with every other run."""
+    gets no run row.  The run stores no term_id (readers hash the
+    term).  Readers sum the run with every other run."""
     stats = [F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")]
     if terms is None:
         run = posts.groupBy("term_id").agg(*stats, F.max("term").alias("term"))
@@ -473,7 +590,10 @@ def _write_termstats(
     # Sorted by term, the run's bytes do not follow shuffle timing, and
     # the lookup's ``term IN (...)`` filter can skip row groups
     return idx.termstats.write_segment(
-        run.coalesce(1).sortWithinPartitions("term"), label=label
+        run.select(*TABLES["termstats"].fieldNames())
+        .coalesce(1)
+        .sortWithinPartitions("term"),
+        label=label,
     )
 
 

@@ -23,7 +23,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import TABLES
+from ..functions import codec
+from ..functions.hashing import term_hash_udf
+from ..schemas import DICT_TERM_ID, TABLES
 from ..sources.tables import MEMO, Manifest, read_segments, segment_bytes
 from .build import (
     Index,
@@ -135,6 +137,42 @@ def drop_deleted(
     return df.join(dead, col, "left_anti")
 
 
+def doc_dicts(segments) -> dict[int, codec.DocDict]:
+    """``{shard: DocDict}`` over postings ``segments``: each shard's doc
+    dictionary blocks, read on the driver with pyarrow (the reserved
+    ``term_id`` pushed to the row-group statistics — no Spark job) and
+    memoized per immutable segment.  Shard ids are unique across an
+    index's live segments, so the map is keyed by shard alone."""
+    import pyarrow.parquet as pq
+
+    out: dict[int, codec.DocDict] = {}
+    for seg in segments:
+        key = ("docdict", seg)
+        hit = MEMO.get(key)
+        if hit is None:
+            t = pq.read_table(
+                seg,
+                columns=["shard", "block_id", "n_docs", "doc_ids_enc", "tfs_enc"],
+                filters=[("term_id", "=", DICT_TERM_ID)],
+            ).to_pydict()
+            rows: dict[int, list] = {}
+            for i, shard in enumerate(t["shard"]):
+                rows.setdefault(int(shard), []).append(i)
+            hit = MEMO.put(
+                key,
+                {
+                    shard: codec.DocDict(
+                        *([t[c][i] for i in ix] for c in (
+                            "block_id", "n_docs", "doc_ids_enc", "tfs_enc"
+                        ))
+                    )
+                    for shard, ix in rows.items()
+                },
+            )
+        out.update(hit)
+    return out
+
+
 def term_postings(
     spark: SparkSession, view, term_ids, positions: bool = False
 ) -> DataFrame:
@@ -142,9 +180,11 @@ def term_postings(
     doclen, tf[, pos_enc]) — the one termlist read (Msg5::getList):
     the view's live segments with the ``term_id`` filter pushed to the
     parquet row groups (each segment is range-sorted on term_id, so the
-    row-group statistics skip what holds none), then the Arrow decode.
-    Tombstones are not applied here (``drop_deleted``)."""
+    row-group statistics skip what holds none), then the Arrow decode
+    through the segments' doc dictionaries.  Tombstones are not applied
+    here (``drop_deleted``)."""
     ids = [int(t) for t in term_ids]
+    view = view.view()  # one version for the blocks and their dictionaries
     blocks = view.postings.read(spark)
     if blocks is None:
         raise RuntimeError(
@@ -152,14 +192,21 @@ def term_postings(
             "index before querying"
         )
     return decode_to_postings(
-        blocks.filter(F.col("term_id").isin(ids)), with_positions=positions
+        blocks.filter(F.col("term_id").isin(ids)),
+        view.segments("postings"),
+        with_positions=positions,
     )
 
 
-def decode_to_postings(blocks: DataFrame, with_positions: bool = True) -> DataFrame:
-    """Stored blocks -> posting rows (term_id, doc_id, doclen, tf
-    [, pos_enc]) — the exact inverse of the encode kernel, so a
-    compaction round-trips through the same fast Arrow path.
+def decode_to_postings(
+    blocks: DataFrame, segments, with_positions: bool = True
+) -> DataFrame:
+    """Stored blocks of postings ``segments`` -> posting rows (term_id,
+    doc_id, doclen, tf[, pos_enc]) — the exact inverse of the encode
+    kernel, so a compaction round-trips through the same fast Arrow
+    path.  Each block's ordinals map to ids and doclens through its
+    shard's dictionary (``doc_dicts``, carried in the closure); the
+    dictionary blocks themselves are no postings and are skipped.
 
     The per-doc position streams are NOT decoded: the wire format is
     per-doc self-contained inside a block, so each doc's byte range is
@@ -169,9 +216,8 @@ def decode_to_postings(blocks: DataFrame, with_positions: bool = True) -> DataFr
     bits) — the scoring paths use this mode."""
     import pyarrow as pa
 
-    from ..functions import codec
-
-    cols = ["term_id", "n_docs", "doc_ids_enc", "tfs_enc", "doclens_enc"]
+    docs = doc_dicts(segments)
+    cols = ["term_id", "n_docs", "doc_ids_enc", "tfs_enc", "shard"]
     if with_positions:
         cols.append("positions_enc")
 
@@ -183,10 +229,10 @@ def decode_to_postings(blocks: DataFrame, with_positions: bool = True) -> DataFr
             row_pos_lens: list[np.ndarray] = []
             for i in range(batch.num_rows):
                 nd = int(c["n_docs"][i].as_py())
-                d, tf, _pos, _b = codec.decode_postings_block(
-                    c["doc_ids_enc"][i].as_py(), c["tfs_enc"][i].as_py(), b"", nd
+                d, tf, _pos, _b, dl = codec.decode_postings_block(
+                    c["doc_ids_enc"][i].as_py(), c["tfs_enc"][i].as_py(), b"", nd,
+                    docs[c["shard"][i].as_py()],
                 )
-                dl = codec.decode_varint(c["doclens_enc"][i].as_py(), nd)
                 if with_positions:
                     raw = np.frombuffer(c["positions_enc"][i].as_py(), dtype=np.uint8)
                     # per-value byte length from continuation bits -> per-doc
@@ -240,7 +286,11 @@ def decode_to_postings(blocks: DataFrame, with_positions: bool = True) -> DataFr
     schema = "term_id long, doc_id long, doclen int, tf int"
     if with_positions:
         schema += ", pos_enc binary"
-    return blocks.select(*cols).mapInArrow(decode, schema)
+    return (
+        blocks.filter(F.col("term_id") != DICT_TERM_ID)
+        .select(*cols)
+        .mapInArrow(decode, schema)
+    )
 
 
 def compact_deltas(
@@ -289,7 +339,7 @@ def compact_deltas(
     first_shard = Manifest(idx.root).claim_shards(view.max_shard + 1, n_sub)
     # persist: the encode reads its input twice (heavy-term df, then
     # the salted shuffle), and the decode should run once
-    posts = decode_to_postings(blocks_df).withColumn(
+    posts = decode_to_postings(blocks_df, merge_these).withColumn(
         "shard",
         (F.lit(int(first_shard)) + F.pmod(F.col("doc_id"), F.lit(n_sub))).cast(
             "int"
@@ -332,7 +382,7 @@ def compact_postings(
     into one, the same posting-row aggregate a batch writes, taken over
     the tombstone-filtered rows (a term with no live posting drops
     out); decoded postings carry no term, so the strings come from the
-    runs' ``(term_id, term)`` pairs.  A crash before the commit leaves
+    runs' terms, joined on their hashes.  A crash before the commit leaves
     the old index, after it the compacted one.  When tombstones drop
     docs, the docstats rewrite observes its own ``(n_docs,
     sum_doclen)`` and the commit adds the difference to the view's
@@ -351,12 +401,17 @@ def compact_postings(
     del_segs = view.segments("deletes")
     if n_shards is None:
         n_shards = max(int(blocks_df.select("shard").distinct().count()), 1)
-    posts = drop_deleted(spark, view, decode_to_postings(blocks_df)).withColumn(
+    posts = drop_deleted(
+        spark, view, decode_to_postings(blocks_df, prev_segs)
+    ).withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # fold: one aggregate of the live posting rows replaces every run,
-    # each surviving term keeping the string the runs carry
-    terms = view.termstats.read(spark).select("term_id", "term")
+    # each surviving term keeping the string the runs carry (a run
+    # stores no term_id; it is the term's hash)
+    terms = view.termstats.read(spark).select(
+        term_hash_udf(F.col("term")).alias("term_id"), "term"
+    )
     ts_seg = _write_termstats(idx, posts, "compacted", terms)
     seg = _write_postings(idx, posts, "compacted", salt_target, block_size)
     posts.unpersist()

@@ -13,7 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..schemas import TABLES
+from ..functions.hashing import term_hash_udf
+from ..schemas import DICT_TERM_ID, TABLES
 from ..sources.tables import segment_bytes
 
 
@@ -28,8 +29,9 @@ def describe_index(spark, index) -> dict:
 
     Returns a plain dict so CLIs/tests/serving dashboards can render it:
     {tables: {name: {segments, bytes, version, operation}},
-     postings: {blocks, postings, bytes_encoded, n_shards, n_terms,
-                max_block_docs}, collstats: {n_docs, avgdl},
+     postings: {blocks, postings, bytes_encoded, bytes_dictionary,
+                n_shards, n_terms, max_block_docs},
+     collstats: {n_docs, avgdl},
      features: {...}, tombstones: n}."""
     index = index.view()
     out: dict = {"tables": {}, "features": index.features()}
@@ -43,30 +45,32 @@ def describe_index(spark, index) -> dict:
         }
     blocks = index.postings.read(spark)
     if blocks is not None:
+        # the doc dictionaries' blocks are no termlist: they count only
+        # in bytes_dictionary
+        is_dict = F.col("term_id") == DICT_TERM_ID
+
+        def own(c):
+            return F.when(~is_dict, c)
+
+        core = F.octet_length("doc_ids_enc") + F.octet_length("tfs_enc")
         row = blocks.agg(
-            F.count("*").alias("blocks"),
-            F.sum("n_docs").alias("postings"),
-            F.sum("sum_tf").alias("occurrences"),
-            F.sum(
-                F.octet_length("doc_ids_enc")
-                + F.octet_length("tfs_enc")
-                + F.octet_length("doclens_enc")
-                + F.octet_length("positions_enc")
-            ).alias("bytes_encoded"),
-            F.sum(
-                F.octet_length("doc_ids_enc")
-                + F.octet_length("tfs_enc")
-                + F.octet_length("doclens_enc")
-            ).alias("bytes_core"),
-            F.sum(F.octet_length("positions_enc")).alias("bytes_positions"),
+            F.count(own(F.lit(1))).alias("blocks"),
+            F.sum(own(F.col("n_docs"))).alias("postings"),
+            F.sum(own(F.col("sum_tf"))).alias("occurrences"),
+            F.sum(own(core + F.octet_length("positions_enc"))).alias(
+                "bytes_encoded"
+            ),
+            F.sum(own(core)).alias("bytes_core"),
+            F.sum(own(F.octet_length("positions_enc"))).alias("bytes_positions"),
+            F.sum(F.when(is_dict, core)).alias("bytes_dictionary"),
             F.countDistinct("shard").alias("n_shards"),
-            F.countDistinct("term_id").alias("n_terms"),
-            F.max("n_docs").alias("max_block_docs"),
+            F.countDistinct(own(F.col("term_id"))).alias("n_terms"),
+            F.max(own(F.col("n_docs"))).alias("max_block_docs"),
         ).collect()[0]
         out["postings"] = {k: (int(v) if v is not None else 0) for k, v in row.asDict().items()}
         p = out["postings"]
         # two densities, two units (mixing them overstates the posting
-        # cost): core = (doc_id gap, tf, doclen) per POSTING — the
+        # cost): core = (ordinal gap, tf) per POSTING — the
         # "~7 B/posting at 40-bit gaps" claim and the unit of the
         # reference's 6-12 B prefix-compressed posdb keys; positions are
         # per-OCCURRENCE payload (cf occurrences, not df postings)
@@ -117,11 +121,12 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
       termstats' df sum (over every run) == the postings' ``n_docs``
       sum — both count postings, and a minor merge re-blocks postings
       without adding or dropping any, so a postings segment committed
-      without its run is caught; every posting term_id appears in some
-      termstats run;
-    - ``deep=True`` additionally decodes every posting block and
-      re-verifies the sorted-run invariant (doc_ids strictly increasing
-      within a block) — O(index), the full RdbMap scan.
+      without its run is caught; every posting term_id is the hash of
+      some termstats term.  The doc dictionaries' reserved term counts
+      in neither;
+    - ``deep=True`` additionally decodes every posting block and every
+      doc dictionary (``_deep_check``) — O(index), the full RdbMap
+      scan.
 
     Returns {ok: bool, issues: [str], checked: {…counts…}} — never
     raises on findings, so operators can run it against a live index.
@@ -178,7 +183,8 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
                 "finalize_stats recounts)"
             )
     if blocks is not None and ts is not None:
-        n_post = int(blocks.agg(F.sum("n_docs")).collect()[0][0] or 0)
+        terms = blocks.filter(F.col("term_id") != DICT_TERM_ID)
+        n_post = int(terms.agg(F.sum("n_docs")).collect()[0][0] or 0)
         n_df = int(ts.agg(F.sum("df")).collect()[0][0] or 0)
         checked["postings"] = n_post
         if n_df != n_post:
@@ -186,10 +192,16 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
                 f"termstats df sum={n_df} != postings count={n_post} "
                 "(a postings segment without its termstats run?)"
             )
+        # a run stores no term_id: the posting ids are matched against
+        # the hashes of the stored terms
         orphan_terms = (
-            blocks.select("term_id")
+            terms.select("term_id")
             .distinct()
-            .join(ts.select("term_id"), "term_id", "left_anti")
+            .join(
+                ts.select(term_hash_udf(F.col("term")).alias("term_id")),
+                "term_id",
+                "left_anti",
+            )
             .count()
         )
         if orphan_terms:
@@ -197,46 +209,84 @@ def fsck_index(spark, index, deep: bool = False) -> dict:
                 f"{orphan_terms} posting term_id(s) absent from termstats"
             )
     if deep and blocks is not None:
-        # full decode in an Arrow kernel: per block the delta-decoded
-        # doc_ids must be strictly increasing in shifted-uint64 space
-        # (the sorted-run invariant T5) and the first/last ids must equal
-        # the stored [min_doc_id, max_doc_id] bounds the WAND kernel
-        # prunes by
-        import numpy as np
-        import pandas as pd
-
-        from ..functions import codec
-
-        def _verify(batches):
-            for pdf in batches:
-                bad = 0
-                for row in pdf.itertuples(index=False):
-                    ids, _tfs, _pos, _b = codec.decode_postings_block(
-                        row.doc_ids_enc, row.tfs_enc, b"", int(row.n_docs)
-                    )
-                    u = ids.astype(np.uint64) + np.uint64(1 << 63)
-                    if (
-                        ids.size != int(row.n_docs)
-                        or (ids.size and ids[0] != row.min_doc_id)
-                        or (ids.size and ids[-1] != row.max_doc_id)
-                        or (ids.size > 1 and not (np.diff(u) > 0).all())
-                    ):
-                        bad += 1
-                yield pd.DataFrame({"bad": [bad]})
-
-        bad = int(
-            blocks.select(
-                "n_docs", "min_doc_id", "max_doc_id", "doc_ids_enc", "tfs_enc"
-            )
-            .mapInPandas(_verify, "bad long")
-            .agg(F.sum("bad").alias("bad"))
-            .collect()[0]["bad"]
-            or 0
-        )
+        issues += _deep_check(spark, index, blocks, ds)
         checked["deep_blocks"] = True
-        if bad:
-            issues.append(
-                f"{bad} block(s) fail decode invariants (unsorted ids or "
-                "[min,max] metadata mismatch)"
-            )
     return {"ok": not issues, "issues": issues, "checked": checked}
+
+
+def _deep_check(spark, index, blocks, ds) -> list[str]:
+    """``fsck_index(deep=True)``: decode every block and every doc
+    dictionary.  Per termlist block the ordinals must be in range of
+    its shard's dictionary and strictly increasing (the sorted-run
+    invariant T5), and the dictionary ids of the first and last must
+    equal the stored [min_doc_id, max_doc_id] the WAND kernel routes
+    by; each dictionary's ids must be strictly increasing (in shifted
+    uint64 space) with each block's bounds matching; and its doclens
+    must equal docstats'."""
+    import numpy as np
+    import pandas as pd
+
+    from ..functions import codec
+    from .merge import doc_dicts
+
+    issues: list[str] = []
+    docs = doc_dicts(index.segments("postings"))
+    shift = np.uint64(1 << 63)
+
+    def _bad(row) -> bool:
+        n = int(row.n_docs)
+        if row.term_id == DICT_TERM_ID:
+            ids = codec.delta_decode(codec.decode_varint(row.doc_ids_enc, n))
+            u = ids.astype(np.uint64) + shift
+            if not (u[1:] > u[:-1]).all():
+                return True
+        else:
+            d = docs.get(int(row.shard))
+            ords = codec.decode_ordinals(row.doc_ids_enc, n)
+            if d is None or (
+                n
+                and (ords[0] < 0 or ords[-1] >= len(d) or (np.diff(ords) <= 0).any())
+            ):
+                return True
+            ids = d.lookup(ords[[0, -1]])[0] if n else ords
+        return bool(n and (ids[0] != row.min_doc_id or ids[-1] != row.max_doc_id))
+
+    def _verify(batches):
+        for pdf in batches:
+            bad = sum(_bad(row) for row in pdf.itertuples(index=False))
+            yield pd.DataFrame({"bad": [bad]})
+
+    bad = int(
+        blocks.select(
+            "term_id", "shard", "n_docs", "min_doc_id", "max_doc_id", "doc_ids_enc"
+        )
+        .mapInPandas(_verify, "bad long")
+        .agg(F.sum("bad").alias("bad"))
+        .collect()[0]["bad"]
+        or 0
+    )
+    if bad:
+        issues.append(
+            f"{bad} block(s) fail decode invariants (ordinals out of "
+            "range or not strictly increasing, unsorted ids, or "
+            "[min,max] metadata mismatch)"
+        )
+    parts = []
+    for shard, d in sorted(docs.items()):
+        ids, lens = d.lookup(np.arange(len(d)))
+        u = ids.astype(np.uint64) + shift
+        if not (u[1:] > u[:-1]).all():
+            issues.append(f"shard {shard}: doc dictionary ids are not strictly sorted")
+        parts.append(pd.DataFrame({"doc_id": ids, "dict_doclen": lens}))
+    if parts and ds is not None:
+        dicts = spark.createDataFrame(pd.concat(parts), "doc_id long, dict_doclen long")
+        n_bad = (
+            dicts.join(ds.select("doc_id", "doclen"), "doc_id")
+            .filter(F.col("dict_doclen") != F.col("doclen"))
+            .count()
+        )
+        if n_bad:
+            issues.append(
+                f"{n_bad} doc dictionary doclen(s) differ from docstats'"
+            )
+    return issues

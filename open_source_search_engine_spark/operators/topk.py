@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..functions import codec
 from ..functions.bm25 import K1, B, py_idf
+from ..schemas import DICT_TERM_ID
 from ..sources.tables import MEMO
 from .build import Index, docmeta_cached
 
@@ -111,6 +112,10 @@ def _wand_kernel(
     [min_doc_id, max_doc_id] metadata and decoded ON DEMAND when a probe
     routes candidates into their range (then memoized) — a frequent
     second term no longer costs a full-termlist decode up front.
+
+    ``blocks`` also holds the shard's doc dictionary (the rows of
+    ``DICT_TERM_ID``): a decoded block's ordinals map to doc ids and
+    doclens through it, decoding only the dictionary blocks they hit.
     """
     slots: list[dict[int, float]] = qmeta["slots"]
     rarest_slot: int = qmeta["rarest_slot"]
@@ -145,7 +150,13 @@ def _wand_kernel(
     max_doc = blocks.column("max_doc_id").to_numpy()
     d_enc = blocks.column("doc_ids_enc")
     t_enc = blocks.column("tfs_enc")
-    l_enc = blocks.column("doclens_enc")
+    is_dict = term_ids == DICT_TERM_ID
+    docs = codec.DocDict(
+        blocks.column("block_id").to_numpy()[is_dict],
+        n_docs_col[is_dict],
+        [d_enc[i].as_py() for i in np.flatnonzero(is_dict).tolist()],
+        [t_enc[i].as_py() for i in np.flatnonzero(is_dict).tolist()],
+    )
     # positions are shipped ONLY in phrase mode, and only the pair
     # termlists' rows carry real bytes (word rows are null) — the scan
     # never reads position bytes for scoring termlists
@@ -216,11 +227,9 @@ def _wand_kernel(
     def decode_row(i: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         hit = decoded.get(i)
         if hit is None:
-            nd = int(n_docs_col[i])
-            d, t, _p, _b = codec.decode_postings_block(
-                d_enc[i].as_py(), t_enc[i].as_py(), b"", nd
+            d, t, _p, _b, dl = codec.decode_postings_block(
+                d_enc[i].as_py(), t_enc[i].as_py(), b"", int(n_docs_col[i]), docs
             )
-            dl = codec.decode_varint(l_enc[i].as_py(), nd)
             hit = decoded[i] = (d.astype(np.uint64) + _U63, t, dl)
         return hit
 
@@ -267,11 +276,10 @@ def _wand_kernel(
         t: int, cd: np.ndarray, cu: np.ndarray, mask: np.ndarray | None = None
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(tf, doclen, present) of candidates in term t's salt sub-lists
-        (routing via ``_route``); decoded lazily.  doclen comes from the
-        probed termlist's own stored values (anchor:/num: lists carry 0).
-        ``mask`` restricts routing to still-alive candidates (review
-        r4-s2): probing only dead candidates would lazily decode blocks
-        whose work can never reach the heap."""
+        (routing via ``_route``); decoded lazily.  ``mask`` restricts
+        routing to still-alive candidates (review r4-s2): probing only
+        dead candidates would lazily decode blocks whose work can never
+        reach the heap."""
         nonlocal other_decodes
         tf_t = np.zeros(len(cd), dtype=np.float64)
         dl_t = np.zeros(len(cd), dtype=np.float64)
@@ -299,8 +307,8 @@ def _wand_kernel(
         hit = pos_decoded.get(i)
         if hit is None:
             nd = int(n_docs_col[i])
-            d, _tf, pos, bounds = codec.decode_postings_block(
-                d_enc[i].as_py(), t_enc[i].as_py(), p_enc[i].as_py(), nd
+            d, _tf, pos, bounds, _dl = codec.decode_postings_block(
+                d_enc[i].as_py(), t_enc[i].as_py(), p_enc[i].as_py(), nd, docs
             )
             ends = np.empty(nd, dtype=np.int64)
             if nd:
@@ -358,10 +366,9 @@ def _wand_kernel(
             skipped_blocks += 1
             continue  # no doc first-found in this block can reach top-k
         scored_blocks += 1
-        cd, ct, _p, _bnd = codec.decode_postings_block(
-            d_enc[i].as_py(), t_enc[i].as_py(), b"", int(n_docs_col[i])
+        cd, ct, _p, _bnd, cl = codec.decode_postings_block(
+            d_enc[i].as_py(), t_enc[i].as_py(), b"", int(n_docs_col[i]), docs
         )
-        cl = codec.decode_varint(l_enc[i].as_py(), int(n_docs_col[i]))
         cu = cd.astype(np.uint64) + _U63
         this_term = int(term_ids[i])
         alive = np.ones(len(cd), dtype=bool)
@@ -379,12 +386,8 @@ def _wand_kernel(
 
         # rarest-slot score: max over members, each with the OWNING slot's
         # weight (this block's tf for its own term; lazy probes for
-        # sibling members).  Probes score with the PROBED termlist's own
-        # stored doclens, not this block's: doclen is a per-doc constant
-        # for word termlists (identical either way) but anchor:/num:
-        # lookup termlists deliberately store doclen 0, and the exhaustive
-        # plan scores each posting row with its own doclen — the two
-        # paths must agree on mixed queries.
+        # sibling members).  Every posting's doclen is its doc's
+        # dictionary doclen, the one the exhaustive plan scores with.
         imp = _impact(ct.astype(np.float64), cl.astype(np.float64), avgdl)
         score = slots[rarest_slot][this_term] * imp
         # every probe below is masked to still-alive candidates (review
@@ -597,7 +600,8 @@ def _wand_blocks(
     spark: SparkSession, index: Index, word_ids: list[int], pair_ids: list[int]
 ) -> DataFrame:
     """Postings scan for the WAND kernel: the live segments with the
-    ``term_id`` filter pushed down.  positions_enc (the largest column)
+    ``term_id`` filter pushed down, the doc dictionaries' reserved id
+    included (the kernel maps ordinals through them).  positions_enc (the largest column)
     is read ONLY for the bigram pair termlists a phrase chain needs —
     scoring termlists ride a scan that never touches the position bytes
     (two pushed-filter scans unioned; the pair side is tiny by
@@ -605,7 +609,9 @@ def _wand_blocks(
     base = index.postings.read(spark)
     _pair_set = set(pair_ids)
     word_ids = [t for t in word_ids if t not in _pair_set]
-    scan = base.filter(F.col("term_id").isin(word_ids)).drop("positions_enc")
+    scan = base.filter(F.col("term_id").isin([*word_ids, DICT_TERM_ID])).drop(
+        "positions_enc"
+    )
     if not pair_ids:
         return scan
     return scan.withColumn(

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bm25 import K1, B, py_idf
+from ..functions.hashing import term_hash_py
 from ..operators.build import Index, docmeta_cached
 from ..operators.merge import drop_deleted, term_postings
 from ..operators.topk import _empty_result, _enrich
@@ -495,12 +496,12 @@ def _stats_cached(
 
     The Msg2 termlist-cache analog: ``(n_docs, avgdl)`` come from the
     view's manifest totals with no job, and per-term (term_id, df, cf)
-    are tiny and immutable per termstats segment list, so they are
-    memoized on it (and on the totals).  A cold query looks up all
-    missing terms in ONE Spark job: the termstats runs are scanned raw
-    with their declared schema (no footer read precedes it), filtered to
-    the missing terms, and summed here on the driver, so the job has no
-    shuffle stage.
+    (term_id hashed here from the term) are tiny and immutable per
+    termstats segment list, so they are memoized on it (and on the
+    totals).  A cold query looks up all missing terms in ONE Spark job:
+    the termstats runs are scanned raw with their declared schema (no
+    footer read precedes it), filtered to the missing terms, and summed
+    here on the driver, so the job has no shuffle stage.
 
     Raises if the view has no termstats or no collection totals:
     querying an index before its first batch commits stats is a caller
@@ -525,12 +526,13 @@ def _stats_cached(
         )
         found: dict[str, tuple[int, int, int]] = {}
         for r in ts.filter(F.col("term").isin(missing)).select(
-            "term", "term_id", "df", "cf"
+            "term", "df", "cf"
         ).collect():
-            # one row per run holding the term: df and cf add up
+            # one row per run holding the term: df and cf add up; the
+            # run stores no term_id, the driver hashes the term
             _tid, df0, cf0 = found.get(r["term"], (0, 0, 0))
             found[r["term"]] = (
-                int(r["term_id"]), df0 + int(r["df"]), cf0 + int(r["cf"])
+                term_hash_py(r["term"]), df0 + int(r["df"]), cf0 + int(r["cf"])
             )
         cache.update(found)
         for t in missing:  # negative-cache absent terms

@@ -68,7 +68,9 @@ def search_sortby(
 
     from ..operators.merge import decode_to_postings, drop_deleted
 
-    rows = decode_to_postings(blocks, with_positions=False).select(
+    rows = decode_to_postings(
+        blocks, index.segments("postings"), with_positions=False
+    ).select(
         "doc_id", F.col("tf").alias("value")
     )
     rows = drop_deleted(spark, index, rows)

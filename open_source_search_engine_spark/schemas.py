@@ -19,6 +19,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from .functions.hashing import term_hash_py
+
 # ---------------------------------------------------------------------------
 # Source corpus (north-rule input_hint): Iceberg table of source code files.
 # Reference analog: titledb TitleRec (docId -> url/content/meta), SURVEY §1.2.
@@ -56,6 +58,19 @@ DOCSTATS = StructType(
 # (max_tf, min_doclen) give the per-block score bound for block-max WAND
 # (SURVEY §4.1 "getMaxPossibleScore"); n_salts records the shard-local
 # salt modulus; shard marks the doc partition (WAND task unit).
+#
+# Doc dictionary (layout manifest-v5): every shard of a segment stores
+# its sorted doc ids and their doclens once, as the termlist of the
+# reserved term DICT_TERM — absolute delta-encoded ids in doc_ids_enc,
+# the doclen in the tf slot (tfs_enc), never salted and never in
+# termstats.  Every other block's doc_ids_enc holds deltas of ordinals,
+# a doc's rank in its shard's dictionary (dense small ints, where
+# xxhash64 ids differ by random 64-bit gaps), and a posting's doclen is
+# its doc's dictionary doclen.  min_doc_id / max_doc_id stay public doc
+# ids, so block routing and tombstones never see ordinals.
+DICT_TERM = "\x00docs"
+DICT_TERM_ID = term_hash_py(DICT_TERM)
+
 POSTINGS_BLOCKS = StructType(
     [
         StructField("term_id", LongType(), False),
@@ -70,7 +85,6 @@ POSTINGS_BLOCKS = StructType(
         StructField("min_doclen", IntegerType(), False),
         StructField("doc_ids_enc", BinaryType(), False),
         StructField("tfs_enc", BinaryType(), False),
-        StructField("doclens_enc", BinaryType(), False),
         StructField("positions_enc", BinaryType(), False),
         StructField("shard", IntegerType(), False),
     ]
@@ -80,18 +94,18 @@ POSTINGS_BLOCKS = StructType(
 # Collection statistics (drive BM25; reference: Posdb::getTermFreq takes
 # them from the termlist + Rdb::getNumTotalRecs — we compute them exactly
 # as DataFrame aggregates, SURVEY §2.4 A2/A3).  termstats is a list of
-# additive runs: every written batch commits one run of (term_id, df, cf,
-# term) rows, the aggregate groupBy(term_id) of the batch's posting rows
+# additive runs: every written batch commits one run of (df, cf, term)
+# rows, the aggregate groupBy(term_id) of the batch's posting rows
 # (strings leave the tokenizer only through these rows); a read sums the
-# runs per (term_id, term), and compact_postings folds them into one run
-# by the same aggregate over the live posting rows.  The collection stats
-# are no table: the manifest carries running (n_docs, sum_doclen) totals,
-# each commit adding its batch's delta (Rdb::getNumTotalRecs' counter),
-# and avgdl = sum_doclen / n_docs.
+# runs per term, and compact_postings folds them into one run by the
+# same aggregate over the live posting rows.  No run stores term_id: it
+# is term_hash_py(term), which every reader derives.  The collection
+# stats are no table: the manifest carries running (n_docs, sum_doclen)
+# totals, each commit adding its batch's delta (Rdb::getNumTotalRecs'
+# counter), and avgdl = sum_doclen / n_docs.
 # ---------------------------------------------------------------------------
 TERMSTATS = StructType(
     [
-        StructField("term_id", LongType(), False),
         StructField("df", LongType(), False),
         StructField("cf", LongType(), False),
         StructField("term", StringType(), False),

@@ -16,7 +16,9 @@ Layout:
 
 Every segment is parquet written with one codec (``PARQUET_CODEC``).
 termstats holds one additive run per written batch, and its reads sum
-the runs per term.  The collection totals BM25 needs live in the
+the runs per term.  A root records its layout (``INDEX_LAYOUT``) in
+``_features.json`` when it is first written, and a view of a root in
+any other layout raises ValueError: its blocks would decode wrongly.  The collection totals BM25 needs live in the
 manifest record itself, ``"coll": {"n_docs": N, "sum_doclen": S}``: a
 commit adds its signed delta to the head's totals (Gigablast's
 docs-indexed counter, Iceberg's additive ``total-records``), so no
@@ -53,9 +55,10 @@ from pyspark.sql import functions as F
 
 from ..schemas import TABLES
 
-# on-disk layout tag: caches of built indexes key on it, so a tree in an
-# older layout is rebuilt instead of adopted
-INDEX_LAYOUT = "manifest-v4"
+# on-disk layout tag, recorded in every root's _features.json: a view of
+# a root in another layout is refused, and caches of built indexes key
+# on it, so a tree in an older layout is rebuilt instead of adopted
+INDEX_LAYOUT = "manifest-v5"
 MANIFEST_DIR = "_index"
 # the one codec every parquet segment is written with (Spark and pyarrow
 # writers alike), at the codec's default level
@@ -76,6 +79,7 @@ class Memo:
         "rows": 8,  # driver-side doc_id -> (repo, path, lang) dicts
         "stats": 64,
         "dead": 64,
+        "docdict": 256,  # one postings segment's {shard: DocDict}
         "result": 512,
     }
 
@@ -211,6 +215,9 @@ class Manifest:
         may add version-dependent changes per attempt.  Returns the
         published version."""
         os.makedirs(self.dir, exist_ok=True)
+        if self.head() is None:
+            # the root's first write records its layout
+            Index(self.root).write_features(layout=INDEX_LAYOUT)
         for _ in range(1000):
             head = self.head()
             base = _EMPTY if head is None else self.load(head)
@@ -364,13 +371,13 @@ class SnapshotTable:
         (``schemas.TABLES``), so a cold read analyzes without a
         footer-inference job.  termstats
         segments are additive runs, one per written batch: with more than
-        one, the read sums df and cf per (term_id, term), the way
-        Gigablast merges its sorted runs when it reads them."""
+        one, the read sums df and cf per term, the way Gigablast merges
+        its sorted runs when it reads them."""
         segs = self.view(version).segments(self.name)
         df = read_segments(spark, segs, TABLES.get(self.name))
         if self.name == "termstats" and len(segs) > 1:
             df = (
-                df.groupBy("term_id", "term")
+                df.groupBy("term")
                 .agg(*[F.sum(c).alias(c) for c in ("df", "cf")])
                 .select(*df.columns)
             )
@@ -412,10 +419,20 @@ class Index:
     version = None  # a live handle follows the head
 
     def view(self, version: int | None = None) -> "IndexView":
-        """The index pinned at manifest ``version`` (None: the head)."""
+        """The index pinned at manifest ``version`` (None: the head).
+        ValueError when the root was written in another layout."""
         m = Manifest(self.root)
         v = m.head() if version is None else version
-        return IndexView(self.root, v, _EMPTY if v is None else m.load(v))
+        if v is None:
+            return IndexView(self.root, v, _EMPTY)
+        found = self.features().get("layout")
+        if found != INDEX_LAYOUT:
+            raise ValueError(
+                f"index at {self.root} has layout "
+                f"{found or 'unrecorded (older than manifest-v5)'}; this "
+                f"engine reads {INDEX_LAYOUT} only — rebuild the index"
+            )
+        return IndexView(self.root, v, m.load(v))
 
     def table(self, name: str) -> SnapshotTable:
         return SnapshotTable(self.root, name)

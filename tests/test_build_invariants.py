@@ -3,11 +3,14 @@ checkpoint resume (R6/S11), snapshot semantics (U4 analog)."""
 
 import numpy as np
 import pytest
+from blockkit import block_doc_ids
 from pyspark.sql import functions as F
 
-from open_source_search_engine_spark.functions import codec
 from open_source_search_engine_spark.operators.build import build_index
-from open_source_search_engine_spark.operators.merge import decode_to_postings
+from open_source_search_engine_spark.operators.merge import (
+    decode_to_postings,
+    doc_dicts,
+)
 from open_source_search_engine_spark.plans.exec import search
 from open_source_search_engine_spark.sources.corpus import synth_documents
 
@@ -19,7 +22,8 @@ def tiny_docs(spark):
 
 def _postings_rows_set(spark, idx):
     rows = decode_to_postings(
-        idx.postings.read(spark), with_positions=False
+        idx.postings.read(spark), idx.view().segments("postings"),
+        with_positions=False,
     ).collect()
     return sorted((r["term_id"], r["doc_id"], r["tf"], r["doclen"]) for r in rows)
 
@@ -28,10 +32,9 @@ def test_sorted_block_invariant(spark, micro_index):
     """Every decoded block is ascending in doc_id; blocks of one term are
     disjoint per salt (the RdbList::checkList_r analog)."""
     blocks = micro_index.postings.read(spark).collect()
+    docs = doc_dicts(micro_index.view().segments("postings"))
     for b in blocks:
-        ids = codec.delta_decode(
-            codec.decode_varint(bytes(b["doc_ids_enc"]), b["n_docs"])
-        )
+        ids = block_doc_ids(b, docs)
         # ascending in signed-int64 order == ascending after the uint64
         # shift (int64 diffs overflow when gaps exceed 2^63)
         u = ids.astype(np.uint64) + np.uint64(1 << 63)

@@ -41,7 +41,7 @@ def test_postings_block_roundtrip():
     np.cumsum(tfs[:-1], out=bounds[1:])
     pos = np.concatenate([np.sort(rng.integers(0, 5000, size=t)) for t in tfs])
     d_enc, t_enc, p_enc = codec.encode_postings_block(doc_ids, tfs, pos, bounds)
-    d2, t2, p2, b2 = codec.decode_postings_block(d_enc, t_enc, p_enc, n)
+    d2, t2, p2, b2, _dl = codec.decode_postings_block(d_enc, t_enc, p_enc, n)
     assert np.array_equal(d2, doc_ids)
     assert np.array_equal(t2, tfs)
     assert np.array_equal(p2, pos)

@@ -149,7 +149,9 @@ def test_compaction_identity_no_deletes(spark, inc_index):
         return sorted(
             (r["term_id"], r["doc_id"], r["tf"])
             for r in decode_to_postings(
-                inc_index.postings.read(spark), with_positions=False
+                inc_index.postings.read(spark),
+                inc_index.view().segments("postings"),
+                with_positions=False,
             ).collect()
         )
 

@@ -301,7 +301,9 @@ def _jobs(spark, fn):
 def test_cold_stats_lookup_over_runs_is_one_job(spark, tmp_path):
     """After two adds the index holds 4 termstats runs.  A cold stats
     lookup scans them raw and sums on the driver: one Spark job, and
-    the same (term_id, df, cf) as the summed termstats read."""
+    the same (term_id, df, cf) as the summed termstats read, its
+    term_id the term's hash (a run stores none)."""
+    from open_source_search_engine_spark.functions.hashing import term_hash_py
     from open_source_search_engine_spark.plans.exec import _stats_cached
 
     idx = _build(spark, str(tmp_path / "idx"), n_shards=2)
@@ -312,7 +314,7 @@ def test_cold_stats_lookup_over_runs_is_one_job(spark, tmp_path):
     (_n, _a, got), jobs = _jobs(spark, lambda: _stats_cached(spark, idx, terms))
     assert jobs == 1, f"cold stats lookup ran {jobs} jobs"
     summed = {
-        r["term"]: (r["term_id"], r["df"], r["cf"])
+        r["term"]: (term_hash_py(r["term"]), r["df"], r["cf"])
         for r in idx.termstats.read(spark).filter(
             F.col("term").isin(terms)
         ).collect()
@@ -324,15 +326,16 @@ def test_cold_stats_lookup_over_runs_is_one_job(spark, tmp_path):
 def test_small_add_job_budget_and_no_sidecars(spark, tmp_path):
     """A postings write reads nothing back and a termstats run is one
     aggregate of the batch's posting rows: one small add into a built
-    index runs at most 14 Spark jobs (16 when each run was aggregated
-    from the encoded blocks and joined to the batch's distinct terms,
-    22 when every postings write also built a bloom sidecar), and no
-    postings segment holds a sidecar."""
+    index runs at most 15 Spark jobs (one of them collects the batch's
+    doc dictionary; 16 when each run was aggregated from the encoded
+    blocks and joined to the batch's distinct terms, 22 when every
+    postings write also built a bloom sidecar), and no postings segment
+    holds a sidecar."""
     idx = _build(spark, str(tmp_path / "idx"), n_shards=2)
     _, jobs = _jobs(
         spark, lambda: add_documents(spark, idx, spark.createDataFrame(ADD1, SCHEMA))
     )
-    assert jobs <= 14, f"add_documents ran {jobs} jobs"
+    assert jobs <= 15, f"add_documents ran {jobs} jobs"
     for seg in idx.view().segments("postings"):
         assert not [f for f in os.listdir(seg) if "bloom" in f], seg
 

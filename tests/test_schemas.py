@@ -113,6 +113,7 @@ def test_describe_index(spark, micro_index):
         "field_terms": True,
         "n_shards": 1,
         "extra_postings": "",
+        "layout": "manifest-v5",
     }
 
 

@@ -5,10 +5,9 @@ block decodes."""
 import math
 
 import numpy as np
-import pyarrow as pa
 import pytest
+from blockkit import shard_table
 
-from open_source_search_engine_spark.functions import codec
 from open_source_search_engine_spark.operators import topk as T
 from open_source_search_engine_spark.operators.build import build_index
 from open_source_search_engine_spark.operators.topk import search_wand
@@ -160,43 +159,19 @@ def test_batch_phrase_fallback_on_bigramless(spark, wand_index):
         assert sorted(got.get(q, []), key=lambda x: (-x[1], x[0])) == want, q
 
 
-def _mk_block(term_id, salt, n_salts, bid, doc_ids, tfs, doclens):
-    doc_ids = np.sort(np.asarray(doc_ids, dtype=np.int64))
-    d_enc = codec.encode_varint(codec.delta_encode(doc_ids))
-    t_enc = codec.encode_varint(np.asarray(tfs, dtype=np.uint64))
-    l_enc = codec.encode_varint(np.asarray(doclens, dtype=np.uint64))
-    return (
-        term_id, salt, n_salts, bid, len(doc_ids), int(sum(tfs)),
-        int(doc_ids[0]),
-        int(doc_ids[-1]), int(max(tfs)), int(min(doclens)),
-        d_enc, t_enc, l_enc, b"",
-    )
-
-
-_BLOCK_NAMES = [
-    "term_id", "salt", "n_salts", "block_id", "n_docs", "sum_tf",
-    "min_doc_id",
-    "max_doc_id", "max_tf", "min_doclen", "doc_ids_enc", "tfs_enc",
-    "doclens_enc", "positions_enc",
-]
-
-
 def test_kernel_prunes_blocks():
     """Hand-built single-term shard: one high-impact block and many
     low-impact blocks.  After the heap fills from the best block, every
     low-bound block must be skipped WITHOUT decoding."""
-    rows = []
     # best block: tf=50, short docs -> huge impact
-    rows.append(_mk_block(7, 0, 1, 0, [10, 20, 30], [50, 50, 50], [10, 10, 10]))
+    blocks = [(7, 0, 1, 0, [10, 20, 30], [50, 50, 50])]
+    doclens = {10: 10, 20: 10, 30: 10}
     # 20 hopeless blocks: tf=1, long docs
     for b in range(1, 21):
-        rows.append(
-            _mk_block(7, 0, 1, b, [1000 * b + i for i in range(4)], [1] * 4, [5000] * 4)
-        )
-    cols = list(zip(*rows))
-    tbl = pa.Table.from_arrays(
-        [pa.array(list(c)) for c in cols], names=_BLOCK_NAMES
-    )
+        docs = [1000 * b + i for i in range(4)]
+        blocks.append((7, 0, 1, b, docs, [1] * 4))
+        doclens.update(dict.fromkeys(docs, 5000))
+    tbl = shard_table(blocks, doclens)
     qmeta = {"slots": [{7: 1.0}], "rarest_slot": 0, "avgdl": 100.0, "neg_ids": []}
     out = T._wand_kernel(tbl, qmeta, k=3)
     assert out.num_rows == 3
@@ -221,19 +196,12 @@ def test_kernel_lazy_decodes_other_terms():
     """Lazy other-term decode: term 9's list has 20 blocks, but the
     candidates (term 7, rare) all live in ONE of term 9's doc ranges —
     the kernel must decode exactly that one block, not the whole list."""
-    rows = [_mk_block(7, 0, 1, 0, [5000, 5001, 5002], [5, 5, 5], [100, 100, 100])]
+    blocks = [(7, 0, 1, 0, [5000, 5001, 5002], [5, 5, 5])]
+    # block b covers [1000b, 1000b+4], so the candidates sit in block 5
     for b in range(20):
-        rows.append(
-            _mk_block(
-                9, 0, 1, b,
-                [1000 * b + i for i in range(5)],  # block b covers [1000b, 1000b+4]
-                [2] * 5, [100] * 5,
-            )
-        )
-    # put the candidates inside term 9's block 5 range
-    rows[6] = _mk_block(9, 0, 1, 5, [5000, 5001, 5002, 5003, 5004], [2] * 5, [100] * 5)
-    cols = list(zip(*rows))
-    tbl = pa.Table.from_arrays([pa.array(list(c)) for c in cols], names=_BLOCK_NAMES)
+        blocks.append((9, 0, 1, b, [1000 * b + i for i in range(5)], [2] * 5))
+    doclens = {d: 100 for blk in blocks for d in blk[4]}
+    tbl = shard_table(blocks, doclens)
     qmeta = {
         "slots": [{7: 1.0}, {9: 1.0}],
         "rarest_slot": 0,

@@ -1,6 +1,7 @@
 """Property test of the WAND kernel against a brute-force Python model —
-no SparkSession needed: blocks are hand-encoded with the real codec, the
-kernel runs directly on the Arrow table.
+no SparkSession needed: blocks are hand-encoded in the stored layout
+(``blockkit.shard_table``: ordinals over the shard's doc dictionary),
+the kernel runs directly on the Arrow table.
 
 Covers randomized combinations of: multiple slots (AND), OR-group members
 with weights, salted sub-lists, negatives, tombstones, block-size splits,
@@ -10,10 +11,9 @@ and full-range signed doc_ids (the uint64-shift ordering).
 import math
 
 import numpy as np
-import pyarrow as pa
 import pytest
+from blockkit import shard_table
 
-from open_source_search_engine_spark.functions import codec
 from open_source_search_engine_spark.operators import topk as T
 
 AVGDL = 120.0
@@ -23,43 +23,19 @@ def _u(x: np.ndarray) -> np.ndarray:
     return x.astype(np.uint64) + np.uint64(1 << 63)
 
 
-def _blocks_for(term_id, doc_tf, n_salts, block_size, doclens):
-    """doc_tf: {doc_id: tf} -> encoded block rows (salted, split)."""
-    rows = []
-    docs = np.array(sorted(doc_tf, key=lambda d: int(_u(np.array([d], dtype=np.int64))[0])), dtype=np.int64)
+def _blocks_for(term_id, doc_tf, n_salts, block_size):
+    """doc_tf: {doc_id: tf} -> block specs for ``blockkit.shard_table``
+    (salted, split)."""
+    blocks = []
+    docs = np.array(sorted(doc_tf), dtype=np.int64)
     salts = np.mod(docs, n_salts)
     for s in range(n_salts):
         sd = docs[salts == s]
         for bid, lo in enumerate(range(0, len(sd), block_size)):
             chunk = sd[lo : lo + block_size]
-            tfs = np.array([doc_tf[int(d)] for d in chunk], dtype=np.int64)
-            dls = np.array([doclens[int(d)] for d in chunk], dtype=np.int64)
-            rows.append(
-                (
-                    term_id,
-                    s,
-                    n_salts,
-                    bid,
-                    len(chunk),
-                    int(tfs.sum()),
-                    int(chunk[0]),
-                    int(chunk[-1]),
-                    int(tfs.max()),
-                    int(dls.min()),
-                    codec.encode_varint(codec.delta_encode(chunk)),
-                    codec.encode_varint(tfs.astype(np.uint64)),
-                    codec.encode_varint(dls.astype(np.uint64)),
-                    b"",
-                )
-            )
-    return rows
-
-
-NAMES = [
-    "term_id", "salt", "n_salts", "block_id", "n_docs", "sum_tf",
-    "min_doc_id", "max_doc_id", "max_tf", "min_doclen",
-    "doc_ids_enc", "tfs_enc", "doclens_enc", "positions_enc",
-]
+            tfs = [doc_tf[int(d)] for d in chunk]
+            blocks.append((term_id, s, n_salts, bid, chunk, tfs))
+    return blocks
 
 
 def _brute_force(slots, term_docs, doclens, neg_docs, dead, k):
@@ -124,22 +100,19 @@ def test_kernel_matches_brute_force(seed):
     )
     dead_signed = (dead - np.uint64(1 << 63)).astype(np.int64)
 
-    rows = []
+    blocks = []
     for t in terms:
         if not term_docs[t]:
             continue
-        rows.extend(
+        blocks.extend(
             _blocks_for(
                 t,
                 term_docs[t],
                 n_salts=int(rng.integers(1, 4)),
                 block_size=int(rng.integers(3, 17)),
-                doclens=doclens,
             )
         )
-    tbl = pa.Table.from_arrays(
-        [pa.array([r[i] for r in rows]) for i in range(len(NAMES))], names=NAMES
-    )
+    tbl = shard_table(blocks, doclens, block_size=int(rng.integers(3, 17)))
     k = int(rng.integers(1, 15))
     qmeta = {
         "slots": [
