@@ -23,7 +23,9 @@ Wire format (little-endian LEB128 varints), layout manifest-v5:
                  (count of positions for doc i == tf_i, so no length prefix)
 Deltas restart from an absolute value at every block.  A shard's
 dictionary maps ordinals back to ``(doc_id, doclen)`` (``DocDict``), so a
-doclen is stored once per doc, not once per posting.
+doclen is stored once per doc, not once per posting; a block flagged
+``lookup`` (a ``num:`` or ``anchor:`` lookup termlist) scores its postings
+with doclen 0 instead.
 """
 
 from __future__ import annotations
@@ -223,16 +225,19 @@ def decode_ordinals(doc_enc: bytes, n_docs: int) -> np.ndarray:
 
 def decode_postings_block(
     doc_enc: bytes, tf_enc: bytes, pos_enc: bytes, n_docs: int,
-    docs: DocDict | None = None,
+    docs: DocDict | None = None, lookup: bool = False,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray | None]:
     """Decode one block -> (doc_ids, tfs, positions_concat, boundaries,
     doclens).  With ``docs`` (the block's shard dictionary) the id stream
-    holds ordinals, mapped to ids and doclens; without it the stream
-    holds absolute ids (a dictionary block) and doclens is None."""
+    holds ordinals, mapped to ids and doclens — all 0 in a ``lookup``
+    block; without it the stream holds absolute ids (a dictionary block)
+    and doclens is None."""
     if docs is None:
         doc_ids, doclens = delta_decode(decode_varint(doc_enc, n_docs)), None
     else:
         doc_ids, doclens = docs.lookup(decode_ordinals(doc_enc, n_docs))
+        if lookup:
+            doclens = np.zeros(n_docs, dtype=np.int64)
     tfs = decode_varint(tf_enc, n_docs)
     boundaries = np.zeros(n_docs, dtype=np.int64)
     if n_docs:

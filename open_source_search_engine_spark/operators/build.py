@@ -30,7 +30,10 @@ Scale design (100 TB story):
   xxhash64 ids differ by random 64-bit gaps (posdb's docId prefix
   compression), and the doclen comes from the dictionary, so scoring
   never joins docstats and no doclen is stored per posting.
-- Everything shuffles on term or doc_id; nothing collects to the driver.
+- Everything shuffles on term or doc_id.  The one thing that collects to
+  the driver is a written batch's doc dictionaries (``_doc_dicts``,
+  about 16 B per doc of the batch), which reach the encode tasks as one
+  broadcast; a compaction's batch is every doc it rewrites.
 """
 
 from __future__ import annotations
@@ -109,6 +112,7 @@ def _encode_sorted_postings(
     block_size: int,
     shards: np.ndarray | None = None,
     ordinals: np.ndarray | None = None,
+    dict_doclens: np.ndarray | None = None,
 ) -> pa.RecordBatch:
     """Encode posting rows sorted by (term_id, salt, doc_id) into termlist
     blocks — ONE numpy pass, primitives + pre-encoded position bytes.
@@ -120,8 +124,12 @@ def _encode_sorted_postings(
     ``ordinals`` (each row's rank in its shard's doc dictionary) when
     given, else the absolute ids (a dictionary's own blocks, or an encode
     with no dictionary); its deltas reset to absolute at each block
-    boundary.  ``doclens`` only bound the block (``min_doclen``).  All
-    varint streams are encoded globally with per-value lengths and
+    boundary.  No doclen is stored per posting: a block whose rows all
+    carry doclen 0 (a ``num:`` or ``anchor:`` lookup termlist) is flagged
+    ``lookup`` and scores with 0, and every other row must carry its
+    doc's dictionary doclen (``dict_doclens``, given with ``ordinals``),
+    which decoders read back.  ``doclens`` also bound the block
+    (``min_doclen``).  All varint streams are encoded globally with per-value lengths and
     sliced via offset vectors — no per-block python beyond assembling
     the Arrow arrays.
     """
@@ -185,6 +193,21 @@ def _encode_sorted_postings(
     # bound idf*impact(max_tf, min_doclen) dominates every doc in a block.
     max_tf = np.maximum.reduceat(tfs, bstarts)
     min_dl = np.minimum.reduceat(doclens, bstarts)
+    lookup = np.maximum.reduceat(doclens, bstarts) == 0
+    if dict_doclens is not None:
+        # a decoder gives a non-lookup row its dictionary doclen, so a
+        # row whose own doclen differs (a lookup posting in a scoring
+        # termlist) would score differently once stored
+        bad = (doclens != dict_doclens) & ~np.repeat(lookup, bends - bstarts)
+        if bad.any():
+            i = int(np.flatnonzero(bad)[0])
+            raise ValueError(
+                f"posting term_id={int(term_ids[i])} doc_id={int(doc_ids[i])} "
+                f"has doclen {int(doclens[i])}, but its doc's doclen is "
+                f"{int(dict_doclens[i])}: a termlist must hold either only "
+                "doclen-0 lookup postings or only postings with their doc's "
+                "doclen"
+            )
     sum_tf = np.add.reduceat(tfs, bstarts).astype(np.int64)  # -> cf (A2)
     n_docs = (bends - bstarts).astype(np.int64)
 
@@ -217,6 +240,7 @@ def _encode_sorted_postings(
         pa.array(doc_ids[bends - 1]),
         pa.array(max_tf.astype(np.int32)),
         pa.array(min_dl.astype(np.int32)),
+        pa.array(lookup),
         bin_col(doc_bytes, doc_off),
         bin_col(tf_bytes, tf_off),
         bin_col(pos_values, pos_offsets),
@@ -232,7 +256,6 @@ def encode_blocks(
     postings: DataFrame,
     salt_target: int = 50_000,
     block_size: int = 4096,
-    docs: dict[int, tuple[np.ndarray, np.ndarray]] | None = None,
 ) -> DataFrame:
     """Salted repartition + sorted varint-block encode (S4/T5/X10).
 
@@ -256,13 +279,17 @@ def encode_blocks(
     Salting then uses shard-local df, matching what a per-shard build
     would have produced.
 
-    ``docs`` (sharded input only) gives each shard's doc dictionary,
-    ``{shard: (sorted doc ids, doclens)}`` (``_doc_dicts``): each row is
-    then encoded as its ordinal by ``searchsorted``, and its block bound
-    uses its dictionary doclen.  Without it the blocks hold absolute
-    ids.
+    Sharded input is written in the stored layout: the call collects each
+    shard's doc dictionary (``_doc_dicts``, one Spark job) and
+    broadcasts it, each row is encoded as its ordinal in it
+    (``_ordinals``), and the dictionaries' own blocks (``_dict_batch``)
+    come out beside the termlist blocks.  Without a shard column the
+    blocks hold absolute ids and no dictionary is written.
     """
     sharded = "shard" in postings.columns
+    if sharded:
+        dicts = _doc_dicts(postings)
+        docs = postings.sparkSession.sparkContext.broadcast(dicts)
     n_row = 7 if sharded else 6  # leading fixed-width row arrays per batch
     shard_key = ["shard"] if sharded else []
     # only the zipf head needs salting: aggregate df per term, keep just
@@ -331,18 +358,17 @@ def encode_blocks(
         )
 
     def _encode(arrs) -> pa.RecordBatch:
-        doclens, ords = arrs[4], None
-        if docs is not None:
-            ords, doclens = _ordinals(docs, arrs[6], arrs[3])
+        ords = dict_dls = None
+        if sharded:
+            ords, dict_dls = _ordinals(docs.value, arrs[6], arrs[3])
         return _encode_sorted_postings(
-            *arrs[:4],
-            doclens,
-            arrs[5],
+            *arrs[:6],
             arrs[n_row],
             arrs[n_row + 1],
             block_size,
             shards=arrs[6] if sharded else None,
             ordinals=ords,
+            dict_doclens=dict_dls,
         )
 
     def encode_stream(batches):
@@ -374,20 +400,33 @@ def encode_blocks(
             yield _encode(carry)
 
     schema = StructType(TABLES["postings"].fields[: len(_BLOCK_COLS) + sharded])
-    return part.mapInArrow(encode_stream, schema)
+    blocks = part.mapInArrow(encode_stream, schema)
+    if not sharded:
+        return blocks
+
+    def encode_dicts(batches):
+        for b in batches:
+            for s in b.column("shard").to_pylist():
+                yield _dict_batch(s, *docs.value[s], block_size)
+
+    shard_ids = postings.sparkSession.createDataFrame(
+        [(s,) for s in sorted(dicts)], "shard int"
+    )
+    return blocks.unionByName(shard_ids.mapInArrow(encode_dicts, schema))
 
 
 def _ordinals(
     docs: dict, shards: np.ndarray, doc_ids: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Each row's (ordinal, doclen) in its shard's doc dictionary."""
+    """Each row's (ordinal, doclen) in its shard's doc dictionary
+    ``docs`` (``{shard: (sorted doc ids, doclens)}``)."""
     ords = np.empty(len(doc_ids), dtype=np.int64)
     doclens = np.empty(len(doc_ids), dtype=np.int64)
     for s in np.unique(shards).tolist():
         sel = shards == s
         ids, lens = docs[s]
         o = np.searchsorted(ids, doc_ids[sel])
-        if (o >= len(ids)).any() or (ids[o.clip(0, len(ids) - 1)] != doc_ids[sel]).any():
+        if (o >= len(ids)).any() or (ids[o.clip(max=len(ids) - 1)] != doc_ids[sel]).any():
             raise ValueError(
                 f"a posting's doc_id is absent from shard {s}'s doc dictionary"
             )
@@ -439,23 +478,20 @@ def _doc_dicts(posts: DataFrame) -> dict[int, tuple[np.ndarray, np.ndarray]]:
     }
 
 
-def _dict_blocks(docs: dict, block_size: int) -> pa.Table | None:
-    """The doc dictionaries' own blocks: each shard's sorted doc ids as
+def _dict_batch(
+    shard: int, ids: np.ndarray, lens: np.ndarray, block_size: int
+) -> pa.RecordBatch:
+    """One shard's doc dictionary as stored blocks: its sorted doc ids as
     the termlist of ``DICT_TERM_ID`` in absolute form, the doclen in the
-    tf slot, no positions, never salted (None without docs)."""
-    out = []
-    for shard, (ids, lens) in sorted(docs.items()):
-        n = len(ids)
-        zero = np.zeros(n, dtype=np.int64)
-        out.append(
-            _encode_sorted_postings(
-                np.full(n, DICT_TERM_ID, dtype=np.int64), zero, zero + 1,
-                ids, lens, lens, np.empty(0, dtype=np.uint8),
-                np.zeros(n + 1, dtype=np.int64), block_size,
-                shards=np.full(n, shard, dtype=np.int64),
-            )
-        )
-    return pa.Table.from_batches(out) if out else None
+    tf slot, no positions, never salted."""
+    n = len(ids)
+    zero = np.zeros(n, dtype=np.int64)
+    return _encode_sorted_postings(
+        np.full(n, DICT_TERM_ID, dtype=np.int64), zero, zero + 1,
+        ids, lens, lens, np.empty(0, dtype=np.uint8),
+        np.zeros(n + 1, dtype=np.int64), block_size,
+        shards=np.full(n, shard, dtype=np.int64),
+    )
 
 
 def numeric_postings(d: DataFrame, numeric_fields) -> DataFrame | None:
@@ -528,24 +564,16 @@ def _write_postings(
     block_size: int,
 ) -> str:
     """Posting rows that carry their WAND ``shard`` -> one uncommitted
-    postings segment: each shard's doc dictionary (``_doc_dicts``, the
-    one extra job), its termlists encoded shard-pure over the
-    dictionary's ordinals, and the dictionary's own blocks, range-sorted
-    on term_id, and no sidecar (a termlist read narrows by the row-group
-    statistics of that sort).  The one postings writer of build shards,
-    adds and both compactions.  Returns the segment path."""
-    docs = _doc_dicts(posts)
+    postings segment: encoded shard-pure over each shard's doc
+    dictionary, the dictionaries' own blocks included (``encode_blocks``),
+    range-sorted on term_id, and no sidecar (a termlist read narrows by
+    the row-group statistics of that sort).  The one postings writer of
+    build shards, adds and both compactions.  Returns the segment path."""
     # persist encoded blocks: repartitionByRange's boundary-sampling
     # pass would otherwise run the whole encode twice
     blocks = encode_blocks(
-        posts, salt_target=salt_target, block_size=block_size, docs=docs
+        posts, salt_target=salt_target, block_size=block_size
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    dict_blocks = _dict_blocks(docs, block_size)
-    rows = blocks
-    if dict_blocks is not None:
-        rows = blocks.unionByName(
-            posts.sparkSession.createDataFrame(dict_blocks, TABLES["postings"])
-        )
     # range-partition + sort by term_id so query-time term lookups prune
     # to a handful of row groups (RdbMap sparse-index seek analog, S2).
     # The shard column marks the doc-partition each block belongs to —
@@ -561,7 +589,7 @@ def _write_postings(
     # transfer.  A per-plan batch-size knob would make this safe;
     # Spark has none today.
     seg = idx.postings.write_segment(
-        rows.repartitionByRange("term_id").sortWithinPartitions(
+        blocks.repartitionByRange("term_id").sortWithinPartitions(
             "term_id", "salt", "block_id"
         ),
         label=label,

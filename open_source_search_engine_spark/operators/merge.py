@@ -173,6 +173,19 @@ def doc_dicts(segments) -> dict[int, codec.DocDict]:
     return out
 
 
+def doc_dicts_broadcast(spark: SparkSession, segments):
+    """``doc_dicts(segments)`` as one Spark broadcast, memoized per
+    segment list and SparkContext: the decode tasks and WAND kernels of
+    every query over that list load the dictionaries once per executor,
+    and no task closure carries them."""
+    sc = spark.sparkContext
+    key = ("docdict_bc", tuple(segments))
+    hit = MEMO.get(key)
+    if hit is None or hit[0] is not sc:
+        hit = MEMO.put(key, (sc, sc.broadcast(doc_dicts(segments))))
+    return hit[1]
+
+
 def term_postings(
     spark: SparkSession, view, term_ids, positions: bool = False
 ) -> DataFrame:
@@ -205,8 +218,8 @@ def decode_to_postings(
     doc_id, doclen, tf[, pos_enc]) — the exact inverse of the encode
     kernel, so a compaction round-trips through the same fast Arrow
     path.  Each block's ordinals map to ids and doclens through its
-    shard's dictionary (``doc_dicts``, carried in the closure); the
-    dictionary blocks themselves are no postings and are skipped.
+    shard's dictionary (``doc_dicts_broadcast``); the dictionary blocks
+    themselves are no postings and are skipped.
 
     The per-doc position streams are NOT decoded: the wire format is
     per-doc self-contained inside a block, so each doc's byte range is
@@ -216,8 +229,8 @@ def decode_to_postings(
     bits) — the scoring paths use this mode."""
     import pyarrow as pa
 
-    docs = doc_dicts(segments)
-    cols = ["term_id", "n_docs", "doc_ids_enc", "tfs_enc", "shard"]
+    docs = doc_dicts_broadcast(blocks.sparkSession, segments)
+    cols = ["term_id", "n_docs", "doc_ids_enc", "tfs_enc", "lookup", "shard"]
     if with_positions:
         cols.append("positions_enc")
 
@@ -231,7 +244,7 @@ def decode_to_postings(
                 nd = int(c["n_docs"][i].as_py())
                 d, tf, _pos, _b, dl = codec.decode_postings_block(
                     c["doc_ids_enc"][i].as_py(), c["tfs_enc"][i].as_py(), b"", nd,
-                    docs[c["shard"][i].as_py()],
+                    docs.value[c["shard"][i].as_py()], c["lookup"][i].as_py(),
                 )
                 if with_positions:
                     raw = np.frombuffer(c["positions_enc"][i].as_py(), dtype=np.uint8)

@@ -227,10 +227,11 @@ def _deep_check(spark, index, blocks, ds) -> list[str]:
     import pandas as pd
 
     from ..functions import codec
-    from .merge import doc_dicts
+    from .merge import doc_dicts_broadcast
 
     issues: list[str] = []
-    docs = doc_dicts(index.segments("postings"))
+    shipped = doc_dicts_broadcast(spark, index.segments("postings"))
+    docs = shipped.value
     shift = np.uint64(1 << 63)
 
     def _bad(row) -> bool:
@@ -241,7 +242,7 @@ def _deep_check(spark, index, blocks, ds) -> list[str]:
             if not (u[1:] > u[:-1]).all():
                 return True
         else:
-            d = docs.get(int(row.shard))
+            d = shipped.value.get(int(row.shard))
             ords = codec.decode_ordinals(row.doc_ids_enc, n)
             if d is None or (
                 n

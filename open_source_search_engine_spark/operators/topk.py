@@ -48,7 +48,6 @@ from pyspark.sql import functions as F
 
 from ..functions import codec
 from ..functions.bm25 import K1, B, py_idf
-from ..schemas import DICT_TERM_ID
 from ..sources.tables import MEMO
 from .build import Index, docmeta_cached
 
@@ -70,15 +69,18 @@ _KERNEL_SCHEMA = (
 )
 
 
-def _run_queries(tbl: pa.Table, qmetas: list[dict | None], k: int) -> pa.Table:
+def _run_queries(
+    tbl: pa.Table, qmetas: list[dict | None], k: int, docs: codec.DocDict
+) -> pa.Table:
     """One shard's task: the kernel reruns once per query over the
-    shard's already-loaded blocks, each query's local top-k tagged with
-    its position in ``query_idx``.  ``None`` marks a query no doc can
-    match (the planner passes at least one live query)."""
+    shard's already-loaded blocks and its doc dictionary ``docs``, each
+    query's local top-k tagged with its position in ``query_idx``.
+    ``None`` marks a query no doc can match (the planner passes at least
+    one live query)."""
     outs = []
     for qi, qm in enumerate(qmetas):
         if qm is not None:
-            t = _wand_kernel(tbl, qm, k)
+            t = _wand_kernel(tbl, qm, k, docs)
             outs.append(
                 t.append_column(
                     "query_idx", pa.array(np.full(t.num_rows, qi, dtype=np.int32))
@@ -98,6 +100,7 @@ def _wand_kernel(
     blocks: pa.Table,
     qmeta: dict,
     k: int,
+    docs: codec.DocDict,
 ) -> pa.Table:
     """One doc-shard's DAAT intersection + block-max pruning.
 
@@ -113,9 +116,9 @@ def _wand_kernel(
     routes candidates into their range (then memoized) — a frequent
     second term no longer costs a full-termlist decode up front.
 
-    ``blocks`` also holds the shard's doc dictionary (the rows of
-    ``DICT_TERM_ID``): a decoded block's ordinals map to doc ids and
-    doclens through it, decoding only the dictionary blocks they hit.
+    ``docs`` is the shard's doc dictionary: a decoded block's ordinals
+    map to doc ids and doclens through it, decoding only the dictionary
+    blocks they hit (a ``lookup`` block's postings score with doclen 0).
     """
     slots: list[dict[int, float]] = qmeta["slots"]
     rarest_slot: int = qmeta["rarest_slot"]
@@ -150,13 +153,7 @@ def _wand_kernel(
     max_doc = blocks.column("max_doc_id").to_numpy()
     d_enc = blocks.column("doc_ids_enc")
     t_enc = blocks.column("tfs_enc")
-    is_dict = term_ids == DICT_TERM_ID
-    docs = codec.DocDict(
-        blocks.column("block_id").to_numpy()[is_dict],
-        n_docs_col[is_dict],
-        [d_enc[i].as_py() for i in np.flatnonzero(is_dict).tolist()],
-        [t_enc[i].as_py() for i in np.flatnonzero(is_dict).tolist()],
-    )
+    lookup = blocks.column("lookup").to_numpy(zero_copy_only=False)
     # positions are shipped ONLY in phrase mode, and only the pair
     # termlists' rows carry real bytes (word rows are null) — the scan
     # never reads position bytes for scoring termlists
@@ -228,7 +225,8 @@ def _wand_kernel(
         hit = decoded.get(i)
         if hit is None:
             d, t, _p, _b, dl = codec.decode_postings_block(
-                d_enc[i].as_py(), t_enc[i].as_py(), b"", int(n_docs_col[i]), docs
+                d_enc[i].as_py(), t_enc[i].as_py(), b"", int(n_docs_col[i]),
+                docs, lookup[i],
             )
             hit = decoded[i] = (d.astype(np.uint64) + _U63, t, dl)
         return hit
@@ -276,10 +274,11 @@ def _wand_kernel(
         t: int, cd: np.ndarray, cu: np.ndarray, mask: np.ndarray | None = None
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(tf, doclen, present) of candidates in term t's salt sub-lists
-        (routing via ``_route``); decoded lazily.  ``mask`` restricts
-        routing to still-alive candidates (review r4-s2): probing only
-        dead candidates would lazily decode blocks whose work can never
-        reach the heap."""
+        (routing via ``_route``); decoded lazily.  doclen comes from the
+        probed termlist's own decode (anchor:/num: lists carry 0).
+        ``mask`` restricts routing to still-alive candidates (review
+        r4-s2): probing only dead candidates would lazily decode blocks
+        whose work can never reach the heap."""
         nonlocal other_decodes
         tf_t = np.zeros(len(cd), dtype=np.float64)
         dl_t = np.zeros(len(cd), dtype=np.float64)
@@ -308,7 +307,8 @@ def _wand_kernel(
         if hit is None:
             nd = int(n_docs_col[i])
             d, _tf, pos, bounds, _dl = codec.decode_postings_block(
-                d_enc[i].as_py(), t_enc[i].as_py(), p_enc[i].as_py(), nd, docs
+                d_enc[i].as_py(), t_enc[i].as_py(), p_enc[i].as_py(), nd,
+                docs, lookup[i],
             )
             ends = np.empty(nd, dtype=np.int64)
             if nd:
@@ -367,7 +367,8 @@ def _wand_kernel(
             continue  # no doc first-found in this block can reach top-k
         scored_blocks += 1
         cd, ct, _p, _bnd, cl = codec.decode_postings_block(
-            d_enc[i].as_py(), t_enc[i].as_py(), b"", int(n_docs_col[i]), docs
+            d_enc[i].as_py(), t_enc[i].as_py(), b"", int(n_docs_col[i]),
+            docs, lookup[i],
         )
         cu = cd.astype(np.uint64) + _U63
         this_term = int(term_ids[i])
@@ -386,8 +387,12 @@ def _wand_kernel(
 
         # rarest-slot score: max over members, each with the OWNING slot's
         # weight (this block's tf for its own term; lazy probes for
-        # sibling members).  Every posting's doclen is its doc's
-        # dictionary doclen, the one the exhaustive plan scores with.
+        # sibling members).  Probes score with the PROBED termlist's own
+        # doclens, not this block's: doclen is a per-doc constant for
+        # word termlists (identical either way) but anchor:/num: lookup
+        # termlists score with doclen 0 (their blocks are ``lookup``),
+        # and the exhaustive plan scores each posting row with its own
+        # doclen — the two paths must agree on mixed queries.
         imp = _impact(ct.astype(np.float64), cl.astype(np.float64), avgdl)
         score = slots[rarest_slot][this_term] * imp
         # every probe below is masked to still-alive candidates (review
@@ -600,8 +605,7 @@ def _wand_blocks(
     spark: SparkSession, index: Index, word_ids: list[int], pair_ids: list[int]
 ) -> DataFrame:
     """Postings scan for the WAND kernel: the live segments with the
-    ``term_id`` filter pushed down, the doc dictionaries' reserved id
-    included (the kernel maps ordinals through them).  positions_enc (the largest column)
+    ``term_id`` filter pushed down.  positions_enc (the largest column)
     is read ONLY for the bigram pair termlists a phrase chain needs —
     scoring termlists ride a scan that never touches the position bytes
     (two pushed-filter scans unioned; the pair side is tiny by
@@ -609,9 +613,7 @@ def _wand_blocks(
     base = index.postings.read(spark)
     _pair_set = set(pair_ids)
     word_ids = [t for t in word_ids if t not in _pair_set]
-    scan = base.filter(F.col("term_id").isin([*word_ids, DICT_TERM_ID])).drop(
-        "positions_enc"
-    )
+    scan = base.filter(F.col("term_id").isin(word_ids)).drop("positions_enc")
     if not pair_ids:
         return scan
     return scan.withColumn(
@@ -638,7 +640,7 @@ def _plan_wand(
     Negation and tombstones are applied in-kernel, so the caller's merge
     only orders and limits."""
     from ..plans.exec import _stats_cached
-    from .merge import deleted_doc_ids
+    from .merge import deleted_doc_ids, doc_dicts_broadcast
 
     feats = index.features()
     has_phrase = any(
@@ -733,6 +735,9 @@ def _plan_wand(
     # the latency win and the exchange is noise.
     df_of = {tid: df for tid, df, _cf in stats.values()}
     est_postings = sum(df_of.get(t, 0) for t in word_ids | set(pair_ids))
+    # each shard's doc dictionary rides one broadcast per segment set
+    # (built once per commit), so the scan reads only the query's terms
+    docs = doc_dicts_broadcast(spark, index.segments("postings"))
     if est_postings <= SINGLE_TASK_POSTINGS:
 
         def run(batches):
@@ -744,12 +749,18 @@ def _plan_wand(
             tbl = pa.Table.from_batches(got)
             for s in sorted(pc.unique(tbl.column("shard")).to_pylist()):
                 shard = tbl.filter(pc.equal(tbl.column("shard"), s))
-                yield from _run_queries(shard, qmetas, k).to_batches()
+                yield from _run_queries(
+                    shard, qmetas, k, docs.value[s]
+                ).to_batches()
 
         return None, blocks.coalesce(1).mapInArrow(run, _KERNEL_SCHEMA)
-    return None, blocks.groupBy("shard").applyInArrow(
-        lambda _key, tbl: _run_queries(tbl, qmetas, k), _KERNEL_SCHEMA
-    )
+
+    def per_shard(_key, tbl):
+        return _run_queries(
+            tbl, qmetas, k, docs.value[tbl.column("shard")[0].as_py()]
+        )
+
+    return None, blocks.groupBy("shard").applyInArrow(per_shard, _KERNEL_SCHEMA)
 
 
 def search_wand(

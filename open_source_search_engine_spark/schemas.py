@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     BinaryType,
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -66,8 +67,12 @@ DOCSTATS = StructType(
 # termstats.  Every other block's doc_ids_enc holds deltas of ordinals,
 # a doc's rank in its shard's dictionary (dense small ints, where
 # xxhash64 ids differ by random 64-bit gaps), and a posting's doclen is
-# its doc's dictionary doclen.  min_doc_id / max_doc_id stay public doc
-# ids, so block routing and tombstones never see ordinals.
+# its doc's dictionary doclen — except in a block flagged ``lookup``,
+# whose postings all came in with doclen 0 (num: and anchor: lookup
+# termlists) and score with 0, as they did when each posting stored its
+# own doclen.  min_doclen is the minimum of those scored doclens.
+# min_doc_id / max_doc_id stay public doc ids, so block routing and
+# tombstones never see ordinals.
 DICT_TERM = "\x00docs"
 DICT_TERM_ID = term_hash_py(DICT_TERM)
 
@@ -83,6 +88,7 @@ POSTINGS_BLOCKS = StructType(
         StructField("max_doc_id", LongType(), False),
         StructField("max_tf", IntegerType(), False),
         StructField("min_doclen", IntegerType(), False),
+        StructField("lookup", BooleanType(), False),
         StructField("doc_ids_enc", BinaryType(), False),
         StructField("tfs_enc", BinaryType(), False),
         StructField("positions_enc", BinaryType(), False),

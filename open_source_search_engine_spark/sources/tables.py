@@ -80,6 +80,7 @@ class Memo:
         "stats": 64,
         "dead": 64,
         "docdict": 256,  # one postings segment's {shard: DocDict}
+        "docdict_bc": 16,  # (SparkContext, broadcast) per segment list
         "result": 512,
     }
 

@@ -11,20 +11,26 @@ import numpy as np
 import pyarrow as pa
 
 from open_source_search_engine_spark.functions import codec
-from open_source_search_engine_spark.operators.build import _dict_blocks
+from open_source_search_engine_spark.operators.build import _dict_batch
 from open_source_search_engine_spark.schemas import DICT_TERM_ID
 
 
-def shard_table(blocks, doclens, block_size=4096, shard=0) -> pa.Table:
-    """One shard's block table.  ``blocks``: ``(term_id, salt, n_salts,
-    block_id, doc_ids, tfs)`` per termlist block, ids ascending;
-    ``doclens``: ``{doc_id: doclen}`` over every doc of the shard — its
-    doc dictionary, whose blocks (written by the build's own dictionary
-    encoder) end the table."""
+def shard_table(blocks, doclens, block_size=4096, shard=0):
+    """One shard's termlist blocks and doc dictionary, as the WAND
+    kernel receives them -> ``(table, DocDict)``.  ``blocks``:
+    ``(term_id, salt, n_salts, block_id, doc_ids, tfs)`` per termlist
+    block, ids ascending; ``doclens``: ``{doc_id: doclen}`` over every
+    doc of the shard — its doc dictionary, encoded by the build's own
+    dictionary encoder with dictionary blocks of ``block_size`` docs."""
     ids = np.array(sorted(doclens), dtype=np.int64)
     lens = np.array([doclens[int(d)] for d in ids], dtype=np.int64)
-    dict_tbl = _dict_blocks({shard: (ids, lens)}, block_size)
-    cols = {n: [] for n in dict_tbl.schema.names}
+    dict_batch = _dict_batch(shard, ids, lens, block_size)
+    dict_rows = dict_batch.to_pydict()
+    dictionary = codec.DocDict(
+        dict_rows["block_id"], dict_rows["n_docs"],
+        dict_rows["doc_ids_enc"], dict_rows["tfs_enc"],
+    )
+    cols = {n: [] for n in dict_rows}
     for term_id, salt, n_salts, block_id, docs, tfs in blocks:
         docs = np.asarray(docs, dtype=np.int64)
         tfs = np.asarray(tfs, dtype=np.int64)
@@ -41,6 +47,7 @@ def shard_table(blocks, doclens, block_size=4096, shard=0) -> pa.Table:
             "max_doc_id": int(docs[-1]),
             "max_tf": int(tfs.max()),
             "min_doclen": int(lens[ords].min()),
+            "lookup": False,
             "doc_ids_enc": codec.encode_varint(np.diff(ords, prepend=0)),
             "tfs_enc": codec.encode_varint(tfs),
             "positions_enc": b"",
@@ -48,9 +55,7 @@ def shard_table(blocks, doclens, block_size=4096, shard=0) -> pa.Table:
         }
         for n in cols:
             cols[n].append(row[n])
-    return pa.concat_tables(
-        [pa.Table.from_pydict(cols, schema=dict_tbl.schema), dict_tbl]
-    )
+    return pa.Table.from_pydict(cols, schema=dict_batch.schema), dictionary
 
 
 def block_doc_ids(row, docs) -> np.ndarray:

@@ -72,9 +72,10 @@ def test_ordinal_blocks_roundtrip_through_the_encoder(seed):
     the build encoder's blocks decode, through the dictionary's own
     blocks, back to every (term, salt, doc_id, tf, doclen) row — with
     int64-extreme ids, termlists straddling the 4096-doc block boundary,
-    and salted sub-lists (``n_salts`` from a tiny salt target)."""
+    salted sub-lists (``n_salts`` from a tiny salt target), and a lookup
+    termlist whose postings carry doclen 0."""
     from open_source_search_engine_spark.operators.build import (
-        _dict_blocks,
+        _dict_batch,
         _encode_sorted_postings,
         _ordinals,
     )
@@ -94,7 +95,8 @@ def test_ordinal_blocks_roundtrip_through_the_encoder(seed):
     # (df, salt target): unsalted lists at the block boundary, then the
     # whole shard and a short list split by tiny salt targets
     terms = [(1, 10**9), (bs - 1, 10**9), (bs, 10**9), (bs + 1, 10**9),
-             (2 * bs + 1, 10**9), (len(ids), 3000), (60, 3)]
+             (2 * bs + 1, 10**9), (len(ids), 3000), (60, 3), (bs + 7, 10**9)]
+    lookup_term = len(terms)  # its postings carry doclen 0
     cols = []
     for t, (df, target) in enumerate(terms, start=1):
         docs = rng.choice(ids, size=df, replace=False)
@@ -111,11 +113,13 @@ def test_ordinal_blocks_roundtrip_through_the_encoder(seed):
     shards = np.zeros(len(docs), dtype=np.int64)
     dicts = {0: (ids, doclens)}
     ords, dls = _ordinals(dicts, shards, docs)
+    own = np.where(term_ids == lookup_term, 0, dls)
     batch = _encode_sorted_postings(
-        term_ids, salts, n_salts, docs, dls, tfs, np.empty(0, dtype=np.uint8),
+        term_ids, salts, n_salts, docs, own, tfs, np.empty(0, dtype=np.uint8),
         np.zeros(len(docs) + 1, dtype=np.int64), bs, shards=shards, ordinals=ords,
+        dict_doclens=dls,
     )
-    d = _dict_blocks(dicts, bs).to_pydict()
+    d = _dict_batch(0, ids, doclens, bs).to_pydict()
     dictionary = codec.DocDict(d["block_id"], d["n_docs"], d["doc_ids_enc"], d["tfs_enc"])
     assert len(d["n_docs"]) == -(-len(ids) // bs)
     got_ids, got_lens = dictionary.lookup(np.arange(len(ids)))
@@ -125,13 +129,14 @@ def test_ordinal_blocks_roundtrip_through_the_encoder(seed):
     for row in batch.to_pylist():
         n = row["n_docs"]
         b_ids, b_tfs, _p, _b, b_lens = codec.decode_postings_block(
-            row["doc_ids_enc"], row["tfs_enc"], b"", n, dictionary
+            row["doc_ids_enc"], row["tfs_enc"], b"", n, dictionary, row["lookup"]
         )
+        assert row["lookup"] or row["term_id"] != lookup_term
         assert n <= bs
         assert (b_ids[0], b_ids[-1]) == (row["min_doc_id"], row["max_doc_id"])
         assert row["min_doclen"] == b_lens.min()
         got += zip([row["term_id"]] * n, [row["salt"]] * n, b_ids.tolist(),
                    b_tfs.tolist(), b_lens.tolist())
     want = zip(term_ids.tolist(), salts.tolist(), docs.tolist(), tfs.tolist(),
-               dls.tolist())
+               own.tolist())
     assert got == list(want)

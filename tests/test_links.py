@@ -164,6 +164,20 @@ def test_anchor_stored_index_end_to_end(
 
     hits = search(spark, idx, "anchor:delta gamma", k=10).collect()
     assert [r.doc_id for r in hits] == [2]
+    # anchor: lookup postings score with doclen 0 on both query paths:
+    # anchor:delta (df 1, tf 1) at doclen 0 plus gamma (df 4, tf 1) at
+    # doc 2's doclen 4, with avgdl 16/4
+    from open_source_search_engine_spark.functions.bm25 import B, K1, py_idf
+    from open_source_search_engine_spark.operators.topk import search_wand
+
+    def impact(tf, dl, avgdl=4.0):
+        return tf * (K1 + 1) / (tf + K1 * (1 - B + B * dl / avgdl))
+
+    want = py_idf(1, 4) * impact(1, 0) + py_idf(4, 4) * impact(1, 4)
+    for run in (search, search_wand):
+        (hit,) = run(spark, idx, "anchor:delta gamma", k=10).collect()
+        assert hit.doc_id == 2
+        assert hit.score == pytest.approx(want, abs=1e-9)
 
 
 def test_build_guards_extra_postings_mismatch(

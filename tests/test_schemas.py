@@ -18,6 +18,7 @@ _ARROW_TO_SPARK = {
     "double": "double",
     "string": "string",
     "binary": "binary",
+    "bool": "boolean",
     "timestamp[us]": "timestamp_ntz",
 }
 

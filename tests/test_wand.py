@@ -171,9 +171,9 @@ def test_kernel_prunes_blocks():
         docs = [1000 * b + i for i in range(4)]
         blocks.append((7, 0, 1, b, docs, [1] * 4))
         doclens.update(dict.fromkeys(docs, 5000))
-    tbl = shard_table(blocks, doclens)
+    tbl, docs = shard_table(blocks, doclens)
     qmeta = {"slots": [{7: 1.0}], "rarest_slot": 0, "avgdl": 100.0, "neg_ids": []}
-    out = T._wand_kernel(tbl, qmeta, k=3)
+    out = T._wand_kernel(tbl, qmeta, k=3, docs=docs)
     assert out.num_rows == 3
     assert set(out.column("doc_id").to_pylist()) == {10, 20, 30}
     assert out.column("blocks_skipped")[0].as_py() == 20
@@ -201,14 +201,14 @@ def test_kernel_lazy_decodes_other_terms():
     for b in range(20):
         blocks.append((9, 0, 1, b, [1000 * b + i for i in range(5)], [2] * 5))
     doclens = {d: 100 for blk in blocks for d in blk[4]}
-    tbl = shard_table(blocks, doclens)
+    tbl, docs = shard_table(blocks, doclens)
     qmeta = {
         "slots": [{7: 1.0}, {9: 1.0}],
         "rarest_slot": 0,
         "avgdl": 100.0,
         "neg_ids": [],
     }
-    out = T._wand_kernel(tbl, qmeta, k=3)
+    out = T._wand_kernel(tbl, qmeta, k=3, docs=docs)
     assert out.num_rows == 3
     assert set(out.column("doc_id").to_pylist()) == {5000, 5001, 5002}
     assert out.column("other_blocks_decoded")[0].as_py() == 1

@@ -112,7 +112,7 @@ def test_kernel_matches_brute_force(seed):
                 block_size=int(rng.integers(3, 17)),
             )
         )
-    tbl = shard_table(blocks, doclens, block_size=int(rng.integers(3, 17)))
+    tbl, docs = shard_table(blocks, doclens, block_size=int(rng.integers(3, 17)))
     k = int(rng.integers(1, 15))
     qmeta = {
         "slots": [
@@ -123,7 +123,7 @@ def test_kernel_matches_brute_force(seed):
         "neg_ids": neg_ids,
         "dead": dead_signed[np.argsort(dead)] if len(dead) else np.empty(0, np.int64),
     }
-    out = T._wand_kernel(tbl, qmeta, k)
+    out = T._wand_kernel(tbl, qmeta, k, docs)
     got = sorted(
         zip(out.column("doc_id").to_pylist(), out.column("score").to_pylist()),
         key=lambda x: (-x[1], x[0]),
